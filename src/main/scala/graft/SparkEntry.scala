@@ -250,7 +250,8 @@ object SparkEntry {
   // maintenance call that follows. Every refresh ENTRY POINT keeps a
   // dedicated always-fresh gate (q_materialize_incremental times
   // refresh, q_materialize_multikey refreshMulti, q_materialize_graft_aggs
-  // refreshGraft, q_materialize_graft_multikey refreshGraftMulti), so
+  // refresh of extension features, q_materialize_graft_multikey
+  // refreshMulti of extension features), so
   // the sharing removes repeated fixture setup without leaving any
   // ingest path untimed. Read-only serves (snapshotAsOf, trainingSet,
   // snapshot+derived) read the shared root directly; mutating gates
@@ -397,15 +398,14 @@ object SparkEntry {
     graft.model.GraftAggregation.Quantile(0.5, 0.0, 200.0, 256),
     graft.model.Durations.parse("7d")))
 
-  /** One full-corpus refresh + refreshGraft for the training-table
-    * gate (trainingSet is a read-only serve — shared directly). */
+  /** One full-corpus refresh of both feature surfaces for the
+    * training-table gate (trainingSet is a read-only serve — shared
+    * directly). */
   private def matTrainState(s: SparkSession, dir: String): String =
     cachedRoot(s, s"$dir|mattrain") { root =>
-      val ev = matDailyEvents(s, dir)
-      IncrementalMaterializer.refresh(ev, root, matDailyFeats,
-        Seq("user_id"), "ts", matDayUs, 0L)
-      IncrementalMaterializer.refreshGraft(ev, root, matTrainGraftFeats,
-        Seq("user_id"), "ts", matDayUs, 0L)
+      IncrementalMaterializer.refresh(matDailyEvents(s, dir), root,
+        matDailyFeats, Seq("user_id"), "ts", matDayUs, 0L,
+        graftFeatures = matTrainGraftFeats)
     }
 
   private def matTrainMultiFeats = {
@@ -443,8 +443,8 @@ object SparkEntry {
         GraftAggregation.TopK(3, 8), d7))
   }
 
-  /** Two-delta refreshGraft build for the extension-feature daily
-    * gate (which then compacts — so it copies); refreshGraft keeps its
+  /** Two-delta extension-feature build for the daily gate (which
+    * then compacts — so it copies); the extension refresh keeps its
     * own always-fresh gate (q_materialize_graft_aggs). */
   private def matGraftDailyState(s: SparkSession, dir: String): String =
     cachedRoot(s, s"$dir|matgraftdaily") { root =>
@@ -458,9 +458,10 @@ object SparkEntry {
       val step = (maxB - minB) / 2 + 1
       (0L until 2L).foreach { i =>
         val lo = minB + i * step
-        IncrementalMaterializer.refreshGraft(
+        IncrementalMaterializer.refresh(
           ev.where(col("__d") >= lo && col("__d") < lo + step).drop("__d"),
-          root, matGraftDailyFeats, Seq("user_id"), "ts", matDayUs, i)
+          root, Nil, Seq("user_id"), "ts", matDayUs, i,
+          graftFeatures = matGraftDailyFeats)
       }
     }
 
@@ -3745,7 +3746,7 @@ object SparkEntry {
             InputFeature("f_cnt_7d", Seq(userKey))), Seq(userKey)))
       val gfeats = matTrainGraftFeats
       // trainingSet is a read-only serve — it reads the shared
-      // refresh+refreshGraft state directly; the timed operator is the
+      // two-surface refresh state directly; the timed operator is the
       // leak-free training-table assembly
       val root = matTrainState(s, dir)
       IncrementalMaterializer.trainingSet(s, root, feats,
@@ -3977,12 +3978,12 @@ object SparkEntry {
       val step = (maxB - minB) / 3 + 1
       (0L until 3L).foreach { i =>
         val lo = minB + i * step
-        IncrementalMaterializer.refreshGraft(
+        IncrementalMaterializer.refresh(
           ev.where(col("__d") >= lo && col("__d") < lo + step).drop("__d"),
-          root, feats, Seq("user_id"), "ts", dayUs, i)
+          root, Nil, Seq("user_id"), "ts", dayUs, i, graftFeatures = feats)
       }
-      IncrementalMaterializer.snapshotGraft(s, root, feats, Seq("user_id"),
-          "ts", dayUs, (maxB + 1) * dayUs)
+      IncrementalMaterializer.snapshot(s, root, Nil, Seq("user_id"),
+          "ts", dayUs, (maxB + 1) * dayUs, graftFeatures = feats)
         .select(col("user_id"), col("f_g_p50_7d"), col("f_g_p90_7d"),
           round(col("f_g_ndp_30d"), 4).as("f_g_ndp_30d"),
           when(col("f_g_top3_30d").isNotNull,
@@ -3991,8 +3992,8 @@ object SparkEntry {
 
     // Extension features across TWO key bindings (r14): a user-keyed
     // median and an event-type-keyed p90 of the same measure, routed
-    // to separate binding roots by refreshGraftMulti and assembled per
-    // binding by snapshotGraftMulti (key columns under their DSL
+    // to separate binding roots by refreshMulti and assembled per
+    // binding by snapshotMulti (key columns under their DSL
     // aliases). The oracle restates the store's integer permyriad
     // cutoff rule once per binding.
     "q_materialize_graft_multikey" -> ((s, dir) => {
@@ -4023,12 +4024,12 @@ object SparkEntry {
       val step = (maxB - minB) / 2 + 1
       (0L until 2L).foreach { i =>
         val lo = minB + i * step
-        IncrementalMaterializer.refreshGraftMulti(
+        IncrementalMaterializer.refreshMulti(
           ev.where(col("__d") >= lo && col("__d") < lo + step).drop("__d"),
-          root, feats, "ts", dayUs, i)
+          root, Nil, "ts", dayUs, i, graftFeatures = feats)
       }
-      val frames = IncrementalMaterializer.snapshotGraftMulti(s, root,
-        feats, "ts", dayUs, (maxB + 1) * dayUs)
+      val frames = IncrementalMaterializer.snapshotMulti(s, root,
+        Nil, "ts", dayUs, (maxB + 1) * dayUs, graftFeatures = feats)
       frames(Seq("user_id"))
         .select(lit("user").as("entity_kind"),
           col("user_id").cast("string").as("entity_id"),
@@ -4052,13 +4053,13 @@ object SparkEntry {
       val feats = matGraftDailyFeats
       // value AND props pinned non-null inside matGraftDailyState so
       // the three stores share one (user, day) domain. Pristine copy
-      // of the shared 2-delta state per run (compactGraft MUTATES);
+      // of the shared 2-delta state per run (compact MUTATES);
       // the timed operators are the compaction + daily-table serve
       val root = stateCopy(s, matGraftDailyState(s, dir), "matgdaily")
-      IncrementalMaterializer.compactGraft(s, root, feats,
-        Seq("user_id"), "ts", dayUs)
-      IncrementalMaterializer.snapshotDailyGraft(s, root, feats,
-          Seq("user_id"), "ts", dayUs)
+      IncrementalMaterializer.compact(s, root, Nil,
+        Seq("user_id"), "ts", dayUs, graftFeatures = feats)
+      IncrementalMaterializer.snapshotDaily(s, root, Nil,
+          Seq("user_id"), "ts", dayUs, graftFeatures = feats)
         .select(col("user_id"), col("bucket"), col("f_g_p50_7d"),
           round(col("f_g_nd_7d"), 4).as("f_g_nd_7d"),
           when(col("f_g_top3_7d").isNotNull,

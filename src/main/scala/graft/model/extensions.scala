@@ -10,9 +10,10 @@ package graft.model
   * a declared feature set can maintain them through the SAME
   * refresh/snapshot/compact/forgetKeys lifecycle as the reference
   * aggregations. Declared via
-  * [[graft.operators.IncrementalMaterializer.GraftFeature]]; kept out
-  * of [[Aggregation]] so the reference-parity enum stays exactly the
-  * reference's.
+  * [[graft.operators.IncrementalMaterializer.GraftFeature]] and passed
+  * to the feature-set calls (`refresh`, `snapshot`, `compact`, ...)
+  * through their `graftFeatures` argument; kept out of [[Aggregation]]
+  * so the reference-parity enum stays exactly the reference's.
   */
 sealed trait GraftAggregation
 

@@ -28,64 +28,329 @@ import org.apache.spark.sql.functions._
   * record limit is not a semilattice) and route to the batch J3/A9
   * planner instead.
   *
+  * Extension features ([[GraftFeature]]: distinct-count, quantile,
+  * top-k) ride [[IncrementalDistinct]], [[IncrementalQuantile]] and
+  * [[IncrementalTopK]] through the SAME calls: every lifecycle
+  * operation (refresh, the snapshots, trainingSet, describe, compact,
+  * compactRetaining, forgetKeys, maintain and their `*Multi` forms)
+  * takes them as its `graftFeatures` argument, so one refresh covers
+  * both surfaces under one commit marker. Both surfaces resolve to
+  * one store adapter; each store kind is named in one place.
+  *
   * SUM/AVG are maintained on the exact integer cent grid
   * ([[IncrementalSwa]]'s contract): exact for 2-decimal measures,
   * 0.01-quantized otherwise; MIN/MAX/LATEST are exact raw values.
-  * Store directories key on md5(defExpr|filter), so refreshes are
-  * stable across runs and feature reorderings.
+  * Store directories key on md5(defExpr|filter) (`m=`/`u=`/`e=`) and
+  * md5(defExpr|filter|state config) (`g=`), so refreshes are stable
+  * across runs and feature reorderings.
   */
 object IncrementalMaterializer {
 
-  /** Which incremental store a feature's aggregation maintains:
-    * the 5-in-1 scalar partials ([[IncrementalSwa]]), the
-    * distinct-set semilattice ([[IncrementalUnion]]), or the O(dim)
-    * vector partials ([[IncrementalVector]]).
+  /** Which incremental store a feature maintains, with the store's
+    * STATE parameters (part of its identity; serve-time parameters —
+    * a quantile's `q`, a top-k's `k` — are not, so features differing
+    * only in those share one store).
     */
-  private sealed trait Kind { def prefix: String }
-  private case object Scalar extends Kind { val prefix = "m" }
-  private case object SetUnion extends Kind { val prefix = "u" }
-  private case object Vector extends Kind { val prefix = "e" }
+  private sealed abstract class Kind(val prefix: String,
+      val stateKey: Option[String] = None)
+  private case object Scalar extends Kind("m")
+  private case object SetUnion extends Kind("u")
+  private case object Vector extends Kind("e")
+  private final case class Distinct(p: Int) extends Kind("g", Some(s"dc|$p"))
+  private final case class Histogram(lo: Double, hi: Double, bins: Int)
+      extends Kind("g", Some(s"qt|$lo|$hi|$bins"))
+  private final case class Candidates(cand: Int)
+      extends Kind("g", Some(s"tk|$cand"))
 
-  private case class Measure(defExpr: String, filter: Option[String],
+  private def md5Hex(s: String, n: Int): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(n)
+
+  /** One incremental store: the measure it folds and its kind. */
+  private final case class Store(defExpr: String, filter: Option[String],
       kind: Kind) {
-    def id: String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s"$defExpr|${filter.getOrElse("")}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(16)
+    /** Root-relative store dir, stable across runs and reorderings. */
+    def rel: String = s"${kind.prefix}=" + md5Hex(
+      (Seq(defExpr, filter.getOrElse("")) ++ kind.stateKey).mkString("|"), 16)
+  }
+
+  /** How a feature's column is read off its store's served frame: a
+    * served column verbatim, the cutoff row at quantile `q`, or the
+    * rank-ordered items of the top `k`.
+    */
+  private sealed trait Pick
+  private final case class Served(column: String) extends Pick
+  private final case class AtQuantile(q: Double) extends Pick
+  private final case class TopItems(k: Int) extends Pick
+
+  /** A feature of either surface resolved onto its store. */
+  private final case class Planned(name: String, store: Store, window: Int,
+      pick: Pick)
+
+  private def windowOf(name: String, window: java.time.Duration,
+      bucketUs: Long): Int = {
+    val winUs = Durations.toMicros(window)
+    require(winUs % bucketUs == 0 && winUs > 0,
+      s"feature '$name': window $window is not a whole multiple " +
+        s"of the ${bucketUs}µs maintenance bucket")
+    (winUs / bucketUs).toInt
+  }
+
+  /** A reference aggregation's store kind and the served column it
+    * reads from that store's serve/serveDaily output.
+    */
+  private def anchorKind(f: AnchorFeature, agg: Aggregation): (Kind, String) =
+    agg match {
+      case Aggregation.SUM => (Scalar, "f_sum")
+      case Aggregation.COUNT => (Scalar, "f_cnt")
+      case Aggregation.AVG => (Scalar, "f_avg")
+      case Aggregation.MIN => (Scalar, "f_min")
+      case Aggregation.MAX => (Scalar, "f_max")
+      case Aggregation.LATEST => (Scalar, "f_latest")
+      case Aggregation.UNION => (SetUnion, "f_union")
+      case Aggregation.ELEMENTWISE_SUM => (Vector, "f_esum")
+      case Aggregation.ELEMENTWISE_AVG => (Vector, "f_eavg")
+      case Aggregation.ELEMENTWISE_MIN => (Vector, "f_emin")
+      case Aggregation.ELEMENTWISE_MAX => (Vector, "f_emax")
+      case other => throw new IllegalArgumentException(
+        s"feature '${f.name}': $other is not incrementally maintainable " +
+          "here — use the batch windowed-agg join")
     }
-  }
 
-  private def kindOf(f: AnchorFeature, agg: Aggregation): Kind = agg match {
-    case Aggregation.SUM | Aggregation.COUNT | Aggregation.AVG |
-         Aggregation.MIN | Aggregation.MAX | Aggregation.LATEST => Scalar
-    case Aggregation.UNION => SetUnion
-    case Aggregation.ELEMENTWISE_SUM | Aggregation.ELEMENTWISE_AVG |
-         Aggregation.ELEMENTWISE_MIN | Aggregation.ELEMENTWISE_MAX => Vector
-    case other => throw new IllegalArgumentException(
-      s"feature '${f.name}': $other is not incrementally maintainable " +
-        "here — use the batch windowed-agg join")
-  }
-
-  private def planOf(f: AnchorFeature, bucketUs: Long): (Measure, Int, Aggregation) =
+  private def planOf(f: AnchorFeature, bucketUs: Long): Planned =
     f.transform match {
       case wa: Transformation.WindowAgg =>
         require(wa.groupBy.isEmpty && wa.limit.isEmpty,
           s"feature '${f.name}': group_by/limit window aggregations are not " +
             "incrementally maintainable (sub-keys explode state, limits are " +
             "not semilattices) — use the batch windowed-agg join")
-        val winUs = graft.model.Durations.toMicros(wa.window)
-        require(winUs % bucketUs == 0 && winUs > 0,
-          s"feature '${f.name}': window ${wa.window} is not a whole multiple " +
-            s"of the ${bucketUs}µs maintenance bucket")
-        (Measure(wa.defExpr, wa.filter, kindOf(f, wa.aggFunc)),
-          (winUs / bucketUs).toInt, wa.aggFunc)
+        val w = windowOf(f.name, wa.window, bucketUs)
+        val (kind, column) = anchorKind(f, wa.aggFunc)
+        Planned(f.name, Store(wa.defExpr, wa.filter, kind), w, Served(column))
       case other => throw new IllegalArgumentException(
         s"feature '${f.name}': only window aggregations materialize " +
           s"incrementally (got $other)")
     }
 
-  private def storeDir(root: String, m: Measure) =
-    s"$root/${m.kind.prefix}=${m.id}"
+  /** Extension features: DistinctCount serves the raw HLL estimate
+    * (`est_raw`), Quantile the bin left edge in value space, TopK the
+    * rank-ordered item array.
+    */
+  private def graftPlanOf(f: GraftFeature, bucketUs: Long): Planned = {
+    val (kind, pick) = f.agg match {
+      case GraftAggregation.DistinctCount(p) => (Distinct(p), Served("est_raw"))
+      case GraftAggregation.Quantile(q, lo, hi, bins) =>
+        (Histogram(lo, hi, bins), AtQuantile(q))
+      case GraftAggregation.TopK(k, cand) => (Candidates(cand), TopItems(k))
+    }
+    Planned(f.name, Store(f.defExpr, f.filter, kind),
+      windowOf(f.name, f.window, bucketUs), pick)
+  }
+
+  /** Both surfaces resolved onto their stores; an empty feature set is
+    * refused by name.
+    */
+  private def plansOf(features: Seq[AnchorFeature],
+      graftFeatures: Seq[GraftFeature], bucketUs: Long,
+      what: String): Seq[Planned] = {
+    require(features.nonEmpty || graftFeatures.nonEmpty,
+      s"no features to $what")
+    features.map(planOf(_, bucketUs)) ++
+      graftFeatures.map(graftPlanOf(_, bucketUs))
+  }
+
+  /** The distinct stores of both surfaces — one delta shuffle and one
+    * maintenance action per DISTINCT (defExpr, filter, kind), not per
+    * feature.
+    */
+  private def storesOf(features: Seq[AnchorFeature],
+      graftFeatures: Seq[GraftFeature], bucketUs: Long,
+      what: String): Seq[Store] =
+    plansOf(features, graftFeatures, bucketUs, what).map(_.store).distinct
+
+  /** One call's store context: the feature-set root and the key frame
+    * its stores hold. `unionCap` bounds UNION set state per (key,
+    * bucket) ([[IncrementalUnion.Config.maxSetPerBucket]]).
+    */
+  private final case class Ctx(spark: SparkSession, root: String,
+      keyCols: Seq[String], tsCol: String, bucketUs: Long,
+      unionCap: Int = 10000) {
+    def dir(s: Store): String = s"$root/${s.rel}"
+  }
+
+  /** Which served view of a store a snapshot reads. */
+  private sealed trait Read
+  private final case class AtBoundary(asOfUs: Long) extends Read
+  private final case class AtVersion(asOfUs: Long, version: Long)
+      extends Read
+  private final case class PerBucket(includeHorizonPartialRows: Boolean,
+      throughBucket: Option[Long]) extends Read
+
+  /** One store's lifecycle calls behind one interface. `serve` takes
+    * the picks of the features read in that call: quantile stores
+    * serve all their `q`s at once, top-k stores the largest `k`.
+    */
+  private trait Adapter {
+    def ingest(measured: DataFrame, version: Long): Unit
+    def serve(read: Read, w: Int, picks: Seq[Pick]): DataFrame
+    def compact(): Unit
+    def compactRetaining(minBucket: Long): Unit
+    def forgetKeys(keys: DataFrame): Unit
+  }
+
+  private val MeasureCol = "__graft_m"
+
+  /** The one store-kind dispatch: each of the six incremental stores'
+    * calls, named here and nowhere else in this file.
+    */
+  private def adapter(c: Ctx, s: Store): Adapter = {
+    val (spark, dir) = (c.spark, c.dir(s))
+    val (ks, ts, b) = (c.keyCols, c.tsCol, c.bucketUs)
+    s.kind match {
+      case Scalar =>
+        val cfg = IncrementalSwa.Config(ks, ts, MeasureCol, b)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalSwa.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
+            case AtBoundary(t) => IncrementalSwa.serve(spark, dir, cfg, t, w)
+            case AtVersion(t, v) =>
+              IncrementalSwa.serveAsOf(spark, dir, cfg, t, w, v)
+            case PerBucket(partial, through) =>
+              IncrementalSwa.serveDaily(spark, dir, cfg, w, partial, through)
+          }
+          def compact(): Unit = IncrementalSwa.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalSwa.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalSwa.forgetKeys(spark, dir, cfg, keys)
+        }
+      case SetUnion =>
+        val cfg = IncrementalUnion.Config(ks, ts, MeasureCol, b, c.unionCap)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalUnion.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
+            case AtBoundary(t) => IncrementalUnion.serve(spark, dir, cfg, t, w)
+            case AtVersion(t, v) =>
+              IncrementalUnion.serveAsOf(spark, dir, cfg, t, w, v)
+            case PerBucket(partial, through) =>
+              IncrementalUnion.serveDaily(spark, dir, cfg, w, partial, through)
+          }
+          def compact(): Unit = IncrementalUnion.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalUnion.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalUnion.forgetKeys(spark, dir, cfg, keys)
+        }
+      case Vector =>
+        val cfg = IncrementalVector.Config(ks, ts, MeasureCol, b)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalVector.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
+            case AtBoundary(t) => IncrementalVector.serve(spark, dir, cfg, t, w)
+            case AtVersion(t, v) =>
+              IncrementalVector.serveAsOf(spark, dir, cfg, t, w, v)
+            case PerBucket(partial, through) =>
+              IncrementalVector.serveDaily(spark, dir, cfg, w, partial, through)
+          }
+          def compact(): Unit = IncrementalVector.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalVector.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalVector.forgetKeys(spark, dir, cfg, keys)
+        }
+      case Distinct(p) =>
+        val cfg = IncrementalDistinct.Config(ks, ts, MeasureCol, b, p)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalDistinct.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
+            case AtBoundary(t) =>
+              IncrementalDistinct.serveDistinct(spark, dir, cfg, t, w)
+            case AtVersion(t, v) =>
+              IncrementalDistinct.serveAsOf(spark, dir, cfg, t, w, v)
+            case PerBucket(partial, through) =>
+              IncrementalDistinct.serveDaily(spark, dir, cfg, w, partial,
+                through)
+          }
+          def compact(): Unit = IncrementalDistinct.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalDistinct.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalDistinct.forgetKeys(spark, dir, cfg, keys)
+        }
+      case Histogram(lo, hi, bins) =>
+        val cfg =
+          IncrementalQuantile.Config(ks, ts, MeasureCol, b, lo, hi, bins)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalQuantile.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = {
+            val qs = picks.collect { case AtQuantile(q) => q }.distinct
+            r match {
+              case AtBoundary(t) =>
+                IncrementalQuantile.serveQuantiles(spark, dir, cfg, t, w, qs)
+              case AtVersion(t, v) =>
+                IncrementalQuantile.serveAsOf(spark, dir, cfg, t, w, qs, v)
+              case PerBucket(partial, through) =>
+                IncrementalQuantile.serveDaily(spark, dir, cfg, w, qs, partial,
+                  through)
+            }
+          }
+          def compact(): Unit = IncrementalQuantile.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalQuantile.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalQuantile.forgetKeys(spark, dir, cfg, keys)
+        }
+      case Candidates(cand) =>
+        val cfg = IncrementalTopK.Config(ks, ts, MeasureCol, b, cand)
+        new Adapter {
+          def ingest(d: DataFrame, v: Long): Unit =
+            IncrementalTopK.ingest(d, dir, cfg, v)
+          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = {
+            val kMax = picks.collect { case TopItems(k) => k }.max
+            r match {
+              case AtBoundary(t) =>
+                IncrementalTopK.serveTopK(spark, dir, cfg, t, w, kMax)
+              case AtVersion(t, v) =>
+                IncrementalTopK.serveAsOf(spark, dir, cfg, t, w, kMax, v)
+              case PerBucket(partial, through) =>
+                IncrementalTopK.serveDaily(spark, dir, cfg, w, kMax, partial,
+                  through)
+            }
+          }
+          def compact(): Unit = IncrementalTopK.compact(spark, dir, cfg)
+          def compactRetaining(mb: Long): Unit =
+            IncrementalTopK.compactRetaining(spark, dir, cfg, mb)
+          def forgetKeys(keys: DataFrame): Unit =
+            IncrementalTopK.forgetKeys(spark, dir, cfg, keys)
+        }
+    }
+  }
+
+  /** The feature columns of one (store, window) serve: served-column
+    * picks share one frame; each quantile feature is its `q` row of
+    * the served cutoffs, each top-k feature its rank-ordered items.
+    */
+  private def pickColumns(base: DataFrame, joinCols: Seq[String],
+      fs: Seq[Planned]): Seq[DataFrame] = {
+    val keys = joinCols.map(col)
+    val direct = fs.collect { case Planned(n, _, _, Served(c)) => col(c).as(n) }
+    (if (direct.isEmpty) Nil else Seq(base.select(keys ++ direct: _*))) ++
+      fs.collect {
+        case Planned(n, _, _, AtQuantile(q)) =>
+          base.where(col("q") === math.rint(q * 10000).toLong / 10000.0)
+            .select(keys :+ col("cutoff").as(n): _*)
+        case Planned(n, _, _, TopItems(k)) =>
+          base.where(col("rank") <= k).groupBy(keys: _*)
+            .agg(transform(
+              array_sort(collect_list(struct(col("rank"), col("item")))),
+              _.getField("item")).as(n))
+      }
+  }
 
   /** Assemble per-store served frames into the wide feature row in ONE
     * shuffle: each frame is null-padded to the full feature-column set
@@ -116,9 +381,6 @@ object IncrementalMaterializer {
       .groupBy(joinCols.map(col): _*)
       .agg(firsts.head, firsts.tail: _*)
   }
-
-  private def cfg(keyCols: Seq[String], tsCol: String, bucketUs: Long) =
-    IncrementalSwa.Config(keyCols, tsCol, "__graft_m", bucketUs)
 
   // ------------------------------------------------------------------
   // Feature-set-level refresh commit marker. A refresh fans ONE delta
@@ -212,19 +474,13 @@ object IncrementalMaterializer {
   /** The serve-side tear check: every store this serve reads that an
     * unfinished refresh covers must be AT OR ABOVE the refresh's
     * version, else the wide row would mix versions — refused by name.
-    * `servedDirs` are ABSOLUTE store paths under `root`.
+    * `servedDirs` are ABSOLUTE store paths under `root`. An AS-OF read
+    * at version `upTo` is untouched by a torn refresh ABOVE it (the
+    * mixed versions are all excluded by the truncation), so only
+    * markers at or below the boundary can refuse it.
     */
   private def requireRefreshComplete(spark: SparkSession, root: String,
-      servedDirs: Seq[String]): Unit =
-    requireRefreshCompleteUpTo(spark, root, servedDirs, Long.MaxValue)
-
-  /** The tear check bounded by a version boundary: an AS-OF read at
-    * version V is untouched by a torn refresh ABOVE V (the mixed
-    * versions are all excluded by the truncation), so only markers at
-    * or below the boundary can refuse it.
-    */
-  private def requireRefreshCompleteUpTo(spark: SparkSession, root: String,
-      servedDirs: Seq[String], upTo: Long): Unit =
+      servedDirs: Seq[String], upTo: Long = Long.MaxValue): Unit =
     pending(spark, root).foreach { case (v, rel) =>
       val covered = rel.map(r => s"$root/$r").toSet
       val lagging = if (v > upTo) Nil
@@ -259,48 +515,77 @@ object IncrementalMaterializer {
           s"version $v first")
     }
 
-  /** Fold one delta into every feature's measure store — one delta
-    * shuffle per DISTINCT (defExpr, filter, store kind), not per
-    * feature. Same version/replay discipline as
-    * [[IncrementalSwa.ingest]]. `unionCap` bounds UNION set state per
-    * (key, bucket) ([[IncrementalUnion.Config.maxSetPerBucket]] — an
+  /** Fold one delta into every store of the feature set — reference
+    * features and `graftFeatures` alike — one delta shuffle per
+    * DISTINCT store, not per feature. Same version/replay discipline
+    * as [[IncrementalSwa.ingest]]; ONE commit marker covers the stores
+    * of both surfaces. `unionCap` bounds UNION set state per (key,
+    * bucket) ([[IncrementalUnion.Config.maxSetPerBucket]] — an
     * over-cap ingest fails by name, never truncates).
     */
   def refresh(delta: DataFrame, root: String, features: Seq[AnchorFeature],
       keyCols: Seq[String], tsCol: String, bucketUs: Long,
-      version: Long, unionCap: Int = 10000): Unit = {
-    require(features.nonEmpty, "no features to refresh")
-    val measures = features.map(planOf(_, bucketUs)._1).distinct
+      version: Long, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit = {
+    val c = Ctx(delta.sparkSession, root, keyCols, tsCol, bucketUs, unionCap)
+    val stores = storesOf(features, graftFeatures, bucketUs, "refresh")
     // set-level commit intent BEFORE the fan-out (see the marker
     // protocol above): a crash mid-fan leaves the marker, and serves
     // refuse the torn subset by name until the refresh is replayed
-    markPending(spark = delta.sparkSession, root = root, version = version,
-      storeDirs = measures.map(m => s"${m.kind.prefix}=${m.id}"))
+    markPending(c.spark, root, version, stores.map(_.rel))
     // plans built sequentially, the independent per-store writes run
     // concurrently (separate dirs, separate leases) — wall ≈ the
     // slowest store instead of the sum (the Par lever, r14 verdict)
-    Par.run(measures.map { m => () =>
-      val filtered = m.filter.map(delta.where(_)).getOrElse(delta)
-      val measured = filtered.withColumn("__graft_m", expr(m.defExpr))
-        .select((keyCols :+ tsCol :+ "__graft_m").map(col): _*)
-      m.kind match {
-        case Scalar => IncrementalSwa.ingest(measured,
-          storeDir(root, m), cfg(keyCols, tsCol, bucketUs), version)
-        case SetUnion => IncrementalUnion.ingest(measured,
-          storeDir(root, m),
-          IncrementalUnion.Config(keyCols, tsCol, "__graft_m", bucketUs,
-            unionCap), version)
-        case Vector => IncrementalVector.ingest(measured,
-          storeDir(root, m),
-          IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs),
-          version)
-      }
+    Par.run(stores.map { s => () =>
+      val filtered = s.filter.map(delta.where(_)).getOrElse(delta)
+      val measured = filtered.withColumn(MeasureCol, expr(s.defExpr))
+        .select((keyCols :+ tsCol :+ MeasureCol).map(col): _*)
+      adapter(c, s).ingest(measured, version)
     }: _*)
-    clearPending(delta.sparkSession, root, version)
+    clearPending(c.spark, root, version)
+  }
+
+  /** The one read path under every snapshot: one serve per distinct
+    * (store, window) — quantile features sharing a store and window
+    * ride ONE serve with all their `q`s, top-k features one serve at
+    * the largest `k` — feature columns renamed to their DSL names.
+    * Derived features evaluate over the reference features' wide row
+    * BEFORE the extension columns merge in (the extension columns are
+    * a separate namespace), so rows only extension stores hold keep
+    * null derived columns.
+    */
+  private def assemble(c: Ctx, features: Seq[AnchorFeature],
+      graftFeatures: Seq[GraftFeature], derived: Seq[DerivedFeature],
+      read: Read): DataFrame = {
+    require(features.nonEmpty || graftFeatures.nonEmpty,
+      "no features to snapshot")
+    require(features.nonEmpty || derived.isEmpty,
+      s"derived feature(s) ${derived.map(_.name)} need anchor features " +
+        "to evaluate over — the extension columns are a separate " +
+        "namespace; declare at least one anchor feature or drop the " +
+        "derivations")
+    val anchors = features.map(planOf(_, c.bucketUs))
+    val grafts = graftFeatures.map(graftPlanOf(_, c.bucketUs))
+    val (joinCols, upTo) = read match {
+      case _: PerBucket => (c.keyCols :+ "bucket", Long.MaxValue)
+      case AtVersion(_, v) => (c.keyCols, v)
+      case _: AtBoundary => (c.keyCols, Long.MaxValue)
+    }
+    requireRefreshComplete(c.spark, c.root,
+      (anchors ++ grafts).map(p => c.dir(p.store)).distinct, upTo)
+    def served(ps: Seq[Planned]): Seq[DataFrame] =
+      ps.groupBy(p => (p.store, p.window)).toSeq.flatMap { case ((s, w), fs) =>
+        pickColumns(adapter(c, s).serve(read, w, fs.map(_.pick)), joinCols, fs)
+      }
+    val anchorWide =
+      if (anchors.isEmpty) Nil
+      else Seq(applyDerived(assembleWide(served(anchors), joinCols),
+        features, derived))
+    assembleWide(anchorWide ++ served(grafts), joinCols)
   }
 
   /** The wide feature row per key as of bucket boundary `asOfUs`: one
-    * serve per distinct (measure, window), feature columns renamed to
+    * serve per distinct (store, window), feature columns renamed to
     * their DSL names, assembled with bounded key-frame joins. Keys
     * with no qualifying rows in a feature's window carry null there
     * (the left-join feature-vector contract).
@@ -318,30 +603,10 @@ object IncrementalMaterializer {
   def snapshot(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
       bucketUs: Long, asOfUs: Long,
-      derived: Seq[DerivedFeature] = Nil): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    val plans = features.map(f => (f, planOf(f, bucketUs)))
-    requireRefreshComplete(spark, root,
-      plans.map { case (_, (m, _, _)) => storeDir(root, m) }.distinct)
-    val served = plans.groupBy { case (_, (m, w, _)) => (m, w) }
-      .map { case ((m, w), fs) =>
-        val base = m.kind match {
-          case Scalar => IncrementalSwa.serve(spark, storeDir(root, m),
-            cfg(keyCols, tsCol, bucketUs), asOfUs, w)
-          case SetUnion => IncrementalUnion.serve(spark, storeDir(root, m),
-            IncrementalUnion.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            asOfUs, w)
-          case Vector => IncrementalVector.serve(spark, storeDir(root, m),
-            IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            asOfUs, w)
-        }
-        val cols = keyCols.map(col) ++ fs.map { case (f, (_, _, agg)) =>
-          col(aggCol(agg)).as(f.name)
-        }
-        base.select(cols: _*)
-      }.toSeq
-    applyDerived(assembleWide(served, keyCols), features, derived)
-  }
+      derived: Seq[DerivedFeature] = Nil,
+      graftFeatures: Seq[GraftFeature] = Nil): DataFrame =
+    assemble(Ctx(spark, root, keyCols, tsCol, bucketUs), features,
+      graftFeatures, derived, AtBoundary(asOfUs))
 
   /** STATE time travel for the whole feature set: the wide feature row
     * exactly as refresh version `asOfVersion` served it at bucket
@@ -358,38 +623,16 @@ object IncrementalMaterializer {
   def snapshotAsOf(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
       bucketUs: Long, asOfUs: Long, asOfVersion: Long,
-      derived: Seq[DerivedFeature] = Nil): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    val plans = features.map(f => (f, planOf(f, bucketUs)))
-    requireRefreshCompleteUpTo(spark, root,
-      plans.map { case (_, (m, _, _)) => storeDir(root, m) }.distinct,
-      asOfVersion)
-    val served = plans.groupBy { case (_, (m, w, _)) => (m, w) }
-      .map { case ((m, w), fs) =>
-        val base = m.kind match {
-          case Scalar => IncrementalSwa.serveAsOf(spark, storeDir(root, m),
-            cfg(keyCols, tsCol, bucketUs), asOfUs, w, asOfVersion)
-          case SetUnion => IncrementalUnion.serveAsOf(spark,
-            storeDir(root, m),
-            IncrementalUnion.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            asOfUs, w, asOfVersion)
-          case Vector => IncrementalVector.serveAsOf(spark,
-            storeDir(root, m),
-            IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            asOfUs, w, asOfVersion)
-        }
-        base.select(keyCols.map(col) ++ fs.map { case (f, (_, _, agg)) =>
-          col(aggCol(agg)).as(f.name)
-        }: _*)
-      }.toSeq
-    applyDerived(assembleWide(served, keyCols), features, derived)
-  }
+      derived: Seq[DerivedFeature] = Nil,
+      graftFeatures: Seq[GraftFeature] = Nil): DataFrame =
+    assemble(Ctx(spark, root, keyCols, tsCol, bucketUs), features,
+      graftFeatures, derived, AtVersion(asOfUs, asOfVersion))
 
   /** The feature TABLE over time for the whole feature set: one row
     * per key × bucket, every feature's window aggregate as served at
     * that bucket's boundary, derived features evaluated per row — the
     * keys×days table a training pipeline actually consumes, assembled
-    * from ONE `serveDaily` state pass per distinct (measure, window)
+    * from ONE `serveDaily` state pass per distinct (store, window)
     * instead of N×features [[snapshot]] calls (axes 25/28: the per-day
     * serve loop is linear in days; the daily passes are flat). Keys
     * with no qualifying rows in a feature's window at a bucket carry
@@ -407,32 +650,25 @@ object IncrementalMaterializer {
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
       bucketUs: Long, derived: Seq[DerivedFeature] = Nil,
       includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    val plans = features.map(f => (f, planOf(f, bucketUs)))
-    requireRefreshComplete(spark, root,
-      plans.map { case (_, (m, _, _)) => storeDir(root, m) }.distinct)
-    val joinCols = keyCols :+ "bucket"
-    val served = plans.groupBy { case (_, (m, w, _)) => (m, w) }
-      .map { case ((m, w), fs) =>
-        val base = m.kind match {
-          case Scalar => IncrementalSwa.serveDaily(spark, storeDir(root, m),
-            cfg(keyCols, tsCol, bucketUs), w, includeHorizonPartialRows,
-            throughBucket)
-          case SetUnion => IncrementalUnion.serveDaily(spark,
-            storeDir(root, m),
-            IncrementalUnion.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            w, includeHorizonPartialRows, throughBucket)
-          case Vector => IncrementalVector.serveDaily(spark,
-            storeDir(root, m),
-            IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs),
-            w, includeHorizonPartialRows, throughBucket)
-        }
-        base.select(joinCols.map(col) ++ fs.map { case (f, (_, _, agg)) =>
-          col(aggCol(agg)).as(f.name)
-        }: _*)
-      }.toSeq
-    applyDerived(assembleWide(served, joinCols), features, derived)
+      throughBucket: Option[Long] = None,
+      graftFeatures: Seq[GraftFeature] = Nil): DataFrame =
+    assemble(Ctx(spark, root, keyCols, tsCol, bucketUs), features,
+      graftFeatures, derived,
+      PerBucket(includeHorizonPartialRows, throughBucket))
+
+  /** The last bucket a training table must reach: the daily tables
+    * end at the state's last event bucket by default, but observations
+    * may arrive AFTER it (quiet days, late observation feeds) while
+    * their windows still reach real state — every store's emitted
+    * range extends to the latest observation's preceding bucket so
+    * those rows get their genuine aggregates, not silent cold-start
+    * nulls (one tiny driver read of the obs frame).
+    */
+  private def throughOf(observations: DataFrame, obsTsCol: String,
+      bucketUs: Long): Option[Long] = {
+    val obsHi = observations
+      .agg(max(IncrementalSwa.bucketOf(col(obsTsCol), bucketUs))).head()
+    if (obsHi.isNullAt(0)) None else Some(obsHi.getLong(0) - 1L)
   }
 
   /** The leak-free training table for the feature set: every
@@ -445,47 +681,20 @@ object IncrementalMaterializer {
     * (the store-level `q_training_set_state` contract, lifted to the
     * whole feature set). Observations whose preceding bucket has no
     * feature row keep nulls (left join — cold-start rows are the
-    * trainer's decision, not silently dropped).
+    * trainer's decision, not silently dropped). The training spine is
+    * the union of both surfaces' (key, bucket) domains, so an
+    * observation keeps its extension columns even at buckets where no
+    * reference feature has rows (and vice versa).
     */
   def trainingSet(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
       bucketUs: Long, observations: DataFrame, obsTsCol: String,
       derived: Seq[DerivedFeature] = Nil,
       graftFeatures: Seq[GraftFeature] = Nil): DataFrame = {
-    require(features.nonEmpty || graftFeatures.nonEmpty,
-      "no features to assemble")
-    require(features.nonEmpty || derived.isEmpty,
-      s"derived feature(s) ${derived.map(_.name)} need anchor features " +
-        "to evaluate over — the extension columns are a separate " +
-        "namespace; declare at least one anchor feature or drop the " +
-        "derivations")
-    // the daily tables end at the state's last event bucket by
-    // default, but observations may arrive AFTER it (quiet days, late
-    // observation feeds) while their windows still reach real state —
-    // extend every store's emitted range to the latest observation's
-    // preceding bucket so those rows get their genuine aggregates, not
-    // silent cold-start nulls (one tiny driver read of the obs frame)
-    val obsHi = observations
-      .agg(max(IncrementalSwa.bucketOf(col(obsTsCol), bucketUs))).head()
-    val through =
-      if (obsHi.isNullAt(0)) None else Some(obsHi.getLong(0) - 1L)
-    // reference-enum and extension features each assemble their own
-    // daily table; the training spine is the union of the two (key,
-    // bucket) domains, so an observation keeps its graft columns even
-    // at buckets where no anchor feature has rows (and vice versa).
-    // Derived features stay anchor-only — the extension columns are a
-    // separate namespace by design.
-    val parts = Seq(
-      if (features.nonEmpty)
-        Some(snapshotDaily(spark, root, features, keyCols, tsCol,
-          bucketUs, derived, throughBucket = through))
-      else None,
-      if (graftFeatures.nonEmpty)
-        Some(snapshotDailyGraft(spark, root, graftFeatures, keyCols, tsCol,
-          bucketUs, throughBucket = through))
-      else None).flatten
-    val joinCols = keyCols :+ "bucket"
-    val daily = assembleWide(parts, joinCols)
+    val daily = snapshotDaily(spark, root, features, keyCols, tsCol,
+        bucketUs, derived,
+        throughBucket = throughOf(observations, obsTsCol, bucketUs),
+        graftFeatures = graftFeatures)
       .withColumnRenamed("bucket", "__feature_bucket")
     val obs = observations.withColumn("__feature_bucket",
       IncrementalSwa.bucketOf(col(obsTsCol), bucketUs) - 1L)
@@ -493,115 +702,80 @@ object IncrementalMaterializer {
       .drop("__feature_bucket")
   }
 
-  /** The served column a reference aggregation reads from its store's
-    * serve/serveDaily output — shared by [[snapshot]] and
-    * [[snapshotDaily]] so the two assemblies cannot drift.
-    */
-  private def aggCol(agg: Aggregation): String = agg match {
-    case Aggregation.SUM => "f_sum"
-    case Aggregation.COUNT => "f_cnt"
-    case Aggregation.AVG => "f_avg"
-    case Aggregation.MIN => "f_min"
-    case Aggregation.MAX => "f_max"
-    case Aggregation.LATEST => "f_latest"
-    case Aggregation.UNION => "f_union"
-    case Aggregation.ELEMENTWISE_SUM => "f_esum"
-    case Aggregation.ELEMENTWISE_AVG => "f_eavg"
-    case Aggregation.ELEMENTWISE_MIN => "f_emin"
-    case Aggregation.ELEMENTWISE_MAX => "f_emax"
-    case other => throw new IllegalStateException(
-      s"unreachable: $other passed kindOf")
-  }
-
-  /** One (measure, kind) maintenance dispatch — the shared loop under
-    * [[compact]]/[[compactRetaining]]/[[forgetKeys]]: the same
-    * measure-dedup as [[refresh]], one store-level call per distinct
-    * (defExpr, filter, kind).
-    */
-  private def eachStore(root: String, features: Seq[AnchorFeature],
-      keyCols: Seq[String], tsCol: String, bucketUs: Long, unionCap: Int)(
-      onScalar: (String, IncrementalSwa.Config) => Unit,
-      onUnion: (String, IncrementalUnion.Config) => Unit,
-      onVector: (String, IncrementalVector.Config) => Unit): Unit = {
-    require(features.nonEmpty, "no features to maintain")
-    // independent stores → concurrent maintenance actions (compact /
-    // retain / forget each fold one dir under its own lease)
-    Par.run(features.map(planOf(_, bucketUs)._1).distinct.map { m => () =>
-      val dir = storeDir(root, m)
-      m.kind match {
-        case Scalar => onScalar(dir, cfg(keyCols, tsCol, bucketUs))
-        case SetUnion => onUnion(dir,
-          IncrementalUnion.Config(keyCols, tsCol, "__graft_m", bucketUs,
-            unionCap))
-        case Vector => onVector(dir,
-          IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs))
-      }
-    }: _*)
-  }
-
-  /** Operational snapshot of every measure store in the feature set —
+  /** Operational snapshot of every store in the feature set —
     * [[IncrementalSwa.describe]] per store, keyed by the features that
     * share it (the "is tonight's compaction needed / who holds the
     * lease / how much history is the horizon carrying" dashboard read;
     * all driver-side metadata, no Spark job).
     */
   def describe(spark: SparkSession, root: String,
-      features: Seq[AnchorFeature],
-      bucketUs: Long): Seq[(Seq[String], IncrementalSwa.StoreInfo)] = {
-    require(features.nonEmpty, "no features to describe")
-    features.map(f => (f, planOf(f, bucketUs)._1))
-      .groupBy(_._2).toSeq
-      .map { case (m, fs) =>
-        (fs.map(_._1.name), IncrementalSwa.describe(spark, storeDir(root, m)))
+      features: Seq[AnchorFeature], bucketUs: Long,
+      graftFeatures: Seq[GraftFeature] = Nil)
+      : Seq[(Seq[String], IncrementalSwa.StoreInfo)] = {
+    plansOf(features, graftFeatures, bucketUs, "describe")
+      .groupBy(_.store).toSeq
+      .map { case (s, fs) =>
+        (fs.map(_.name), IncrementalSwa.describe(spark, s"$root/${s.rel}"))
       }
   }
 
-  /** Compact every measure store of the feature set — the nightly
+  /** One maintenance action per distinct store of the feature set,
+    * stores maintained concurrently (compact / retain / forget each
+    * fold one dir under its own lease). `guardTorn` refuses folding a
+    * store covered by a torn refresh ([[requireNoTornForMaintenance]]).
+    */
+  private def eachStore(c: Ctx, features: Seq[AnchorFeature],
+      graftFeatures: Seq[GraftFeature], guardTorn: Boolean)(
+      action: Adapter => Unit): Unit = {
+    val stores = storesOf(features, graftFeatures, c.bucketUs, "maintain")
+    if (guardTorn)
+      requireNoTornForMaintenance(c.spark, c.root, stores.map(c.dir))
+    Par.run(stores.map(s => () => action(adapter(c, s))): _*)
+  }
+
+  /** Compact every store of the feature set — the nightly
     * maintenance action, one atomic generation fold per store. Pass
     * the SAME `unionCap` the set was refreshed with, or the UNION
     * folds are cap-checked against the wrong bound.
     */
   def compact(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, unionCap: Int = 10000): Unit = {
-    requireNoTornForMaintenance(spark, root,
-      features.map(f => storeDir(root, planOf(f, bucketUs)._1)).distinct)
-    eachStore(root, features, keyCols, tsCol, bucketUs, unionCap)(
-      IncrementalSwa.compact(spark, _, _),
-      IncrementalUnion.compact(spark, _, _),
-      IncrementalVector.compact(spark, _, _))
-  }
+      bucketUs: Long, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit =
+    eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, unionCap),
+      features, graftFeatures, guardTorn = true)(_.compact())
 
-  /** Retention across every measure store: state bounded by the
-    * serving horizon for the WHOLE feature set
+  /** Retention across every store: state bounded by the serving
+    * horizon for the WHOLE feature set
     * ([[IncrementalSwa.compactRetaining]]'s contract per store —
     * serves below the horizon fail by name). Same `unionCap`
     * discipline as [[compact]].
     */
   def compactRetaining(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, minBucket: Long, unionCap: Int = 10000): Unit = {
-    requireNoTornForMaintenance(spark, root,
-      features.map(f => storeDir(root, planOf(f, bucketUs)._1)).distinct)
-    eachStore(root, features, keyCols, tsCol, bucketUs, unionCap)(
-      IncrementalSwa.compactRetaining(spark, _, _, minBucket),
-      IncrementalUnion.compactRetaining(spark, _, _, minBucket),
-      IncrementalVector.compactRetaining(spark, _, _, minBucket))
-  }
+      bucketUs: Long, minBucket: Long, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit =
+    eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, unionCap),
+      features, graftFeatures, guardTorn = true)(_.compactRetaining(minBucket))
 
-  /** GDPR erasure across every measure store: "delete these keys from
-    * every feature" in one call — each store folds the keys' whole
-    * history away atomically ([[IncrementalSwa.forgetKeys]]; the
-    * UNION store skips its cap check here by design, so erasure is
-    * never blocked by over-cap state).
+  /** GDPR erasure across every store: "delete these keys from every
+    * feature" in one call — each store folds the keys' whole history
+    * away atomically ([[IncrementalSwa.forgetKeys]]; the UNION store
+    * skips its cap check here by design, so erasure is never blocked
+    * by over-cap state). Erasure is NOT blocked by a torn refresh —
+    * GDPR wins. Consequence, accepted and explicit: the erasure fold
+    * raises foldedThrough past the torn version, so the stores then
+    * COUNT as holding it (the tear is absorbed into the fold and the
+    * replay repair is no longer possible) — an operator-initiated
+    * destructive action, not a silent landing; re-ingest the missing
+    * delta under a fresh version if it still matters.
     */
   def forgetKeys(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, keys: DataFrame): Unit =
-    eachStore(root, features, keyCols, tsCol, bucketUs, unionCap = Int.MaxValue)(
-      IncrementalSwa.forgetKeys(spark, _, _, keys),
-      IncrementalUnion.forgetKeys(spark, _, _, keys),
-      IncrementalVector.forgetKeys(spark, _, _, keys))
+      bucketUs: Long, keys: DataFrame,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit =
+    eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, Int.MaxValue),
+      features, graftFeatures, guardTorn = false)(_.forgetKeys(keys))
 
   /** The nightly-maintenance decision rules [[maintain]] applies to
     * every store of a feature set — the runbook as one idempotent
@@ -654,14 +828,13 @@ object IncrementalMaterializer {
       else Nil
     }.toMap
 
-  /** The shared per-store policy step: describe (driver-side), decide,
-    * act under the store's own lease, gc. A retention need subsumes the
+  /** The per-store policy step: describe (driver-side), decide, act
+    * under the store's own lease, gc. A retention need subsumes the
     * version-count fold (compactRetaining IS a compaction).
     */
   private def maintainOne(spark: SparkSession, dir: String,
       featNames: Seq[String], policy: MaintenancePolicy,
-      torn: Option[Long],
-      compactStore: () => Unit, retainStore: Long => Unit): MaintenanceAction = {
+      torn: Option[Long], store: Adapter): MaintenanceAction = {
     val info = IncrementalSwa.describe(spark, dir)
     val hasState = info.versions.nonEmpty
     val needRetain = policy.retainFromBucket
@@ -670,8 +843,8 @@ object IncrementalMaterializer {
     val needCompact = torn.isEmpty &&
       info.versions.size > policy.compactWhenVersionsExceed
     needRetain match {
-      case Some(mb) => retainStore(mb)
-      case None => if (needCompact) compactStore()
+      case Some(mb) => store.compactRetaining(mb)
+      case None => if (needCompact) store.compact()
     }
     // gc is fold-free (it drops SUPERSEDED generations; the live one —
     // where any torn version lives — is never collected), so it runs
@@ -685,15 +858,7 @@ object IncrementalMaterializer {
       blockedByTornRefresh = torn)
   }
 
-  private def runCollect(
-      steps: Seq[() => MaintenanceAction]): Seq[MaintenanceAction] = {
-    val out = new Array[MaintenanceAction](steps.size)
-    Par.run(steps.zipWithIndex.map { case (f, i) =>
-      () => { out(i) = f() }: Unit }: _*)
-    out.toSeq
-  }
-
-  /** Apply `policy` to every measure store of the feature set — ONE
+  /** Apply `policy` to every store of the feature set — ONE
     * idempotent call per set per night ([[MaintenancePolicy]]),
     * stores maintained concurrently under their own leases. Returns
     * the per-store audit.
@@ -701,440 +866,93 @@ object IncrementalMaterializer {
   def maintain(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], keyCols: Seq[String], tsCol: String,
       bucketUs: Long, policy: MaintenancePolicy,
-      unionCap: Int = 10000): Seq[MaintenanceAction] = {
-    require(features.nonEmpty, "no features to maintain")
-    val uCfg = IncrementalUnion.Config(keyCols, tsCol, "__graft_m",
-      bucketUs, unionCap)
-    val vCfg = IncrementalVector.Config(keyCols, tsCol, "__graft_m", bucketUs)
+      unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Seq[MaintenanceAction] = {
+    val c = Ctx(spark, root, keyCols, tsCol, bucketUs, unionCap)
     val torn = tornCoveredDirs(spark, root)
-    runCollect(features.map(f => (planOf(f, bucketUs)._1, f.name))
-      .groupBy(_._1).toSeq.map { case (m, fs) => () =>
-        val dir = storeDir(root, m)
-        maintainOne(spark, dir, fs.map(_._2), policy, torn.get(dir),
-          compactStore = () => m.kind match {
-            case Scalar =>
-              IncrementalSwa.compact(spark, dir, cfg(keyCols, tsCol, bucketUs))
-            case SetUnion => IncrementalUnion.compact(spark, dir, uCfg)
-            case Vector => IncrementalVector.compact(spark, dir, vCfg)
-          },
-          retainStore = mb => m.kind match {
-            case Scalar => IncrementalSwa.compactRetaining(spark, dir,
-              cfg(keyCols, tsCol, bucketUs), mb)
-            case SetUnion =>
-              IncrementalUnion.compactRetaining(spark, dir, uCfg, mb)
-            case Vector =>
-              IncrementalVector.compactRetaining(spark, dir, vCfg, mb)
-          })
-      })
-  }
-
-  /** [[maintain]] across every extension-feature store. */
-  def maintainGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, policy: MaintenancePolicy): Seq[MaintenanceAction] = {
-    require(features.nonEmpty, "no features to maintain")
-    val torn = tornCoveredDirs(spark, root)
-    runCollect(features.groupBy(graftDir(root, _)).toSeq.map {
-      case (dir, fs) => () =>
-        def cfgD(p: Int) = IncrementalDistinct.Config(keyCols, tsCol,
-          "__graft_m", bucketUs, p)
-        def cfgQ(lo: Double, hi: Double, bins: Int) =
-          IncrementalQuantile.Config(keyCols, tsCol, "__graft_m",
-            bucketUs, lo, hi, bins)
-        def cfgT(cand: Int) = IncrementalTopK.Config(keyCols, tsCol,
-          "__graft_m", bucketUs, cand)
-        maintainOne(spark, dir, fs.map(_.name), policy, torn.get(dir),
-          compactStore = () => fs.head.agg match {
-            case GraftAggregation.DistinctCount(p) =>
-              IncrementalDistinct.compact(spark, dir, cfgD(p))
-            case GraftAggregation.Quantile(_, lo, hi, bins) =>
-              IncrementalQuantile.compact(spark, dir, cfgQ(lo, hi, bins))
-            case GraftAggregation.TopK(_, cand) =>
-              IncrementalTopK.compact(spark, dir, cfgT(cand))
-          },
-          retainStore = mb => fs.head.agg match {
-            case GraftAggregation.DistinctCount(p) =>
-              IncrementalDistinct.compactRetaining(spark, dir, cfgD(p), mb)
-            case GraftAggregation.Quantile(_, lo, hi, bins) =>
-              IncrementalQuantile.compactRetaining(spark, dir,
-                cfgQ(lo, hi, bins), mb)
-            case GraftAggregation.TopK(_, cand) =>
-              IncrementalTopK.compactRetaining(spark, dir, cfgT(cand), mb)
-          })
-      })
+    val steps = plansOf(features, graftFeatures, bucketUs, "maintain")
+      .groupBy(_.store).toSeq.map { case (s, fs) =>
+        val dir = c.dir(s)
+        () => maintainOne(spark, dir, fs.map(_.name), policy, torn.get(dir),
+          adapter(c, s))
+      }
+    val out = new Array[MaintenanceAction](steps.size)
+    Par.run(steps.zipWithIndex.map { case (f, i) =>
+      () => { out(i) = f() }: Unit }: _*)
+    out.toSeq
   }
 
   /** [[maintain]] across every binding of a multi-key feature set. */
   def maintainMulti(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      policy: MaintenancePolicy,
-      unionCap: Int = 10000): Seq[MaintenanceAction] = {
-    require(features.nonEmpty, "no features to maintain")
-    requireDistinctAliases(features)
-    features.groupBy(bindingOf).toSeq.flatMap { case (b, fs) =>
+      policy: MaintenancePolicy, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Seq[MaintenanceAction] =
+    byBinding(features, graftFeatures).toSeq.flatMap { case (b, (fs, gs)) =>
       maintain(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, policy, unionCap)
+        bucketUs, policy, unionCap, gs)
     }
-  }
-
-  // ------------------------------------------------------------------
-  // GraftAggregation extension features (beyond the reference enum):
-  // distinct-count / quantile / top-k features declared against the
-  // same (defExpr, filter, window) surface, maintained by the
-  // sketch/histogram/candidate stores through the same lifecycle.
-  // ------------------------------------------------------------------
 
   /** A declared extension feature ([[graft.model.GraftAggregation]]):
     * the engine's own windowed-aggregation kinds, riding the same
     * measure surface (`defExpr` + optional pre-agg `filter`) and
-    * whole-bucket window rule as the reference aggregations. `keys`
-    * (the reference's `TypedKey` bindings) are consulted only by the
-    * Multi surface — the single-binding calls take explicit `keyCols`
-    * and a Multi call refuses a feature that declares no binding.
+    * whole-bucket window rule as the reference aggregations, passed to
+    * every lifecycle call as its `graftFeatures`. `keys` (the
+    * reference's `TypedKey` bindings) are consulted only by the Multi
+    * surface — the single-binding calls take explicit `keyCols` and a
+    * Multi call refuses a feature that declares no binding.
     */
   case class GraftFeature(name: String, defExpr: String,
       agg: GraftAggregation, window: java.time.Duration,
       filter: Option[String] = None,
       keys: Seq[graft.model.TypedKey] = Nil)
 
-  /** Store identity for an extension feature: (defExpr, filter, STATE
-    * config). Serve-time parameters are excluded — quantile features
-    * differing only in `q` and top-k features differing only in `k`
-    * share one store.
-    */
-  private def graftStoreKey(f: GraftFeature): String = f.agg match {
-    case GraftAggregation.DistinctCount(p) => s"dc|$p"
-    case GraftAggregation.Quantile(_, lo, hi, bins) => s"qt|$lo|$hi|$bins"
-    case GraftAggregation.TopK(_, cand) => s"tk|$cand"
-  }
-
-  private def graftDir(root: String, f: GraftFeature): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val id = md.digest(
-      s"${f.defExpr}|${f.filter.getOrElse("")}|${graftStoreKey(f)}"
-        .getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    s"$root/g=$id"
-  }
-
-  private def graftWindow(f: GraftFeature, bucketUs: Long): Int = {
-    val winUs = Durations.toMicros(f.window)
-    require(winUs % bucketUs == 0 && winUs > 0,
-      s"feature '${f.name}': window ${f.window} is not a whole multiple " +
-        s"of the ${bucketUs}µs maintenance bucket")
-    (winUs / bucketUs).toInt
-  }
-
-  /** [[refresh]] for extension features: one delta fold per distinct
-    * (defExpr, filter, state-config) store, routed by aggregation kind.
-    */
-  def refreshGraft(delta: DataFrame, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, version: Long): Unit = {
-    require(features.nonEmpty, "no features to refresh")
-    features.foreach(graftWindow(_, bucketUs)) // validate up front
-    // the same set-level commit marker as [[refresh]] — one fan-out,
-    // one torn-refresh refusal surface
-    markPending(delta.sparkSession, root, version,
-      features.map(graftDir(root, _)).distinct
-        .map(_.stripPrefix(s"$root/")))
-    Par.run(features.groupBy(graftDir(root, _)).toSeq.map { case (dir, fs) => () =>
-      val f = fs.head
-      val filtered = f.filter.map(delta.where(_)).getOrElse(delta)
-      val measured = filtered.withColumn("__graft_m", expr(f.defExpr))
-        .select((keyCols :+ tsCol :+ "__graft_m").map(col): _*)
-      f.agg match {
-        case GraftAggregation.DistinctCount(p) =>
-          IncrementalDistinct.ingest(measured, dir,
-            IncrementalDistinct.Config(keyCols, tsCol, "__graft_m",
-              bucketUs, p), version)
-        case GraftAggregation.Quantile(_, lo, hi, bins) =>
-          IncrementalQuantile.ingest(measured, dir,
-            IncrementalQuantile.Config(keyCols, tsCol, "__graft_m",
-              bucketUs, lo, hi, bins), version)
-        case GraftAggregation.TopK(_, cand) =>
-          IncrementalTopK.ingest(measured, dir,
-            IncrementalTopK.Config(keyCols, tsCol, "__graft_m",
-              bucketUs, cand), version)
-      }
-    }: _*)
-    clearPending(delta.sparkSession, root, version)
-  }
-
-  /** The wide extension-feature row per key as of `asOfUs` — one serve
-    * per (store, window) group (quantile features sharing a store and
-    * window ride ONE `serveQuantiles` call with all their `q`s; top-k
-    * features one `serveTopK` at the largest `k`), assembled with the
-    * same spine/left-join contract as [[snapshot]]. Feature columns:
-    * DistinctCount → the raw HLL estimate (`est_raw`); Quantile → the
-    * bin left edge in value space; TopK → the rank-ordered item array.
-    */
-  def snapshotGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, asOfUs: Long): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireRefreshComplete(spark, root,
-      features.map(graftDir(root, _)).distinct)
-    val served = features
-      .groupBy(f => (graftDir(root, f), graftWindow(f, bucketUs)))
-      .flatMap { case ((dir, w), fs) =>
-        fs.head.agg match {
-          case GraftAggregation.DistinctCount(p) =>
-            val base = IncrementalDistinct.serveDistinct(spark, dir,
-              IncrementalDistinct.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, p), asOfUs, w)
-            Seq(base.select(keyCols.map(col) ++
-              fs.map(f => col("est_raw").as(f.name)): _*))
-          case GraftAggregation.Quantile(_, lo, hi, bins) =>
-            val qs = fs.map(_.agg.asInstanceOf[GraftAggregation.Quantile].q)
-              .distinct
-            val base = IncrementalQuantile.serveQuantiles(spark, dir,
-              IncrementalQuantile.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, lo, hi, bins), asOfUs, w, qs)
-            fs.map { f =>
-              val q = f.agg.asInstanceOf[GraftAggregation.Quantile].q
-              val q10k = math.rint(q * 10000).toLong / 10000.0
-              base.where(col("q") === q10k)
-                .select(keyCols.map(col) :+ col("cutoff").as(f.name): _*)
-            }
-          case GraftAggregation.TopK(_, cand) =>
-            val kMax = fs.map(_.agg.asInstanceOf[GraftAggregation.TopK].k).max
-            val base = IncrementalTopK.serveTopK(spark, dir,
-              IncrementalTopK.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, cand), asOfUs, w, kMax)
-            fs.map { f =>
-              val k = f.agg.asInstanceOf[GraftAggregation.TopK].k
-              base.where(col("rank") <= k)
-                .groupBy(keyCols.map(col): _*)
-                .agg(transform(
-                  array_sort(collect_list(struct(col("rank"), col("item")))),
-                  _.getField("item")).as(f.name))
-            }
-        }
-      }.toSeq
-    assembleWide(served, keyCols)
-  }
-
-  /** [[snapshotAsOf]] for extension features: the wide
-    * distinct/quantile/top-k row exactly as refresh version
-    * `asOfVersion` served it — the same store/window grouping and
-    * serve-parameter sharing as [[snapshotGraft]], truncated by each
-    * sketch store's own serveAsOf.
-    */
-  def snapshotGraftAsOf(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, asOfUs: Long, asOfVersion: Long): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireRefreshCompleteUpTo(spark, root,
-      features.map(graftDir(root, _)).distinct, asOfVersion)
-    val served = features
-      .groupBy(f => (graftDir(root, f), graftWindow(f, bucketUs)))
-      .flatMap { case ((dir, w), fs) =>
-        fs.head.agg match {
-          case GraftAggregation.DistinctCount(p) =>
-            val base = IncrementalDistinct.serveAsOf(spark, dir,
-              IncrementalDistinct.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, p), asOfUs, w, asOfVersion)
-            Seq(base.select(keyCols.map(col) ++
-              fs.map(f => col("est_raw").as(f.name)): _*))
-          case GraftAggregation.Quantile(_, lo, hi, bins) =>
-            val qs = fs.map(_.agg.asInstanceOf[GraftAggregation.Quantile].q)
-              .distinct
-            val base = IncrementalQuantile.serveAsOf(spark, dir,
-              IncrementalQuantile.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, lo, hi, bins), asOfUs, w, qs, asOfVersion)
-            fs.map { f =>
-              val q = f.agg.asInstanceOf[GraftAggregation.Quantile].q
-              val q10k = math.rint(q * 10000).toLong / 10000.0
-              base.where(col("q") === q10k)
-                .select(keyCols.map(col) :+ col("cutoff").as(f.name): _*)
-            }
-          case GraftAggregation.TopK(_, cand) =>
-            val kMax = fs.map(_.agg.asInstanceOf[GraftAggregation.TopK].k).max
-            val base = IncrementalTopK.serveAsOf(spark, dir,
-              IncrementalTopK.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, cand), asOfUs, w, kMax, asOfVersion)
-            fs.map { f =>
-              val k = f.agg.asInstanceOf[GraftAggregation.TopK].k
-              base.where(col("rank") <= k)
-                .groupBy(keyCols.map(col): _*)
-                .agg(transform(
-                  array_sort(collect_list(struct(col("rank"), col("item")))),
-                  _.getField("item")).as(f.name))
-            }
-        }
-      }.toSeq
-    assembleWide(served, keyCols)
-  }
-
-  /** [[snapshotDaily]] for extension features: the keys×days table of
-    * every distinct-count / quantile / top-k feature, one store-level
-    * `serveDaily` pass per (store, window) group (the stores' honest
-    * explode-expansion — axis 28), assembled on (key, bucket) with the
-    * same spine/left-join contract as [[snapshotGraft]].
-    */
-  def snapshotDailyGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireRefreshComplete(spark, root,
-      features.map(graftDir(root, _)).distinct)
-    val joinCols = keyCols :+ "bucket"
-    val served = features
-      .groupBy(f => (graftDir(root, f), graftWindow(f, bucketUs)))
-      .flatMap { case ((dir, w), fs) =>
-        fs.head.agg match {
-          case GraftAggregation.DistinctCount(p) =>
-            val base = IncrementalDistinct.serveDaily(spark, dir,
-              IncrementalDistinct.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, p), w, includeHorizonPartialRows, throughBucket)
-            Seq(base.select(joinCols.map(col) ++
-              fs.map(f => col("est_raw").as(f.name)): _*))
-          case GraftAggregation.Quantile(_, lo, hi, bins) =>
-            val qs = fs.map(_.agg.asInstanceOf[GraftAggregation.Quantile].q)
-              .distinct
-            val base = IncrementalQuantile.serveDaily(spark, dir,
-              IncrementalQuantile.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, lo, hi, bins), w, qs, includeHorizonPartialRows,
-              throughBucket)
-            fs.map { f =>
-              val q = f.agg.asInstanceOf[GraftAggregation.Quantile].q
-              val q10k = math.rint(q * 10000).toLong / 10000.0
-              base.where(col("q") === q10k)
-                .select(joinCols.map(col) :+ col("cutoff").as(f.name): _*)
-            }
-          case GraftAggregation.TopK(_, cand) =>
-            val kMax = fs.map(_.agg.asInstanceOf[GraftAggregation.TopK].k).max
-            val base = IncrementalTopK.serveDaily(spark, dir,
-              IncrementalTopK.Config(keyCols, tsCol, "__graft_m",
-                bucketUs, cand), w, kMax, includeHorizonPartialRows,
-              throughBucket)
-            fs.map { f =>
-              val k = f.agg.asInstanceOf[GraftAggregation.TopK].k
-              base.where(col("rank") <= k)
-                .groupBy(joinCols.map(col): _*)
-                .agg(transform(
-                  array_sort(collect_list(struct(col("rank"), col("item")))),
-                  _.getField("item")).as(f.name))
-            }
-        }
-      }.toSeq
-    assembleWide(served, joinCols)
-  }
-
-  /** The shared maintenance dispatch over every extension store. */
-  private def eachGraftStore(root: String, features: Seq[GraftFeature],
-      keyCols: Seq[String], tsCol: String, bucketUs: Long)(
-      onDistinct: (String, IncrementalDistinct.Config) => Unit,
-      onQuantile: (String, IncrementalQuantile.Config) => Unit,
-      onTopK: (String, IncrementalTopK.Config) => Unit): Unit = {
-    require(features.nonEmpty, "no features to maintain")
-    Par.run(features.groupBy(graftDir(root, _)).toSeq.map { case (dir, fs) => () =>
-      fs.head.agg match {
-        case GraftAggregation.DistinctCount(p) =>
-          onDistinct(dir, IncrementalDistinct.Config(keyCols, tsCol,
-            "__graft_m", bucketUs, p))
-        case GraftAggregation.Quantile(_, lo, hi, bins) =>
-          onQuantile(dir, IncrementalQuantile.Config(keyCols, tsCol,
-            "__graft_m", bucketUs, lo, hi, bins))
-        case GraftAggregation.TopK(_, cand) =>
-          onTopK(dir, IncrementalTopK.Config(keyCols, tsCol,
-            "__graft_m", bucketUs, cand))
-      }
-    }: _*)
-  }
-
-  /** [[describe]] across every extension store — the same dashboard
-    * read keyed by the features sharing each store.
-    */
-  def describeGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature]): Seq[(Seq[String], IncrementalSwa.StoreInfo)] = {
-    require(features.nonEmpty, "no features to describe")
-    features.groupBy(graftDir(root, _)).toSeq.map { case (dir, fs) =>
-      (fs.map(_.name), IncrementalSwa.describe(spark, dir))
-    }
-  }
-
-  /** [[compact]] across every extension store. */
-  def compactGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long): Unit = {
-    requireNoTornForMaintenance(spark, root,
-      features.map(graftDir(root, _)).distinct)
-    eachGraftStore(root, features, keyCols, tsCol, bucketUs)(
-      IncrementalDistinct.compact(spark, _, _),
-      IncrementalQuantile.compact(spark, _, _),
-      IncrementalTopK.compact(spark, _, _))
-  }
-
-  /** [[compactRetaining]] across every extension store. */
-  def compactRetainingGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, minBucket: Long): Unit = {
-    requireNoTornForMaintenance(spark, root,
-      features.map(graftDir(root, _)).distinct)
-    eachGraftStore(root, features, keyCols, tsCol, bucketUs)(
-      IncrementalDistinct.compactRetaining(spark, _, _, minBucket),
-      IncrementalQuantile.compactRetaining(spark, _, _, minBucket),
-      IncrementalTopK.compactRetaining(spark, _, _, minBucket))
-  }
-
-  /** [[forgetKeys]] across every extension store. Erasure is NOT
-    * blocked by a torn refresh — GDPR wins. Consequence, accepted and
-    * explicit: the erasure fold raises foldedThrough past the torn
-    * version, so the stores then COUNT as holding it (the tear is
-    * absorbed into the fold and the replay repair is no longer
-    * possible) — an operator-initiated destructive action, not a
-    * silent landing; re-ingest the missing delta under a fresh
-    * version if it still matters.
-    */
-  def forgetKeysGraft(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], keyCols: Seq[String], tsCol: String,
-      bucketUs: Long, keys: DataFrame): Unit =
-    eachGraftStore(root, features, keyCols, tsCol, bucketUs)(
-      IncrementalDistinct.forgetKeys(spark, _, _, keys),
-      IncrementalQuantile.forgetKeys(spark, _, _, keys),
-      IncrementalTopK.forgetKeys(spark, _, _, keys))
-
   // ------------------------------------------------------------------
   // Multi-binding feature sets (J4 on the O(delta) path): a project
-  // mixing user-keyed and item-keyed WindowAgg features routes each
-  // key binding to its own store root under `$root/k=<binding-id>` —
-  // one incremental store still holds one key frame, the ROUTER holds
+  // mixing user-keyed and item-keyed features routes each key binding
+  // to its own store root under `$root/k=<binding-id>` — one
+  // incremental store still holds one key frame, the ROUTER holds
   // many. The reference's join contract is explicitly multi-query over
   // different keys (feathr-rs/src/project.rs:259-263,
   // feature_query.rs:5-10); the snapshot side assembles one wide frame
   // per binding, key columns exposed under their DSL aliases so a
-  // FeatureQuery's key frame joins by name.
+  // FeatureQuery's key frame joins by name. Extension features route
+  // by their declared `GraftFeature.keys` the same way; a binding both
+  // surfaces use shares one root.
   // ------------------------------------------------------------------
 
   /** Binding identity: (alias, physical key column) pairs — two
     * features share a store root only when they agree on BOTH (same
     * alias over a different source column is a different frame).
     */
-  private def bindingOf(f: AnchorFeature): Seq[(String, String)] =
+  private type Binding = Seq[(String, String)]
+
+  private def bindingOf(f: AnchorFeature): Binding =
     f.keys.map(k => (k.alias, k.keyColumn))
 
-  /** Alias schemas must be UNIQUE across a set's bindings: the
-    * snapshot map and [[forgetKeysMulti]] address key frames BY alias
-    * (the FeatureQuery contract), so two bindings sharing an alias
-    * schema over different physical columns would silently collapse to
-    * one frame — refused by name instead.
-    */
-  private def requireDistinctAliases(features: Seq[AnchorFeature]): Unit =
-    requireDistinctBindings(features.map(bindingOf))
+  private def graftBindingOf(f: GraftFeature): Binding = {
+    require(f.keys.nonEmpty,
+      s"extension feature '${f.name}' declares no key binding — the " +
+        "Multi surface routes stores by TypedKey binding; either set " +
+        "GraftFeature.keys or use the single-binding calls with " +
+        "explicit keyCols")
+    f.keys.map(k => (k.alias, k.keyColumn))
+  }
 
-  /** Alias schemas must resolve to ONE physical binding each — frames
-    * (and the training join's observation columns) are addressed by
-    * alias, so one alias over two physical columns would silently
-    * join the wrong key space. Shared by both feature surfaces and by
-    * their COMBINATION ([[trainingSetMulti]] — the one place
-    * reference-enum and extension bindings meet).
+  /** Both surfaces grouped by key binding. Alias schemas must resolve
+    * to ONE physical binding each, across BOTH surfaces — frames (and
+    * the training join's observation columns) are addressed by alias,
+    * so one alias over two physical columns would silently join the
+    * wrong key space; refused by name.
     */
-  private def requireDistinctBindings(
-      bindings: Seq[Seq[(String, String)]]): Unit = {
-    val collisions = bindings.distinct
-      .groupBy(_.map(_._1)).filter(_._2.size > 1)
+  private def byBinding(features: Seq[AnchorFeature],
+      graftFeatures: Seq[GraftFeature])
+      : Map[Binding, (Seq[AnchorFeature], Seq[GraftFeature])] = {
+    require(features.nonEmpty || graftFeatures.nonEmpty,
+      "no features in the feature set")
+    val anchors = features.groupBy(bindingOf)
+    val grafts = graftFeatures.groupBy(graftBindingOf)
+    val bindings = (anchors.keySet ++ grafts.keySet).toSeq
+    val collisions = bindings.groupBy(_.map(_._1)).filter(_._2.size > 1)
     require(collisions.isEmpty,
       collisions.map { case (alias, bs) =>
         s"key-alias schema $alias is bound to different physical " +
@@ -1142,14 +960,28 @@ object IncrementalMaterializer {
       }.mkString("; ") +
         " — a feature set's alias schemas must be unambiguous (frames " +
         "are addressed by alias); re-alias one binding")
+    bindings.map(b =>
+      b -> ((anchors.getOrElse(b, Nil), grafts.getOrElse(b, Nil)))).toMap
   }
 
-  private def bindingRoot(root: String, b: Seq[(String, String)]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val id = md.digest(b.map { case (a, c) => s"$a=$c" }.mkString("|")
-      .getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$root/k=$id"
-  }
+  private def bindingRoot(root: String, b: Binding): String =
+    s"$root/k=" + md5Hex(b.map { case (a, c) => s"$a=$c" }.mkString("|"), 12)
+
+  /** Absolute store dirs of every binding — the top-root marker's
+    * coverage ([[refreshMulti]]) and the Multi serves' tear check.
+    */
+  private def multiDirs(root: String,
+      groups: Map[Binding, (Seq[AnchorFeature], Seq[GraftFeature])],
+      bucketUs: Long): Seq[String] =
+    groups.toSeq.flatMap { case (b, (fs, gs)) =>
+      storesOf(fs, gs, bucketUs, "route")
+        .map(s => s"${bindingRoot(root, b)}/${s.rel}")
+    }
+
+  private def aliasKeys(frame: DataFrame, b: Binding): DataFrame =
+    b.foldLeft(frame) { case (acc, (alias, phys)) =>
+      if (alias != phys) acc.withColumnRenamed(phys, alias) else acc
+    }
 
   /** [[refresh]] for a feature set spanning MULTIPLE key bindings: the
     * delta is folded once per binding group (each group pays its own
@@ -1159,48 +991,20 @@ object IncrementalMaterializer {
     */
   def refreshMulti(delta: DataFrame, root: String,
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      version: Long, unionCap: Int = 10000): Unit = {
-    require(features.nonEmpty, "no features to refresh")
-    requireDistinctAliases(features)
-    val groups = features.groupBy(bindingOf)
+      version: Long, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit = {
+    val groups = byBinding(features, graftFeatures)
     // a TOP-level marker covers tears ACROSS bindings (binding A's
     // nested refresh completed and cleared ITS marker, binding B's
     // never started) — the nested per-binding markers cover tears
     // within one binding's fan-out
     markPending(delta.sparkSession, root, version,
-      groups.toSeq.flatMap { case (b, fs) =>
-        val bRel = bindingRoot(root, b).stripPrefix(s"$root/")
-        fs.map(planOf(_, bucketUs)._1).distinct
-          .map(m => s"$bRel/${m.kind.prefix}=${m.id}")
-      })
-    Par.run(groups.toSeq.map { case (b, fs) => () =>
+      multiDirs(root, groups, bucketUs).map(_.stripPrefix(s"$root/")))
+    Par.run(groups.toSeq.map { case (b, (fs, gs)) => () =>
       refresh(delta, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, version, unionCap)
+        bucketUs, version, unionCap, gs)
     }: _*)
     clearPending(delta.sparkSession, root, version)
-  }
-
-  /** One wide feature frame PER binding, key columns renamed to their
-    * DSL aliases (the FeatureQuery key-frame contract), derived
-    * features routed to the binding whose anchors (transitively) feed
-    * them. A derived whose inputs span bindings is refused by name —
-    * combining frames of different key spaces is the batch join
-    * planner's job. Returns alias-schema → frame.
-    */
-  def snapshotMulti(spark: SparkSession, root: String,
-      features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      asOfUs: Long,
-      derived: Seq[DerivedFeature] = Nil): Map[Seq[String], DataFrame] = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireDistinctAliases(features)
-    val groups = features.groupBy(bindingOf)
-    requireRefreshComplete(spark, root, multiAnchorDirs(root, groups, bucketUs))
-    val claims = claimDerived(groups, derived)
-    groups.map { case (b, fs) =>
-      val frame = snapshot(spark, bindingRoot(root, b), fs, b.map(_._2),
-        tsCol, bucketUs, asOfUs, claims(b))
-      b.map(_._1) -> aliasKeys(frame, b)
-    }
   }
 
   /** Claim derived features per binding by transitive closure over
@@ -1209,10 +1013,9 @@ object IncrementalMaterializer {
     * by name.
     */
   private def claimDerived(
-      groups: Map[Seq[(String, String)], Seq[AnchorFeature]],
-      derived: Seq[DerivedFeature])
-      : Map[Seq[(String, String)], Seq[DerivedFeature]] = {
-    val claims = groups.map { case (b, fs) =>
+      groups: Map[Binding, (Seq[AnchorFeature], Seq[GraftFeature])],
+      derived: Seq[DerivedFeature]): Map[Binding, Seq[DerivedFeature]] = {
+    val claims = groups.collect { case (b, (fs, _)) if fs.nonEmpty =>
       val names = scala.collection.mutable.Set(fs.map(_.name): _*)
       val claimed = scala.collection.mutable.ListBuffer.empty[DerivedFeature]
       var grew = true
@@ -1236,28 +1039,26 @@ object IncrementalMaterializer {
     claims
   }
 
-  /** Absolute store dirs a Multi serve reads — the top-root tear
-    * check's coverage ([[requireRefreshComplete]] against the marker
-    * [[refreshMulti]] wrote across bindings).
+
+  /** One wide feature frame PER binding, key columns renamed to their
+    * DSL aliases (the FeatureQuery key-frame contract), derived
+    * features routed to the binding whose anchors (transitively) feed
+    * them. A derived whose inputs span bindings is refused by name —
+    * combining frames of different key spaces is the batch join
+    * planner's job. Returns alias-schema → frame.
     */
-  private def multiAnchorDirs(root: String,
-      groups: Map[Seq[(String, String)], Seq[AnchorFeature]],
-      bucketUs: Long): Seq[String] =
-    groups.toSeq.flatMap { case (b, fs) =>
-      fs.map(f => storeDir(bindingRoot(root, b), planOf(f, bucketUs)._1))
-    }.distinct
-
-  private def multiGraftDirs(root: String,
-      groups: Map[Seq[(String, String)], Seq[GraftFeature]]): Seq[String] =
-    groups.toSeq.flatMap { case (b, fs) =>
-      fs.map(graftDir(bindingRoot(root, b), _))
-    }.distinct
-
-  private def aliasKeys(frame: DataFrame,
-      b: Seq[(String, String)]): DataFrame =
-    b.foldLeft(frame) { case (acc, (alias, phys)) =>
-      if (alias != phys) acc.withColumnRenamed(phys, alias) else acc
+  def snapshotMulti(spark: SparkSession, root: String,
+      features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
+      asOfUs: Long, derived: Seq[DerivedFeature] = Nil,
+      graftFeatures: Seq[GraftFeature] = Nil): Map[Seq[String], DataFrame] = {
+    val groups = byBinding(features, graftFeatures)
+    requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
+    val claims = claimDerived(groups, derived)
+    groups.map { case (b, (fs, gs)) =>
+      b.map(_._1) -> aliasKeys(snapshot(spark, bindingRoot(root, b), fs,
+        b.map(_._2), tsCol, bucketUs, asOfUs, claims.getOrElse(b, Nil), gs), b)
     }
+  }
 
   /** [[snapshotDaily]] per binding: alias-schema → keys×days frame,
     * derived features claimed exactly as [[snapshotMulti]].
@@ -1266,16 +1067,15 @@ object IncrementalMaterializer {
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
       derived: Seq[DerivedFeature] = Nil,
       includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): Map[Seq[String], DataFrame] = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireDistinctAliases(features)
-    val groups = features.groupBy(bindingOf)
-    requireRefreshComplete(spark, root, multiAnchorDirs(root, groups, bucketUs))
+      throughBucket: Option[Long] = None,
+      graftFeatures: Seq[GraftFeature] = Nil): Map[Seq[String], DataFrame] = {
+    val groups = byBinding(features, graftFeatures)
+    requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
     val claims = claimDerived(groups, derived)
-    groups.map { case (b, fs) =>
-      val frame = snapshotDaily(spark, bindingRoot(root, b), fs, b.map(_._2),
-        tsCol, bucketUs, claims(b), includeHorizonPartialRows, throughBucket)
-      b.map(_._1) -> aliasKeys(frame, b)
+    groups.map { case (b, (fs, gs)) =>
+      b.map(_._1) -> aliasKeys(snapshotDaily(spark, bindingRoot(root, b), fs,
+        b.map(_._2), tsCol, bucketUs, claims.getOrElse(b, Nil),
+        includeHorizonPartialRows, throughBucket, gs), b)
     }
   }
 
@@ -1292,15 +1092,11 @@ object IncrementalMaterializer {
       observations: DataFrame, obsTsCol: String,
       derived: Seq[DerivedFeature] = Nil,
       graftFeatures: Seq[GraftFeature] = Nil): DataFrame = {
-    require(features.nonEmpty || graftFeatures.nonEmpty,
-      "no features to assemble")
-    // alias schemas must be unambiguous ACROSS the two surfaces too —
-    // this is the one assembly where they meet on one observation frame
-    requireDistinctBindings(
-      features.map(bindingOf) ++ graftFeatures.map(graftBindingOf))
-    // and so must feature names: a using-columns join dedups only
-    // keys, so a name shared across surfaces would emit two columns
-    // and fail far downstream (AMBIGUOUS_REFERENCE / parquet write)
+    val groups = byBinding(features, graftFeatures)
+    // feature names must be unique across both surfaces: a
+    // using-columns join dedups only keys, so a name shared across
+    // surfaces would emit two columns and fail far downstream
+    // (AMBIGUOUS_REFERENCE / parquet write)
     val names = features.map(_.name) ++ derived.map(_.name) ++
       graftFeatures.map(_.name)
     val dupNames = names.groupBy(identity).filter(_._2.size > 1).keys
@@ -1308,85 +1104,48 @@ object IncrementalMaterializer {
       s"feature names ${dupNames.mkString(", ")} are declared on both " +
         "the reference-enum and extension surfaces — the training frame " +
         "would carry duplicate columns; rename one side")
-    val groups = features.groupBy(bindingOf)
     val claims = claimDerived(groups, derived)
-    val graftGroups = graftFeatures.groupBy(graftBindingOf)
-    requireRefreshComplete(spark, root,
-      multiAnchorDirs(root, groups, bucketUs) ++
-        multiGraftDirs(root, graftGroups))
-    (groups.keys ++ graftGroups.keys).flatMap(_.map(_._1)).foreach { alias =>
+    requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
+    groups.keys.flatMap(_.map(_._1)).foreach { alias =>
       require(observations.columns.contains(alias),
         s"observations are missing key-alias column '$alias' — the " +
           "multi-key training join addresses each binding by its alias")
     }
-    // extend every binding's daily range to the latest observation's
-    // preceding bucket ([[trainingSet]]'s rationale)
-    val obsHi = observations
-      .agg(max(IncrementalSwa.bucketOf(col(obsTsCol), bucketUs))).head()
-    val through =
-      if (obsHi.isNullAt(0)) None else Some(obsHi.getLong(0) - 1L)
+    val through = throughOf(observations, obsTsCol, bucketUs)
     val obs = observations.withColumn("__feature_bucket",
       IncrementalSwa.bucketOf(col(obsTsCol), bucketUs) - 1L)
-    // one daily frame per (binding, surface): reference-enum bindings
-    // first, extension bindings after — the same alias-addressed
-    // preceding-bucket join either way (a binding appearing on BOTH
-    // surfaces joins twice, on disjoint feature columns)
-    val dailies =
-      groups.toSeq.map { case (b, fs) =>
-        b -> aliasKeys(snapshotDaily(spark, bindingRoot(root, b), fs,
-          b.map(_._2), tsCol, bucketUs, claims(b), throughBucket = through), b)
-      } ++ graftGroups.toSeq.map { case (b, fs) =>
-        b -> aliasKeys(snapshotDailyGraft(spark, bindingRoot(root, b), fs,
-          b.map(_._2), tsCol, bucketUs, throughBucket = through), b)
-      }
-    dailies.foldLeft(obs) { case (acc, (b, daily)) =>
-      acc.join(daily.withColumnRenamed("bucket", "__feature_bucket"),
+    groups.foldLeft(obs) { case (acc, (b, (fs, gs))) =>
+      val daily = snapshotDaily(spark, bindingRoot(root, b), fs,
+        b.map(_._2), tsCol, bucketUs, claims.getOrElse(b, Nil),
+        throughBucket = through, graftFeatures = gs)
+      acc.join(
+        aliasKeys(daily, b).withColumnRenamed("bucket", "__feature_bucket"),
         b.map(_._1) :+ "__feature_bucket", "left_outer")
     }.drop("__feature_bucket")
-  }
-
-  /** [[snapshotDailyGraft]] per binding: alias-schema → keys×days
-    * frame (the [[snapshotDailyMulti]] shape for extension features).
-    */
-  def snapshotDailyGraftMulti(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], tsCol: String, bucketUs: Long,
-      includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): Map[Seq[String], DataFrame] = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireDistinctGraftAliases(features)
-    val groups = features.groupBy(graftBindingOf)
-    requireRefreshComplete(spark, root, multiGraftDirs(root, groups))
-    groups.map { case (b, fs) =>
-      val frame = snapshotDailyGraft(spark, bindingRoot(root, b), fs,
-        b.map(_._2), tsCol, bucketUs, includeHorizonPartialRows,
-        throughBucket)
-      b.map(_._1) -> aliasKeys(frame, b)
-    }
   }
 
   /** [[compact]] across every binding's stores. */
   def compactMulti(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      unionCap: Int = 10000): Unit = {
-    val groups = features.groupBy(bindingOf)
-    requireNoTornForMaintenance(spark, root,
-      multiAnchorDirs(root, groups, bucketUs))
-    Par.run(groups.toSeq.map { case (b, fs) => () =>
+      unionCap: Int = 10000, graftFeatures: Seq[GraftFeature] = Nil): Unit = {
+    val groups = byBinding(features, graftFeatures)
+    requireNoTornForMaintenance(spark, root, multiDirs(root, groups, bucketUs))
+    Par.run(groups.toSeq.map { case (b, (fs, gs)) => () =>
       compact(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, unionCap)
+        bucketUs, unionCap, gs)
     }: _*)
   }
 
   /** [[compactRetaining]] across every binding's stores. */
   def compactRetainingMulti(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      minBucket: Long, unionCap: Int = 10000): Unit = {
-    val groups = features.groupBy(bindingOf)
-    requireNoTornForMaintenance(spark, root,
-      multiAnchorDirs(root, groups, bucketUs))
-    Par.run(groups.toSeq.map { case (b, fs) => () =>
+      minBucket: Long, unionCap: Int = 10000,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit = {
+    val groups = byBinding(features, graftFeatures)
+    requireNoTornForMaintenance(spark, root, multiDirs(root, groups, bucketUs))
+    Par.run(groups.toSeq.map { case (b, (fs, gs)) => () =>
       compactRetaining(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, minBucket, unionCap)
+        bucketUs, minBucket, unionCap, gs)
     }: _*)
   }
 
@@ -1397,105 +1156,15 @@ object IncrementalMaterializer {
     */
   def forgetKeysMulti(spark: SparkSession, root: String,
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
-      binding: Seq[String], keys: DataFrame): Unit = {
-    requireDistinctAliases(features)
-    val groups = features.groupBy(bindingOf)
+      binding: Seq[String], keys: DataFrame,
+      graftFeatures: Seq[GraftFeature] = Nil): Unit = {
+    val groups = byBinding(features, graftFeatures)
     val matching = groups.filter { case (b, _) => b.map(_._1) == binding }
     require(matching.nonEmpty,
       s"no binding $binding among ${groups.keys.map(_.map(_._1)).toSeq}")
-    matching.foreach { case (b, fs) =>
+    matching.foreach { case (b, (fs, gs)) =>
       forgetKeys(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, keys)
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Extension features across MULTIPLE key bindings: the same k=<id>
-  // binding-root routing as the reference-enum Multi surface, so a
-  // project mixing user-keyed and item-keyed quantile/distinct/top-k
-  // features rides the O(delta) refresh too.
-  // ------------------------------------------------------------------
-
-  private def graftBindingOf(f: GraftFeature): Seq[(String, String)] = {
-    require(f.keys.nonEmpty,
-      s"extension feature '${f.name}' declares no key binding — the " +
-        "Multi surface routes stores by TypedKey binding; either set " +
-        "GraftFeature.keys or use the single-binding calls with " +
-        "explicit keyCols")
-    f.keys.map(k => (k.alias, k.keyColumn))
-  }
-
-  private def requireDistinctGraftAliases(features: Seq[GraftFeature]): Unit =
-    requireDistinctBindings(features.map(graftBindingOf))
-
-  /** [[refreshGraft]] per key binding — one delta fold per binding's
-    * store group, bindings maintained concurrently.
-    */
-  def refreshGraftMulti(delta: DataFrame, root: String,
-      features: Seq[GraftFeature], tsCol: String, bucketUs: Long,
-      version: Long): Unit = {
-    require(features.nonEmpty, "no features to refresh")
-    requireDistinctGraftAliases(features)
-    val groups = features.groupBy(graftBindingOf)
-    // top-level marker across bindings — the [[refreshMulti]] rationale
-    markPending(delta.sparkSession, root, version,
-      groups.toSeq.flatMap { case (b, fs) =>
-        val bRoot = bindingRoot(root, b)
-        fs.map(graftDir(bRoot, _)).distinct
-          .map(_.stripPrefix(s"$root/"))
-      })
-    Par.run(groups.toSeq.map { case (b, fs) => () =>
-      refreshGraft(delta, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, version)
-    }: _*)
-    clearPending(delta.sparkSession, root, version)
-  }
-
-  /** [[snapshotGraft]] per binding: alias-schema → wide frame, key
-    * columns renamed to their DSL aliases (the FeatureQuery key-frame
-    * contract, exactly [[snapshotMulti]]).
-    */
-  def snapshotGraftMulti(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], tsCol: String, bucketUs: Long,
-      asOfUs: Long): Map[Seq[String], DataFrame] = {
-    require(features.nonEmpty, "no features to snapshot")
-    requireDistinctGraftAliases(features)
-    val groups = features.groupBy(graftBindingOf)
-    requireRefreshComplete(spark, root, multiGraftDirs(root, groups))
-    groups.map { case (b, fs) =>
-      val frame = snapshotGraft(spark, bindingRoot(root, b), fs,
-        b.map(_._2), tsCol, bucketUs, asOfUs)
-      b.map(_._1) -> aliasKeys(frame, b)
-    }
-  }
-
-  /** [[compactGraft]] across every binding's stores. */
-  def compactGraftMulti(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], tsCol: String,
-      bucketUs: Long): Unit = {
-    val groups = features.groupBy(graftBindingOf)
-    requireNoTornForMaintenance(spark, root, multiGraftDirs(root, groups))
-    Par.run(groups.toSeq.map { case (b, fs) => () =>
-      compactGraft(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs)
-    }: _*)
-  }
-
-  /** [[forgetKeysGraft]] scoped to ONE binding (the
-    * [[forgetKeysMulti]] contract: erasing a user touches the
-    * user-keyed stores; an item-keyed store has no row for that user).
-    */
-  def forgetKeysGraftMulti(spark: SparkSession, root: String,
-      features: Seq[GraftFeature], tsCol: String, bucketUs: Long,
-      binding: Seq[String], keys: DataFrame): Unit = {
-    requireDistinctGraftAliases(features)
-    val groups = features.groupBy(graftBindingOf)
-    val matching = groups.filter { case (b, _) => b.map(_._1) == binding }
-    require(matching.nonEmpty,
-      s"no binding $binding among ${groups.keys.map(_.map(_._1)).toSeq}")
-    matching.foreach { case (b, fs) =>
-      forgetKeysGraft(spark, bindingRoot(root, b), fs, b.map(_._2), tsCol,
-        bucketUs, keys)
+        bucketUs, keys, gs)
     }
   }
 

@@ -93,22 +93,10 @@ object PointInTimeJoin {
     * map<group, value>, so the declaration must be the scalar value
     * type (the map's value side is coerced). A declaration the runtime
     * shape cannot carry is an error, not a silent skip.
-    *
-    * Migration note: before round 3 such mismatched declarations were
-    * silently skipped, so an existing project that e.g. declared a
-    * scalar type on a UNION feature "worked". Set
-    * `spark.graft.types.lenient=true` to restore the old
-    * skip-on-mismatch behavior while migrating those declarations.
     */
   private def applyDeclaredTypes(
       project: FeatureProject, obs: DataFrame, requested: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
-    val lenient = obs.sparkSession.conf
-      .get("spark.graft.types.lenient", "false").toBoolean
-    def check(ok: Boolean, msg: => String): Boolean = {
-      require(ok || lenient, msg)
-      ok
-    }
     requested.foldLeft(obs) { (df, name) =>
       if (!df.columns.contains(name)) df
       else {
@@ -122,29 +110,24 @@ object PointInTimeJoin {
                 (agg == Aggregation.UNION, gb.isDefined)
               case _ => (false, false)
             }
-            val valueType: Option[DataType] =
+            val valueType: DataType =
               if (isUnion) {
-                if (check(t.tensorCategory == TensorCategory.DENSE &&
+                require(t.tensorCategory == TensorCategory.DENSE &&
                     t.dimensionType.size == 1,
-                  s"feature $name: UNION collects a set — declare a 1-d DENSE tensor, not $t " +
-                    "(spark.graft.types.lenient=true skips mismatched declarations)"))
-                  Some(ArrayType(t.valType.sparkType))
-                else None
+                  s"feature $name: UNION collects a set — declare a 1-d DENSE tensor, not $t")
+                ArrayType(t.valType.sparkType)
               } else if (hasGroup) {
-                if (check(t.dimensionType.isEmpty,
-                  s"feature $name: group_by produces a map of scalars — declare the scalar value type, not $t " +
-                    "(spark.graft.types.lenient=true skips mismatched declarations)"))
-                  Some(t.valType.sparkType)
-                else None
-              } else Some(t.sparkType)
-            val target: Option[DataType] = valueType.flatMap { vt =>
+                require(t.dimensionType.isEmpty,
+                  s"feature $name: group_by produces a map of scalars — declare the scalar value type, not $t")
+                t.valType.sparkType
+              } else t.sparkType
+            val target: DataType =
               if (hasGroup) df.schema(name).dataType match {
-                case MapType(kt, _, n) => Some(MapType(kt, vt, n))
+                case MapType(kt, _, n) => MapType(kt, valueType, n)
                 case other => throw new IllegalStateException(
                   s"feature $name: group_by runtime shape should be a map, got $other")
-              } else Some(vt)
-            }
-            target.map(tt => df.withColumn(name, col(name).cast(tt))).getOrElse(df)
+              } else valueType
+            df.withColumn(name, col(name).cast(target))
           case _ => df
         }
       }
@@ -403,12 +386,6 @@ object PointInTimeJoin {
     val wa0 = feats.head._1.transform.asInstanceOf[Transformation.WindowAgg]
     val skCols = obsKeyCols.indices.map(i => s"__graft_sk_$i")
     val groupCol = "__graft_grp"
-    val salt = "__graft_salt"
-    // skew mitigation: salt the range join so one hot key spreads over
-    // N reducers (spark.graft.swa.saltBuckets; off by default — AQE
-    // skew-join handles moderate skew, salting is for pathological keys)
-    val saltBuckets = obs.sparkSession.conf
-      .get("spark.graft.swa.saltBuckets", "1").toInt
 
     // evaluate measures (and sub-key) against source columns, pre-join
     val filtered = wa0.filter.map(f => src.where(FeathrExpr.column(f))).getOrElse(src)
@@ -469,21 +446,12 @@ object PointInTimeJoin {
         feats, measures, wa0, bucketUs)
 
     val interval = expr(Durations.toSqlInterval(wa0.window))
-    var cond = obsKeyCols.indices
+    val cond = obsKeyCols.indices
       .map(i => col(obsKeyCols(i)) === col(skCols(i)))
       .reduce(_ && _) &&
       col(Internal.SrcTs) > col(ObsTs) - interval &&
       col(Internal.SrcTs) <= col(ObsTs)
-    var joined =
-      if (saltBuckets > 1) {
-        val srcSalt = s"${salt}_s"
-        val srcSalted = srcSel.withColumn(srcSalt,
-          pmod(xxhash64(col(Internal.SrcTs)), lit(saltBuckets)).cast("int"))
-        val pairsSalted = pairs.withColumn(salt,
-          explode(sequence(lit(0), lit(saltBuckets - 1))))
-        pairsSalted.join(srcSalted, cond && col(salt) === col(srcSalt), "inner")
-          .drop(salt, srcSalt)
-      } else pairs.join(srcSel, cond, "inner")
+    var joined = pairs.join(srcSel, cond, "inner")
 
     // A9 limit without group_by: top-k newest source rows per
     // (key, obs_ts). With group_by the limit applies to GROUPS after

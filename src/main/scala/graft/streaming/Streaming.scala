@@ -217,16 +217,14 @@ object StreamingIngest {
     val q = stream.writeStream.outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // both surfaces version at batchId: a replayed micro-batch
-        // re-presents the same delta to every store (reference-enum
-        // and extension alike), so the stores' version-rewrite
-        // tripwires see an idempotent write, not a conflict
-        if (features.nonEmpty)
-          graft.operators.IncrementalMaterializer.refresh(
-            batch, root, features, keyCols, tsCol, bucketUs, batchId)
-        if (graftFeatures.nonEmpty)
-          graft.operators.IncrementalMaterializer.refreshGraft(
-            batch, root, graftFeatures, keyCols, tsCol, bucketUs, batchId)
+        // one refresh of both surfaces at version batchId: a replayed
+        // micro-batch re-presents the same delta to every store
+        // (reference-enum and extension alike), so the stores'
+        // version-rewrite tripwires see an idempotent write, not a
+        // conflict
+        graft.operators.IncrementalMaterializer.refresh(batch, root,
+          features, keyCols, tsCol, bucketUs, batchId,
+          graftFeatures = graftFeatures)
       }
       .start()
     q.awaitTermination(timeoutMs)

@@ -7,8 +7,8 @@ import graft.sources._
 
 import org.apache.spark.sql.functions._
 
-/** Cross-key feature aliasing (with_key/as_feature semantics), SWA
-  * salting parity, and feature-config serialization.
+/** Cross-key feature aliasing (with_key/as_feature semantics) and
+  * feature-config serialization.
   */
 class CrossKeySpec extends SparkTestBase {
   import spark.implicits._
@@ -47,19 +47,6 @@ class CrossKeySpec extends SparkTestBase {
     assert(out.head.getAs[Double]("f_bal_sender") == 100.0)
     assert(out.head.getAs[Double]("f_bal_receiver") == 7.0)
     assert(out.head.getAs[Double]("f_bal_gap") == 93.0)
-  }
-
-  test("SWA salting produces identical results to the unsalted plan") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def run(): Array[org.apache.spark.sql.Row] =
-      SparkEntry.queries("q_swa_basic")(spark, sf)
-        .orderBy("event_id").collect()
-    spark.conf.unset("spark.graft.swa.saltBuckets")
-    val unsalted = run()
-    spark.conf.set("spark.graft.swa.saltBuckets", "4")
-    val salted = try run() finally spark.conf.unset("spark.graft.swa.saltBuckets")
-    assert(unsalted.length == salted.length)
-    unsalted.zip(salted).foreach { case (a, b) => assert(a == b) }
   }
 
   test("feature-config JSON carries anchors/derivations/sources sections") {

@@ -57,13 +57,13 @@ class IncrementalMaterializerSpec extends SparkTestBase {
       GraftFeature("g_p100", "v", Quantile(1.0, 0.0, 16.0, 16), d2),
       GraftFeature("g_nd", "tag", DistinctCount(12), d2),
       GraftFeature("g_top1", "tag", TopK(1, 4), d2))
-    IncrementalMaterializer.refreshGraft(events, root, feats,
-      Seq("k"), "ts", DayUs, 0L)
+    IncrementalMaterializer.refresh(events, root, Nil,
+      Seq("k"), "ts", DayUs, 0L, graftFeatures = feats)
     // p50/p100 share one histogram store; 3 stores total
     assert(new java.io.File(root).listFiles.count(_.getName.startsWith("g=")) == 3)
     // k=1 events: v in {1,2,4} tags {a,b,a}; k=2: v=10 tag b
-    val snap = IncrementalMaterializer.snapshotGraft(spark, root, feats,
-      Seq("k"), "ts", DayUs, 2 * DayUs)
+    val snap = IncrementalMaterializer.snapshot(spark, root, Nil,
+      Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = feats)
     val rows = snap
       .select(col("k"), col("g_p50"), col("g_p100"), col("g_top1"))
       .as[(Long, Double, Double, Seq[String])].collect()
@@ -77,11 +77,12 @@ class IncrementalMaterializerSpec extends SparkTestBase {
       .collect().toMap
     assert(nd(1L) > nd(2L) && nd(2L) > 0)
     // compact + forget ride the same dispatch
-    IncrementalMaterializer.compactGraft(spark, root, feats, Seq("k"), "ts", DayUs)
-    IncrementalMaterializer.forgetKeysGraft(spark, root, feats,
-      Seq("k"), "ts", DayUs, Seq(1L).toDF("k"))
-    val after = IncrementalMaterializer.snapshotGraft(spark, root, feats,
-      Seq("k"), "ts", DayUs, 2 * DayUs)
+    IncrementalMaterializer.compact(spark, root, Nil, Seq("k"), "ts", DayUs,
+      graftFeatures = feats)
+    IncrementalMaterializer.forgetKeys(spark, root, Nil,
+      Seq("k"), "ts", DayUs, Seq(1L).toDF("k"), graftFeatures = feats)
+    val after = IncrementalMaterializer.snapshot(spark, root, Nil,
+      Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = feats)
     assert(after.select("k").as[Long].collect().toSeq == Seq(2L))
   }
 
@@ -360,19 +361,22 @@ class IncrementalMaterializerSpec extends SparkTestBase {
       GraftFeature("g_p50", "v", Quantile(0.5, 0.0, 16.0, 16), d2),
       GraftFeature("g_top1", "tag", TopK(1, 4), d2))
     (0L to 3L).foreach(v =>
-      IncrementalMaterializer.refreshGraft(events, root, feats,
-        Seq("k"), "ts", DayUs, v))
-    val before = IncrementalMaterializer.snapshotGraft(spark, root, feats,
-      Seq("k"), "ts", DayUs, 2 * DayUs).collect().map(_.toString).sorted
-    val acted = IncrementalMaterializer.maintainGraft(spark, root, feats,
+      IncrementalMaterializer.refresh(events, root, Nil,
+        Seq("k"), "ts", DayUs, v, graftFeatures = feats))
+    val before = IncrementalMaterializer.snapshot(spark, root, Nil,
+      Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = feats)
+      .collect().map(_.toString).sorted
+    val acted = IncrementalMaterializer.maintain(spark, root, Nil,
       Seq("k"), "ts", DayUs,
-      MaintenancePolicy(compactWhenVersionsExceed = 2, gcKeepGenerations = 1))
+      MaintenancePolicy(compactWhenVersionsExceed = 2, gcKeepGenerations = 1),
+      graftFeatures = feats)
     assert(acted.size == 2 && acted.forall(_.compacted))
-    val infos = IncrementalMaterializer.describeGraft(spark, root, feats)
+    val infos = IncrementalMaterializer.describe(spark, root, Nil, DayUs,
+      graftFeatures = feats)
     assert(infos.forall(_._2.versions.size == 1))
-    assert(IncrementalMaterializer.snapshotGraft(spark, root, feats,
-      Seq("k"), "ts", DayUs, 2 * DayUs).collect().map(_.toString).sorted
-      .sameElements(before))
+    assert(IncrementalMaterializer.snapshot(spark, root, Nil,
+      Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = feats)
+      .collect().map(_.toString).sorted.sameElements(before))
   }
 
   test("snapshotAsOf: state time travel across store kinds; tears above the boundary don't block") {
@@ -418,16 +422,17 @@ class IncrementalMaterializerSpec extends SparkTestBase {
     val gFeats = Seq(
       GraftFeature("g_p50", "v", Quantile(0.5, 0.0, 16.0, 16), d2),
       GraftFeature("g_top1", "tag", TopK(1, 4), d2))
-    IncrementalMaterializer.refreshGraft(events, gRoot, gFeats,
-      Seq("k"), "ts", DayUs, 0L)
-    val gAtV0 = IncrementalMaterializer.snapshotGraft(spark, gRoot, gFeats,
-        Seq("k"), "ts", DayUs, 2 * DayUs)
+    IncrementalMaterializer.refresh(events, gRoot, Nil,
+      Seq("k"), "ts", DayUs, 0L, graftFeatures = gFeats)
+    val gAtV0 = IncrementalMaterializer.snapshot(spark, gRoot, Nil,
+        Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = gFeats)
       .select(col("k"), col("g_p50"), concat_ws(",", col("g_top1")))
       .collect().map(_.toString).sorted
-    IncrementalMaterializer.refreshGraft(events, gRoot, gFeats,
-      Seq("k"), "ts", DayUs, 1L)
-    assert(IncrementalMaterializer.snapshotGraftAsOf(spark, gRoot, gFeats,
-        Seq("k"), "ts", DayUs, 2 * DayUs, asOfVersion = 0L)
+    IncrementalMaterializer.refresh(events, gRoot, Nil,
+      Seq("k"), "ts", DayUs, 1L, graftFeatures = gFeats)
+    assert(IncrementalMaterializer.snapshotAsOf(spark, gRoot, Nil,
+        Seq("k"), "ts", DayUs, 2 * DayUs, asOfVersion = 0L,
+        graftFeatures = gFeats)
       .select(col("k"), col("g_p50"), concat_ws(",", col("g_top1")))
       .collect().map(_.toString).sorted.sameElements(gAtV0))
   }
@@ -716,10 +721,10 @@ class IncrementalMaterializerSpec extends SparkTestBase {
         keys = Seq(TypedKey("k", ValueType.INT64))),
       GraftFeature("tq", "v", q, Durations.parse("2d"),
         keys = Seq(tagKey)))
-    IncrementalMaterializer.refreshGraftMulti(events, root, feats,
-      "ts", DayUs, 0L)
-    val frames = IncrementalMaterializer.snapshotGraftMulti(spark, root,
-      feats, "ts", DayUs, 2 * DayUs)
+    IncrementalMaterializer.refreshMulti(events, root, Nil,
+      "ts", DayUs, 0L, graftFeatures = feats)
+    val frames = IncrementalMaterializer.snapshotMulti(spark, root,
+      Nil, "ts", DayUs, 2 * DayUs, graftFeatures = feats)
     assert(frames.keySet == Set(Seq("k"), Seq("t_alias")))
     // k=1 window rows {1,2,4}: median cutoff = left edge of bin(2) = 2.0
     assert(frames(Seq("k")).select("k", "kq")
@@ -729,15 +734,15 @@ class IncrementalMaterializerSpec extends SparkTestBase {
       .as[(String, Double)].collect().toMap ==
       Map("a" -> 1.0, "b" -> 2.0))
     // erasure is binding-scoped
-    IncrementalMaterializer.forgetKeysGraftMulti(spark, root, feats,
-      "ts", DayUs, Seq("k"), Seq(1L).toDF("k"))
-    val after = IncrementalMaterializer.snapshotGraftMulti(spark, root,
-      feats, "ts", DayUs, 2 * DayUs)
+    IncrementalMaterializer.forgetKeysMulti(spark, root, Nil,
+      "ts", DayUs, Seq("k"), Seq(1L).toDF("k"), graftFeatures = feats)
+    val after = IncrementalMaterializer.snapshotMulti(spark, root,
+      Nil, "ts", DayUs, 2 * DayUs, graftFeatures = feats)
     assert(after(Seq("k")).select("k").as[Long].collect().toSeq == Seq(2L))
     assert(after(Seq("t_alias")).count() == 2L, "other binding untouched")
     // daily frames + training rows per binding, alias-addressed
-    val dailies = IncrementalMaterializer.snapshotDailyGraftMulti(spark,
-      root, feats, "ts", DayUs)
+    val dailies = IncrementalMaterializer.snapshotDailyMulti(spark,
+      root, Nil, "ts", DayUs, graftFeatures = feats)
     assert(dailies.keySet == Set(Seq("k"), Seq("t_alias")))
     // post-forget: k=1 erased; tag frames intact. tag 'b' day1 window
     // {2,10} -> median-of-two p50 cutoff = bin(2) left edge = 2.0
@@ -782,20 +787,77 @@ class IncrementalMaterializerSpec extends SparkTestBase {
 
     // a feature without a binding is refused by the Multi surface
     val nb = intercept[IllegalArgumentException] {
-      IncrementalMaterializer.refreshGraftMulti(events, root,
-        Seq(GraftFeature("nokeys", "v", q, Durations.parse("2d"))),
-        "ts", DayUs, 1L)
+      IncrementalMaterializer.refreshMulti(events, root, Nil,
+        "ts", DayUs, 1L,
+        graftFeatures = Seq(GraftFeature("nokeys", "v", q, Durations.parse("2d"))))
     }
     assert(nb.getMessage.contains("no key binding"))
     // one alias schema over two physical columns is ambiguous
     val amb = intercept[IllegalArgumentException] {
-      IncrementalMaterializer.snapshotGraftMulti(spark, root, Seq(
+      IncrementalMaterializer.snapshotMulti(spark, root, Nil,
+        "ts", DayUs, 2 * DayUs, graftFeatures = Seq(
         GraftFeature("a1", "v", q, Durations.parse("2d"),
           keys = Seq(TypedKey("k", ValueType.INT64, Some("x")))),
         GraftFeature("a2", "v", q, Durations.parse("2d"),
-          keys = Seq(TypedKey("tag", ValueType.STRING, Some("x"))))),
-        "ts", DayUs, 2 * DayUs)
+          keys = Seq(TypedKey("tag", ValueType.STRING, Some("x"))))))
     }
     assert(amb.getMessage.contains("unambiguous"))
+  }
+
+  test("on-disk store layout is pinned; a mixed-surface tear leaves one marker") {
+    import graft.model.GraftAggregation._
+    import IncrementalMaterializer.GraftFeature
+    val d2 = Durations.parse("2d")
+    val tagKey = TypedKey("tag", ValueType.STRING, Some("t_alias"))
+    val anchors = Seq(
+      feat("p_sum", wa("SUM")),
+      feat("p_tags", Transformation.WindowAgg("tag", Aggregation.UNION, d2)),
+      feat("p_vsum", Transformation.WindowAgg("array(v, v * 2)",
+        Aggregation.ELEMENTWISE_SUM, d2)))
+    val grafts = Seq(
+      GraftFeature("p_nd", "tag", DistinctCount(12), d2, keys = Seq(key)),
+      GraftFeature("p_p50", "v", Quantile(0.5, 0.0, 16.0, 16), d2,
+        keys = Seq(key)))
+    def entries(dir: String, prefix: String) = new java.io.File(dir)
+      .listFiles.map(_.getName).filter(_.startsWith(prefix)).toSet
+    def stores(dir: String) = entries(dir, "").filter(_.contains("="))
+    val (mDir, uDir, eDir) =
+      ("m=a4338195690100d5", "u=c4c9a3a172390066", "e=66373a5b96234645")
+    val (gDistinct, gQuantile) = ("g=aa5c8db1dcc541a7", "g=8adc109e1473da02")
+
+    // one binding: m=/u=/e= + md5(defExpr|filter), g= + md5(defExpr|filter|stateKey)
+    val root = Spill.newPath(spark)
+    IncrementalMaterializer.refresh(events, root, anchors,
+      Seq("k"), "ts", DayUs, 0L, graftFeatures = grafts)
+    assert(stores(root) == Set(mDir, uDir, eDir, gDistinct, gQuantile))
+
+    // two bindings: k= + md5(alias=column) roots holding the same store names
+    val multi = Spill.newPath(spark)
+    IncrementalMaterializer.refreshMulti(events, multi, Seq(
+      feat("p_sum", wa("SUM")),
+      AnchorFeature("t_sum", FeatureType.DOUBLE, wa("SUM"), Seq(tagKey))),
+      "ts", DayUs, 0L, graftFeatures = Seq(
+      grafts.head,
+      GraftFeature("t_p50", "v", Quantile(0.5, 0.0, 16.0, 16), d2,
+        keys = Seq(tagKey))))
+    assert(stores(multi) == Set("k=858b43b5f106", "k=4ebdbfbc5763"))
+    assert(stores(s"$multi/k=858b43b5f106") == Set(mDir, gDistinct))
+    assert(stores(s"$multi/k=4ebdbfbc5763") == Set(mDir, gQuantile))
+
+    // a refresh of both surfaces whose union ingest dies over-cap
+    intercept[IllegalStateException] {
+      IncrementalMaterializer.refresh(events, root, anchors,
+        Seq("k"), "ts", DayUs, 1L, unionCap = 1, graftFeatures = grafts)
+    }
+    assert(entries(root, "_refresh_pending_") == Set("_refresh_pending_1"))
+    val torn = intercept[IllegalArgumentException] {
+      IncrementalMaterializer.snapshot(spark, root, anchors,
+        Seq("k"), "ts", DayUs, 2 * DayUs)
+    }
+    assert(torn.getMessage.contains(uDir), torn.getMessage)
+    // the stores that landed version 1 still serve
+    assert(IncrementalMaterializer.snapshot(spark, root,
+      Seq(anchors(0), anchors(2)), Seq("k"), "ts", DayUs, 2 * DayUs,
+      graftFeatures = grafts).count() == 2)
   }
 }

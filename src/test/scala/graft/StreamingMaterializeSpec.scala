@@ -101,11 +101,11 @@ class StreamingMaterializeSpec extends SparkTestBase {
       Seq("k"), "ts", DayUs, graftFeatures = gfeats)
 
     val direct = Spill.newPath(spark)
-    IncrementalMaterializer.refreshGraft(all, direct, gfeats,
-      Seq("k"), "ts", DayUs, 0L)
+    IncrementalMaterializer.refresh(all, direct, Nil,
+      Seq("k"), "ts", DayUs, 0L, graftFeatures = gfeats)
     def snap(root: String) =
-      IncrementalMaterializer.snapshotGraft(spark, root, gfeats,
-        Seq("k"), "ts", DayUs, 2 * DayUs)
+      IncrementalMaterializer.snapshot(spark, root, Nil,
+        Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = gfeats)
         .select(col("k"), col("g_p50"), concat_ws(",", col("g_top1")))
     assert(multiset(snap(streamed)) == multiset(snap(direct)))
     // k=1: values {1,2,4} -> p50 bin 2 edge 2.0; tags {a:2, b:1} -> a

@@ -46,7 +46,7 @@ class TensorTypeSpec extends SparkTestBase {
     assert(out.schema("f_vec").dataType == ArrayType(FloatType))
   }
 
-  test("mismatched UNION declaration: hard error by default, skipped when lenient") {
+  test("mismatched UNION declaration is a hard error") {
     def build(): org.apache.spark.sql.DataFrame = {
       Seq((1L, "2024-01-01 00:00:00", "a"))
         .toDF("k", "ts_s", "etype")
@@ -64,13 +64,6 @@ class TensorTypeSpec extends SparkTestBase {
         Seq(FeatureQuery(Seq("f_types"), Seq("k"))))
     }
     intercept[IllegalArgumentException] { build() }
-    spark.conf.set("spark.graft.types.lenient", "true")
-    try {
-      val out = build()
-      // declaration skipped: runtime shape (array of collected values)
-      assert(out.schema("f_types").dataType ==
-        ArrayType(StringType, containsNull = false))
-    } finally spark.conf.unset("spark.graft.types.lenient")
   }
 
   test("null-key observation rows keep null features, are not dropped") {

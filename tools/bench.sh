@@ -8,7 +8,10 @@ set -u
 cd "$(dirname "$0")/.."
 sbt -batch "runMain graft.Bench" 1>&2
 rc=$?
-if [ -f BENCH_SUMMARY.json ]; then
+# a failed run or a SPARK_GRAFT_BENCH_ONLY subset leaves the previous
+# full-suite summary on disk; printing it would report stale numbers
+if [ "$rc" -eq 0 ] && [ -z "${SPARK_GRAFT_BENCH_ONLY:-}" ] &&
+    [ -f BENCH_SUMMARY.json ]; then
   cat BENCH_SUMMARY.json
 fi
 exit $rc
