@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Windowed per-key DISTINCT COUNTS from incrementally-maintained
@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * function of each bucket's distinct set on the cross-engine md5
   * grid — and registers merge by MAX exactly like
   * [[IncrementalSwa]]'s LATEST partial (union semantics without
-  * rescanning). Same generation/version layout, same O(delta)
-  * ingest and fold-into-a-new-[[Publish]]-generation compaction.
+  * rescanning). The lifecycle is [[BucketedState]]'s.
   *
   * Serve = max-merge the window's registers per key, then
   * [[Sketches.hllStats]]'s exact-integer sufficient statistics
@@ -24,7 +23,8 @@ import org.apache.spark.sql.functions._
   * items) rows. Serve shuffles the bounded state, never events.
   */
 object IncrementalDistinct {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   case class Config(keyCols: Seq[String], tsCol: String, itemCol: String,
       bucketUs: Long, p: Int = 12) {
@@ -33,46 +33,35 @@ object IncrementalDistinct {
     require(p >= 4 && p <= 16, s"hll precision out of range: $p")
   }
 
+  /** HLL registers per (key, bucket, register `bucket`), merged by max. */
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Unit](cfg.keyCols, cfg.tsCol, cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.itemCol)
+    def partial(bucketed: DataFrame): DataFrame =
+      Sketches.hllRegisters(bucketed, col(cfg.itemCol), cfg.p,
+        cfg.keyCols :+ BCol)
+    override def subKeys: Seq[String] = Seq("bucket")
+    def merge: Seq[(String, Column => Column)] = Seq(("rho", max(_)))
+    def daily: BucketedState.Daily = BucketedState.Expand
+    def finish(u: Unit): BucketedState.Finish =
+      (m, keys) => Sketches.hllStats(m, cfg.p, keys)
+  }
+
   /** Fold `delta` to per-(key, bucket) HLL registers and append as
     * `version`; same replay/fold discipline as
     * [[IncrementalSwa.ingest]].
     */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.itemCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — state cannot replay rebased history")
-      val b = IncrementalSwa.bucketOf(col(cfg.tsCol), cfg.bucketUs)
-      Sketches.hllRegisters(delta.withColumn(BCol, b), col(cfg.itemCol),
-          cfg.p, cfg.keyCols :+ BCol)
-        .sortWithinPartitions(BCol)
-        .write.mode("overwrite")
-        .parquet(s"${IncrementalSwa.liveGen(spark, dir)}/$VCol=$version")
-    }
-  }
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Per-key distinct-count statistics over [asOf − W, asOf): one
     * max-merge of the window's registers, then the exact-integer HLL
     * statistics per key.
     */
   def serveDistinct(spark: SparkSession, dir: String, cfg: Config,
-      asOfUs: Long, windowBuckets: Int): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val regs = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy((cfg.keyCols :+ "bucket").map(col): _*)
-      .agg(max(col("rho")).as("rho"))
-    Sketches.hllStats(regs, cfg.p, cfg.keyCols)
-  }
+      asOfUs: Long, windowBuckets: Int): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, ())
 
   /** The daily distinct-count table in ONE state pass: per (key,
     * bucket b), [[serveDistinct]]'s statistics over the `windowBuckets`
@@ -88,74 +77,35 @@ object IncrementalDistinct {
     */
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val st = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-    val hiB = {
-      val r = st.agg(max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no registers")
-      r.getLong(0)
-    }
-    val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
-    val regs = IncrementalSwa.expandToWindows(st, windowBuckets, capB)
-      .where(col("__day") >= completeFrom)
-      .groupBy((cfg.keyCols :+ "__day" :+ "bucket").map(col): _*)
-      .agg(max(col("rho")).as("rho"))
-    Sketches.hllStats(regs, cfg.p, cfg.keyCols :+ "__day")
-      .withColumnRenamed("__day", "bucket")
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, ())
 
   /** [[serveDistinct]] as the state stood at `asOfVersion` — time
     * travel with [[IncrementalSwa.serveAsOf]]'s rebased-history
     * refusal.
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config,
-      asOfUs: Long, windowBuckets: Int, asOfVersion: Long): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val regs = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(VCol) <= asOfVersion)
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy((cfg.keyCols :+ "bucket").map(col): _*)
-      .agg(max(col("rho")).as("rho"))
-    Sketches.hllStats(regs, cfg.p, cfg.keyCols)
-  }
+      asOfUs: Long, windowBuckets: Int, asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, ())
 
   /** Fold the version tail: max(rho) per (key, bucket, register) in a
     * new [[Publish]] generation — [[IncrementalSwa.compact]]'s crash
     * posture.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, dir, () => foldState(spark, dir, cfg))
-
-  private def foldState(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .groupBy((cfg.keyCols.map(col) :+ col(BCol) :+ col("bucket")): _*)
-      .agg(max(col("rho")).as("rho"))
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction — [[IncrementalSwa.compactRetaining]]'s
     * contract for register state.
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).where(col(BCol) >= minBucket),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure — [[IncrementalSwa.forgetKeys]]'s contract. */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

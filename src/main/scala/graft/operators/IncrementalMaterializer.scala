@@ -6,6 +6,8 @@ import graft.project.{AnchorFeature, DerivedFeature}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import BucketedState.{AtBoundary, AtVersion, PerBucket, Read}
+
 /** The DSL bridge onto the incremental stores: WindowAgg anchor
   * features (SURVEY §2.6) materialized by O(delta) REFRESH instead of
   * the M1 step-loop's from-raw recompute. Features sharing a
@@ -35,7 +37,8 @@ import org.apache.spark.sql.functions._
   * compactRetaining, forgetKeys, maintain and their `*Multi` forms)
   * takes them as its `graftFeatures` argument, so one refresh covers
   * both surfaces under one commit marker. Both surfaces resolve to
-  * one store adapter; each store kind is named in one place.
+  * one store dispatch onto the stores' shared [[BucketedState]]
+  * kernel; each store kind is named in one place.
   *
   * SUM/AVG are maintained on the exact integer cent grid
   * ([[IncrementalSwa]]'s contract): exact for 2-decimal measures,
@@ -178,156 +181,40 @@ object IncrementalMaterializer {
     def dir(s: Store): String = s"$root/${s.rel}"
   }
 
-  /** Which served view of a store a snapshot reads. */
-  private sealed trait Read
-  private final case class AtBoundary(asOfUs: Long) extends Read
-  private final case class AtVersion(asOfUs: Long, version: Long)
-      extends Read
-  private final case class PerBucket(includeHorizonPartialRows: Boolean,
-      throughBucket: Option[Long]) extends Read
-
-  /** One store's lifecycle calls behind one interface. `serve` takes
-    * the picks of the features read in that call: quantile stores
-    * serve all their `q`s at once, top-k stores the largest `k`.
-    */
-  private trait Adapter {
-    def ingest(measured: DataFrame, version: Long): Unit
-    def serve(read: Read, w: Int, picks: Seq[Pick]): DataFrame
-    def compact(): Unit
-    def compactRetaining(minBucket: Long): Unit
-    def forgetKeys(keys: DataFrame): Unit
-  }
-
   private val MeasureCol = "__graft_m"
 
-  /** The one store-kind dispatch: each of the six incremental stores'
-    * calls, named here and nowhere else in this file.
+  /** A store kind's aggregate, with how the picks of one serve become
+    * its finish argument: quantile stores serve all their `q`s at
+    * once, top-k stores the largest `k`.
     */
-  private def adapter(c: Ctx, s: Store): Adapter = {
-    val (spark, dir) = (c.spark, c.dir(s))
-    val (ks, ts, b) = (c.keyCols, c.tsCol, c.bucketUs)
+  private final case class Bound[A](agg: BucketedState.Aggregate[A],
+      arg: Seq[Pick] => A) {
+    def serve(spark: SparkSession, dir: String, read: Read, w: Int,
+        picks: Seq[Pick]): DataFrame =
+      BucketedState.serve(spark, dir, agg, read, w, arg(picks))
+  }
+
+  /** The one store-kind dispatch: each of the six incremental stores,
+    * named here and nowhere else in this file.
+    */
+  private def bound(c: Ctx, s: Store): Bound[_] = {
+    val (ks, ts, b, m) = (c.keyCols, c.tsCol, c.bucketUs, MeasureCol)
+    val none = (_: Seq[Pick]) => ()
     s.kind match {
       case Scalar =>
-        val cfg = IncrementalSwa.Config(ks, ts, MeasureCol, b)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalSwa.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
-            case AtBoundary(t) => IncrementalSwa.serve(spark, dir, cfg, t, w)
-            case AtVersion(t, v) =>
-              IncrementalSwa.serveAsOf(spark, dir, cfg, t, w, v)
-            case PerBucket(partial, through) =>
-              IncrementalSwa.serveDaily(spark, dir, cfg, w, partial, through)
-          }
-          def compact(): Unit = IncrementalSwa.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalSwa.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalSwa.forgetKeys(spark, dir, cfg, keys)
-        }
-      case SetUnion =>
-        val cfg = IncrementalUnion.Config(ks, ts, MeasureCol, b, c.unionCap)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalUnion.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
-            case AtBoundary(t) => IncrementalUnion.serve(spark, dir, cfg, t, w)
-            case AtVersion(t, v) =>
-              IncrementalUnion.serveAsOf(spark, dir, cfg, t, w, v)
-            case PerBucket(partial, through) =>
-              IncrementalUnion.serveDaily(spark, dir, cfg, w, partial, through)
-          }
-          def compact(): Unit = IncrementalUnion.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalUnion.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalUnion.forgetKeys(spark, dir, cfg, keys)
-        }
-      case Vector =>
-        val cfg = IncrementalVector.Config(ks, ts, MeasureCol, b)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalVector.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
-            case AtBoundary(t) => IncrementalVector.serve(spark, dir, cfg, t, w)
-            case AtVersion(t, v) =>
-              IncrementalVector.serveAsOf(spark, dir, cfg, t, w, v)
-            case PerBucket(partial, through) =>
-              IncrementalVector.serveDaily(spark, dir, cfg, w, partial, through)
-          }
-          def compact(): Unit = IncrementalVector.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalVector.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalVector.forgetKeys(spark, dir, cfg, keys)
-        }
-      case Distinct(p) =>
-        val cfg = IncrementalDistinct.Config(ks, ts, MeasureCol, b, p)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalDistinct.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = r match {
-            case AtBoundary(t) =>
-              IncrementalDistinct.serveDistinct(spark, dir, cfg, t, w)
-            case AtVersion(t, v) =>
-              IncrementalDistinct.serveAsOf(spark, dir, cfg, t, w, v)
-            case PerBucket(partial, through) =>
-              IncrementalDistinct.serveDaily(spark, dir, cfg, w, partial,
-                through)
-          }
-          def compact(): Unit = IncrementalDistinct.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalDistinct.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalDistinct.forgetKeys(spark, dir, cfg, keys)
-        }
-      case Histogram(lo, hi, bins) =>
-        val cfg =
-          IncrementalQuantile.Config(ks, ts, MeasureCol, b, lo, hi, bins)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalQuantile.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = {
-            val qs = picks.collect { case AtQuantile(q) => q }.distinct
-            r match {
-              case AtBoundary(t) =>
-                IncrementalQuantile.serveQuantiles(spark, dir, cfg, t, w, qs)
-              case AtVersion(t, v) =>
-                IncrementalQuantile.serveAsOf(spark, dir, cfg, t, w, qs, v)
-              case PerBucket(partial, through) =>
-                IncrementalQuantile.serveDaily(spark, dir, cfg, w, qs, partial,
-                  through)
-            }
-          }
-          def compact(): Unit = IncrementalQuantile.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalQuantile.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalQuantile.forgetKeys(spark, dir, cfg, keys)
-        }
-      case Candidates(cand) =>
-        val cfg = IncrementalTopK.Config(ks, ts, MeasureCol, b, cand)
-        new Adapter {
-          def ingest(d: DataFrame, v: Long): Unit =
-            IncrementalTopK.ingest(d, dir, cfg, v)
-          def serve(r: Read, w: Int, picks: Seq[Pick]): DataFrame = {
-            val kMax = picks.collect { case TopItems(k) => k }.max
-            r match {
-              case AtBoundary(t) =>
-                IncrementalTopK.serveTopK(spark, dir, cfg, t, w, kMax)
-              case AtVersion(t, v) =>
-                IncrementalTopK.serveAsOf(spark, dir, cfg, t, w, kMax, v)
-              case PerBucket(partial, through) =>
-                IncrementalTopK.serveDaily(spark, dir, cfg, w, kMax, partial,
-                  through)
-            }
-          }
-          def compact(): Unit = IncrementalTopK.compact(spark, dir, cfg)
-          def compactRetaining(mb: Long): Unit =
-            IncrementalTopK.compactRetaining(spark, dir, cfg, mb)
-          def forgetKeys(keys: DataFrame): Unit =
-            IncrementalTopK.forgetKeys(spark, dir, cfg, keys)
-        }
+        Bound(IncrementalSwa.State(IncrementalSwa.Config(ks, ts, m, b)), none)
+      case SetUnion => Bound(IncrementalUnion.State(
+        IncrementalUnion.Config(ks, ts, m, b, c.unionCap)), none)
+      case Vector => Bound(IncrementalVector.State(
+        IncrementalVector.Config(ks, ts, m, b)), none)
+      case Distinct(p) => Bound(IncrementalDistinct.State(
+        IncrementalDistinct.Config(ks, ts, m, b, p)), none)
+      case Histogram(lo, hi, bins) => Bound(IncrementalQuantile.State(
+        IncrementalQuantile.Config(ks, ts, m, b, lo, hi, bins)),
+        _.collect { case AtQuantile(q) => q }.distinct)
+      case Candidates(cand) => Bound(IncrementalTopK.State(
+        IncrementalTopK.Config(ks, ts, m, b, cand)),
+        _.collect { case TopItems(k) => k }.max)
     }
   }
 
@@ -540,9 +427,26 @@ object IncrementalMaterializer {
       val filtered = s.filter.map(delta.where(_)).getOrElse(delta)
       val measured = filtered.withColumn(MeasureCol, expr(s.defExpr))
         .select((keyCols :+ tsCol :+ MeasureCol).map(col): _*)
-      adapter(c, s).ingest(measured, version)
+      BucketedState.ingest(bound(c, s).agg, measured, c.dir(s), version)
     }: _*)
     clearPending(c.spark, root, version)
+  }
+
+  /** Feature names must be unique across the reference-enum, derived
+    * and extension surfaces: the assembled frame (and a using-columns
+    * training join, which dedups only keys) would otherwise carry two
+    * columns of one name and fail far downstream (AMBIGUOUS_REFERENCE
+    * / parquet write). Refused by name before any read.
+    */
+  private def requireUniqueNames(features: Seq[AnchorFeature],
+      derived: Seq[DerivedFeature], graftFeatures: Seq[GraftFeature]): Unit = {
+    val names = features.map(_.name) ++ derived.map(_.name) ++
+      graftFeatures.map(_.name)
+    val dupNames = names.diff(names.distinct).distinct
+    require(dupNames.isEmpty,
+      s"feature names ${dupNames.mkString(", ")} are declared more than " +
+        "once across the reference-enum, derived and extension surfaces " +
+        "— the feature frame would carry duplicate columns; rename one")
   }
 
   /** The one read path under every snapshot: one serve per distinct
@@ -559,6 +463,7 @@ object IncrementalMaterializer {
       read: Read): DataFrame = {
     require(features.nonEmpty || graftFeatures.nonEmpty,
       "no features to snapshot")
+    requireUniqueNames(features, derived, graftFeatures)
     require(features.nonEmpty || derived.isEmpty,
       s"derived feature(s) ${derived.map(_.name)} need anchor features " +
         "to evaluate over — the extension columns are a separate " +
@@ -575,7 +480,8 @@ object IncrementalMaterializer {
       (anchors ++ grafts).map(p => c.dir(p.store)).distinct, upTo)
     def served(ps: Seq[Planned]): Seq[DataFrame] =
       ps.groupBy(p => (p.store, p.window)).toSeq.flatMap { case ((s, w), fs) =>
-        pickColumns(adapter(c, s).serve(read, w, fs.map(_.pick)), joinCols, fs)
+        val base = bound(c, s).serve(c.spark, c.dir(s), read, w, fs.map(_.pick))
+        pickColumns(base, joinCols, fs)
       }
     val anchorWide =
       if (anchors.isEmpty) Nil
@@ -726,11 +632,11 @@ object IncrementalMaterializer {
     */
   private def eachStore(c: Ctx, features: Seq[AnchorFeature],
       graftFeatures: Seq[GraftFeature], guardTorn: Boolean)(
-      action: Adapter => Unit): Unit = {
+      action: (String, BucketedState.Aggregate[_]) => Long): Unit = {
     val stores = storesOf(features, graftFeatures, c.bucketUs, "maintain")
     if (guardTorn)
       requireNoTornForMaintenance(c.spark, c.root, stores.map(c.dir))
-    Par.run(stores.map(s => () => action(adapter(c, s))): _*)
+    Par.run(stores.map(s => () => { action(c.dir(s), bound(c, s).agg); () }): _*)
   }
 
   /** Compact every store of the feature set — the nightly
@@ -743,7 +649,8 @@ object IncrementalMaterializer {
       bucketUs: Long, unionCap: Int = 10000,
       graftFeatures: Seq[GraftFeature] = Nil): Unit =
     eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, unionCap),
-      features, graftFeatures, guardTorn = true)(_.compact())
+      features, graftFeatures, guardTorn = true)(
+      BucketedState.compact(spark, _, _))
 
   /** Retention across every store: state bounded by the serving
     * horizon for the WHOLE feature set
@@ -756,7 +663,8 @@ object IncrementalMaterializer {
       bucketUs: Long, minBucket: Long, unionCap: Int = 10000,
       graftFeatures: Seq[GraftFeature] = Nil): Unit =
     eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, unionCap),
-      features, graftFeatures, guardTorn = true)(_.compactRetaining(minBucket))
+      features, graftFeatures, guardTorn = true)(
+      BucketedState.compactRetaining(spark, _, _, minBucket))
 
   /** GDPR erasure across every store: "delete these keys from every
     * feature" in one call — each store folds the keys' whole history
@@ -775,7 +683,8 @@ object IncrementalMaterializer {
       bucketUs: Long, keys: DataFrame,
       graftFeatures: Seq[GraftFeature] = Nil): Unit =
     eachStore(Ctx(spark, root, keyCols, tsCol, bucketUs, Int.MaxValue),
-      features, graftFeatures, guardTorn = false)(_.forgetKeys(keys))
+      features, graftFeatures, guardTorn = false)(
+      BucketedState.forgetKeys(spark, _, _, keys))
 
   /** The nightly-maintenance decision rules [[maintain]] applies to
     * every store of a feature set — the runbook as one idempotent
@@ -834,7 +743,7 @@ object IncrementalMaterializer {
     */
   private def maintainOne(spark: SparkSession, dir: String,
       featNames: Seq[String], policy: MaintenancePolicy,
-      torn: Option[Long], store: Adapter): MaintenanceAction = {
+      torn: Option[Long], agg: BucketedState.Aggregate[_]): MaintenanceAction = {
     val info = IncrementalSwa.describe(spark, dir)
     val hasState = info.versions.nonEmpty
     val needRetain = policy.retainFromBucket
@@ -843,8 +752,8 @@ object IncrementalMaterializer {
     val needCompact = torn.isEmpty &&
       info.versions.size > policy.compactWhenVersionsExceed
     needRetain match {
-      case Some(mb) => store.compactRetaining(mb)
-      case None => if (needCompact) store.compact()
+      case Some(mb) => BucketedState.compactRetaining(spark, dir, agg, mb)
+      case None => if (needCompact) BucketedState.compact(spark, dir, agg)
     }
     // gc is fold-free (it drops SUPERSEDED generations; the live one —
     // where any torn version lives — is never collected), so it runs
@@ -874,7 +783,7 @@ object IncrementalMaterializer {
       .groupBy(_.store).toSeq.map { case (s, fs) =>
         val dir = c.dir(s)
         () => maintainOne(spark, dir, fs.map(_.name), policy, torn.get(dir),
-          adapter(c, s))
+          bound(c, s).agg)
       }
     val out = new Array[MaintenanceAction](steps.size)
     Par.run(steps.zipWithIndex.map { case (f, i) =>
@@ -1051,6 +960,7 @@ object IncrementalMaterializer {
       features: Seq[AnchorFeature], tsCol: String, bucketUs: Long,
       asOfUs: Long, derived: Seq[DerivedFeature] = Nil,
       graftFeatures: Seq[GraftFeature] = Nil): Map[Seq[String], DataFrame] = {
+    requireUniqueNames(features, derived, graftFeatures)
     val groups = byBinding(features, graftFeatures)
     requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
     val claims = claimDerived(groups, derived)
@@ -1069,6 +979,7 @@ object IncrementalMaterializer {
       includeHorizonPartialRows: Boolean = false,
       throughBucket: Option[Long] = None,
       graftFeatures: Seq[GraftFeature] = Nil): Map[Seq[String], DataFrame] = {
+    requireUniqueNames(features, derived, graftFeatures)
     val groups = byBinding(features, graftFeatures)
     requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
     val claims = claimDerived(groups, derived)
@@ -1092,18 +1003,8 @@ object IncrementalMaterializer {
       observations: DataFrame, obsTsCol: String,
       derived: Seq[DerivedFeature] = Nil,
       graftFeatures: Seq[GraftFeature] = Nil): DataFrame = {
+    requireUniqueNames(features, derived, graftFeatures)
     val groups = byBinding(features, graftFeatures)
-    // feature names must be unique across both surfaces: a
-    // using-columns join dedups only keys, so a name shared across
-    // surfaces would emit two columns and fail far downstream
-    // (AMBIGUOUS_REFERENCE / parquet write)
-    val names = features.map(_.name) ++ derived.map(_.name) ++
-      graftFeatures.map(_.name)
-    val dupNames = names.groupBy(identity).filter(_._2.size > 1).keys
-    require(dupNames.isEmpty,
-      s"feature names ${dupNames.mkString(", ")} are declared on both " +
-        "the reference-enum and extension surfaces — the training frame " +
-        "would carry duplicate columns; rename one side")
     val claims = claimDerived(groups, derived)
     requireRefreshComplete(spark, root, multiDirs(root, groups, bucketUs))
     groups.keys.flatMap(_.map(_._1)).foreach { alias =>
@@ -1183,15 +1084,10 @@ object IncrementalMaterializer {
         s"anchor features span multiple key bindings $many — one " +
           "incremental store holds one key frame")
     }
+    // names are unique across surfaces ([[requireUniqueNames]]), so a
+    // derivation can neither repeat nor shadow a served column
     val anchorNames = features.map(_.name).toSet
     val byName = derived.map(d => d.name -> d).toMap
-    require(byName.size == derived.size,
-      s"duplicate derived feature names: ${derived.map(_.name).diff(byName.keys.toSeq)}")
-    val shadowing = derived.map(_.name).filter(anchorNames.contains)
-    require(shadowing.isEmpty,
-      s"derived feature(s) $shadowing share a name with a materialized " +
-        "anchor feature — the withColumn evaluation would silently " +
-        "overwrite the served anchor column; rename the derivation")
     derived.foreach { d =>
       d.inputs.foreach { in =>
         require(anchorNames.contains(in.featureName) ||

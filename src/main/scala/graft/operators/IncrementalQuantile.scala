@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,12 +9,11 @@ import org.apache.spark.sql.functions._
   * per key) that SUM/MIN/MAX cannot express. Exact quantiles are not
   * mergeable, but BINNED histograms are: the state holds one row per
   * (key, bucket, bin) with a count — additive across versions exactly
-  * like [[IncrementalSwa]]'s partials (same generation/version layout,
-  * same O(delta) ingest, same fold-into-a-new-[[Publish]]-generation
-  * compaction), and a serve sums bin counts over the bucket range and
-  * applies the integer cumulative-cutoff rule on the fixed grid
-  * ([[Sketches.histogramQuantiles]]'s rule, per key). Precision is the
-  * grid width (hi−lo)/nBins — the deterministic trade every
+  * like [[IncrementalSwa]]'s partials (the lifecycle is
+  * [[BucketedState]]'s), and a serve sums bin counts over the bucket
+  * range and applies the integer cumulative-cutoff rule on the fixed
+  * grid ([[Sketches.histogramQuantiles]]'s rule, per key). Precision
+  * is the grid width (hi−lo)/nBins — the deterministic trade every
   * cross-engine-reproducible quantile makes; out-of-range values
   * clamp into the edge bins.
   *
@@ -23,7 +22,8 @@ import org.apache.spark.sql.functions._
   * state, never events.
   */
 object IncrementalQuantile {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   case class Config(keyCols: Seq[String], tsCol: String, valueCol: String,
       bucketUs: Long, lo: Double, hi: Double, nBins: Int) {
@@ -32,33 +32,62 @@ object IncrementalQuantile {
     require(nBins > 0 && hi > lo, s"bad histogram grid: [$lo,$hi) x $nBins")
   }
 
-  /** Fold `delta` to (key, bucket, bin) counts and append as
-    * `version`; the same replay/fold discipline as
-    * [[IncrementalSwa.ingest]].
+  /** Bin counts per (key, bucket, bin), merged by sum. The daily table
+    * expands rather than rolls: the partials are sparse per (key, day,
+    * bin), and a RANGE frame would need a dense keys × bins × days
+    * spine.
     */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.valueCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — additive state cannot replay rebased history")
-      val b = IncrementalSwa.bucketOf(col(cfg.tsCol), cfg.bucketUs)
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Seq[Double]](cfg.keyCols, cfg.tsCol,
+        cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.valueCol)
+    def partial(bucketed: DataFrame): DataFrame = {
       val v = col(cfg.valueCol)
       val bin = least(greatest(
         floor((v - lit(cfg.lo)) * cfg.nBins / lit(cfg.hi - cfg.lo)), lit(0.0)),
         lit((cfg.nBins - 1).toDouble)).cast("long")
-      delta.where(v.isNotNull)
-        .groupBy((cfg.keyCols.map(col) :+ b.as(BCol) :+ bin.as("bin")): _*)
+      bucketed.where(v.isNotNull)
+        .groupBy((cfg.keyCols.map(col) :+ col(BCol) :+ bin.as("bin")): _*)
         .agg(count(lit(1)).as("n"))
-        .sortWithinPartitions(BCol)
-        .write.mode("overwrite")
-        .parquet(s"${IncrementalSwa.liveGen(spark, dir)}/$VCol=$version")
+    }
+    override def subKeys: Seq[String] = Seq("bin")
+    def merge: Seq[(String, Column => Column)] = Seq(("n", sum(_)))
+    def daily: BucketedState.Daily = BucketedState.Expand
+
+    def finish(qs: Seq[Double]): BucketedState.Finish = {
+      require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad qs: $qs")
+      (m, keys) => {
+        val perKey = Window.partitionBy(keys.map(col): _*)
+        val cum = m
+          .withColumn("cum", sum(col("n")).over(perKey.orderBy(col("bin"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .withColumn("total", sum(col("n")).over(perKey))
+        // the quantile rides as its exact permyriad LONG — `cum·10⁴ ≥
+        // q10k·total` is all-integer, so a mathematically exact tie
+        // (cum·10⁴ = q10k·total) can never be lost to a float ulp the
+        // way `q * 10000 * total` in doubles loses it (e.g.
+        // 0.035·10⁴·400 = 70000.00000000001)
+        val qdf = m.sparkSession.createDataFrame(
+          qs.map(q => (math.rint(q * 10000).toLong / 10000.0,
+            math.rint(q * 10000).toLong))).toDF("q", "__q10k")
+        cum.crossJoin(broadcast(qdf))
+          .where(col("cum") * 10000 >= col("__q10k") * col("total"))
+          .groupBy((keys :+ "q").map(col): _*)
+          .agg(min(col("bin")).as("bin"), min(col("total")).as("n_total"))
+          .withColumn("cutoff", lit(cfg.lo) +
+            col("bin") * lit(cfg.hi - cfg.lo) / lit(cfg.nBins.toDouble))
+          .select((keys.map(col) ++
+            Seq(col("q"), col("bin"), col("cutoff"), col("n_total"))): _*)
+      }
     }
   }
+
+  /** Fold `delta` to (key, bucket, bin) counts and append as
+    * `version`; the same replay/fold discipline as
+    * [[IncrementalSwa.ingest]].
+    */
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Per-key quantile cutoffs over the window [asOf − W, asOf): one
     * (key, bin) merge of the state, one per-key cumulative window over
@@ -68,7 +97,8 @@ object IncrementalQuantile {
     */
   def serveQuantiles(spark: SparkSession, dir: String, cfg: Config,
       asOfUs: Long, windowBuckets: Int, qs: Seq[Double]): DataFrame =
-    serveFiltered(spark, dir, cfg, asOfUs, windowBuckets, qs, None)
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, qs)
 
   /** The daily quantile table in ONE state pass: per (key, bucket b),
     * [[serveQuantiles]]'s cutoffs over the `windowBuckets` buckets
@@ -83,42 +113,9 @@ object IncrementalQuantile {
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, qs: Seq[Double],
       includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad qs: $qs")
-    val st = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-    val hiB = {
-      val r = st.agg(max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no partials")
-      r.getLong(0)
-    }
-    val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
-    val dayKeys = cfg.keyCols :+ "__day"
-    val merged = IncrementalSwa.expandToWindows(st, windowBuckets, capB)
-      .where(col("__day") >= completeFrom)
-      .groupBy((dayKeys :+ "bin").map(col): _*)
-      .agg(sum(col("n")).as("n"))
-    val cum = merged
-      .withColumn("cum", sum(col("n")).over(
-        Window.partitionBy(dayKeys.map(col): _*).orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("total", sum(col("n")).over(
-        Window.partitionBy(dayKeys.map(col): _*)))
-    val qdf = spark.createDataFrame(
-      qs.map(q => (math.rint(q * 10000).toLong / 10000.0,
-        math.rint(q * 10000).toLong))).toDF("q", "__q10k")
-    cum.crossJoin(broadcast(qdf))
-      .where(col("cum") * 10000 >= col("__q10k") * col("total"))
-      .groupBy((dayKeys :+ "q").map(col): _*)
-      .agg(min(col("bin")).as("bin"), min(col("total")).as("n_total"))
-      .withColumn("cutoff",
-        lit(cfg.lo) + col("bin") * lit(cfg.hi - cfg.lo) / lit(cfg.nBins.toDouble))
-      .select((cfg.keyCols.map(col) ++
-        Seq(col("__day").as("bucket"), col("q"), col("bin"), col("cutoff"),
-          col("n_total"))): _*)
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, qs)
 
   /** [[serveQuantiles]] as the state stood at `asOfVersion` — time
     * travel with [[IncrementalSwa.serveAsOf]]'s rebased-history
@@ -126,80 +123,26 @@ object IncrementalQuantile {
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config,
       asOfUs: Long, windowBuckets: Int, qs: Seq[Double],
-      asOfVersion: Long): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    serveFiltered(spark, dir, cfg, asOfUs, windowBuckets, qs,
-      Some(asOfVersion))
-  }
-
-  private def serveFiltered(spark: SparkSession, dir: String, cfg: Config,
-      asOfUs: Long, windowBuckets: Int, qs: Seq[Double],
-      asOfVersion: Option[Long]): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad qs: $qs")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val base = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-    val merged = asOfVersion.map(v => base.where(col(VCol) <= v))
-      .getOrElse(base)
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy((cfg.keyCols :+ "bin").map(col): _*)
-      .agg(sum(col("n")).as("n"))
-    val cum = merged
-      .withColumn("cum", sum(col("n")).over(
-        Window.partitionBy(cfg.keyCols.map(col): _*).orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("total", sum(col("n")).over(
-        Window.partitionBy(cfg.keyCols.map(col): _*)))
-    // the quantile rides as its exact permyriad LONG — `cum·10⁴ ≥
-    // q10k·total` is all-integer, so a mathematically exact tie
-    // (cum·10⁴ = q10k·total) can never be lost to a float ulp the way
-    // `q * 10000 * total` in doubles loses it (e.g. 0.035·10⁴·400 =
-    // 70000.00000000001)
-    val qdf = spark.createDataFrame(
-      qs.map(q => (math.rint(q * 10000).toLong / 10000.0,
-        math.rint(q * 10000).toLong))).toDF("q", "__q10k")
-    cum.crossJoin(broadcast(qdf))
-      .where(col("cum") * 10000 >= col("__q10k") * col("total"))
-      .groupBy((cfg.keyCols :+ "q").map(col): _*)
-      .agg(min(col("bin")).as("bin"), min(col("total")).as("n_total"))
-      .withColumn("cutoff",
-        lit(cfg.lo) + col("bin") * lit(cfg.hi - cfg.lo) / lit(cfg.nBins.toDouble))
-      .select((cfg.keyCols.map(col) ++
-        Seq(col("q"), col("bin"), col("cutoff"), col("n_total"))): _*)
-  }
+      asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, qs)
 
   /** Fold the version tail into one row per (key, bucket, bin) in a
     * new [[Publish]] generation — same crash posture as
     * [[IncrementalSwa.compact]].
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, dir, () => foldState(spark, dir, cfg))
-
-  private def foldState(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .groupBy((cfg.keyCols.map(col) :+ col(BCol) :+ col("bin")): _*)
-      .agg(sum(col("n")).as("n"))
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction — [[IncrementalSwa.compactRetaining]]'s
     * contract for histogram state.
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).where(col(BCol) >= minBucket),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure — [[IncrementalSwa.forgetKeys]]'s contract. */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

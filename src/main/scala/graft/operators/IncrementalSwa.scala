@@ -40,17 +40,14 @@ import org.apache.hadoop.fs.Path
   * materialization serves anyway. Sub-bucket observation times belong
   * to the J3 join path, not the store.
   *
-  * Scale posture: ingest shuffles the delta once (map-side-combinable
-  * groupBy); state rows are bounded by keys × live buckets after
-  * [[compact]], not by event count; partials are written sorted by
-  * bucket so a serve's `[lo, hi)` range filter prunes parquet
-  * row-groups. Replays are idempotent (a version overwrites itself);
-  * versions at or below a compaction's fold are REFUSED with a named
-  * error — additive state cannot re-apply rebased history without
-  * double-counting (single-writer per store, the foreachBatch
-  * posture).
+  * The lifecycle (version log, replay and fold rules, serves,
+  * compactions) is [[BucketedState]]'s, shared with the sibling
+  * stores; this object also holds the generation helpers every
+  * incremental store uses. State rows are bounded by keys × live
+  * buckets after [[compact]], not by event count.
   */
 object IncrementalSwa {
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
   val VCol = "__v"
   val BCol = "__b"
   private[operators] val FoldPrefix = "_folded_through_"
@@ -213,8 +210,6 @@ object IncrementalSwa {
     ((us - pmod(us, lit(bucketUs))) / lit(bucketUs)).cast("long")
   }
 
-  private def bucketCol(cfg: Config): Column = bucketOf(col(cfg.tsCol), cfg.bucketUs)
-
   /** Cross-process writer-lease wrap shared by every incremental
     * store's write path (ingest/compact): the single-writer assumption,
     * enforced ([[WriterLease]]). Owner = `spark.graft.lease.owner`
@@ -297,82 +292,6 @@ object IncrementalSwa {
         .maxOption
     }
 
-  /** Named refusal shared by every store's serve path: a window
-    * reaching below the retention horizon would silently
-    * under-aggregate (the buckets are GONE, not empty).
-    */
-  private[operators] def requireWithinRetention(spark: SparkSession,
-      dir: String, loB: Long): Unit =
-    retainedFrom(spark, dir).foreach(h =>
-      require(loB >= h,
-        s"window reaches bucket $loB but the state at $dir was " +
-          s"retention-compacted from bucket $h — buckets below the " +
-          "horizon are erased, not empty; serve a window within the " +
-          "retained range, or re-ingest the history and re-run " +
-          "compactRetaining with the lower horizon (an explicit " +
-          "horizon replaces the recorded one)"))
-
-  /** Fold `delta` to per-(key, bucket) partials and append them as
-    * `version`. Only the delta is shuffled; a replay of a live version
-    * overwrites its own partition (idempotent); a version at or below
-    * [[foldedThrough]] is refused — its history was rebased away.
-    */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.valueCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    locked(spark, dir) { ingestLocked(delta, dir, cfg, version) }
-  }
-
-  private def ingestLocked(delta: DataFrame, dir: String, cfg: Config,
-      version: Long): Unit = {
-    val spark = delta.sparkSession
-    val folded = foldedThrough(spark, dir)
-    require(version > folded,
-      s"version $version is at or below the compaction fold ($folded) at " +
-        s"$dir — additive state cannot replay rebased history without " +
-        "double-counting; re-ingest under a fresh version only if the " +
-        "delta was never applied")
-    val partials = delta
-      .withColumn(BCol, bucketCol(cfg))
-      .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-      .agg(
-        sum(round(col(cfg.valueCol) * 100).cast("long")).as("psum_c"),
-        count(col(cfg.valueCol)).as("pcnt"),
-        min(col(cfg.valueCol)).as("pmin"),
-        max(col(cfg.valueCol)).as("pmax"),
-        // LATEST is semilattice-foldable: lexicographic max of
-        // (event-time, value) — value as the deterministic tiebreak
-        // (the union-sort rule) — merges across buckets, versions,
-        // and compactions exactly like min/max
-        max(struct(unix_micros(col(cfg.tsCol)).as("us"),
-          col(cfg.valueCol).as("v"))).as("plast"))
-    // sorted by bucket → parquet row-group min/max prune serve's
-    // [lo, hi) range filter
-    partials.sortWithinPartitions(BCol)
-      .write.mode("overwrite")
-      .parquet(s"${liveGen(spark, dir)}/$VCol=$version")
-  }
-
-  /** Left join `right` onto `left` with NULL-SAFE key equality — the
-    * daily-table spine join. serve()'s groupBy treats a NULL key as a
-    * group and returns its row; an EqualTo spine join would silently
-    * drop exactly that row from the daily table, breaking the "each
-    * row equals the boundary serve" contract for NULL-key state.
-    */
-  private[operators] def nullSafeLeftJoin(left: DataFrame, right: DataFrame,
-      joinCols: Seq[String]): DataFrame = {
-    val l = left.alias("__l")
-    val r = right.alias("__r")
-    val cond = joinCols.map(k => col(s"__l.$k") <=> col(s"__r.$k"))
-      .reduce(_ && _)
-    val rightCols = right.columns.filterNot(joinCols.contains)
-    l.join(r, cond, "left_outer")
-      .select(joinCols.map(k => col(s"__l.$k").as(k)) ++
-        rightCols.map(c => col(s"__r.$c").as(c)): _*)
-  }
-
   /** Each state row re-addressed to every output bucket its time
     * bucket feeds (`__day` ∈ [bucket, min(bucket + W − 1, hiB)]) — the
     * daily-table expansion shared by the stores whose window aggregate
@@ -408,26 +327,43 @@ object IncrementalSwa {
     else retainedFrom(spark, dir).map(_ + windowBuckets - 1L)
       .getOrElse(Long.MinValue)
 
-  private def readState(spark: SparkSession, dir: String): DataFrame =
-    // partition discovery reads __v back as a column
-    spark.read.parquet(requireLiveGen(spark, dir))
+  /** The scalar partials per (key, bucket): sum on the exact integer
+    * cent grid, count, min, max and latest — each merged by its own
+    * aggregation, so serves add SUM/COUNT, fold MIN/MAX/LATEST and
+    * finish AVG = sum/count.
+    */
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Unit](cfg.keyCols, cfg.tsCol, cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.valueCol)
+    def partial(bucketed: DataFrame): DataFrame = {
+      val v = col(cfg.valueCol)
+      bucketed.groupBy((cfg.keyCols :+ BCol).map(col): _*).agg(
+        sum(round(v * 100).cast("long")).as("psum_c"), count(v).as("pcnt"),
+        min(v).as("pmin"), max(v).as("pmax"),
+        // LATEST is semilattice-foldable: lexicographic max of
+        // (event-time, value) — value as the deterministic tiebreak
+        // (the union-sort rule) — merges across buckets, versions,
+        // and compactions exactly like min/max
+        max(struct(unix_micros(col(cfg.tsCol)).as("us"), v.as("v"))).as("plast"))
+    }
+    def merge: Seq[(String, Column => Column)] = Seq(("psum_c", sum(_)),
+      ("pcnt", sum(_)), ("pmin", min(_)), ("pmax", max(_)), ("plast", max(_)))
+    def daily: BucketedState.Daily = BucketedState.Rolling("pcnt")
+    def finish(u: Unit): BucketedState.Finish = (m, keys) => {
+      val fSum = col("psum_c") / 100.0
+      m.select(keys.map(col) ++ Seq(fSum.as("f_sum"), col("pcnt").as("f_cnt"),
+        (fSum / col("pcnt")).as("f_avg"), col("pmin").as("f_min"),
+        col("pmax").as("f_max"), col("plast").getField("v").as("f_latest")): _*)
+    }
+  }
 
-  private def finishAgg(state: DataFrame, cfg: Config, loB: Long,
-      hiB: Long): DataFrame =
-    state
-      .where(col(BCol) >= loB && col(BCol) < hiB)
-      .groupBy(cfg.keyCols.map(col): _*)
-      .agg(
-        sum(col("psum_c")).as("sum_c"),
-        sum(col("pcnt")).as("f_cnt"),
-        min(col("pmin")).as("f_min"),
-        max(col("pmax")).as("f_max"),
-        max(col("plast")).as("pl"))
-      .withColumn("f_sum", col("sum_c") / 100.0)
-      .withColumn("f_avg", col("f_sum") / col("f_cnt"))
-      .select(cfg.keyCols.map(col) ++
-        Seq(col("f_sum"), col("f_cnt"), col("f_avg"), col("f_min"),
-          col("f_max"), col("pl").getField("v").as("f_latest")): _*)
+  /** Fold `delta` to per-(key, bucket) partials and append them as
+    * `version`. Only the delta is shuffled; a replay of a live version
+    * overwrites its own partition (idempotent); a version at or below
+    * [[foldedThrough]] is refused — its history was rebased away.
+    */
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Window aggregates as of bucket boundary `asOfUs` over the last
     * `windowBuckets` buckets: events with ts ∈ [asOf − W, asOf). Keys
@@ -435,16 +371,9 @@ object IncrementalSwa {
     * spine is the caller's).
     */
   def serve(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid — " +
-        "the store serves snapshot boundaries; sub-bucket observation " +
-        "times belong to the windowed join (J3)")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    requireWithinRetention(spark, dir, hiB - windowBuckets)
-    finishAgg(readState(spark, dir), cfg, hiB - windowBuckets, hiB)
-  }
+      windowBuckets: Int): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, ())
 
   /** The daily feature TABLE in one pass: for every key × bucket in
     * the state's bucket range, the window aggregates over the
@@ -475,62 +404,18 @@ object IncrementalSwa {
     */
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val merged = readState(spark, dir)
-      .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-      .agg(sum(col("psum_c")).as("psum_c"), sum(col("pcnt")).as("pcnt"),
-        min(col("pmin")).as("pmin"), max(col("pmax")).as("pmax"),
-        max(col("plast")).as("plast"))
-    // two longs to the driver: the global bucket range (the spine plan)
-    val Array(loB, hiB) = {
-      val r = merged.agg(min(col(BCol)), max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no partials")
-      Array(r.getLong(0), r.getLong(1))
-    }
-    val capB = dailyCap(hiB, windowBuckets, throughBucket)
-    val spine = merged.select(cfg.keyCols.map(col): _*).distinct()
-      .withColumn(BCol, explode(sequence(lit(loB), lit(capB))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(cfg.keyCols.map(col): _*)
-      .orderBy(col(BCol))
-      .rangeBetween(-(windowBuckets - 1L), 0L)
-    // horizon rows are dropped AFTER the window: the range frame at the
-    // first complete bucket still needs the retained buckets before it
-    val completeFrom = dailyCompleteFrom(spark, dir, windowBuckets,
-      includeHorizonPartialRows)
-    nullSafeLeftJoin(spine, merged, cfg.keyCols :+ BCol)
-      .withColumn("sum_c", sum(col("psum_c")).over(w))
-      .withColumn("f_cnt", sum(col("pcnt")).over(w))
-      .withColumn("f_min", min(col("pmin")).over(w))
-      .withColumn("f_max", max(col("pmax")).over(w))
-      .withColumn("pl", max(col("plast")).over(w))
-      .where(col("f_cnt").isNotNull && col(BCol) >= completeFrom)
-      .withColumn("f_sum", col("sum_c") / 100.0)
-      .withColumn("f_avg", col("f_sum") / col("f_cnt"))
-      .select(cfg.keyCols.map(col) ++ Seq(col(BCol).as("bucket"),
-        col("f_sum"), col("f_cnt"), col("f_avg"), col("f_min"),
-        col("f_max"), col("pl").getField("v").as("f_latest")): _*)
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, ())
 
   /** [[serve]] as the state stood at `asOfVersion` — partials of later
     * versions excluded. Refuses versions the live generation's
     * compaction fold has rebased away.
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int, asOfVersion: Long): DataFrame = {
-    val folded = foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    val hiB = asOfUs / cfg.bucketUs
-    requireWithinRetention(spark, dir, hiB - windowBuckets)
-    finishAgg(readState(spark, dir).where(col(VCol) <= asOfVersion), cfg,
-      hiB - windowBuckets, hiB)
-  }
+      windowBuckets: Int, asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, ())
 
   /** Fold the live generation's version tail into one partial per
     * (key, bucket) and atomically flip the [[Publish]] pointer to it.
@@ -540,18 +425,7 @@ object IncrementalSwa {
     * retention horizon. Returns the new generation number.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    compactFold(spark, dir, () => foldState(spark, dir, cfg))
-
-  private def foldState(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    readState(spark, dir)
-      .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-      .agg(
-        sum(col("psum_c")).as("psum_c"),
-        sum(col("pcnt")).as("pcnt"),
-        min(col("pmin")).as("pmin"),
-        max(col("pmax")).as("pmax"),
-        max(col("plast")).as("plast"))
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction: [[compact]] dropping buckets below
     * `minBucket` — the knob that keeps state bounded by the serving
@@ -563,9 +437,7 @@ object IncrementalSwa {
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).where(col(BCol) >= minBucket),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure for feature state: fold the live generation WITHOUT
     * `keys`' rows into a new generation — one linear pass, atomic
@@ -577,6 +449,5 @@ object IncrementalSwa {
     */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,12 +26,12 @@ import org.apache.spark.sql.functions._
   * union merge, still lower bounds); the gate feeds bucket-aligned
   * deltas where per-bucket counts are complete.
   *
-  * Same generation/version layout, O(delta) ingest, and atomic fold
-  * as every other incremental store. State rows: keys × live buckets
-  * × candidatesPerBucket.
+  * The lifecycle is [[BucketedState]]'s. State rows: keys × live
+  * buckets × candidatesPerBucket.
   */
 object IncrementalTopK {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   case class Config(keyCols: Seq[String], tsCol: String, itemCol: String,
       bucketUs: Long, candidatesPerBucket: Int) {
@@ -41,23 +41,17 @@ object IncrementalTopK {
       s"candidatesPerBucket must be positive: $candidatesPerBucket")
   }
 
-  /** Fold `delta` to per-(key, bucket) candidate counts and append as
-    * `version`; same replay/fold discipline as
-    * [[IncrementalSwa.ingest]].
+  /** Candidate counts per (key, bucket, item), merged by sum — a fold
+    * never re-truncates (information is never discarded by a fold).
+    * Like the quantile histograms, candidates are sparse per (key, day,
+    * item), so the daily table expands rather than rolls.
     */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.itemCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — state cannot replay rebased history")
-      val b = IncrementalSwa.bucketOf(col(cfg.tsCol), cfg.bucketUs)
-      val counts = delta.where(col(cfg.itemCol).isNotNull)
-        .groupBy((cfg.keyCols.map(col) :+ b.as(BCol) :+
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Int](cfg.keyCols, cfg.tsCol, cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.itemCol)
+    def partial(bucketed: DataFrame): DataFrame = {
+      val counts = bucketed.where(col(cfg.itemCol).isNotNull)
+        .groupBy((cfg.keyCols.map(col) :+ col(BCol) :+
           col(cfg.itemCol).as("item")): _*)
         .agg(count(lit(1)).as("n"))
       val cut = Window
@@ -65,33 +59,35 @@ object IncrementalTopK {
         .orderBy(col("n").desc, col("item").asc)
       counts.withColumn("__r", row_number().over(cut))
         .where(col("__r") <= cfg.candidatesPerBucket).drop("__r")
-        .sortWithinPartitions(BCol)
-        .write.mode("overwrite")
-        .parquet(s"${IncrementalSwa.liveGen(spark, dir)}/$VCol=$version")
+    }
+    override def subKeys: Seq[String] = Seq("item")
+    def merge: Seq[(String, Column => Column)] = Seq(("n", sum(_)))
+    def daily: BucketedState.Daily = BucketedState.Expand
+    def finish(k: Int): BucketedState.Finish = {
+      require(k > 0, s"k must be positive: $k")
+      (m, keys) => m.withColumnRenamed("n", "cnt")
+        .withColumn("rank", row_number().over(Window
+          .partitionBy(keys.map(col): _*)
+          .orderBy(col("cnt").desc, col("item").asc)))
+        .where(col("rank") <= k)
     }
   }
+
+  /** Fold `delta` to per-(key, bucket) candidate counts and append as
+    * `version`; same replay/fold discipline as
+    * [[IncrementalSwa.ingest]].
+    */
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Top `k` items per key over [asOf − W, asOf): candidate counts
     * sum per (key, item), then rank (count desc, item asc). Output:
     * key cols, item, cnt (the lower-bound count), rank.
     */
   def serveTopK(spark: SparkSession, dir: String, cfg: Config,
-      asOfUs: Long, windowBuckets: Int, k: Int): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    require(k > 0, s"k must be positive: $k")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val merged = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy((cfg.keyCols :+ "item").map(col): _*)
-      .agg(sum(col("n")).as("cnt"))
-    val rk = Window.partitionBy(cfg.keyCols.map(col): _*)
-      .orderBy(col("cnt").desc, col("item").asc)
-    merged.withColumn("rank", row_number().over(rk))
-      .where(col("rank") <= k)
-  }
+      asOfUs: Long, windowBuckets: Int, k: Int): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, k)
 
   /** The daily top-k table in ONE state pass: per (key, bucket b),
     * [[serveTopK]]'s ranking over the `windowBuckets` buckets ending
@@ -107,57 +103,18 @@ object IncrementalTopK {
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, k: Int,
       includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    require(k > 0, s"k must be positive: $k")
-    val st = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-    val hiB = {
-      val r = st.agg(max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no candidates")
-      r.getLong(0)
-    }
-    val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
-    val dayKeys = cfg.keyCols :+ "__day"
-    val merged = IncrementalSwa.expandToWindows(st, windowBuckets, capB)
-      .where(col("__day") >= completeFrom)
-      .groupBy((dayKeys :+ "item").map(col): _*)
-      .agg(sum(col("n")).as("cnt"))
-    val rk = Window.partitionBy(dayKeys.map(col): _*)
-      .orderBy(col("cnt").desc, col("item").asc)
-    merged.withColumn("rank", row_number().over(rk))
-      .where(col("rank") <= k)
-      .withColumnRenamed("__day", "bucket")
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, k)
 
   /** [[serveTopK]] as the state stood at `asOfVersion` — time travel
     * with [[IncrementalSwa.serveAsOf]]'s rebased-history refusal.
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config,
       asOfUs: Long, windowBuckets: Int, k: Int,
-      asOfVersion: Long): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    require(k > 0, s"k must be positive: $k")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val merged = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(VCol) <= asOfVersion)
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy((cfg.keyCols :+ "item").map(col): _*)
-      .agg(sum(col("n")).as("cnt"))
-    val rk = Window.partitionBy(cfg.keyCols.map(col): _*)
-      .orderBy(col("cnt").desc, col("item").asc)
-    merged.withColumn("rank", row_number().over(rk))
-      .where(col("rank") <= k)
-  }
+      asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, k)
 
   /** Fold the version tail: candidate counts merge additively per
     * (key, bucket, item), no re-truncation (information is never
@@ -165,26 +122,17 @@ object IncrementalTopK {
     * posture.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, dir, () => foldState(spark, dir, cfg))
-
-  private def foldState(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .groupBy((cfg.keyCols.map(col) :+ col(BCol) :+ col("item")): _*)
-      .agg(sum(col("n")).as("n"))
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction — [[IncrementalSwa.compactRetaining]]'s
     * contract for candidate state.
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).where(col(BCol) >= minBucket),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure — [[IncrementalSwa.forgetKeys]]'s contract. */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.hadoop.fs.Path
@@ -25,13 +25,12 @@ import org.apache.hadoop.fs.Path
   * per user per day, not tokens per document); uncapped-cardinality
   * unions belong to [[IncrementalDistinct]]'s fixed-size sketches.
   *
-  * Scale posture mirrors the sibling stores: ingest shuffles only the
-  * delta (map-side-combinable collect_set), state rows are keys ×
-  * live buckets, serve shuffles bounded state (≤ windowBuckets × cap
-  * items per key), partials are bucket-sorted for row-group pruning.
+  * Serve shuffles bounded state (≤ windowBuckets × cap items per key);
+  * the lifecycle is [[BucketedState]]'s.
   */
 object IncrementalUnion {
   import IncrementalSwa.{BCol, VCol}
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   case class Config(keyCols: Seq[String], tsCol: String, itemCol: String,
       bucketUs: Long, maxSetPerBucket: Int = 10000) {
@@ -41,20 +40,72 @@ object IncrementalUnion {
       s"maxSetPerBucket must be positive: $maxSetPerBucket")
   }
 
-  private def capCheck(spark: SparkSession, sets: DataFrame, cfg: Config,
-      where: String): Option[String] = {
-    val over = sets.where(size(col("pset")) > cfg.maxSetPerBucket)
-      .select((cfg.keyCols.map(col) :+ col(BCol) :+
-        size(col("pset")).as("__n")): _*)
-      .limit(1).collect()
-    over.headOption.map { r =>
-      val key = cfg.keyCols.zipWithIndex
-        .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", ")
-      s"UNION state cap exceeded at $where: ($key) bucket " +
-        s"${r.get(cfg.keyCols.size)} holds ${r.get(cfg.keyCols.size + 1)} " +
-        s"distinct items > maxSetPerBucket=${cfg.maxSetPerBucket} — raise " +
-        "the cap for a genuinely-bounded feature, or use " +
-        "IncrementalDistinct's fixed-size sketch for unbounded cardinality"
+  /** One distinct-item set per (key, bucket), merged by distinct
+    * union. Only this store pays for a cap check (ingest, compact and
+    * retention — never erasure) and a staged ingest.
+    */
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Unit](cfg.keyCols, cfg.tsCol, cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.itemCol)
+    def partial(bucketed: DataFrame): DataFrame =
+      bucketed.groupBy((cfg.keyCols :+ BCol).map(col): _*)
+        .agg(collect_set(col(cfg.itemCol)).as("pset"))
+    def merge: Seq[(String, Column => Column)] =
+      Seq(("pset", c => array_distinct(flatten(collect_list(c)))))
+    def daily: BucketedState.Daily = BucketedState.Expand
+    // collect_set order is partition-dependent: determinism needs the sort
+    def finish(u: Unit): BucketedState.Finish = (m, keys) =>
+      m.select(keys.map(col) :+ array_sort(col("pset")).as("f_union"): _*)
+
+    /** Stage to a PENDING path (the `_pending_` prefix is invisible to
+      * versions()'s `__v=` filter), cap-check the staged files, and only
+      * then swap into the version slot: writing straight to the slot
+      * would let a failing REPLAY destroy the committed version it was
+      * overwriting before the check had run.
+      */
+    override def write(partials: DataFrame, dir: String, gen: String,
+        version: Long): Unit = {
+      val spark = partials.sparkSession
+      val path = new Path(s"$gen/$VCol=$version")
+      val pending = new Path(s"$gen/_pending_$version")
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // sweep staging dirs stranded by crashed ingests (safe under the
+      // lease: no other writer can have one in flight)
+      fs.listStatus(new Path(gen)).iterator
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("_pending_"))
+        .foreach(s => fs.delete(s.getPath, true))
+      partials.write.mode("overwrite").parquet(pending.toString)
+      capCheck(spark.read.parquet(pending.toString),
+        s"ingest of version $version into $dir").foreach { msg =>
+        fs.delete(pending, true)
+        throw new IllegalStateException(msg)
+      }
+      fs.delete(path, true)
+      fs.rename(pending, path)
+    }
+
+    /** Versions each under the cap can union past it: a fold is
+      * re-checked BEFORE publishing, so the live generation stays.
+      */
+    override def checkFold(fold: DataFrame, where: String): DataFrame = {
+      capCheck(fold, where).foreach(msg => throw new IllegalStateException(msg))
+      fold
+    }
+
+    private def capCheck(sets: DataFrame, where: String): Option[String] = {
+      val over = sets.where(size(col("pset")) > cfg.maxSetPerBucket)
+        .select((cfg.keyCols.map(col) :+ col(BCol) :+
+          size(col("pset")).as("__n")): _*)
+        .limit(1).collect()
+      over.headOption.map { r =>
+        val key = cfg.keyCols.zipWithIndex
+          .map { case (k, i) => s"$k=${r.get(i)}" }.mkString(", ")
+        s"UNION state cap exceeded at $where: ($key) bucket " +
+          s"${r.get(cfg.keyCols.size)} holds ${r.get(cfg.keyCols.size + 1)} " +
+          s"distinct items > maxSetPerBucket=${cfg.maxSetPerBucket} — raise " +
+          "the cap for a genuinely-bounded feature, or use " +
+          "IncrementalDistinct's fixed-size sketch for unbounded cardinality"
+      }
     }
   }
 
@@ -73,46 +124,8 @@ object IncrementalUnion {
     * whoever re-runs the version completes the swap), the same
     * assumption every replay-overwrites-itself store makes.
     */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.itemCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — state cannot replay rebased history")
-      val b = IncrementalSwa.bucketOf(col(cfg.tsCol), cfg.bucketUs)
-      val gen = IncrementalSwa.liveGen(spark, dir)
-      val path = s"$gen/$VCol=$version"
-      // stage to a PENDING path (the `_pending_` prefix is invisible to
-      // versions()'s `__v=` filter), cap-check the staged files, and
-      // only then swap into the version slot: writing straight to the
-      // slot would let a failing REPLAY destroy the committed version
-      // it was overwriting before the check had run
-      val pending = s"$gen/_pending_$version"
-      val fs = new Path(gen)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // sweep staging dirs stranded by crashed ingests (safe under the
-      // lease: no other writer can have one in flight)
-      fs.listStatus(new Path(gen)).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("_pending_"))
-        .foreach(s => fs.delete(s.getPath, true))
-      delta.withColumn(BCol, b)
-        .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-        .agg(collect_set(col(cfg.itemCol)).as("pset"))
-        .sortWithinPartitions(BCol)
-        .write.mode("overwrite").parquet(pending)
-      capCheck(spark, spark.read.parquet(pending), cfg,
-        s"ingest of version $version into $dir").foreach { msg =>
-        fs.delete(new Path(pending), true)
-        throw new IllegalStateException(msg)
-      }
-      fs.delete(new Path(path), true)
-      fs.rename(new Path(pending), new Path(path))
-    }
-  }
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Per-key distinct-item union over [asOf − W, asOf), as a SORTED
     * array (`f_union`) — collect_set order is partition-dependent, so
@@ -120,79 +133,37 @@ object IncrementalUnion {
     * are absent.
     */
   def serve(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy(cfg.keyCols.map(col): _*)
-      .agg(array_sort(array_distinct(flatten(collect_list(col("pset")))))
-        .as("f_union"))
-  }
+      windowBuckets: Int): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, ())
 
   /** The daily feature TABLE for set state: for every key × bucket,
     * the distinct-item union over the `windowBuckets` buckets ending
     * AT that bucket. NO RANGE-frame shortcut exists for sets — union
     * has no inverse, so a rolling frame cannot subtract the bucket
-    * leaving the window; instead each stored item contributes itself
+    * leaving the window; instead each stored set contributes itself
     * to the `windowBuckets` output buckets its bucket feeds
-    * (explode + sequence) and one groupBy re-distincts. Honest cost:
-    * O(state items × windowBuckets) intermediate rows — state items
-    * are bounded by keys × buckets × cap, and this is still far below
-    * the N serve() scans (each a full state read) a per-day loop pays.
-    * Rows whose window holds no items are omitted; horizon rows are
-    * excluded by default with the scalar store's opt-in
+    * ([[IncrementalSwa.expandToWindows]]) and one groupBy re-unions.
+    * Honest cost: O(state sets × windowBuckets) intermediate rows —
+    * state is bounded by keys × buckets × cap, and this is still far
+    * below the N serve() scans (each a full state read) a per-day loop
+    * pays. Rows whose window holds no sets are omitted; horizon rows
+    * are excluded by default with the scalar store's opt-in
     * (`includeHorizonPartialRows`) for left-edge semantics.
     */
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val st = spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-    val hiB = {
-      val r = st.agg(max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no partials")
-      r.getLong(0)
-    }
-    val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
-    st.select(cfg.keyCols.map(col) :+ col(BCol) :+
-        explode(col("pset")).as("__item"): _*)
-      .select(cfg.keyCols.map(col) :+
-        explode(sequence(col(BCol),
-          least(col(BCol) + (windowBuckets - 1L), lit(capB)))).as("bucket") :+
-        col("__item"): _*)
-      .where(col("bucket") >= completeFrom)
-      .groupBy((cfg.keyCols :+ "bucket").map(col): _*)
-      .agg(array_sort(collect_set(col("__item"))).as("f_union"))
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, ())
 
   /** [[serve]] as the state stood at `asOfVersion` — time travel with
     * [[IncrementalSwa.serveAsOf]]'s rebased-history refusal.
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int, asOfVersion: Long): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .where(col(VCol) <= asOfVersion)
-      .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
-      .groupBy(cfg.keyCols.map(col): _*)
-      .agg(array_sort(array_distinct(flatten(collect_list(col("pset")))))
-        .as("f_union"))
-  }
+      windowBuckets: Int, asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, ())
 
   /** Fold the version tail: distinct union per (key, bucket) in a new
     * [[Publish]] generation. The merged per-bucket set is re-checked
@@ -201,28 +172,7 @@ object IncrementalUnion {
     * generation stays as it was.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => capChecked(spark, foldStateRaw(spark, dir, cfg), cfg,
-        s"compaction of $dir"))
-
-  /** The merged fold WITHOUT the cap check — callers apply the check
-    * AFTER their own filters, so retention/erasure are never refused
-    * because of the very rows they are about to delete (cross-version
-    * folds can exceed the cap even when every ingest passed it).
-    */
-  private def foldStateRaw(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    spark.read
-      .parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-      .agg(array_distinct(flatten(collect_list(col("pset")))).as("pset"))
-
-  private def capChecked(spark: SparkSession, fold: DataFrame,
-      cfg: Config, where: String): DataFrame = {
-    capCheck(spark, fold, cfg, where)
-      .foreach(msg => throw new IllegalStateException(msg))
-    fold
-  }
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction — [[IncrementalSwa.compactRetaining]]'s
     * contract for set state: buckets below `minBucket` are erased and
@@ -231,11 +181,7 @@ object IncrementalUnion {
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => capChecked(spark,
-        foldStateRaw(spark, dir, cfg).where(col(BCol) >= minBucket), cfg,
-        s"retention compaction of $dir"),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure — [[IncrementalSwa.forgetKeys]]'s contract: the
     * keys' item sets are removed entirely in one atomic fold. NO cap
@@ -245,7 +191,5 @@ object IncrementalUnion {
     */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldStateRaw(spark, dir, cfg)
-        .join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

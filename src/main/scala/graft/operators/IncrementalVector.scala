@@ -21,13 +21,12 @@ import org.apache.spark.sql.functions._
   *  - row count `pcnt` finishes AVG at serve (sum/count), the
   *    [[IncrementalSwa]] discipline.
   *
-  * Same generation/version layout, O(delta) ingest, replay-overwrite
-  * idempotence, and fold-into-a-new-[[Publish]]-generation compaction
-  * as the sibling stores. Mismatched vector lengths fail fast inside
-  * the aggregators rather than truncating.
+  * Mismatched vector lengths fail fast inside the aggregators rather
+  * than truncating. The lifecycle is [[BucketedState]]'s.
   */
 object IncrementalVector {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   /** Grid unit: one = 1e-4 of the value domain. */
   val Scale = 10000L
@@ -38,38 +37,44 @@ object IncrementalVector {
     require(bucketUs > 0, s"bucketUs must be positive: $bucketUs")
   }
 
-  private def gridCol(c: Column): Column =
-    transform(c, x => round(x.cast("double") * Scale).cast("long"))
+  /** O(dim) partials per (key, bucket): grid sum, row count, raw
+    * min/max. The daily table rolls them in ONE RANGE-frame window pass
+    * (the four aggregates share a window spec, so Spark evaluates them
+    * in a single WindowExec; the typed aggregators skip the spine's
+    * null rows).
+    */
+  private[operators] final case class State(cfg: Config)
+      extends BucketedState.Aggregate[Unit](cfg.keyCols, cfg.tsCol, cfg.bucketUs) {
+    def inputCols: Seq[String] = Seq(cfg.vecCol)
+    def partial(bucketed: DataFrame): DataFrame = {
+      val vec = col(cfg.vecCol)
+      val dvec = vec.cast("array<double>")
+      bucketed.groupBy((cfg.keyCols :+ BCol).map(col): _*).agg(
+        LongVectorSumAggregator.longVecSum(
+          transform(vec, x => round(x.cast("double") * Scale).cast("long")))
+          .as("pesum"),
+        count(vec).as("pcnt"),
+        VectorAggregator("min", dvec).as("pemin"),
+        VectorAggregator("max", dvec).as("pemax"))
+    }
+    def merge: Seq[(String, Column => Column)] = Seq(
+      ("pesum", LongVectorSumAggregator.longVecSum(_)), ("pcnt", sum(_)),
+      ("pemin", VectorAggregator("min", _)), ("pemax", VectorAggregator("max", _)))
+    def daily: BucketedState.Daily = BucketedState.Rolling("pcnt")
+    def finish(u: Unit): BucketedState.Finish = (m, keys) =>
+      m.select(keys.map(col) ++ Seq(col("pesum").as("sum_grid"),
+        col("pcnt").as("f_ecnt"), col("pemin").as("f_emin"),
+        col("pemax").as("f_emax"),
+        transform(col("pesum"), x => x.cast("double") / Scale).as("f_esum"),
+        transform(col("pesum"), x => x.cast("double") / Scale / col("pcnt"))
+          .as("f_eavg")): _*)
+  }
 
   /** Fold `delta` to per-(key, bucket) O(dim) vector partials and
     * append as `version`.
     */
-  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit = {
-    val spark = delta.sparkSession
-    val missing = (cfg.keyCols :+ cfg.tsCol :+ cfg.vecCol)
-      .filterNot(delta.columns.contains)
-    require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — additive state cannot replay rebased history without " +
-          "double-counting")
-      val b = IncrementalSwa.bucketOf(col(cfg.tsCol), cfg.bucketUs)
-      val dvec = col(cfg.vecCol).cast("array<double>")
-      delta.withColumn(BCol, b)
-        .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-        .agg(
-          LongVectorSumAggregator.longVecSum(gridCol(col(cfg.vecCol)))
-            .as("pesum"),
-          count(col(cfg.vecCol)).as("pcnt"),
-          VectorAggregator("min", dvec).as("pemin"),
-          VectorAggregator("max", dvec).as("pemax"))
-        .sortWithinPartitions(BCol)
-        .write.mode("overwrite")
-        .parquet(s"${IncrementalSwa.liveGen(spark, dir)}/$VCol=$version")
-    }
-  }
+  def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
+    BucketedState.ingest(State(cfg), delta, dir, version)
 
   /** Element-wise window aggregates over [asOf − W, asOf): exact grid
     * sums (`sum_grid` longs plus `f_esum` = grid/10⁴ doubles),
@@ -78,129 +83,51 @@ object IncrementalVector {
     * are absent.
     */
   def serve(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int): DataFrame = {
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    finishServe(
-      spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir)),
-      cfg, hiB - windowBuckets, hiB)
-  }
-
-  private def finishServe(state: DataFrame, cfg: Config, loB: Long,
-      hiB: Long): DataFrame =
-    state
-      .where(col(BCol) >= loB && col(BCol) < hiB)
-      .groupBy(cfg.keyCols.map(col): _*)
-      .agg(
-        LongVectorSumAggregator.longVecSum(col("pesum")).as("sum_grid"),
-        sum(col("pcnt")).as("f_ecnt"),
-        VectorAggregator("min", col("pemin")).as("f_emin"),
-        VectorAggregator("max", col("pemax")).as("f_emax"))
-      .withColumn("f_esum",
-        transform(col("sum_grid"), x => x.cast("double") / Scale))
-      .withColumn("f_eavg",
-        transform(col("sum_grid"),
-          x => x.cast("double") / Scale / col("f_ecnt")))
+      windowBuckets: Int): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg), AtBoundary(asOfUs),
+      windowBuckets, ())
 
   /** The daily feature TABLE ([[IncrementalSwa.serveDaily]]'s contract
     * for vector state): for every key × bucket, the element-wise window
-    * aggregates over the `windowBuckets` buckets ending AT that bucket.
-    * The grid sums, counts, and min/max partials all ride ONE per-key
-    * RANGE-frame window pass (the four aggregates share a window spec,
-    * so Spark evaluates them in a single WindowExec; the typed
-    * aggregators skip the spine's null rows) — rows = keys × buckets,
-    * never event count. Horizon rows are excluded by default
+    * aggregates over the `windowBuckets` buckets ending AT that bucket,
+    * from one per-key RANGE-frame pass — rows = keys × buckets, never
+    * event count. Horizon rows are excluded by default
     * (erased ≠ empty); `includeHorizonPartialRows` opts into left-edge
     * semantics, both exactly as the scalar store.
     */
   def serveDaily(spark: SparkSession, dir: String, cfg: Config,
       windowBuckets: Int, includeHorizonPartialRows: Boolean = false,
-      throughBucket: Option[Long] = None): DataFrame = {
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val merged = foldState(spark, dir, cfg)
-    val Array(loB, hiB) = {
-      val r = merged.agg(min(col(BCol)), max(col(BCol))).head()
-      require(!r.isNullAt(0), s"state at $dir holds no partials")
-      Array(r.getLong(0), r.getLong(1))
-    }
-    val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
-    val spine = merged.select(cfg.keyCols.map(col): _*).distinct()
-      .withColumn(BCol, explode(sequence(lit(loB), lit(capB))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(cfg.keyCols.map(col): _*)
-      .orderBy(col(BCol))
-      .rangeBetween(-(windowBuckets - 1L), 0L)
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
-    IncrementalSwa.nullSafeLeftJoin(spine, merged, cfg.keyCols :+ BCol)
-      .withColumn("sum_grid",
-        LongVectorSumAggregator.longVecSum(col("pesum")).over(w))
-      .withColumn("f_ecnt", sum(col("pcnt")).over(w))
-      .withColumn("f_emin", VectorAggregator("min", col("pemin")).over(w))
-      .withColumn("f_emax", VectorAggregator("max", col("pemax")).over(w))
-      .where(col("f_ecnt").isNotNull && col(BCol) >= completeFrom)
-      .withColumn("f_esum",
-        transform(col("sum_grid"), x => x.cast("double") / Scale))
-      .withColumn("f_eavg",
-        transform(col("sum_grid"),
-          x => x.cast("double") / Scale / col("f_ecnt")))
-      .select(cfg.keyCols.map(col) ++ Seq(col(BCol).as("bucket"),
-        col("sum_grid"), col("f_esum"), col("f_ecnt"), col("f_eavg"),
-        col("f_emin"), col("f_emax")): _*)
-  }
+      throughBucket: Option[Long] = None): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+        PerBucket(includeHorizonPartialRows, throughBucket), windowBuckets, ())
+      // the daily table's own column order, unlike the boundary serve's
+      .select((cfg.keyCols ++ Seq("bucket", "sum_grid", "f_esum", "f_ecnt",
+        "f_eavg", "f_emin", "f_emax")).map(col): _*)
 
   /** [[serve]] as the state stood at `asOfVersion` — the time-travel
     * primitive, [[IncrementalSwa.serveAsOf]]'s contract: versions the
     * live generation's fold rebased away are refused by name.
     */
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config, asOfUs: Long,
-      windowBuckets: Int, asOfVersion: Long): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, dir)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
-    require(asOfUs % cfg.bucketUs == 0,
-      s"asOf $asOfUs is not aligned to the ${cfg.bucketUs}µs bucket grid")
-    require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
-    val hiB = asOfUs / cfg.bucketUs
-    IncrementalSwa.requireWithinRetention(spark, dir, hiB - windowBuckets)
-    finishServe(
-      spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-        .where(col(VCol) <= asOfVersion), cfg, hiB - windowBuckets, hiB)
-  }
+      windowBuckets: Int, asOfVersion: Long): DataFrame =
+    BucketedState.serve(spark, dir, State(cfg),
+      AtVersion(asOfUs, asOfVersion), windowBuckets, ())
 
   /** Fold the version tail per (key, bucket) in a new [[Publish]]
     * generation — exact long adds for sums/counts, min/max folds.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, dir, () => foldState(spark, dir, cfg))
-
-  private def foldState(spark: SparkSession, dir: String,
-      cfg: Config): DataFrame =
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-      .groupBy((cfg.keyCols :+ BCol).map(col): _*)
-      .agg(
-        LongVectorSumAggregator.longVecSum(col("pesum")).as("pesum"),
-        sum(col("pcnt")).as("pcnt"),
-        VectorAggregator("min", col("pemin")).as("pemin"),
-        VectorAggregator("max", col("pemax")).as("pemax"))
+    BucketedState.compact(spark, dir, State(cfg))
 
   /** Retention compaction — [[IncrementalSwa.compactRetaining]]'s
     * contract for vector state.
     */
   def compactRetaining(spark: SparkSession, dir: String, cfg: Config,
       minBucket: Long): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).where(col(BCol) >= minBucket),
-      newRetainedFrom = Some(minBucket))
+    BucketedState.compactRetaining(spark, dir, State(cfg), minBucket)
 
   /** GDPR erasure — [[IncrementalSwa.forgetKeys]]'s contract. */
   def forgetKeys(spark: SparkSession, dir: String, cfg: Config,
       keys: DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir,
-      () => foldState(spark, dir, cfg).join(keys, cfg.keyCols, "left_anti"))
+    BucketedState.forgetKeys(spark, dir, State(cfg), keys)
 }

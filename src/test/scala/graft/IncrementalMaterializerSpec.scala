@@ -352,7 +352,7 @@ class IncrementalMaterializerSpec extends SparkTestBase {
       "plain policy fold dropped the retention horizon")
   }
 
-  test("maintainGraft: the same policy over extension stores") {
+  test("maintain: the same policy over extension stores") {
     import graft.model.GraftAggregation._
     import IncrementalMaterializer.{GraftFeature, MaintenancePolicy}
     val root = Spill.newPath(spark)
@@ -761,9 +761,9 @@ class IncrementalMaterializerSpec extends SparkTestBase {
     // exist -> kq null (cold start); tag 'a' bucket0 {1} -> tq 1.0
     assert(row == ((None, Some(1.0))))
 
-    // CROSS-surface refusals (trainingSetMulti is where the two
-    // surfaces meet): one alias over two physical columns, and one
-    // feature name on both surfaces
+    // CROSS-surface refusals: one alias over two physical columns
+    // (trainingSetMulti is where the bindings meet), and one feature
+    // name on both surfaces (every read that assembles both)
     val crossAlias = intercept[IllegalArgumentException] {
       IncrementalMaterializer.trainingSetMulti(spark, root,
         Seq(AnchorFeature("ax", FeatureType.DOUBLE, wa("SUM"),
@@ -774,16 +774,21 @@ class IncrementalMaterializerSpec extends SparkTestBase {
           keys = Seq(TypedKey("tag", ValueType.STRING, Some("id"))))))
     }
     assert(crossAlias.getMessage.contains("unambiguous"))
-    val crossName = intercept[IllegalArgumentException] {
-      IncrementalMaterializer.trainingSetMulti(spark, root,
-        Seq(AnchorFeature("f7", FeatureType.DOUBLE, wa("SUM"),
-          Seq(TypedKey("k", ValueType.INT64)))),
-        "ts", DayUs, obs2, "ots",
-        graftFeatures = Seq(GraftFeature("f7", "v", q,
-          Durations.parse("2d"),
-          keys = Seq(TypedKey("tag", ValueType.STRING, Some("t_alias"))))))
+    val f7 = AnchorFeature("f7", FeatureType.DOUBLE, wa("SUM"),
+      Seq(TypedKey("k", ValueType.INT64)))
+    val g7 = GraftFeature("f7", "v", q, Durations.parse("2d"),
+      keys = Seq(TypedKey("tag", ValueType.STRING, Some("t_alias"))))
+    Seq[() => Any](
+      () => IncrementalMaterializer.trainingSetMulti(spark, root, Seq(f7),
+        "ts", DayUs, obs2, "ots", graftFeatures = Seq(g7)),
+      () => IncrementalMaterializer.snapshot(spark, root, Seq(f7),
+        Seq("k"), "ts", DayUs, 2 * DayUs, graftFeatures = Seq(g7)),
+      () => IncrementalMaterializer.trainingSet(spark, root, Seq(f7),
+        Seq("k"), "ts", DayUs, obs2, "ots", graftFeatures = Seq(g7))
+    ).foreach { call =>
+      val crossName = intercept[IllegalArgumentException](call())
+      assert(crossName.getMessage.contains("duplicate columns"))
     }
-    assert(crossName.getMessage.contains("duplicate columns"))
 
     // a feature without a binding is refused by the Multi surface
     val nb = intercept[IllegalArgumentException] {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{IncrementalDistinct, IncrementalSwa, IncrementalUnion, Spill}
+import graft.operators.{IncrementalDistinct, IncrementalQuantile, IncrementalSwa,
+  IncrementalTopK, IncrementalUnion, IncrementalVector, Spill}
 import graft.operators.IncrementalSwa.Config
 
 import org.apache.spark.sql.DataFrame
@@ -108,7 +109,7 @@ class IncrementalRetentionSpec extends SparkTestBase {
       "a post-erasure ingest may legally re-admit the key with fresh data")
   }
 
-  test("union and distinct stores share the retention/erasure contracts") {
+  test("every store kind shares the retention/erasure contracts") {
     val items = Seq((1L, 0, "a"), (1L, 1, "b"), (2L, 1, "x"), (2L, 0, "y"))
       .toDF("k", "d", "item")
       .withColumn("ts", timestamp_micros(col("d") * DayUs + 1000000L))
@@ -132,6 +133,48 @@ class IncrementalRetentionSpec extends SparkTestBase {
     IncrementalDistinct.forgetKeys(spark, dDir, dCfg, Seq(2L).toDF("k"))
     assert(IncrementalDistinct.serveDistinct(spark, dDir, dCfg, 2 * DayUs, 2)
       .select("k").as[Long].collect().toSeq == Seq(1L))
+    IncrementalDistinct.compactRetaining(spark, dDir, dCfg, minBucket = 1L)
+    assert(IncrementalDistinct.serveDistinct(spark, dDir, dCfg, 2 * DayUs, 1)
+      .select("k").as[Long].collect().toSeq == Seq(1L))
+    intercept[IllegalArgumentException] {
+      IncrementalDistinct.serveDistinct(spark, dDir, dCfg, 2 * DayUs, 2)
+    }
+
+    // the remaining kinds over one frame: forgetKeys drops key 1,
+    // compactRetaining from day 1 keeps key 2's day-1 window servable,
+    // and a window reaching the erased day 0 is refused by name
+    val rows = Seq((1L, 0, "a", 1.0), (1L, 1, "b", 2.0), (2L, 1, "x", 3.0),
+      (2L, 0, "y", 4.0)).toDF("k", "d", "item", "v")
+      .withColumn("ts", timestamp_micros(col("d") * DayUs + 1000000L))
+      .withColumn("vec", array(col("v"), col("v") * 2))
+    val gone = Seq(1L).toDF("k")
+    def contract(name: String, ingest: String => Unit, forget: String => Unit,
+        retain: String => Unit, served: (String, Int) => DataFrame): Unit = {
+      val dir = Spill.newPath(spark)
+      def keys(w: Int) = served(dir, w).select("k").as[Long].collect().toSet
+      ingest(dir)
+      forget(dir)
+      assert(keys(2) == Set(2L), s"$name: forgetKeys")
+      retain(dir)
+      assert(keys(1) == Set(2L), s"$name: retained window")
+      val e = intercept[IllegalArgumentException] { keys(2) }
+      assert(e.getMessage.contains("retention-compacted"), s"$name: ${e.getMessage}")
+    }
+    val vCfg = IncrementalVector.Config(Seq("k"), "ts", "vec", DayUs)
+    contract("vector", IncrementalVector.ingest(rows, _, vCfg, 0L),
+      IncrementalVector.forgetKeys(spark, _, vCfg, gone),
+      IncrementalVector.compactRetaining(spark, _, vCfg, 1L),
+      IncrementalVector.serve(spark, _, vCfg, 2 * DayUs, _))
+    val qCfg = IncrementalQuantile.Config(Seq("k"), "ts", "v", DayUs, 0.0, 8.0, 8)
+    contract("quantile", IncrementalQuantile.ingest(rows, _, qCfg, 0L),
+      IncrementalQuantile.forgetKeys(spark, _, qCfg, gone),
+      IncrementalQuantile.compactRetaining(spark, _, qCfg, 1L),
+      IncrementalQuantile.serveQuantiles(spark, _, qCfg, 2 * DayUs, _, Seq(0.5)))
+    val tCfg = IncrementalTopK.Config(Seq("k"), "ts", "item", DayUs, 2)
+    contract("topk", IncrementalTopK.ingest(rows, _, tCfg, 0L),
+      IncrementalTopK.forgetKeys(spark, _, tCfg, gone),
+      IncrementalTopK.compactRetaining(spark, _, tCfg, 1L),
+      IncrementalTopK.serveTopK(spark, _, tCfg, 2 * DayUs, _, 1))
   }
 
   test("forgetKeys + Publish.gc removes the erased key from DISK, " +

@@ -128,6 +128,10 @@ class IncrementalSwaSpec extends SparkTestBase {
       IncrementalSwa.serveAsOf(spark, dir, cfg, 2 * DayUs, 2, 0L)
     }
     assert(e2.getMessage.contains("rebased"))
+    // an empty as-of window is refused like every other serve's
+    intercept[IllegalArgumentException] {
+      IncrementalSwa.serveAsOf(spark, dir, cfg, 2 * DayUs, 0, 1L)
+    }
   }
 
   test("a crash between fold and pointer flip leaves the old generation live") {
