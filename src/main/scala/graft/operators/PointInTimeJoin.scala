@@ -21,6 +21,13 @@ import org.apache.spark.sql.expressions.Window
   *  - anchor groups are evaluated off the DISTINCT (key, obs_ts) pairs,
   *    never the raw observation, so a spine with many rows per key pays
   *    one feature computation per key/ts, then an equi join back;
+  *  - those pairs come from the observation as given (plus `ObsTs`),
+  *    not from the frame that already holds earlier groups' joins: every
+  *    anchor join is a left outer join on (key, obs_ts) that only adds
+  *    columns (a duplicate-keyed snapshot source repeats rows but adds
+  *    no pair), so both frames carry the same distinct pairs — and the
+  *    plan grows by one join per window cluster instead of embedding the
+  *    whole earlier plan twice, i.e. linearly, not 2^clusters;
   *  - the as-of join (J2) is a union-sort ("last value wins") plan: one
   *    shuffle of source ∪ spine-pairs by key, one sort by (ts, tag) —
   *    no range-join row explosion, no per-row subqueries;
@@ -44,23 +51,24 @@ object PointInTimeJoin {
       obsTime: Option[(String, String)],
       queries: Seq[FeatureQuery]): DataFrame = {
 
-    var obs = obsTime match {
+    val base = obsTime match {
       case Some((c, fmt)) =>
         observation.withColumn(ObsTs,
           TimestampParser.toTimestampColOf(observation, c, fmt))
       case None => observation
     }
+    var obs = base
 
     for (q <- queries) {
       // features another query will join (cross-key aliasing): skip
       // their anchors here, their own query binds the keys
       val others = queries.filterNot(_ eq q).flatMap(_.featureList).toSet
       val anchored = project.requiredAnchorFeatures(q.featureList, others)
-      // group features by anchor group so each source is scanned once
+      // group features by anchor group so each source is resolved once
       // (mirrors reference project.rs:392-423)
       val grouped = anchored
-        .flatMap { case (out, base) =>
-          project.anchorFeature(base).map { case (g, f) => (g, f, out) }
+        .flatMap { case (out, anchorName) =>
+          project.anchorFeature(anchorName).map { case (g, f) => (g, f, out) }
         }
         .groupBy(_._1.name).values
         .map(triples => (triples.head._1, triples.map(t => (t._2, t._3))))
@@ -68,7 +76,7 @@ object PointInTimeJoin {
       for ((g, feats) <- grouped) {
         obs =
           if (g.source.isInputContext) applyPassthrough(obs, feats)
-          else joinAnchorGroup(spark, obs, g, feats, q.keyColumns)
+          else joinAnchorGroup(spark, base, obs, g, feats, q.keyColumns)
       }
     }
 
@@ -97,41 +105,43 @@ object PointInTimeJoin {
   private def applyDeclaredTypes(
       project: FeatureProject, obs: DataFrame, requested: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
-    requested.foldLeft(obs) { (df, name) =>
-      if (!df.columns.contains(name)) df
-      else {
-        val anchor = project.anchorFeature(project.aliasBase(name).getOrElse(name))
-        val declared = anchor.map(_._2.featureType)
-          .orElse(project.derivedFeature(name).map(_.featureType))
-        declared match {
-          case Some(t) if t.valType != ValueType.UNSPECIFIED =>
-            val (isUnion, hasGroup) = anchor.map(_._2.transform) match {
-              case Some(Transformation.WindowAgg(_, agg, _, gb, _, _)) =>
-                (agg == Aggregation.UNION, gb.isDefined)
-              case _ => (false, false)
-            }
-            val valueType: DataType =
-              if (isUnion) {
-                require(t.tensorCategory == TensorCategory.DENSE &&
-                    t.dimensionType.size == 1,
-                  s"feature $name: UNION collects a set — declare a 1-d DENSE tensor, not $t")
-                ArrayType(t.valType.sparkType)
-              } else if (hasGroup) {
-                require(t.dimensionType.isEmpty,
-                  s"feature $name: group_by produces a map of scalars — declare the scalar value type, not $t")
-                t.valType.sparkType
-              } else t.sparkType
-            val target: DataType =
-              if (hasGroup) df.schema(name).dataType match {
-                case MapType(kt, _, n) => MapType(kt, valueType, n)
-                case other => throw new IllegalStateException(
-                  s"feature $name: group_by runtime shape should be a map, got $other")
-              } else valueType
-            df.withColumn(name, col(name).cast(target))
-          case _ => df
-        }
+    // one schema read and one projection for every cast: a per-feature
+    // lookup + withColumn re-analyses the whole plan once per feature
+    val schema = obs.schema
+    val present = schema.fieldNames.toSet
+    val casts = requested.filter(present).flatMap { name =>
+      val anchor = project.anchorFeature(project.aliasBase(name).getOrElse(name))
+      val declared = anchor.map(_._2.featureType)
+        .orElse(project.derivedFeature(name).map(_.featureType))
+      declared match {
+        case Some(t) if t.valType != ValueType.UNSPECIFIED =>
+          val (isUnion, hasGroup) = anchor.map(_._2.transform) match {
+            case Some(Transformation.WindowAgg(_, agg, _, gb, _, _)) =>
+              (agg == Aggregation.UNION, gb.isDefined)
+            case _ => (false, false)
+          }
+          val valueType: DataType =
+            if (isUnion) {
+              require(t.tensorCategory == TensorCategory.DENSE &&
+                  t.dimensionType.size == 1,
+                s"feature $name: UNION collects a set — declare a 1-d DENSE tensor, not $t")
+              ArrayType(t.valType.sparkType)
+            } else if (hasGroup) {
+              require(t.dimensionType.isEmpty,
+                s"feature $name: group_by produces a map of scalars — declare the scalar value type, not $t")
+              t.valType.sparkType
+            } else t.sparkType
+          val target: DataType =
+            if (hasGroup) schema(name).dataType match {
+              case MapType(kt, _, n) => MapType(kt, valueType, n)
+              case other => throw new IllegalStateException(
+                s"feature $name: group_by runtime shape should be a map, got $other")
+            } else valueType
+          Some(name -> col(name).cast(target))
+        case _ => None
       }
     }
+    if (casts.isEmpty) obs else obs.withColumns(casts.toMap)
   }
 
   /** Passthrough (INPUT_CONTEXT / DUMMY_KEY) features: no join, computed
@@ -155,8 +165,14 @@ object PointInTimeJoin {
     case _ => false
   }
 
+  /** Joins one anchor group onto `obs`, the frame so far. Each feature
+    * frame is built from the distinct (key, obs_ts) pairs of `base`, the
+    * observation as given; a key column only an earlier passthrough
+    * feature produced falls back to `obs`, which carries the same pairs.
+    */
   private def joinAnchorGroup(
       spark: SparkSession,
+      base: DataFrame,
       obs: DataFrame,
       g: AnchorGroup,
       feats: Seq[(AnchorFeature, String)],
@@ -173,10 +189,15 @@ object PointInTimeJoin {
     require(windowFeats.isEmpty || timeAware,
       s"anchor ${g.name}: window aggregations need a time-aware source AND an observation timestamp")
 
+    val pairSrc = if (obsKeyCols.forall(base.columns.contains)) base else obs
+    lazy val pairs = pairSrc
+      .select(obsKeyCols.map(col) :+ col(ObsTs): _*)
+      .na.drop("any").distinct()
+
     var joined = obs
     if (rowFeats.nonEmpty) {
       joined =
-        if (timeAware) asOfJoin(joined, obsKeyCols, keys, src0, rowFeats)
+        if (timeAware) asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats)
         else snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
     }
     if (windowFeats.nonEmpty) {
@@ -186,7 +207,7 @@ object PointInTimeJoin {
         (wa.window, wa.filter, wa.groupBy, wa.limit)
       }.toSeq.sortBy(_._2.head._2)
       for ((_, cluster) <- clusters)
-        joined = windowAggJoin(joined, obsKeyCols, keys, src0, cluster)
+        joined = windowAggJoin(joined, pairs, obsKeyCols, keys, src0, cluster)
     }
     joined
   }
@@ -237,7 +258,7 @@ object PointInTimeJoin {
     * the 100 TB-safe shape (vs. an unbounded range join).
     */
   private def asOfJoin(
-      obs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
+      obs: DataFrame, obsPairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
       src: DataFrame, feats: Seq[(AnchorFeature, String)]): DataFrame = {
     val ts = "__graft_ts"
     val vals = "__graft_vals"
@@ -249,9 +270,8 @@ object PointInTimeJoin {
       .withColumn(Tag, lit(0))
     val valsType = srcSel.schema(vals).dataType
 
-    val pairs = obs
-      .select(obsKeyCols.map(col) :+ col(ObsTs).as(ts): _*)
-      .na.drop("any").distinct()
+    val pairs = obsPairs
+      .withColumnRenamed(ObsTs, ts)
       .withColumn(vals, lit(null).cast(valsType))
       .withColumn(Tag, lit(1))
 
@@ -381,7 +401,7 @@ object PointInTimeJoin {
     *    value is a k-entry map, not an aggregate over k rows.
     */
   private def windowAggJoin(
-      obs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
+      obs: DataFrame, pairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
       src: DataFrame, feats: Seq[(AnchorFeature, String)]): DataFrame = {
     val wa0 = feats.head._1.transform.asInstanceOf[Transformation.WindowAgg]
     val skCols = obsKeyCols.indices.map(i => s"__graft_sk_$i")
@@ -398,10 +418,6 @@ object PointInTimeJoin {
         FeathrExpr.column(wa.defExpr).as(m)
       } ++
       wa0.groupBy.map(gb => FeathrExpr.column(gb).as(groupCol)).toSeq: _*)
-
-    val pairs = obs
-      .select(obsKeyCols.map(col) :+ col(ObsTs): _*)
-      .na.drop("any").distinct()
 
     // bucketed pre-aggregation path (exact; SURVEY.md §4): the DEFAULT
     // plan for decomposable aggs — at 100 TB a 90-day window over a

@@ -127,10 +127,6 @@ object Source {
   val INPUT_CONTEXT: Source = Source("PASSTHROUGH", DataLocation.InputContext)
 }
 
-/** Resolves a `DataLocation` to a scanned DataFrame. One resolution per
-  * anchor group — the project planner guarantees each source is scanned
-  * once per join (mirrors project.rs:392-423 anchor grouping).
-  */
 /** Pluggable tail of the secret-resolution chain (the reference's
   * KeyVault layer, feathr-rs/src/var_source.rs:14-38) — register an
   * implementation to serve lookups that neither the environment nor
@@ -145,6 +141,14 @@ object SecretProvider {
   def clear(): Unit = vault = None
 }
 
+/** Resolves a `DataLocation` to a scanned DataFrame. The point-in-time
+  * planner resolves each anchor group's source once (mirrors
+  * project.rs:392-423 anchor grouping), but that one DataFrame is
+  * re-read in the plan by every consumer: the as-of join scans it once
+  * and each window cluster of the group again (the default bucketed
+  * plan twice, for its bucket partials and its edge rows), so a group
+  * with an as-of feature and three window clusters has seven scan nodes.
+  */
 object SourceResolver {
 
   /** Layered secret/config resolution, mirroring the reference's

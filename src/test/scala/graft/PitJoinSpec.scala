@@ -224,4 +224,121 @@ class PitJoinSpec extends SparkTestBase {
       assert(out.count() == 2)
     } finally spark.conf.unset("spark.graft.join.checkUnique")
   }
+
+  test("plan size grows linearly with window clusters across queries") {
+    // one time-aware source keyed two ways: an as-of feature and three
+    // window clusters per user, three more clusters per item
+    Seq((1L, 10L, "2024-01-09 12:00:00", 1.0),
+        (1L, 20L, "2024-01-05 00:00:00", 2.0),
+        (2L, 10L, "2024-01-02 00:00:00", 4.0))
+      .toDF("u", "i", "ts_s", "v").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("plan_size_src")
+    val obs = Seq((1L, 10L, "2024-01-10 00:00:00"), (2L, 20L, "2024-01-10 00:00:00"))
+      .toDF("user", "item", "ts_s").withColumn("ts", $"ts_s".cast("timestamp"))
+      .select("user", "item", "ts")
+    val src = Source("src", DataLocation.Table("plan_size_src"),
+      timeWindow = Some(TimeWindowParameters("ts", "native")))
+    val p = FeatureProject("plan_size")
+    val uKey = TypedKey("u", ValueType.INT64)
+    val iKey = TypedKey("i", ValueType.INT64)
+    p.addAnchorGroup("by_user", src,
+      AnchorFeature("f_u_last", FeatureType.DOUBLE, Transformation.Expr("v"), Seq(uKey)) +:
+        Seq(1, 2, 3).map(d => AnchorFeature(s"f_u_sum_${d}d", FeatureType.DOUBLE,
+          Transformation.windowAgg("v", "SUM", s"${d}d"), Seq(uKey))))
+    p.addAnchorGroup("by_item", src, Seq(4, 5, 6).map(d =>
+      AnchorFeature(s"f_i_sum_${d}d", FeatureType.DOUBLE,
+        Transformation.windowAgg("v", "SUM", s"${d}d"), Seq(iKey))))
+    val clusters = 6
+    val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")), Seq(
+      FeatureQuery("f_u_last" +: Seq(1, 2, 3).map(d => s"f_u_sum_${d}d"), Seq("user")),
+      FeatureQuery(Seq(4, 5, 6).map(d => s"f_i_sum_${d}d"), Seq("item"))))
+    // each bucketed window cluster reads the source and the spine pairs
+    // twice (full buckets + edge rows), the as-of join each once, plus
+    // the observation the joins accumulate onto: 4 * clusters + 3 —
+    // a plan that re-derived pairs from the joined frame doubles per join
+    val leaves = df.queryExecution.analyzed.collectLeaves().size
+    assert(leaves <= 4 * clusters + 3, s"$leaves leaves for $clusters window clusters")
+    val out = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
+    assert(out.size == 2)
+    assert(out(1L).getAs[Double]("f_u_last") == 1.0)
+    assert(out(1L).getAs[Double]("f_u_sum_1d") == 1.0)
+    assert(out(1L).getAs[Double]("f_i_sum_6d") == 1.0)
+    assert(out(2L).getAs[Double]("f_i_sum_6d") == 2.0)
+  }
+
+  test("distinct spine pairs survive a duplicate-keyed snapshot join: row fan-out and window values") {
+    // snapshot anchor repeats every key dup times; window anchors on
+    // two key columns must still see each spine (key, ts) pair once
+    val dup = 3
+    Seq(1L, 2L, 3L).flatMap(k => (1 to dup).map(n => (k, n.toDouble)))
+      .toDF("k", "s").createOrReplaceTempView("pair_dup_src")
+    val events = Seq(
+      (1L, 10L, "2024-01-09 12:00:00", 1.0), (1L, 20L, "2024-01-04 00:00:00", 2.0),
+      (1L, 10L, "2024-01-02 00:00:00", 4.0), (2L, 20L, "2024-01-08 00:00:00", 8.0),
+      (2L, 10L, "2024-01-11 00:00:00", 16.0), (3L, 30L, "2023-12-01 00:00:00", 32.0))
+    events.toDF("k", "j", "ts_s", "v").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("pair_events")
+    val spineRows = Seq(
+      (1L, 10L, "2024-01-10 00:00:00"), (1L, 20L, "2024-01-10 00:00:00"),
+      (1L, 10L, "2024-01-10 00:00:00"), (2L, 10L, "2024-01-12 00:00:00"),
+      (3L, 30L, "2024-01-12 00:00:00"), (2L, 20L, "2024-01-09 00:00:00"))
+    val obs = spineRows.toDF("k", "j", "ts_s").withColumn("ts", $"ts_s".cast("timestamp"))
+    val timed = Source("ev", DataLocation.Table("pair_events"),
+      timeWindow = Some(TimeWindowParameters("ts", "native")))
+    val p = FeatureProject("pair_dup")
+    val kKey = TypedKey("k", ValueType.INT64)
+    p.addAnchorGroup("a_snap", Source("snap", DataLocation.Table("pair_dup_src")), Seq(
+      AnchorFeature("f_s", FeatureType.DOUBLE, Transformation.Expr("s"), Seq(kKey))))
+    p.addAnchorGroup("b_swa", timed, Seq(
+      AnchorFeature("f_k_sum_7d", FeatureType.DOUBLE,
+        Transformation.windowAgg("v", "SUM", "7d"), Seq(kKey))))
+    p.addAnchorGroup("c_swa", timed, Seq(
+      AnchorFeature("f_j_sum_7d", FeatureType.DOUBLE,
+        Transformation.windowAgg("v", "SUM", "7d"), Seq(TypedKey("j", ValueType.INT64)))))
+    spark.conf.set("spark.graft.join.checkUnique", "false")
+    val out = try FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")), Seq(
+        FeatureQuery(Seq("f_s", "f_k_sum_7d"), Seq("k")),
+        FeatureQuery(Seq("f_j_sum_7d"), Seq("j")))).collect()
+      finally spark.conf.unset("spark.graft.join.checkUnique")
+    assert(out.length == spineRows.size * dup)
+    val evTs = events.map { case (k, j, t, v) => (k, j, java.sql.Timestamp.valueOf(t), v) }
+    def brute(key: ((Long, Long)) => Long, want: Long, obsTs: java.sql.Timestamp): Any = {
+      val lo = obsTs.getTime - 7L * 24 * 3600 * 1000
+      val hits = evTs.filter { case (k, j, t, _) =>
+        key((k, j)) == want && t.getTime > lo && !t.after(obsTs) }
+      if (hits.isEmpty) null else hits.map(_._4).sum
+    }
+    for (r <- out) {
+      val k = r.getAs[Long]("k")
+      val j = r.getAs[Long]("j")
+      val t = r.getAs[java.sql.Timestamp]("ts")
+      assert(r.get(r.fieldIndex("f_k_sum_7d")) == brute(_._1, k, t), s"f_k_sum_7d at $r")
+      assert(r.get(r.fieldIndex("f_j_sum_7d")) == brute(_._2, j, t), s"f_j_sum_7d at $r")
+    }
+    assert(out.map(r => (r.getAs[Long]("k"), r.getAs[Double]("f_s"))).toSet ==
+      Seq(1L, 2L, 3L).flatMap(k => (1 to dup).map(n => (k, n.toDouble))).toSet)
+  }
+
+  test("a query may key on a column an earlier query's passthrough feature produced") {
+    Seq((0L, "2024-01-09 12:00:00", 1.0), (1L, "2024-01-09 12:00:00", 2.0),
+        (1L, "2024-01-01 00:00:00", 4.0))
+      .toDF("b", "ts_s", "v").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("parity_bucket_src")
+    val obs = Seq((2L, "2024-01-10 00:00:00"), (3L, "2024-01-10 00:00:00"))
+      .toDF("user", "ts_s").withColumn("ts", $"ts_s".cast("timestamp"))
+      .select("user", "ts")
+    val p = FeatureProject("passthrough_key")
+    p.addAnchorGroup("ctx", Source.INPUT_CONTEXT, Seq(
+      AnchorFeature("f_parity", FeatureType.INT64,
+        Transformation.Expr("user % 2"), Seq(TypedKey.DUMMY_KEY))))
+    p.addAnchorGroup("by_parity", Source("src", DataLocation.Table("parity_bucket_src"),
+      timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      AnchorFeature("f_parity_sum_7d", FeatureType.DOUBLE,
+        Transformation.windowAgg("v", "SUM", "7d"), Seq(TypedKey("b", ValueType.INT64)))))
+    val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")), Seq(
+        FeatureQuery(Seq("f_parity"), Nil),
+        FeatureQuery(Seq("f_parity_sum_7d"), Seq("f_parity"))))
+      .collect().map(r => r.getAs[Long]("user") -> r.getAs[Double]("f_parity_sum_7d")).toMap
+    assert(out == Map(2L -> 1.0, 3L -> 2.0))
+  }
 }
