@@ -1,23 +1,38 @@
 package graft.operators
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
+import java.net.{InetSocketAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedDeque}
 
 /** Redis-protocol [[OnlineStore]]: the K2 online sink speaking real
   * RESP over a socket (reference `RedisSink`,
   * feathr-rs/src/materialization.rs:27-55 — feature maps written as
   * Redis hashes keyed `table:key`).
   *
+  * Connections: every call borrows a persistent connection from a pool
+  * keyed by (host, port), runs its pipelined round trips on it and
+  * returns it. The pool lives in the companion object because the store
+  * is serialized into Spark tasks (`Materializer.write`/`deleteKeys`,
+  * `readOnline`): every deserialized copy shares its JVM's connections
+  * instead of leaking its own. A ranking request (a `get` plus a
+  * `getAll`) so pays no connect and no server thread, and the pool holds
+  * as many connections as calls ever ran at once. A connection whose call
+  * throws anything (framing error, EOF, an `-ERR` reply, a failing row
+  * iterator) is closed, never returned: it may have unread replies on
+  * the wire. When the first round trip of a call fails because a
+  * *pooled* connection turned out dead (the server restarted or dropped
+  * it while idle), the round trip is sent once more on a fresh
+  * connection. Every batch the store sends is idempotent (`DEL` + `HSET`
+  * replace, `HGETALL`, `SCAN`, `KEYS`), so the resend cannot change the
+  * outcome.
+  *
   * Write path: [[putAll]] is called once per PARTITION by
   * `Materializer.write` and pipelines `DEL` + `HSET` command pairs
   * (`DEL` first: a materialization REPLACES a key's feature map, while
-  * a bare `HSET` would merge with stale fields) — up to
-  * `maxPipeline` commands are buffered before one flush + bulk reply
-  * drain, so the wire pays ~one round-trip per `maxPipeline/2` rows
-  * instead of one per row. Each partition opens its own connection
-  * (task-scoped, no shared mutable client state to synchronize).
+  * a bare `HSET` would merge with stale fields) — `maxPipeline`
+  * commands per flush + bulk reply drain, so the wire pays ~one
+  * round-trip per `maxPipeline/2` rows instead of one per row.
   *
   * RESP bulk strings are length-prefixed and binary-safe, so field
   * names and values round-trip losslessly with NO encoding layer
@@ -31,83 +46,41 @@ import java.util.concurrent.ConcurrentHashMap
 class RespOnlineStore(host: String, port: Int,
     maxPipeline: Int = 512) extends OnlineStore {
   import Resp._
+  import RespOnlineStore.{hash, withConnection}
 
   def put(table: String, key: String, value: Map[String, String]): Unit =
     putAll(table, Iterator(key -> value))
 
   override def putAll(table: String,
-      rows: Iterator[(String, Map[String, String])]): Unit = {
-    val sock = new Socket()
-    sock.connect(new InetSocketAddress(host, port))
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
-      val in = new DataInputStream(
-        new BufferedInputStream(sock.getInputStream, 1 << 16))
-      var pending = 0
-      def drain(): Unit = { out.flush(); (0 until pending).foreach(_ => readReply(in)); pending = 0 }
-      rows.foreach { case (k, v) =>
+      rows: Iterator[(String, Map[String, String])]): Unit =
+    withConnection(host, port) { c =>
+      rows.flatMap { case (k, v) =>
         val rk = s"$table:$k"
-        writeCommand(out, Seq("DEL", rk))
-        pending += 1
-        if (v.nonEmpty) {
-          writeCommand(out,
-            "HSET" +: rk +: v.toSeq.sortBy(_._1).flatMap { case (f, x) => Seq(f, x) })
-          pending += 1
-        }
-        if (pending >= maxPipeline) drain()
+        Iterator(Seq("DEL", rk)) ++ (if (v.isEmpty) Iterator.empty else
+          Iterator("HSET" +: rk +: v.toSeq.sortBy(_._1).flatMap { case (f, x) => Seq(f, x) }))
+      }.grouped(maxPipeline).foreach { batch =>
+        c.roundTrip(batch)(in => batch.foreach(_ => readReply(in)))
       }
-      drain()
-    } finally sock.close()
-  }
+    }
 
-  def get(table: String, key: String): Option[Map[String, String]] = {
-    val sock = new Socket()
-    sock.connect(new InetSocketAddress(host, port))
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      writeCommand(out, Seq("HGETALL", s"$table:$key"))
-      out.flush()
-      readReply(in) match {
-        case ArrayReply(items) if items.nonEmpty =>
-          Some(items.grouped(2).collect {
-            case Seq(f, v) => new String(f, UTF_8) -> new String(v, UTF_8)
-          }.toMap)
-        case _ => None
-      }
-    } finally sock.close()
-  }
+  def get(table: String, key: String): Option[Map[String, String]] =
+    withConnection(host, port)(
+      _.roundTrip(Seq(Seq("HGETALL", s"$table:$key")))(in => hash(readReply(in))))
 
-  /** Bulk point-read: pipelined `HGETALL` for every key over ONE
+  /** Bulk point-read: pipelined `HGETALL` for every key on one
     * connection — `maxPipeline` commands per flush+drain round-trip,
-    * the same wire discipline as the write path ([[putAll]]). The
-    * per-key [[get]] opens a socket per call; serving or verifying a
-    * key SET should pay connection setup once.
+    * the same wire discipline as the write path ([[putAll]]). Serving
+    * or verifying a key SET pays one round trip per batch, not per key.
     * Returns (key, None) for absent keys, preserving input order.
     */
   override def getAll(table: String,
-      keys: Seq[String]): Seq[(String, Option[Map[String, String]])] = {
-    val sock = new Socket()
-    sock.connect(new InetSocketAddress(host, port))
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
-      val in = new DataInputStream(
-        new BufferedInputStream(sock.getInputStream, 1 << 16))
+      keys: Seq[String]): Seq[(String, Option[Map[String, String]])] =
+    withConnection(host, port) { c =>
       keys.grouped(maxPipeline).flatMap { batch =>
-        batch.foreach(k => writeCommand(out, Seq("HGETALL", s"$table:$k")))
-        out.flush()
-        batch.map { k =>
-          readReply(in) match {
-            case ArrayReply(items) if items.nonEmpty =>
-              k -> Some(items.grouped(2).collect {
-                case Seq(f, v) => new String(f, UTF_8) -> new String(v, UTF_8)
-              }.toMap)
-            case _ => k -> None
-          }
-        }
+        c.roundTrip(batch.map(k => Seq("HGETALL", s"$table:$k")))(in =>
+          batch.map(k => k -> hash(readReply(in))))
       }.toSeq
-    } finally sock.close()
-  }
+    }
 
   /** All keys of `table`, enumerated with cursor `SCAN … MATCH table:*
     * COUNT batch` — the production path: each round-trip returns a
@@ -117,47 +90,102 @@ class RespOnlineStore(host: String, port: Int,
     * (which Redis's rehash-safe cursors may emit) are collapsed
     * client-side, per the documented SCAN contract.
     */
-  def scanKeys(table: String, batch: Int = 512): Seq[String] = {
-    val sock = new Socket()
-    sock.connect(new InetSocketAddress(host, port))
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+  def scanKeys(table: String, batch: Int = 512): Seq[String] =
+    withConnection(host, port) { c =>
       val seen = scala.collection.mutable.LinkedHashSet.empty[String]
       var cursor = "0"
-      var done = false
-      while (!done) {
-        writeCommand(out,
-          Seq("SCAN", cursor, "MATCH", s"$table:*", "COUNT", batch.toString))
-        out.flush()
-        val (next, keys) = readScanReply(in)
+      do {
+        val (next, keys) = c.roundTrip(Seq(
+          Seq("SCAN", cursor, "MATCH", s"$table:*", "COUNT", batch.toString)))(readScanReply)
         keys.foreach(b =>
           seen += new String(b, UTF_8).substring(table.length + 1))
         cursor = next
-        done = cursor == "0"
-      }
+      } while (cursor != "0")
       seen.toSeq
-    } finally sock.close()
-  }
+    }
 
   /** One-shot `KEYS table:*` — fine for SMALL tables (tests, bounded
     * verification reads); O(keyspace) in one blocking server pass, so
     * production enumeration should use [[scanKeys]].
     */
-  def keys(table: String): Seq[String] = {
-    val sock = new Socket()
-    sock.connect(new InetSocketAddress(host, port))
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      writeCommand(out, Seq("KEYS", s"$table:*"))
-      out.flush()
+  def keys(table: String): Seq[String] =
+    withConnection(host, port)(_.roundTrip(Seq(Seq("KEYS", s"$table:*"))) { in =>
       readReply(in) match {
         case ArrayReply(items) =>
           items.map(b => new String(b, UTF_8).substring(table.length + 1))
         case other => throw new java.io.IOException(s"KEYS: unexpected reply $other")
       }
-    } finally sock.close()
+    })
+}
+
+object RespOnlineStore {
+  import Resp._
+
+  /** Bound on a connect and on each blocking read: a server that stops
+    * answering fails the call instead of hanging it. */
+  private val IoTimeoutMs = 30000
+
+  /** One persistent client connection. `roundTrip` writes a batch of
+    * commands, flushes once and reads the replies. A connection just
+    * taken from the pool is `untested` until a round trip succeeds on
+    * it: if that first round trip finds it dead, it reconnects and
+    * sends the batch once more. */
+  private final class Connection(host: String, port: Int) {
+    private var sock: Socket = _
+    private var out: BufferedOutputStream = _
+    private var in: DataInputStream = _
+    var untested = false
+    connect()
+
+    private def connect(): Unit = {
+      sock = new Socket()
+      try {
+        sock.setTcpNoDelay(true)
+        sock.connect(new InetSocketAddress(host, port), IoTimeoutMs)
+        sock.setSoTimeout(IoTimeoutMs)
+        out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
+        in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
+      } catch { case e: Throwable => close(); throw e }
+    }
+
+    def roundTrip[T](cmds: Iterable[Seq[String]])(read: DataInputStream => T): T = {
+      def send(): T = { cmds.foreach(writeCommand(out, _)); out.flush(); read(in) }
+      val result = try send() catch {
+        case _: EOFException | _: SocketException if untested =>
+          close(); connect(); untested = false
+          send()
+      }
+      untested = false
+      result
+    }
+
+    def close(): Unit = try sock.close() catch { case _: java.io.IOException => () }
+  }
+
+  /** Idle connections per (host, port), most recently returned first. */
+  private val idle =
+    new ConcurrentHashMap[(String, Int), ConcurrentLinkedDeque[Connection]]()
+
+  /** The store's one connection path: borrow a live connection (or open
+    * one), run `body` on it, and return it to the pool; a connection
+    * whose `body` threw is closed instead. */
+  private def withConnection[T](host: String, port: Int)(body: Connection => T): T = {
+    val q = idle.computeIfAbsent((host, port), _ => new ConcurrentLinkedDeque[Connection]())
+    val pooled = q.pollFirst()
+    val c = if (pooled == null) new Connection(host, port) else pooled
+    c.untested = pooled != null
+    val result = try body(c) catch { case e: Throwable => c.close(); throw e }
+    q.offerFirst(c)
+    result
+  }
+
+  /** A `HGETALL` reply as a feature map; an empty hash is an absent key. */
+  private def hash(r: Reply): Option[Map[String, String]] = r match {
+    case ArrayReply(items) if items.nonEmpty =>
+      Some(items.grouped(2).collect {
+        case Seq(f, v) => new String(f, UTF_8) -> new String(v, UTF_8)
+      }.toMap)
+    case _ => None
   }
 }
 
@@ -260,13 +288,17 @@ private[operators] object Resp {
   }
 }
 
+
 /** In-process RESP server implementing the command subset the store
   * uses (`PING`, `DEL`, `HSET`, `HGETALL`, `KEYS`, cursor `SCAN`) —
   * the zero-egress stand-in
   * for a Redis endpoint, so [[RespOnlineStore]]'s pipelining, framing,
-  * and concurrency are exercised over REAL sockets in tests. One thread
-  * per connection (the sink opens one connection per partition);
-  * `commandCount` lets tests assert the pipelined command volume.
+  * connection pooling and concurrency are exercised over REAL sockets in
+  * tests. One thread per accepted connection: the client pool keeps
+  * connections persistent and as few as the calls running at once.
+  * `commandCount` and `acceptedCount` let tests assert the pipelined
+  * command volume and the connections opened; [[closeConnections]] drops
+  * every client as a Redis restart or failover does.
   */
 class EmbeddedRespServer {
   import Resp._
@@ -279,15 +311,18 @@ class EmbeddedRespServer {
   private val server = new ServerSocket()
   server.bind(new InetSocketAddress("127.0.0.1", 0))
   val commandCount = new java.util.concurrent.atomic.AtomicLong()
+  val acceptedCount = new java.util.concurrent.atomic.AtomicLong()
+  private val connections = ConcurrentHashMap.newKeySet[Socket]()
 
   def port: Int = server.getLocalPort
 
   private def str(b: Array[Byte]): String = new String(b, UTF_8)
 
   private def serve(sock: Socket): Unit = {
-    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
-    val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
     try {
+      sock.setTcpNoDelay(true)
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
+      val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
       var cmd = readCommand(in)
       while (cmd.isDefined) {
         commandCount.incrementAndGet()
@@ -400,27 +435,46 @@ class EmbeddedRespServer {
             out.write(s"-ERR ${msg.replaceAll("[\r\n]", " ")}\r\n"
               .getBytes(UTF_8))
         }
-        // a pipelined client flushes many commands before reading; only
-        // flush when no further command is already buffered would need
-        // peeking — flushing per reply is correct and still batched by
-        // the BufferedOutputStream
-        out.flush()
+        // flush once the client's pipelined commands are all answered: a
+        // batch gets its replies in one write, a lone command at once.
+        // Flushing per reply costs a write per reply, and without
+        // TCP_NODELAY those small writes stall behind delayed ACKs on a
+        // kept-alive connection (Nagle's algorithm).
+        if (in.available() == 0) out.flush()
         cmd = readCommand(in)
       }
     } catch {
-      case _: java.io.EOFException | _: java.net.SocketException => ()
-    } finally sock.close()
+      case _: java.io.EOFException | _: SocketException => ()
+    } finally {
+      connections.remove(sock)
+      sock.close()
+    }
   }
 
   private val acceptor = new Thread(() => {
     try while (!server.isClosed) {
       val sock = server.accept()
-      val t = new Thread(() => serve(sock), s"resp-conn-${sock.getPort}")
+      acceptedCount.incrementAndGet()
+      connections.add(sock)
+      // stop() may have swept the connections between accept and add;
+      // the thread of a socket closed here ends at once
+      if (server.isClosed) sock.close()
+      val t = new Thread(() => serve(sock), s"resp-conn-$port-${sock.getPort}")
       t.setDaemon(true); t.start()
-    } catch { case _: java.net.SocketException => () }
+    } catch { case _: SocketException => () }
   }, "resp-acceptor")
   acceptor.setDaemon(true)
   acceptor.start()
 
-  def stop(): Unit = server.close()
+  /** Closes every accepted connection and keeps listening, like a Redis
+    * restart or failover: clients must reconnect. */
+  def closeConnections(): Unit = connections.forEach(s =>
+    try s.close() catch { case _: java.io.IOException => () })
+
+  /** Stops listening, then closes every accepted connection, so no
+    * connection thread outlives the server. */
+  def stop(): Unit = {
+    server.close()
+    closeConnections()
+  }
 }

@@ -7,8 +7,11 @@ import org.apache.spark.sql.types._
 
 /** [[RespOnlineStore]] against the in-process RESP server: wire
   * framing, binary-safe values, replace-on-write semantics, pipelining
-  * across the flush boundary, and the distributed sink path
-  * (`Materializer.write` → one pipelined connection per partition).
+  * across the flush boundary, the distributed sink path
+  * (`Materializer.write` → one pipelined batch stream per partition), and
+  * the connection pool: reconnects after a server restart, no
+  * desynchronised connection after a failed write, and at most one
+  * connection per concurrent caller.
   */
 class RespOnlineStoreSpec extends SparkTestBase {
 
@@ -232,5 +235,128 @@ class RespOnlineStoreSpec extends SparkTestBase {
       }
       assert(missing.getMessage.contains("item_id"), missing.getMessage)
     }
+  }
+
+  private def user(i: Int): Map[String, String] = Map("f_a" -> s"a$i", "f_b" -> (i * 0.5).toString)
+  private def item(i: Int): Map[String, String] = Map("f_s" -> s"s$i")
+
+  /** Writes `users` user maps and `items` item maps. */
+  private def seed(store: RespOnlineStore, users: Int, items: Int): Unit = {
+    store.putAll("u", (0 until users).iterator.map(i => s"u$i" -> user(i)))
+    store.putAll("i", (0 until items).iterator.map(i => s"i$i" -> item(i)))
+  }
+
+  /** One ranking request (a user `get` plus a 20-item `getAll`, one
+    * key absent), true when every value is exactly right. */
+  private def rankingRequest(store: RespOnlineStore, n: Int): Boolean = {
+    val keys = (0 until 19).map(j => s"i${(n * 7 + j) % 100}") :+ "i-absent"
+    store.get("u", s"u${n % 50}").contains(user(n % 50)) &&
+      store.getAll("i", keys) == keys.map(k =>
+        k -> (if (k == "i-absent") None else Some(item(k.drop(1).toInt))))
+  }
+
+  /** Live threads serving connections of the server on `port`. */
+  private def connThreads(port: Int): Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.isAlive && t.getName.startsWith(s"resp-conn-$port-"))
+  }
+
+  private def eventually(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(cond, what)
+  }
+
+  test("a server restart mid-reads costs a reconnect, never a wrong or stale value") {
+    val server = new EmbeddedRespServer
+    val port = server.port
+    try {
+      val store = new RespOnlineStore("127.0.0.1", port)
+      seed(store, 50, 100)
+      assert(rankingRequest(store, 1))
+      val accepted = server.acceptedCount.get()
+      server.closeConnections()
+      // the pooled connection is dead: the next calls reconnect once and
+      // still read exactly the written values
+      assert(store.get("u", "u3").contains(user(3)))
+      assert(store.getAll("i", Seq("i5", "i-absent", "i7")) ==
+        Seq("i5" -> Some(item(5)), "i-absent" -> None, "i7" -> Some(item(7))))
+      assert(rankingRequest(store, 2))
+      assert(server.acceptedCount.get() == accepted + 1,
+        s"one reconnect expected, accepted ${server.acceptedCount.get() - accepted}")
+      eventually("the dropped connection's thread must end")(connThreads(port).size == 1)
+
+      server.stop()
+      // a stopped server fails reads, in bounded time, and never answers
+      // from a stale connection
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      val reads = Seq[() => Any](() => store.get("u", "u3"),
+        () => store.getAll("i", Seq("i5")), () => store.scanKeys("u"))
+      reads.foreach { read =>
+        val outcome = Await.result(Future(scala.util.Try(read())), 10.seconds)
+        assert(outcome.isFailure, s"read after stop() returned $outcome")
+      }
+    } finally server.stop()
+  }
+
+  test("a putAll whose rows fail part-way leaves no desynchronised connection behind") {
+    withServer { (_, store) =>
+      seed(store, 50, 100)
+      val boom = intercept[IllegalStateException] {
+        // 600 rows are 1200 commands: more than two 512-command batches
+        // are on the wire before the iterator fails
+        store.putAll("w", (0 until 1000).iterator.map { i =>
+          if (i == 600) throw new IllegalStateException("row source failed")
+          s"w$i" -> Map("v" -> i.toString)
+        })
+      }
+      assert(boom.getMessage == "row source failed")
+      assert(store.get("u", "u4").contains(user(4)))
+      assert(store.get("u", "u-absent").isEmpty)
+      assert(store.getAll("i", Seq("i9", "i-absent", "i0")) ==
+        Seq("i9" -> Some(item(9)), "i-absent" -> None, "i0" -> Some(item(0))))
+      // rows written before the failure read back exactly or not at all
+      val written = store.getAll("w", (0 until 600).map(i => s"w$i"))
+      assert(written.zipWithIndex.forall { case ((_, got), i) =>
+        got.forall(_ == Map("v" -> i.toString)) })
+      assert(rankingRequest(store, 3))
+    }
+  }
+
+  test("the pool bounds connections: one per concurrent caller, none outlive stop()") {
+    val server = new EmbeddedRespServer
+    val port = server.port
+    try {
+      val store = new RespOnlineStore("127.0.0.1", port)
+      seed(store, 50, 100)
+      (0 until 100).foreach(n => assert(rankingRequest(store, n), s"request $n"))
+      assert(server.acceptedCount.get() == 1,
+        s"sequential requests must share one connection, accepted ${server.acceptedCount.get()}")
+
+      val threads = 32
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val wrong = new java.util.concurrent.atomic.AtomicInteger()
+      val workers = (0 until threads).map { t =>
+        val w = new Thread(() => {
+          start.await()
+          (0 until 50).foreach { n =>
+            val ok = try rankingRequest(store, t * 50 + n) catch { case _: Exception => false }
+            if (!ok) wrong.incrementAndGet()
+          }
+        })
+        w.start(); w
+      }
+      start.countDown()
+      workers.foreach(_.join(60000))
+      assert(workers.forall(!_.isAlive), "clients must finish")
+      assert(wrong.get() == 0, s"${wrong.get()} wrong or failed requests")
+      assert(server.acceptedCount.get() <= threads,
+        s"accepted ${server.acceptedCount.get()} connections for $threads callers")
+      assert(connThreads(port).nonEmpty)
+    } finally server.stop()
+    eventually("no connection thread may outlive stop()")(connThreads(port).isEmpty)
   }
 }
