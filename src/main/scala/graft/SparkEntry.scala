@@ -713,16 +713,14 @@ object SparkEntry {
         Seq(FeatureQuery(Seq("f_last_value", "f_last_type"), Seq("user_id"))))
     }),
 
-    // The skew-hardened BUCKETED as-of plan against the SAME oracle as
-    // q_asof_join — physical variants must be value-identical. The
-    // bucket conf is read at plan-construction time, so it is set for
-    // the build and unset before returning the (lazy) frame.
+    // The same as-of join as q_asof_join, against the SAME oracle: the
+    // engine has one as-of plan (union-sort) and no conf selects
+    // another, so this body sets none. The name stays so the gated
+    // query set is stable.
     "q_asof_bucketed" -> ((s, dir) => {
-      s.conf.set("spark.graft.asof.bucketSeconds", "21600")
-      try FeathrClient.joinFeatures(s, purchaseProject(dir), clicks(s, dir),
+      FeathrClient.joinFeatures(s, purchaseProject(dir), clicks(s, dir),
         Some(("ts", "native")),
         Seq(FeatureQuery(Seq("f_last_value", "f_last_type"), Seq("user_id"))))
-      finally s.conf.unset("spark.graft.asof.bucketSeconds")
     }),
 
     // §1.2 non-scalar tensors end to end: a SPARSE (struct indices/
@@ -820,8 +818,8 @@ object SparkEntry {
           explode(col("f_by_type")).as(Seq("etype", "vsum")))
         .withColumn("vsum", round(col("vsum"), 4))
       // A7 takes the bucketed pre-aggregation plan (partials per
-      // (key, sub-key, bucket)), not the raw range join — fail loudly
-      // if the scale plan disengages
+      // (key, sub-key, bucket)) — fail loudly if the scale plan
+      // disengages
       require(df.queryExecution.analyzed.toString.contains("__graft_ps_"),
         "q_swa_groupby: the bucketed pre-aggregation plan did not engage")
       df
@@ -866,18 +864,18 @@ object SparkEntry {
         Seq(FeatureQuery(Seq("f_top3_sum"), Seq("user_id"))))
         .withColumn("f_top3_sum", round(col("f_top3_sum"), 4))
       // the record-limit takes the bucketed top-k-newest plan (≤ k rows
-      // per (key, bucket) partial), not the raw range join — fail
-      // loudly if the scale plan disengages
+      // per (key, bucket) partial) — fail loudly if the scale plan
+      // disengages
       require(df.queryExecution.analyzed.toString.contains("__graft_bl_rn"),
         "q_swa_filter_limit: the bucketed record-limit plan did not engage")
       df
     }),
 
-    // A10 at scale: the bucketed pre-aggregation SWA plan (the default
-    // for decomposable aggs) on the reference's canonical long-window
-    // shape — 30d windows over purchase events. The require() proves
-    // the bucketed path was taken: this query fails outright if the
-    // scale plan silently falls back to the raw range join.
+    // A10 at scale: the bucketed pre-aggregation SWA plan on the
+    // reference's canonical long-window shape — 30d windows over
+    // purchase events. The require() proves the bucketed path was
+    // taken: this query fails outright if the plan's partial columns
+    // disappear.
     "q_swa_bucketed" -> ((s, dir) => {
       val p = FeatureProject("bk")
       val purchases = Source("purchases", DataLocation.Hdfs(s"$dir/events.parquet"),
@@ -4520,9 +4518,8 @@ object SparkEntry {
       |  FROM dsh d CROSS JOIN rsh r)
       |WHERE j >= 0.9""".stripMargin
 
-  /** Shared by `q_asof_join` and `q_asof_bucketed`: the two engine
-    * plans are physical variants of one semantic operator, so they
-    * answer to one oracle. */
+  /** Shared by `q_asof_join` and `q_asof_bucketed`: one semantic
+    * operator, so they answer to one oracle. */
   private lazy val sqlAsofJoin =
     s"""SELECT o.event_id, o.user_id, o.ts,
       |  (SELECT s.value FROM events s
@@ -5072,7 +5069,7 @@ object SparkEntry {
         |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
 
     "q_asof_join" -> sqlAsofJoin,
-    // same oracle: the bucketed plan is a pure physical variant
+    // same oracle: the same as-of join
     "q_asof_bucketed" -> sqlAsofJoin,
 
     "q_tensor_features" ->

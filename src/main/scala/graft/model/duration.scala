@@ -64,14 +64,4 @@ object Durations {
       s"sub-microsecond duration ${d.toNanos}ns not representable in timestamp precision")
     d.toNanos / 1000
   }
-
-  /** Spark SQL INTERVAL literal for a duration — whole seconds render
-    * as SECOND, sub-second durations keep exact MICROSECOND precision
-    * (both engines parse either form).
-    */
-  def toSqlInterval(d: Duration): String = {
-    val us = toMicros(d)
-    if (us % 1000000L == 0) s"INTERVAL ${us / 1000000L} SECOND"
-    else s"INTERVAL $us MICROSECOND"
-  }
 }

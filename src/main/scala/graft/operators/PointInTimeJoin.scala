@@ -3,11 +3,12 @@ package graft.operators
 import graft.model._
 import graft.project._
 import graft.sources._
-import graft.functions.{FeathrExpr, UdfRegistry}
+import graft.functions.{FeathrExpr, UdfRegistry, VectorAggregator}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.NumericType
 
 /** The engine's core relational operator: LEFT OUTER join of an
   * observation ("spine") to each requested feature on its key columns,
@@ -31,10 +32,12 @@ import org.apache.spark.sql.expressions.Window
   *  - the as-of join (J2) is a union-sort ("last value wins") plan: one
   *    shuffle of source ∪ spine-pairs by key, one sort by (ts, tag) —
   *    no range-join row explosion, no per-row subqueries;
-  *  - sliding-window aggs (J3) range-join source rows to spine pairs
-  *    with the window predicate applied during the join, then partial
-  *    (map-side) + final aggregation — Spark's two-phase agg keeps the
-  *    shuffle to pre-aggregated state;
+  *  - sliding-window aggs (J3) fold source rows ONCE to partials per
+  *    (key, time bucket); each spine pair merges the partials of the
+  *    full buckets inside its window with the raw rows of its two edge
+  *    buckets — per-pair work is O(window/bucket), not O(rows in the
+  *    window), for every aggregation kind; a record limit keeps the k
+  *    newest rows per bucket as its partial;
   *  - joins back to the spine are plain equi joins that AQE can
   *    broadcast when the feature side is small.
   */
@@ -201,13 +204,13 @@ object PointInTimeJoin {
         else snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
     }
     if (windowFeats.nonEmpty) {
-      // share one range join per identical window spec
+      // share one bucket join per identical window spec
       val clusters = windowFeats.groupBy { case (f, _) =>
         val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
         (wa.window, wa.filter, wa.groupBy, wa.limit)
       }.toSeq.sortBy(_._2.head._2)
       for ((_, cluster) <- clusters)
-        joined = windowAggJoin(joined, pairs, obsKeyCols, keys, src0, cluster)
+        joined = windowAggJoin(joined, pairs, obsKeyCols, keys, src0, cluster, g.name)
     }
     joined
   }
@@ -275,38 +278,6 @@ object PointInTimeJoin {
       .withColumn(vals, lit(null).cast(valsType))
       .withColumn(Tag, lit(1))
 
-    // skew-hardened bucketed formulation (SURVEY §2.4's "bucketed
-    // sort-merge-range join at scale"), opt-in via
-    // spark.graft.asof.bucketSeconds — the SWA bucket-conf discipline.
-    // The union-sort window above partitions by KEY alone, so one hot
-    // key's entire timeline serializes into a single task; the
-    // bucketed plan's expensive window partitions by (key, time
-    // bucket) instead, splitting a hot key across its buckets, and
-    // reduces the per-key serial pass to one row per BUCKET (the
-    // bucket-close carry), not one per event. Results are identical —
-    // AsofBucketParitySpec pins union-sort ≡ bucketed on the q_asof
-    // query and Zipf-skewed data; axis 19 measures the straggler win.
-    val bucketSeconds = obs.sparkSession.conf
-      .get("spark.graft.asof.bucketSeconds", "off")
-    val bucketUs = bucketSeconds match {
-      case "off" | "0" => 0L
-      case "auto" =>
-        // parity with the SWA "auto" derivation (window/64): the as-of
-        // join declares no window, so the effective window is the
-        // SOURCE's observed time span — one min/max column aggregate
-        // (partial-aggregated, parquet-stat prunable) buys the plan
-        // parameter. A zero span (all rows one instant) has nothing to
-        // split and falls back to union-sort.
-        val r = srcSel
-          .agg(unix_micros(min(col(ts))), unix_micros(max(col(ts))))
-          .head()
-        if (r.isNullAt(0)) 0L else (r.getLong(1) - r.getLong(0)) / 64L
-      case s => s.toLong * 1000000L
-    }
-    if (bucketUs > 0)
-      return asOfJoinBucketed(obs, obsKeyCols, srcSel, pairs, feats,
-        ts, vals, bucketUs)
-
     val w = Window
       .partitionBy(obsKeyCols.map(col): _*)
       .orderBy(col(ts).asc, col(Tag).asc, col(vals).asc_nulls_first)
@@ -315,70 +286,6 @@ object PointInTimeJoin {
     val featRows = srcSel.unionByName(pairs)
       .withColumn(vals, last(col(vals), ignoreNulls = true).over(w))
       .where(col(Tag) === 1)
-      .select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
-        feats.map { case (_, out) => col(s"$vals.$out").as(out) }: _*)
-
-    obs.join(featRows, obsKeyCols :+ ObsTs, "left_outer")
-  }
-
-  /** The bucketed as-of plan. Three bounded pieces replace the one
-    * per-key window:
-    *
-    *  1. bucket closes — per (key, bucket) the value-struct of the
-    *     LATEST source row (ties: greatest struct, the union-sort
-    *     rule), one map-side-combinable aggregate;
-    *  2. carried values — over the per-key BUCKET GRID (distinct
-    *     buckets present on either side: rows = buckets, not events),
-    *     the latest close strictly before each bucket via one
-    *     `last(ignoreNulls)` window — the only per-key serial pass,
-    *     shrunk from the key's event count to its bucket count;
-    *  3. within-bucket resolution — the union-sort window partitioned
-    *     by (key, bucket): a spine row takes the latest same-bucket
-    *     source row at-or-before it, else the carried value.
-    *
-    * Exactness: a qualifying source row is either in the spine row's
-    * own bucket (piece 3 finds the latest, and same-bucket rows AFTER
-    * obs_ts sort after the spine row so the frame excludes them) or in
-    * an earlier bucket (every such row precedes the bucket boundary,
-    * so the latest one is its bucket's close, and the latest close is
-    * what piece 2 carries). Cross-bucket ties are impossible — equal
-    * timestamps share a bucket.
-    */
-  private def asOfJoinBucketed(
-      obs: DataFrame, obsKeyCols: Seq[String], srcSel: DataFrame,
-      pairs: DataFrame, feats: Seq[(AnchorFeature, String)],
-      ts: String, vals: String, bucketUs: Long): DataFrame = {
-    val b = "__graft_b"
-    val close = "__graft_close"
-    val carried = "__graft_carried"
-    def idiv(c: Column, d: Long): Column =
-      ((c - pmod(c, lit(d))) / lit(d)).cast("long")
-    def withB(df: DataFrame): DataFrame =
-      df.withColumn(b, idiv(unix_micros(col(ts)), bucketUs))
-    val srcB = withB(srcSel)
-    val spineB = withB(pairs)
-
-    val closes = srcB
-      .groupBy((obsKeyCols :+ b).map(col): _*)
-      .agg(max_by(col(vals), struct(col(ts), col(vals))).as(close))
-    val grid = closes.select((obsKeyCols :+ b).map(col): _*)
-      .unionByName(spineB.select((obsKeyCols :+ b).map(col): _*))
-      .distinct()
-    val carry = grid.join(closes, obsKeyCols :+ b, "left_outer")
-      .withColumn(carried, last(col(close), ignoreNulls = true).over(
-        Window.partitionBy(obsKeyCols.map(col): _*).orderBy(col(b))
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      .select((obsKeyCols :+ b).map(col) :+ col(carried): _*)
-
-    val wInner = Window
-      .partitionBy((obsKeyCols :+ b).map(col): _*)
-      .orderBy(col(ts).asc, col(Tag).asc, col(vals).asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val featRows = srcB.unionByName(spineB)
-      .withColumn(vals, last(col(vals), ignoreNulls = true).over(wInner))
-      .where(col(Tag) === 1)
-      .join(carry, obsKeyCols :+ b) // inner: the grid contains every spine bucket
-      .withColumn(vals, coalesce(col(vals), col(carried)))
       .select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
         feats.map { case (_, out) => col(s"$vals.$out").as(out) }: _*)
 
@@ -399,104 +306,106 @@ object PointInTimeJoin {
     *    top-k GROUPS per (key, obs_ts) ranked by the first feature's
     *    aggregate descending (ties: sub-key ascending) — the feature
     *    value is a k-entry map, not an aggregate over k rows.
+    *
+    * One plan for every aggregation (SURVEY.md §4): source rows fold
+    * ONCE to [[Partial]]s per (key, [sub-key,] time bucket); each spine
+    * pair merges the partials of the ≤ window/bucket FULL buckets inside
+    * its window with the raw rows of its two edge buckets
+    * ([[bucketWindowJoin]]), and the merged partials finish to the
+    * feature value ([[partialsOf]]). Per-pair work is
+    * O(window/bucket + rows-in-2-buckets), never O(rows-in-window). A
+    * record limit keeps the k newest ROWS per (key, bucket) as its
+    * partial instead, and folds the pair's true top-k of those.
+    *
+    * The bucket is window/64 wide, at least 1 µs, so every positive
+    * window spans at least one bucket — all the edge-bucket arithmetic
+    * needs to be exact. Window arithmetic is exact epoch-micros
+    * (Durations.toMicros rejects sub-microsecond windows): a `750ms`
+    * window stays 750ms, not whole seconds.
     */
   private def windowAggJoin(
       obs: DataFrame, pairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
-      src: DataFrame, feats: Seq[(AnchorFeature, String)]): DataFrame = {
-    val wa0 = feats.head._1.transform.asInstanceOf[Transformation.WindowAgg]
+      src: DataFrame, feats: Seq[(AnchorFeature, String)], anchorName: String): DataFrame = {
+    val was = feats.map(_._1.transform.asInstanceOf[Transformation.WindowAgg])
+    val wa0 = was.head
+    val wUs = Durations.toMicros(wa0.window)
+    require(wUs > 0, s"anchor $anchorName: window ${Durations.format(wa0.window)} of " +
+      s"feature ${feats.map(_._1.name).mkString(", ")} must be positive")
+    val bUs = math.max(1L, wUs / 64)
     val skCols = obsKeyCols.indices.map(i => s"__graft_sk_$i")
-    val groupCol = "__graft_grp"
+    val gcols = wa0.groupBy.map(_ => "__graft_grp").toSeq
+    val pairKeys = obsKeyCols :+ ObsTs
 
-    // evaluate measures (and sub-key) against source columns, pre-join
+    // evaluate measures (and sub-key) against source columns, pre-join:
+    // one column per distinct measure expression, so features that
+    // share an expression share its partials
     val filtered = wa0.filter.map(f => src.where(FeathrExpr.column(f))).getOrElse(src)
-    val measures = feats.map { case (_, out) => s"__graft_m_$out" }
-    val srcSel = filtered.select(
+    val exprs = was.map(_.defExpr).distinct
+    def m(i: Int): Column = col(s"__graft_m_$i")
+    val srcB = filtered.select(
       keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(skCols(i)) } ++
       Seq(col(Internal.SrcTs)) ++
-      feats.zip(measures).map { case ((f, _), m) =>
-        val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
-        FeathrExpr.column(wa.defExpr).as(m)
-      } ++
-      wa0.groupBy.map(gb => FeathrExpr.column(gb).as(groupCol)).toSeq: _*)
+      exprs.zipWithIndex.map { case (e, i) => FeathrExpr.column(e).as(s"__graft_m_$i") } ++
+      wa0.groupBy.map(gb => FeathrExpr.column(gb).as(gcols.head)).toSeq: _*)
+      .withColumn(Bucket, idiv(unix_micros(col(Internal.SrcTs)), bUs))
 
-    // bucketed pre-aggregation path (exact; SURVEY.md §4): the DEFAULT
-    // plan for decomposable aggs — at 100 TB a 90-day window over a
-    // dense key row-explodes the raw range join, while the bucketed
-    // plan is O(window/bucket) partials per spine pair.
-    // spark.graft.swa.bucketSeconds: "auto" (default) derives
-    // window/64; a positive number forces that bucket width; "off"/"0"
-    // falls back to the raw range join. Only LATEST/UNION/elementwise
-    // clusters (non-decomposable aggs) without a record-limit use the
-    // raw range join; record-limits take the bucketed top-k plan below.
-    // all window arithmetic is exact epoch-micros (Durations.toMicros
-    // rejects sub-microsecond windows) — a `750ms` window must stay
-    // 750ms, not truncate to whole seconds
-    val windowUs = Durations.toMicros(wa0.window)
-    val bucketUs: Long = obs.sparkSession.conf
-      .get("spark.graft.swa.bucketSeconds", "auto") match {
-      case "auto"       => windowUs / 64
-      case "off"        => 0L
-      case v            => v.toLong * 1000000L
-    }
-    val allBucketable = feats.forall { case (f, _) =>
-      f.transform.asInstanceOf[Transformation.WindowAgg].aggFunc match {
-        case Aggregation.SUM | Aggregation.COUNT | Aggregation.AVG |
-             Aggregation.MIN | Aggregation.MAX => true
-        case _ => false
-      }
-    }
-    // group_by clusters bucket too (partials per (key, sub-key,
-    // bucket)); only non-decomposable aggs without a record-limit
-    // force the raw range join
-    if (bucketUs > 0 && allBucketable &&
-        (wa0.groupBy.isDefined || wa0.limit.isEmpty) &&
-        windowUs >= 2 * bucketUs)
-      return bucketedWindowAgg(obs, obsKeyCols, skCols, srcSel, pairs,
-        feats, measures, wa0, bucketUs, wa0.groupBy.map(_ => groupCol))
-    // A9 record-limit (no group_by): bucketed top-k-newest plan — the
-    // per-(key, bucket) partial is the k newest ROWS, not an aggregate,
-    // so every aggregation (incl. LATEST/UNION/elementwise) qualifies
-    if (bucketUs > 0 && wa0.groupBy.isEmpty && wa0.limit.isDefined &&
-        windowUs >= 2 * bucketUs)
-      return bucketedLimitWindowAgg(obs, obsKeyCols, skCols, srcSel, pairs,
-        feats, measures, wa0, bucketUs)
+    val specs = was.map(wa => (exprs.indexOf(wa.defExpr), partialsOf(wa.aggFunc)))
+    val parts = specs.flatMap { case (i, (ps, _)) => ps.map(i -> _) }
+      .distinctBy { case (i, p) => (i, p.kind) }
+    def acc(i: Int, p: Partial) = s"__graft_acc_${p.kind}_$i"
 
-    val interval = expr(Durations.toSqlInterval(wa0.window))
-    val cond = obsKeyCols.indices
-      .map(i => col(obsKeyCols(i)) === col(skCols(i)))
-      .reduce(_ && _) &&
-      col(Internal.SrcTs) > col(ObsTs) - interval &&
-      col(Internal.SrcTs) <= col(ObsTs)
-    var joined = pairs.join(srcSel, cond, "inner")
-
-    // A9 limit without group_by: top-k newest source rows per
-    // (key, obs_ts). With group_by the limit applies to GROUPS after
-    // aggregation — see below.
-    if (wa0.groupBy.isEmpty) wa0.limit.foreach { k =>
-      val ord = Seq(col(Internal.SrcTs).desc) ++
-        Seq(struct(measures.map(col): _*).desc)
-      val rw = Window.partitionBy((obsKeyCols :+ ObsTs).map(col): _*).orderBy(ord: _*)
-      joined = joined
-        .withColumn("__graft_rn", row_number().over(rw))
-        .where(col("__graft_rn") <= k)
-        .drop("__graft_rn")
-    }
-
-    val groupKeys = (obsKeyCols :+ ObsTs).map(col)
-    val aggs = feats.zip(measures).map { case ((f, out), m) =>
-      val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
-      aggColumn(wa.aggFunc, col(m)).as(out)
-    }
-    val aggDf = wa0.groupBy match {
+    val merged = wa0.limit.filter(_ => wa0.groupBy.isEmpty) match {
       case None =>
-        joined.groupBy(groupKeys: _*).agg(aggs.head, aggs.tail: _*)
-      case Some(_) =>
-        // A7: aggregate per (key, sub-key) then collect the groups
-        val perGroup = joined.groupBy((groupKeys :+ col(groupCol)): _*)
-          .agg(aggs.head, aggs.tail: _*)
-        collectGroups(perGroup, groupKeys, groupCol, feats, wa0.limit)
+        def ps(i: Int, p: Partial) = s"__graft_ps_${p.kind}_$i"
+        val partialAggs = parts.map { case (i, p) => p.agg(m(i)).as(ps(i, p)) }
+        val partials = srcB.groupBy((skCols ++ gcols :+ Bucket).map(col): _*)
+          .agg(partialAggs.head, partialAggs.tail: _*)
+        // an edge row is a one-row partial, cast to the partial's type
+        // where the fold widens it (a SUM of ints is a long)
+        val edgePartials = parts.map { case (i, p) =>
+          val r = p.row(m(i))
+          (partials.schema(ps(i, p)).dataType match {
+            case t: NumericType => r.cast(t)
+            case _ => r
+          }).as(ps(i, p))
+        }
+        val merges = parts.map { case (i, p) => p.merge(col(ps(i, p))).as(acc(i, p)) }
+        bucketWindowJoin(pairs, obsKeyCols, skCols, wUs, bUs, partials, srcB,
+            gcols.map(col) ++ parts.map { case (i, p) => col(ps(i, p)) },
+            gcols.map(col) ++ edgePartials)
+          .groupBy((pairKeys ++ gcols).map(col): _*)
+          .agg(merges.head, merges.tail: _*)
+      case Some(k) =>
+        // A9 record limit (exact): if row r ranks among a window's k
+        // newest, fewer than k window rows order above it, so fewer
+        // than k rows of r's own bucket do — only the k newest rows per
+        // (key, bucket) can contribute (`__graft_bl_rn`, the partial's
+        // marker in plans). The pair then ranks the bounded candidate
+        // set and folds its true top-k: (src_ts desc, measure-struct
+        // desc), every aggregation kind.
+        val ord = Seq(col(Internal.SrcTs).desc, struct(exprs.indices.map(m): _*).desc)
+        val top = srcB
+          .withColumn("__graft_bl_rn", row_number().over(
+            Window.partitionBy((skCols :+ Bucket).map(col): _*).orderBy(ord: _*)))
+          .where(col("__graft_bl_rn") <= k)
+          .drop("__graft_bl_rn")
+        val raw = col(Internal.SrcTs) +: exprs.indices.map(m)
+        val folds = parts.map { case (i, p) => p.agg(m(i)).as(acc(i, p)) }
+        bucketWindowJoin(pairs, obsKeyCols, skCols, wUs, bUs, top, srcB, raw, raw)
+          .withColumn("__graft_rn", row_number().over(
+            Window.partitionBy(pairKeys.map(col): _*).orderBy(ord: _*)))
+          .where(col("__graft_rn") <= k)
+          .groupBy(pairKeys.map(col): _*)
+          .agg(folds.head, folds.tail: _*)
     }
-    obs.join(aggDf, obsKeyCols :+ ObsTs, "left_outer")
+
+    val finished = merged.select((pairKeys ++ gcols).map(col) ++
+      feats.zip(specs).map { case ((_, out), (i, (ps, finish))) =>
+        finish(ps.map(p => col(acc(i, p)))).as(out) }: _*)
+    val aggDf =
+      if (gcols.isEmpty) finished
+      else collectGroups(finished, pairKeys.map(col), gcols.head, feats, wa0.limit)
+    obs.join(aggDf, pairKeys, "left_outer")
   }
 
   /** A7 tail: optional A7×A9 top-k-groups limit, then collect
@@ -523,52 +432,27 @@ object PointInTimeJoin {
     perGroup.groupBy(groupKeys: _*).agg(maps.head, maps.tail: _*)
   }
 
-  /** Exact bucketed SWA (the 100 TB shape for long windows over dense
-    * keys): pre-aggregate source rows per (key, time-bucket) ONCE, join
-    * spine pairs to the ≤ window/bucket FULL buckets inside each
-    * window, and join raw rows only for the two partial edge buckets —
-    * per-pair work drops from O(rows-in-window) to
-    * O(window/bucket + rows-in-2-buckets). Exact for decomposable
-    * aggregations (SUM/COUNT/AVG/MIN/MAX; AVG = final sum/count).
-    *
-    * Bucket arithmetic is in epoch-micros, so sub-second timestamps
-    * stay exact: bucket b covers [b·B, (b+1)·B); for a window
-    * (T−W, T] the FULL buckets are b ∈ [⌊(T−W)/B⌋+1, ⌊T/B⌋−1], and
-    * buckets ⌊(T−W)/B⌋ / ⌊T/B⌋ are re-checked row-by-row.
+  /** The one window join skeleton. Bucket b covers [b·B, (b+1)·B) in
+    * epoch micros; for a window (T−W, T] the FULL buckets are
+    * b ∈ [⌊(T−W)/B⌋+1, ⌊T/B⌋−1], and the edge buckets ⌊(T−W)/B⌋ and
+    * ⌊T/B⌋ are re-checked row by row. W ≥ B makes the two edge buckets
+    * distinct, so no row meets a pair twice. Each spine pair meets the
+    * `partials` (rows keyed by source key and `Bucket`) of its full
+    * buckets, projected by `partialOut`, and the raw `rows` of its edge
+    * buckets, projected by `rowOut`; both sides lead with the pair's
+    * (key, obs_ts) and are unioned.
     */
-  private def bucketedWindowAgg(
-      obs: DataFrame, obsKeyCols: Seq[String], skCols: Seq[String],
-      srcSel: DataFrame, pairs: DataFrame,
-      feats: Seq[(AnchorFeature, String)], measures: Seq[String],
-      wa0: Transformation.WindowAgg, bucketUs: Long,
-      groupColOpt: Option[String]): DataFrame = {
-    val bUs = bucketUs
-    val wUs = Durations.toMicros(wa0.window)
-    val b = "__graft_b"
+  private def bucketWindowJoin(
+      pairs: DataFrame, obsKeyCols: Seq[String], skCols: Seq[String],
+      wUs: Long, bUs: Long, partials: DataFrame, rows: DataFrame,
+      partialOut: Seq[Column], rowOut: Seq[Column]): DataFrame = {
     val tUs = "__graft_tus"
-    // A7: the sub-key rides along every partial — partials per
-    // (key, sub-key, bucket), finals per (key, obs_ts, sub-key)
-    val gcols = groupColOpt.toSeq
-
-    // exact long integer division (a / b in Column API is double division)
-    def idiv(c: Column, d: Long): Column = ((c - pmod(c, lit(d))) / lit(d)).cast("long")
-
-    val srcB = srcSel.withColumn(b, idiv(unix_micros(col(Internal.SrcTs)), bUs))
-    def ps(m: String) = s"__graft_ps_$m"
-    def pc(m: String) = s"__graft_pc_$m"
-    def pm(m: String) = s"__graft_pm_$m"
-    def px(m: String) = s"__graft_px_$m"
-    val partialAggs = measures.flatMap(m => Seq(
-      sum(col(m)).as(ps(m)), count(col(m)).as(pc(m)),
-      min(col(m)).as(pm(m)), max(col(m)).as(px(m))))
-    val bucketPartials = srcB.groupBy((skCols ++ gcols :+ b).map(col): _*)
-      .agg(partialAggs.head, partialAggs.tail: _*)
-
     val p = pairs.withColumn(tUs, unix_micros(col(ObsTs)))
     val loB = idiv(col(tUs) - wUs, bUs)
     val hiB = idiv(col(tUs), bUs)
     val keyEq = obsKeyCols.indices.map(i => col(obsKeyCols(i)) === col(skCols(i)))
       .reduce(_ && _)
+    val pairCols = (obsKeyCols :+ ObsTs).map(col)
 
     // The full-bucket join is an EQUI-join on (key, COARSE bucket) —
     // never a theta-join on a bucket RANGE. A range condition leaves
@@ -586,169 +470,89 @@ object PointInTimeJoin {
     // skew identically but shuffled the spine ×window/bucket — 7× the
     // probe's total shuffle), each (pair, coarse) group carries ≤gFine
     // partials, and the exact fine-bucket range is re-applied as a
-    // post-join filter.
-    // wUs >= 2·bUs guarantees loB < hiB, so the ranges are well-formed;
-    // a window spanning exactly 2 buckets has no full bucket and the
-    // empty sequence explodes to no rows
+    // post-join filter. A window with no full bucket (it spans just
+    // the two edges) is no special case: `sequence(a, b)` with a > b
+    // counts DOWN (step −1), so the pair still explodes to one or two
+    // coarse ids, and that post-join filter is what drops their rows.
     val gFine = math.max(1L, (wUs / bUs) / 4)
-    val cb = s"${b}_c"  // partials side: coarse bucket of a partial
-    val cbp = s"${b}_cp" // spine side: exploded coarse bucket ids
-    val partialCols = measures.flatMap(m => Seq(ps(m), pc(m), pm(m), px(m)))
-    val fullBuckets = p
-      .withColumn(cbp, explode(sequence(idiv(loB + 1, gFine), idiv(hiB - 1, gFine))))
-      .join(bucketPartials.withColumn(cb, idiv(col(b), gFine)),
-        keyEq && col(cbp) === col(cb), "inner")
-      .where(col(b) > loB && col(b) < hiB)
-      .select((obsKeyCols :+ ObsTs).map(col) ++ gcols.map(col) ++
-        partialCols.map(col): _*)
-
-    val partialTypes = partialCols.map(c => c -> bucketPartials.schema(c).dataType).toMap
-    // the two edge buckets equi-join on (key, FINE bucket) — two
-    // exploded rows per pair; loB and hiB are distinct (wUs >= 2·bUs),
-    // so no row double-joins
-    val bp = s"${b}_p"
-    val edgeRows = p
-      .withColumn(bp, explode(array(loB, hiB)))
-      .join(srcB,
-        keyEq && col(b) === col(bp) &&
-          unix_micros(col(Internal.SrcTs)) > col(tUs) - wUs &&
-          unix_micros(col(Internal.SrcTs)) <= col(tUs), "inner")
-      .select((obsKeyCols :+ ObsTs).map(col) ++ gcols.map(col) ++
-        measures.flatMap(m => Seq(
-          col(m).cast(partialTypes(ps(m))).as(ps(m)),
-          when(col(m).isNull, 0L).otherwise(1L).cast(partialTypes(pc(m))).as(pc(m)),
-          col(m).cast(partialTypes(pm(m))).as(pm(m)),
-          col(m).cast(partialTypes(px(m))).as(px(m)))): _*)
-
-    val finals = feats.zip(measures).map { case ((f, out), m) =>
-      val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
-      (wa.aggFunc match {
-        case Aggregation.SUM   => sum(col(ps(m)))
-        case Aggregation.COUNT => sum(col(pc(m)))
-        case Aggregation.AVG   =>
-          // CASE guards the ANSI divide-by-zero when every row was null
-          when(sum(col(pc(m))) =!= 0, sum(col(ps(m))) / sum(col(pc(m))))
-        case Aggregation.MIN   => min(col(pm(m)))
-        case Aggregation.MAX   => max(col(px(m)))
-        case other => throw new IllegalStateException(s"not bucketable: $other")
-      }).as(out)
-    }
-    val groupKeys = (obsKeyCols :+ ObsTs).map(col)
-    val perGroup = fullBuckets.unionByName(edgeRows)
-      .groupBy(groupKeys ++ gcols.map(col): _*)
-      .agg(finals.head, finals.tail: _*)
-    val aggDf = groupColOpt match {
-      case None     => perGroup
-      case Some(gc) => collectGroups(perGroup, groupKeys, gc, feats, wa0.limit)
-    }
-    obs.join(aggDf, obsKeyCols :+ ObsTs, "left_outer")
-  }
-
-  /** A9 record-limit bucketed plan (exact): top-k NEWEST window rows
-    * per spine pair WITHOUT a raw range join. Per (key, time-bucket)
-    * only the k newest rows can contribute to any window's top-k — if
-    * row r ranks among a window's k newest, fewer than k window rows
-    * order above it, so in particular fewer than k rows of r's own
-    * bucket do — so the source reduces to ≤ k rows per (key, bucket)
-    * BEFORE the join (`__graft_bl_rn`, the partial's engagement marker
-    * in plans). Full buckets join those bounded partials with no
-    * per-row time check; the two edge buckets re-check raw rows; the
-    * final ranking then takes the true top-k of the bounded candidate
-    * set per (key, obs_ts). The surviving rows are raw rows, so the
-    * aggregation runs via [[aggColumn]] — every aggregation qualifies,
-    * no decomposability requirement. Ranking matches the raw path:
-    * (src_ts desc, measure-struct desc).
-    */
-  private def bucketedLimitWindowAgg(
-      obs: DataFrame, obsKeyCols: Seq[String], skCols: Seq[String],
-      srcSel: DataFrame, pairs: DataFrame,
-      feats: Seq[(AnchorFeature, String)], measures: Seq[String],
-      wa0: Transformation.WindowAgg, bucketUs: Long): DataFrame = {
-    val k = wa0.limit.get
-    val bUs = bucketUs
-    val wUs = Durations.toMicros(wa0.window)
-    val b = "__graft_b"
-    val tUs = "__graft_tus"
-    def idiv(c: Column, d: Long): Column = ((c - pmod(c, lit(d))) / lit(d)).cast("long")
-    val ord = Seq(col(Internal.SrcTs).desc, struct(measures.map(col): _*).desc)
-
-    val srcB = srcSel.withColumn(b, idiv(unix_micros(col(Internal.SrcTs)), bUs))
-    val bw = Window.partitionBy((skCols :+ b).map(col): _*).orderBy(ord: _*)
-    val topPerBucket = srcB
-      .withColumn("__graft_bl_rn", row_number().over(bw))
-      .where(col("__graft_bl_rn") <= k)
-      .drop("__graft_bl_rn")
-
-    val p = pairs.withColumn(tUs, unix_micros(col(ObsTs)))
-    val loB = idiv(col(tUs) - wUs, bUs)
-    val hiB = idiv(col(tUs), bUs)
-    val keyEq = obsKeyCols.indices.map(i => col(obsKeyCols(i)) === col(skCols(i)))
-      .reduce(_ && _)
-    val outCols = (obsKeyCols :+ ObsTs).map(col) ++
-      (Internal.SrcTs +: measures).map(col)
-    // same coarse-bucket equi-join discipline as [[bucketedWindowAgg]]
-    // (the theta form is the axis-6 hot-key straggler): pairs explode
-    // ~4–6 coarse ids, the exact fine range is a post-join filter, and
-    // the two edge buckets equi-join on their fine ids
-    val gFine = math.max(1L, (wUs / bUs) / 4)
-    val cb = s"${b}_c"
-    val cbp = s"${b}_cp"
+    val cb = s"${Bucket}_c"  // partials side: coarse bucket of a partial
+    val cbp = s"${Bucket}_cp" // spine side: exploded coarse bucket ids
     val full = p
       .withColumn(cbp, explode(sequence(idiv(loB + 1, gFine), idiv(hiB - 1, gFine))))
-      .join(topPerBucket.withColumn(cb, idiv(col(b), gFine)),
+      .join(partials.withColumn(cb, idiv(col(Bucket), gFine)),
         keyEq && col(cbp) === col(cb), "inner")
-      .where(col(b) > loB && col(b) < hiB)
-      .select(outCols: _*)
-    val bp = s"${b}_p"
+      .where(col(Bucket) > loB && col(Bucket) < hiB)
+      .select(pairCols ++ partialOut: _*)
+
+    // the two edge buckets equi-join on (key, FINE bucket) — two
+    // exploded rows per pair
+    val bp = s"${Bucket}_p"
     val edge = p
       .withColumn(bp, explode(array(loB, hiB)))
-      .join(srcB,
-        keyEq && col(b) === col(bp) &&
+      .join(rows,
+        keyEq && col(Bucket) === col(bp) &&
           unix_micros(col(Internal.SrcTs)) > col(tUs) - wUs &&
           unix_micros(col(Internal.SrcTs)) <= col(tUs), "inner")
-      .select(outCols: _*)
-
-    val rw = Window.partitionBy((obsKeyCols :+ ObsTs).map(col): _*).orderBy(ord: _*)
-    val limited = full.unionByName(edge)
-      .withColumn("__graft_rn", row_number().over(rw))
-      .where(col("__graft_rn") <= k)
-      .drop("__graft_rn")
-
-    val aggs = feats.zip(measures).map { case ((f, out), m) =>
-      val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
-      aggColumn(wa.aggFunc, col(m)).as(out)
-    }
-    val aggDf = limited.groupBy((obsKeyCols :+ ObsTs).map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    obs.join(aggDf, obsKeyCols :+ ObsTs, "left_outer")
+      .select(pairCols ++ rowOut: _*)
+    full.unionByName(edge)
   }
 
-  /** Map an Aggregation to its Catalyst aggregate (SURVEY.md §2.5).
-    * ELEMENTWISE_* first collects the window's arrays, then
-    * `finishElementwise` folds them with higher-order functions —
-    * bounded by the window (cap with A9 `limit` for unbounded keys).
+  private val Bucket = "__graft_b"
+
+  /** Exact long floor division (`/` in the Column API divides doubles). */
+  private def idiv(c: Column, d: Long): Column = ((c - pmod(c, lit(d))) / lit(d)).cast("long")
+
+  /** One bucket partial of a window aggregation, named by `kind`: how a
+    * group of source rows folds to it (`agg`), what one raw edge row is
+    * in its shape (`row`), and how partials merge (`merge`).
     */
-  private def aggColumn(agg: Aggregation, m: Column): Column = agg match {
-    case Aggregation.SUM   => sum(m)
-    case Aggregation.AVG   => avg(m)
-    case Aggregation.MIN   => min(m)
-    case Aggregation.MAX   => max(m)
-    case Aggregation.COUNT => count(m)
-    case Aggregation.LATEST => max_by(m, struct(col(Internal.SrcTs), m))
-    case Aggregation.UNION => array_sort(collect_set(m))
+  private final case class Partial(kind: String, agg: Column => Column,
+      row: Column => Column, merge: Column => Column)
+
+  private object Partial {
+    private def latest(m: Column) = struct(col(Internal.SrcTs).as("t"), m.as("v"))
     // elementwise tensor folds run through a typed Aggregator with
     // O(dim) state — never collect the window (graft.functions
     // .VectorAggregator)
-    case Aggregation.ELEMENTWISE_SUM =>
-      graft.functions.VectorAggregator("sum", toDoubleArray(m))
-    case Aggregation.ELEMENTWISE_AVG =>
-      graft.functions.VectorAggregator("avg", toDoubleArray(m))
-    case Aggregation.ELEMENTWISE_MIN =>
-      graft.functions.VectorAggregator("min", toDoubleArray(m))
-    case Aggregation.ELEMENTWISE_MAX =>
-      graft.functions.VectorAggregator("max", toDoubleArray(m))
-    case Aggregation.NOP =>
-      throw new IllegalArgumentException("NOP is not an aggregation")
+    private def vector(op: String) = Partial(s"v$op",
+      m => VectorAggregator(op, toDoubleArray(m)), toDoubleArray, VectorAggregator(op, _))
+
+    val Sum = Partial("sum", sum(_), m => m, sum(_))
+    val Count = Partial("cnt", count(_), m => when(m.isNull, 0L).otherwise(1L), sum(_))
+    val Min = Partial("min", min(_), m => m, min(_))
+    val Max = Partial("max", max(_), m => m, max(_))
+    // the greatest (src_ts, value) struct: the latest row, ties by value
+    val Latest = Partial("last", m => max(latest(m)), latest, max(_))
+    // collect_set skips nulls, so a null edge row contributes no array
+    val Items = Partial("set", collect_set(_), m => when(m.isNotNull, array(m)),
+      p => array_distinct(flatten(collect_list(p))))
+    val VecSum = vector("sum")
+    val VecMin = vector("min")
+    val VecMax = vector("max")
+  }
+
+  /** The partials a window aggregation reads (SURVEY.md §2.5), and how
+    * their merged values finish to the feature value.
+    */
+  private def partialsOf(agg: Aggregation): (Seq[Partial], Seq[Column] => Column) = {
+    import Partial._
+    agg match {
+      case Aggregation.SUM   => (Seq(Sum), _.head)
+      case Aggregation.COUNT => (Seq(Count), _.head)
+      // CASE guards the ANSI divide-by-zero when every row was null
+      case Aggregation.AVG   => (Seq(Sum, Count), { case Seq(s, n) => when(n =!= 0, s / n) })
+      case Aggregation.MIN   => (Seq(Min), _.head)
+      case Aggregation.MAX   => (Seq(Max), _.head)
+      case Aggregation.LATEST => (Seq(Latest), _.head.getField("v"))
+      case Aggregation.UNION => (Seq(Items), c => array_sort(c.head))
+      case Aggregation.ELEMENTWISE_SUM => (Seq(VecSum), _.head)
+      case Aggregation.ELEMENTWISE_AVG =>
+        (Seq(VecSum, Count), { case Seq(s, n) => transform(s, x => x / n) })
+      case Aggregation.ELEMENTWISE_MIN => (Seq(VecMin), _.head)
+      case Aggregation.ELEMENTWISE_MAX => (Seq(VecMax), _.head)
+      case Aggregation.NOP =>
+        throw new IllegalArgumentException("NOP is not an aggregation")
+    }
   }
 
   private def toDoubleArray(m: Column): Column =

@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * grows N×, the regime where a 100 TB deployment breaks a naive plan —
   * and times the competing physical strategies:
   *
-  *  - SWA bucketed pre-aggregation vs the raw range join: per-pair work
-  *    is O(window/bucket) vs O(rows-in-window), so raw degrades ~N×
-  *    faster than bucketed as density rises;
+  *  - SWA bucketed pre-aggregation: per-pair work is O(window/bucket),
+  *    not O(rows-in-window), so it must stay ~linear as density rises;
   *  - the as-of join (union-sort, one shuffle): must stay ~linear in N;
   *  - MinHash near-dup on a corpus replicated with distinct ids: the
   *    capped-bucket pipeline must stay ~linear in corpus size.
@@ -31,7 +30,7 @@ object ScaleProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_PROBE=swa|minhash|text|curate|ivf|int8|incdedup|
     //   sessionize|ivfindex|skew|bm25|topfrac|spans|winnow|bucket|
-    //   layout|pq|bloom|asof|inccur|audit|optorder|rangejoin|swainc|
+    //   layout|pq|bloom|inccur|audit|optorder|rangejoin|swainc|
     //   featday|bpe|unionvec|uvdaily|bm25inc|haminc|ivfrebuild|all
     //   selects the axis
     val axes = sys.env.getOrElse("SPARK_GRAFT_PROBE", "all")
@@ -142,13 +141,13 @@ object ScaleProbe {
     // map output of identical shuffle stages across queries in the
     // same session, so re-running the same n would report ~0 shuffle
     for (n <- Seq(3) ++ mults; if axes == "all" || axes == "swa") {
-      // per-variant timestamp offset: Spark reuses the map output of
+      // per-run timestamp offset: Spark reuses the map output of
       // shuffle stages whose canonical plan matches an earlier query's
-      // in the same session, so sharing one lineage across the two
-      // SWA variants (and the warmup) would report ~0 shuffle bytes
-      // for everything after the first run — a 1-second data offset
-      // per variant keeps the data statistically identical while
-      // defeating the reuse
+      // in the same session, so sharing one lineage across the SWA and
+      // as-of runs (and the warmup) would report ~0 shuffle bytes for
+      // everything after the first run — a 1-second data offset per
+      // run keeps the data statistically identical while defeating
+      // the reuse
       def densifiedOff(offsetSec: Int): DataFrame =
         (0 until n).map(i => ev0
             .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
@@ -166,8 +165,8 @@ object ScaleProbe {
         p
       }
       var rows = 0L
-      def runSwa(bucketMode: String, offsetSec: Int): (Double, Double) = {
-        val view = s"probe_events_${n}_$bucketMode"
+      def runSwa(offsetSec: Int): (Double, Double) = {
+        val view = s"probe_events_${n}_swa"
         val all = densifiedOff(offsetSec).cache()
         all.count()
         val dense = all.where(col("event_type") === "purchase")
@@ -177,7 +176,6 @@ object ScaleProbe {
         // (every click is a spine row)
         val spine = all.where(col("event_type") === "click")
           .select("event_id", "user_id", "ts")
-        spark.conf.set("spark.graft.swa.bucketSeconds", bucketMode)
         try {
           val df = FeathrClient.joinFeatures(spark, swaProject(view), spine,
             Some(("ts", "native")),
@@ -188,18 +186,9 @@ object ScaleProbe {
           // count() lets the optimizer skip the join entirely and times
           // a cached spine scan instead of the operator
           time(df.select(count(col("f_sum_30d"))).head().getLong(0))
-        } finally {
-          spark.conf.unset("spark.graft.swa.bucketSeconds")
-          all.unpersist()
-        }
+        } finally all.unpersist()
       }
-      // SPARK_GRAFT_PROBE_BUCKET overrides the auto bucket width
-      // (seconds) to probe the width/density trade-off: narrower
-      // buckets shrink the per-pair edge-bucket scans (the term that
-      // grows with density) at the cost of more pre-agg partials
-      val bucketMode = sys.env.getOrElse("SPARK_GRAFT_PROBE_BUCKET", "auto")
-      val (bucketed, bucketedMb) = runSwa(bucketMode, 1)
-      val (raw, rawMb) = runSwa("off", 2)
+      val (bucketed, bucketedMb) = runSwa(1)
       if (warmedUp && sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN")) {
         val (_, sanityMb) = time(
           spark.range(5000000).repartition(64, col("id")).count())
@@ -229,7 +218,6 @@ object ScaleProbe {
       if (warmedUp)
         println(f"[scale] n=$n%-3d srcRows=$rows%-9d " +
           f"swaBucketed=$bucketed%6.2fs/${bucketedMb}%8.1fMB " +
-          f"swaRawRangeJoin=$raw%6.2fs/${rawMb}%8.1fMB " +
           f"asOfJoin=$asOf%6.2fs/${asOfMb}%8.1fMB")
       warmedUp = true
     }
@@ -1107,69 +1095,6 @@ object ScaleProbe {
         warmedLay = true
       }
     }
-    // ── axis 19: as-of join — union-sort vs BUCKETED under Zipf skew ──
-    // The union-sort as-of windows by KEY alone: a hot key's whole
-    // timeline serializes into one task (axis 6 measured the
-    // straggler). The bucketed variant (spark.graft.asof.bucketSeconds)
-    // windows by (key, time bucket) and carries bucket closes in a
-    // per-key pass over BUCKET COUNTS, so the same hot key spreads
-    // across its buckets. PATHOLOGICAL skew here — Zipf base 10, the
-    // hottest key carries ln2/ln10 ≈ 30 % of ALL rows — because that is
-    // the regime the variant exists for: at axis-6's 10 % skew the
-    // union-sort plan's one extra task is cheaper than the bucketed
-    // plan's two extra shuffles, and the conf default stays "off".
-    // Identical outputs (AsofBucketParitySpec), so the delta in (wall,
-    // shuffle, max/median task time) is pure physical.
-    {
-      var warmedAsof = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "asof") {
-        def zipfKey(c: org.apache.spark.sql.Column) =
-          floor(pow(lit(10.0),
-            pmod(xxhash64(c), lit(1000000)).cast("double") / 1000000.0))
-            .cast("long")
-        def dens(offsetSec: Int): DataFrame =
-          (0 until n).map(i => ev0
-              .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
-              .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-            .reduce(_ unionByName _)
-        def runAsof(view: String, base: DataFrame): (Double, Double, Double) = {
-          val src = base.where(col("event_type") === "purchase")
-          val spine = base.where(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          src.createOrReplaceTempView(view)
-          val p = FeatureProject(s"probe_$view")
-          p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
-            timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
-            AnchorFeature("f_last", FeatureType.DOUBLE,
-              Transformation.Expr("value"), Seq(userKey))))
-          timeSkew(FeathrClient.joinFeatures(spark, p, spine,
-            Some(("ts", "native")),
-            Seq(FeatureQuery(Seq("f_last"), Seq("user_id"))))
-            .select(count(col("f_last"))).head().getLong(0))
-        }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        val zBase = dens(14)
-          .withColumn("user_id", zipfKey(col("user_id"))).cache()
-        val rows = zBase.count()
-        val u = runAsof(s"probe_asof19_u_$n", zBase)
-        spark.conf.set("spark.graft.asof.bucketSeconds", "3600")
-        val b = runAsof(s"probe_asof19_b_$n", zBase)
-        // "auto" = source span / 64, the SWA-parity derivation
-        spark.conf.set("spark.graft.asof.bucketSeconds", "auto")
-        val a = runAsof(s"probe_asof19_a_$n", zBase)
-        spark.conf.unset("spark.graft.asof.bucketSeconds")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        zBase.unpersist()
-        if (warmedAsof)
-          println(f"[scale] n=$n%-3d ASOF zipf rows=$rows%-9d " +
-            f"unionSort=${u._1}%6.2fs/${u._2}%8.1fMB/x${u._3}%5.1f  " +
-            f"bucketed=${b._1}%6.2fs/${b._2}%8.1fMB/x${b._3}%5.1f  " +
-            f"auto=${a._1}%6.2fs/${a._2}%8.1fMB/x${a._3}%5.1f")
-        warmedAsof = true
-      }
-    }
     // ── axis 23: range join — theta post-filter vs bucketed equi-join ──
     // The naive point-in-interval plan equi-joins on the KEY and
     // post-filters the BETWEEN: every same-key (point, interval) pair
@@ -1185,7 +1110,7 @@ object ScaleProbe {
     // serializes into ONE SMJ task — quadratic in the hot share, on
     // one core — while bucketing spreads the same work across the
     // key's time buckets. 30 % of rows remapped to one user
-    // (axis-19's pathological posture); max/median task time is the
+    // (a pathological hot share); max/median task time is the
     // straggler signature. Outputs asserted identical per n.
     {
       import graft.operators.RangeJoin

@@ -4,40 +4,60 @@ import graft.model._
 import graft.project._
 import graft.sources._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** The bucketed as-of join (spark.graft.asof.bucketSeconds) must be a
-  * pure PHYSICAL variant: identical results to the union-sort
-  * formulation on the fixture query, on Zipf-skewed keys, on tied
-  * timestamps (the greatest-value-struct rule), on rows exactly at
-  * bucket boundaries, and on pre-epoch timestamps (floor division).
+/** The as-of join against a reference last-value fold computed in the
+  * driver: the latest source row with src_ts <= obs_ts, ties at one
+  * timestamp won by the greatest value-struct. Checked on the fixture
+  * query (and `q_asof_bucketed`, which answers to the same oracle), on
+  * Zipf-skewed keys, on tied timestamps, on rows exactly on every grid
+  * step, and on pre-epoch timestamps.
   */
 class AsofBucketParitySpec extends SparkTestBase {
   import spark.implicits._
 
-  private def multiset(df: DataFrame): Map[String, Int] =
-    df.collect().map(_.toString).groupBy(identity).view.mapValues(_.length).toMap
+  private def multiset[A](xs: Seq[A]): Map[A, Int] =
+    xs.groupBy(identity).view.mapValues(_.length).toMap
 
-  private def withBucket[A](seconds: String)(f: => A): A = {
-    spark.conf.set("spark.graft.asof.bucketSeconds", seconds)
-    try f finally spark.conf.unset("spark.graft.asof.bucketSeconds")
-  }
+  private def opt[A](r: Row, i: Int): Option[A] =
+    if (r.isNullAt(i)) None else Some(r.getAs[A](i))
 
-  test("fixture q_asof_join: bucketed equals union-sort") {
+  test("fixture q_asof_join and q_asof_bucketed: reference last-value fold") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val plain = multiset(SparkEntry.queries("q_asof_join")(spark, sf))
-    val bucketed = withBucket("21600") {
-      multiset(SparkEntry.queries("q_asof_join")(spark, sf))
+    val events = EventTime.normalize(spark.read.parquet(s"$sf/events.parquet"))
+    // user -> their purchase (user, ts_us, value, type) rows
+    val purchases = events.where(col("event_type") === "purchase")
+      .select(col("user_id"), unix_micros(col("ts")), col("value"), col("event_type"))
+      .collect().toSeq
+      .map(r => (opt[Long](r, 0), r.getLong(1), opt[Double](r, 2), r.getString(3)))
+      .groupBy(_._1)
+    val clicks = events.where(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")))
+      .collect().toSeq
+      .map(r => (r.getLong(0), opt[Long](r, 1), r.getLong(2)))
+    val expected = multiset(clicks.map { case (id, u, t) =>
+      val last = (if (u.isEmpty) Nil else purchases.getOrElse(u, Nil)).filter(_._2 <= t)
+        .maxByOption(p => (p._2, p._3, p._4))
+      (id, u, t, last.flatMap(_._3), last.map(_._4))
+    })
+    assert(expected.nonEmpty && expected.keys.exists(_._4.isDefined))
+
+    for (q <- Seq("q_asof_join", "q_asof_bucketed")) {
+      val got = multiset(SparkEntry.queries(q)(spark, sf)
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")),
+          col("f_last_value"), col("f_last_type"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), opt[Long](r, 1), r.getLong(2),
+          opt[Double](r, 3), opt[String](r, 4))))
+      assert(got == expected, s"$q diverged from the reference fold")
     }
-    assert(plain.nonEmpty && bucketed == plain)
   }
 
   test("synthetic Zipf keys, tied timestamps, boundary rows, pre-epoch: parity") {
     // heavy-skew keys (hottest key takes ~10 % of rows), a COARSE
-    // timestamp grid (many exact ties, and every grid point a multiple
-    // of the bucket width so boundary rows are exercised), timestamps
-    // straddling the epoch (negative micros -> floor division)
+    // timestamp grid (many exact ties, and every row on a multiple of
+    // 30 s), timestamps straddling the epoch (negative micros)
     def zipfKey(c: org.apache.spark.sql.Column) =
       floor(pow(lit(100.0),
         pmod(xxhash64(c), lit(10000)).cast("double") / 10000.0)).cast("long")
@@ -52,35 +72,28 @@ class AsofBucketParitySpec extends SparkTestBase {
         pmod(xxhash64(col("id") + 23), lit(4000)) * 30 - lit(30000)).as("ts"))
     src.createOrReplaceTempView("asof_parity_src")
 
-    def run(): DataFrame = {
-      val p = FeatureProject("asof_parity")
-      p.addAnchorGroup("g",
-        Source("s", DataLocation.Table("asof_parity_src"),
-          timeWindow = Some(TimeWindowParameters("ts", "native"))),
-        Seq(AnchorFeature("f_last", FeatureType.DOUBLE,
-          Transformation.Expr("value"),
-          Seq(TypedKey("k", ValueType.INT64)))))
-      FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
-        Seq(FeatureQuery(Seq("f_last"), Seq("k"))))
-    }
+    val p = FeatureProject("asof_parity")
+    p.addAnchorGroup("g",
+      Source("s", DataLocation.Table("asof_parity_src"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))),
+      Seq(AnchorFeature("f_last", FeatureType.DOUBLE,
+        Transformation.Expr("value"),
+        Seq(TypedKey("k", ValueType.INT64)))))
+    val out: DataFrame = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("f_last"), Seq("k"))))
+    val got = multiset(out.select(col("k"), unix_micros(col("ts")), col("f_last"))
+      .as[(Long, Long, Option[Double])].collect().toSeq)
 
-    val plain = multiset(run())
-    // 30-second buckets: every source/obs timestamp lands ON a bucket
-    // boundary; 300-second buckets: ties and carries across buckets;
-    // "auto" derives span/64 from the source itself (SWA parity)
-    for (bs <- Seq("30", "300", "1000000", "auto")) {
-      val bucketed = withBucket(bs) { multiset(run()) }
-      assert(bucketed == plain, s"bucketSeconds=$bs diverged")
-    }
-    assert(plain.nonEmpty)
-  }
-
-  test("fixture q_asof_join: auto-derived bucket width equals union-sort") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val plain = multiset(SparkEntry.queries("q_asof_join")(spark, sf))
-    val auto = withBucket("auto") {
-      multiset(SparkEntry.queries("q_asof_join")(spark, sf))
-    }
-    assert(plain.nonEmpty && auto == plain)
+    // per key, source rows sorted by (ts, value): the last one at or
+    // before obs_ts is the latest row, and among ties the greatest value
+    val byKey = src.select(col("k"), unix_micros(col("ts")), col("value"))
+      .as[(Long, Long, Double)].collect().toSeq
+      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sorted.toVector).toMap
+    val expected = multiset(obs.select(col("k"), unix_micros(col("ts")))
+      .as[(Long, Long)].collect().toSeq.map { case (k, t) =>
+        (k, t, byKey.getOrElse(k, Vector.empty).takeWhile(_._1 <= t).lastOption.map(_._2))
+      })
+    assert(expected.keys.exists(_._3.isDefined) && expected.keys.exists(_._3.isEmpty))
+    assert(got == expected)
   }
 }

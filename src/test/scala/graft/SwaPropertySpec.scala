@@ -6,18 +6,29 @@ import graft.sources._
 
 import org.apache.spark.sql.functions._
 
+/** One source row of the aggregation-kind property: a scalar, a set
+  * item and a vector measure, each possibly null, and a sub-key.
+  */
+case class SwaKindEvent(k: Long, ts_us: Long, v: Option[Double], u: Option[Int],
+    vec: Option[Seq[Double]], g: String)
+
 /** Property test over duration grammar × SWA: random odd/sub-second
-  * windows (100ms–4s at millisecond granularity) over randomly-timed
-  * events must produce the same aggregates as an in-memory reference
-  * fold — on BOTH physical plans (bucketed pre-aggregation and the raw
-  * range join). Guards the window arithmetic end to end: parse →
-  * micros → interval/bucket boundaries → `(t − w, t]` inclusivity.
+  * windows (100ms–4s at millisecond granularity, and 1–127 µs windows
+  * whose buckets are single microseconds) over randomly-timed events
+  * must produce the same aggregates as an in-memory reference fold, for
+  * every aggregation kind, with and without group_by and record limits.
+  * The window join has two shapes — bucket partials, and the top-k
+  * newest rows per bucket for a record limit — and where a test says
+  * "both plans" it runs each. Guards the window arithmetic end to end:
+  * parse → micros → bucket boundaries → `(t − w, t]` inclusivity.
   */
 class SwaPropertySpec extends SparkTestBase {
   import spark.implicits._
 
   test("random ms-granularity windows match the reference fold on both plans") {
     val rnd = new scala.util.Random(42)
+    // a record limit above every window's row count keeps every row, so
+    // the top-k plan must give the partials plan's answer
     for (round <- 1 to 5) {
       val windowMs = 100 + rnd.nextInt(3900)
       val wUs = windowMs * 1000L
@@ -38,7 +49,13 @@ class SwaPropertySpec extends SparkTestBase {
         AnchorFeature("f_sum", FeatureType.DOUBLE,
           Transformation.windowAgg("v", "SUM", s"${windowMs}ms"), Seq(key)),
         AnchorFeature("f_cnt", FeatureType.INT64,
-          Transformation.windowAgg("v", "COUNT", s"${windowMs}ms"), Seq(key))))
+          Transformation.windowAgg("v", "COUNT", s"${windowMs}ms"), Seq(key)),
+        AnchorFeature("f_sum_k", FeatureType.DOUBLE,
+          Transformation.WindowAgg("v", Aggregation.SUM,
+            Durations.parse(s"${windowMs}ms"), limit = Some(1000)), Seq(key)),
+        AnchorFeature("f_cnt_k", FeatureType.INT64,
+          Transformation.WindowAgg("v", Aggregation.COUNT,
+            Durations.parse(s"${windowMs}ms"), limit = Some(1000)), Seq(key))))
       val obs = df.select($"k", $"ts", $"ts_us")
 
       val expected = events.map { case (k, t, _) =>
@@ -46,20 +63,17 @@ class SwaPropertySpec extends SparkTestBase {
         (k, t) -> ((in.map(_._3).sum, in.size.toLong))
       }.toMap
 
-      for (mode <- Seq("auto", "off")) {
-        spark.conf.set("spark.graft.swa.bucketSeconds", mode)
-        try {
-          val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
-            Seq(FeatureQuery(Seq("f_sum", "f_cnt"), Seq("k")))).collect()
-          assert(out.length == events.length)
-          out.foreach { r =>
-            val (es, ec) = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
-            assert(r.getAs[Long]("f_cnt") == ec,
-              s"count mismatch: window=${windowMs}ms plan=$mode")
-            assert(math.abs(r.getAs[Double]("f_sum") - es) < 1e-9,
-              s"sum mismatch: window=${windowMs}ms plan=$mode")
-          }
-        } finally spark.conf.unset("spark.graft.swa.bucketSeconds")
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(Seq("f_sum", "f_cnt", "f_sum_k", "f_cnt_k"), Seq("k")))).collect()
+      assert(out.length == events.length)
+      out.foreach { r =>
+        val (es, ec) = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
+        for ((sumCol, cntCol) <- Seq(("f_sum", "f_cnt"), ("f_sum_k", "f_cnt_k"))) {
+          assert(r.getAs[Long](cntCol) == ec,
+            s"count mismatch: window=${windowMs}ms feature=$cntCol")
+          assert(math.abs(r.getAs[Double](sumCol) - es) < 1e-9,
+            s"sum mismatch: window=${windowMs}ms feature=$sumCol")
+        }
       }
     }
   }
@@ -81,6 +95,11 @@ class SwaPropertySpec extends SparkTestBase {
       timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
       AnchorFeature("f_sum2", FeatureType.DOUBLE,
         Transformation.windowAgg("v", "SUM", s"${windowMs}ms"),
+        Seq(TypedKey("k1", ValueType.INT64), TypedKey("k2", ValueType.STRING))),
+      // the top-k plan, its limit above every window's row count
+      AnchorFeature("f_sum2_k", FeatureType.DOUBLE,
+        Transformation.WindowAgg("v", Aggregation.SUM,
+          Durations.parse(s"${windowMs}ms"), limit = Some(1000)),
         Seq(TypedKey("k1", ValueType.INT64), TypedKey("k2", ValueType.STRING)))))
     val obs = df.select($"k1", $"k2", $"ts", $"ts_us")
 
@@ -90,19 +109,15 @@ class SwaPropertySpec extends SparkTestBase {
       (k1, k2, t) -> in.map(_._4).sum
     }.toMap
 
-    for (mode <- Seq("auto", "off")) {
-      spark.conf.set("spark.graft.swa.bucketSeconds", mode)
-      try {
-        val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
-          Seq(FeatureQuery(Seq("f_sum2"), Seq("k1", "k2")))).collect()
-        assert(out.length == events.length)
-        out.foreach { r =>
-          val want = expected((r.getAs[Long]("k1"), r.getAs[String]("k2"),
-            r.getAs[Long]("ts_us")))
-          assert(math.abs(r.getAs[Double]("f_sum2") - want) < 1e-9,
-            s"composite-key sum mismatch plan=$mode")
-        }
-      } finally spark.conf.unset("spark.graft.swa.bucketSeconds")
+    val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("f_sum2", "f_sum2_k"), Seq("k1", "k2")))).collect()
+    assert(out.length == events.length)
+    out.foreach { r =>
+      val want = expected((r.getAs[Long]("k1"), r.getAs[String]("k2"),
+        r.getAs[Long]("ts_us")))
+      for (c <- Seq("f_sum2", "f_sum2_k"))
+        assert(math.abs(r.getAs[Double](c) - want) < 1e-9,
+          s"composite-key sum mismatch feature=$c")
     }
   }
 
@@ -148,7 +163,7 @@ class SwaPropertySpec extends SparkTestBase {
     }
   }
 
-  test("record-limit (top-k newest) matches the reference fold on both plans") {
+  test("record-limit (top-k newest) matches the reference fold") {
     val rnd = new scala.util.Random(19)
     for (round <- 1 to 3) {
       val windowMs = 200 + rnd.nextInt(3000)
@@ -180,30 +195,23 @@ class SwaPropertySpec extends SparkTestBase {
         (k, t) -> ((top.map(_._3).sum, top.size.toLong))
       }.toMap
 
-      for (mode <- Seq("auto", "off")) {
-        spark.conf.set("spark.graft.swa.bucketSeconds", mode)
-        try {
-          val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
-            Seq(FeatureQuery(Seq("f_top3", "f_top3_cnt"), Seq("k"))))
-          val plan = out.queryExecution.analyzed.toString
-          if (mode == "off") assert(!plan.contains("__graft_bl_rn"))
-          else assert(plan.contains("__graft_bl_rn"),
-            "record-limit must take the bucketed top-k plan by default")
-          val rows = out.collect()
-          assert(rows.length == events.length)
-          rows.foreach { r =>
-            val (es, ec) = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
-            assert(r.getAs[Long]("f_top3_cnt") == ec,
-              s"limit count mismatch: window=${windowMs}ms plan=$mode")
-            assert(math.abs(r.getAs[Double]("f_top3") - es) < 1e-9,
-              s"limit sum mismatch: window=${windowMs}ms plan=$mode")
-          }
-        } finally spark.conf.unset("spark.graft.swa.bucketSeconds")
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(Seq("f_top3", "f_top3_cnt"), Seq("k"))))
+      assert(out.queryExecution.analyzed.toString.contains("__graft_bl_rn"),
+        "record-limit must take the bucketed top-k plan")
+      val rows = out.collect()
+      assert(rows.length == events.length)
+      rows.foreach { r =>
+        val (es, ec) = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
+        assert(r.getAs[Long]("f_top3_cnt") == ec,
+          s"limit count mismatch: window=${windowMs}ms")
+        assert(math.abs(r.getAs[Double]("f_top3") - es) < 1e-9,
+          s"limit sum mismatch: window=${windowMs}ms")
       }
     }
   }
 
-  test("group_by (+ top-k-groups limit) matches the reference fold on both plans") {
+  test("group_by (+ top-k-groups limit) matches the reference fold") {
     val rnd = new scala.util.Random(7)
     for (round <- 1 to 3) {
       val windowMs = 200 + rnd.nextInt(3000)
@@ -233,21 +241,170 @@ class SwaPropertySpec extends SparkTestBase {
         (k, t) -> groups.sortBy { case (g, s) => (-s, g) }.take(2).toMap
       }.toMap
 
-      for (mode <- Seq("auto", "off")) {
-        spark.conf.set("spark.graft.swa.bucketSeconds", mode)
-        try {
-          val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
-            Seq(FeatureQuery(Seq("f_by_g"), Seq("k")))).collect()
-          assert(out.length == events.length)
-          out.foreach { r =>
-            val got = r.getAs[Map[String, Double]]("f_by_g")
-            val want = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
-            assert(got.keySet == want.keySet &&
-              want.forall { case (g, s) => math.abs(got(g) - s) < 1e-9 },
-              s"group map mismatch: window=${windowMs}ms plan=$mode got=$got want=$want")
-          }
-        } finally spark.conf.unset("spark.graft.swa.bucketSeconds")
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(Seq("f_by_g"), Seq("k")))).collect()
+      assert(out.length == events.length)
+      out.foreach { r =>
+        val got = r.getAs[Map[String, Double]]("f_by_g")
+        val want = expected((r.getAs[Long]("k"), r.getAs[Long]("ts_us")))
+        assert(got.keySet == want.keySet &&
+          want.forall { case (g, s) => math.abs(got(g) - s) < 1e-9 },
+          s"group map mismatch: window=${windowMs}ms got=$got want=$want")
       }
+    }
+  }
+
+  /** Engine cell vs reference: Options, sequences and maps compared
+    * element by element, doubles within 1e-9.
+    */
+  private def same(got: Any, want: Any): Boolean = (got, want) match {
+    case (g: Option[_], w: Option[_]) =>
+      g.isEmpty == w.isEmpty && g.forall(x => same(x, w.get))
+    case (g: Double, w: Double) => math.abs(g - w) < 1e-9
+    case (g: scala.collection.Seq[_], w: scala.collection.Seq[_]) =>
+      g.size == w.size && g.zip(w).forall { case (a, b) => same(a, b) }
+    case (g: scala.collection.Map[_, _], w: scala.collection.Map[_, _]) =>
+      g.keySet == w.keySet && w.forall { case (key, b) =>
+        same(Option(g.asInstanceOf[scala.collection.Map[Any, Any]](key)), b) }
+    case _ => got == want
+  }
+
+  test("LATEST, UNION, ELEMENTWISE_* match the reference fold (group_by or not)") {
+    val rnd = new scala.util.Random(23)
+    val base = 1700000000000000L
+    for (round <- 1 to 3) {
+      val windowMs = 200 + rnd.nextInt(3000)
+      val wUs = windowMs * 1000L
+      // keys 0-2 carry about a quarter null measures; every measure of
+      // key 3 is null, so its windows hold rows but no value
+      val events = for (k <- 0 until 4; i <- 0 until 20) yield {
+        def maybe[A](a: => A): Option[A] =
+          if (k == 3 || rnd.nextInt(4) == 0) None else Some(a)
+        SwaKindEvent(k.toLong, base + (rnd.nextLong().abs % 8000000L),
+          maybe(rnd.nextInt(100).toDouble), maybe(rnd.nextInt(5)),
+          maybe(Seq.fill(3)(rnd.nextInt(20).toDouble)), s"g${i % 3}")
+      }
+      val df = events.toDF().withColumn("ts", timestamp_micros($"ts_us"))
+      val view = s"swa_prop_kind_$round"
+      df.createOrReplaceTempView(view)
+
+      val p = FeatureProject(s"propkind$round")
+      val key = TypedKey("k", ValueType.INT64)
+      val window = Durations.parse(s"${windowMs}ms")
+      val kinds = Seq("last" -> ("v", Aggregation.LATEST), "set" -> ("u", Aggregation.UNION),
+        "esum" -> ("vec", Aggregation.ELEMENTWISE_SUM), "eavg" -> ("vec", Aggregation.ELEMENTWISE_AVG),
+        "emin" -> ("vec", Aggregation.ELEMENTWISE_MIN), "emax" -> ("vec", Aggregation.ELEMENTWISE_MAX))
+      val feats = kinds.flatMap { case (name, (m, agg)) => Seq(
+        AnchorFeature(s"f_$name", FeatureType.UNSPECIFIED,
+          Transformation.WindowAgg(m, agg, window), Seq(key)),
+        AnchorFeature(s"g_$name", FeatureType.UNSPECIFIED,
+          Transformation.WindowAgg(m, agg, window, groupBy = Some("g")), Seq(key))) }
+      p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), feats)
+      // every event's own (key, ts), plus one spine row per key an hour
+      // before any event: its window is empty and every feature null
+      val obsRows = events.map(e => (e.k, e.ts_us)) ++
+        (0 until 4).map(k => (k.toLong, base - 3600000000L))
+      val obs = obsRows.toDF("k", "ts_us").withColumn("ts", timestamp_micros($"ts_us"))
+
+      def fold(in: Seq[SwaKindEvent]): Map[String, Any] = {
+        val vecs = in.flatMap(_.vec)
+        val esum = if (vecs.isEmpty) None else Some(vecs.transpose.map(_.sum))
+        Map(
+          "last" -> in.maxBy(e => (e.ts_us, e.v)).v,
+          "set" -> Some(in.flatMap(_.u).distinct.sorted),
+          "esum" -> esum,
+          "eavg" -> esum.map(_.map(_ / vecs.size)),
+          "emin" -> (if (vecs.isEmpty) None else Some(vecs.transpose.map(_.min))),
+          "emax" -> (if (vecs.isEmpty) None else Some(vecs.transpose.map(_.max))))
+      }
+
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(feats.map(_.name), Seq("k")))).collect()
+      assert(out.length == obsRows.length)
+      out.foreach { r =>
+        val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+        val in = events.filter(e => e.k == k && e.ts_us > t - wUs && e.ts_us <= t)
+        val flat = if (in.isEmpty) None else Some(fold(in))
+        val grouped = if (in.isEmpty) None
+          else Some(in.groupBy(_.g).map { case (g, rows) => g -> fold(rows) })
+        for ((name, _) <- kinds) {
+          val got = Option(r.getAs[Any](s"f_$name"))
+          val want = flat.flatMap(_(name).asInstanceOf[Option[Any]])
+          assert(same(got, want),
+            s"f_$name: window=${windowMs}ms k=$k t=$t got=$got want=$want")
+          val gotG = Option(r.getAs[Any](s"g_$name"))
+          val wantG = grouped.map(_.map { case (g, f) => g -> f(name) })
+          assert(same(gotG, wantG),
+            s"g_$name: window=${windowMs}ms k=$k t=$t got=$gotG want=$wantG")
+        }
+      }
+    }
+  }
+
+  test("1us, 63us and 127us windows match the reference fold") {
+    val rnd = new scala.util.Random(5)
+    // 3 keys x 40 events inside 400 us: windows this short still hold
+    // several rows, and equal timestamps tie
+    val events = for (k <- 0 until 3; _ <- 0 until 40) yield
+      (k.toLong, 1700000000000000L + rnd.nextInt(400), rnd.nextInt(100).toDouble)
+    val df = events.toDF("k", "ts_us", "v").withColumn("ts", timestamp_micros($"ts_us"))
+    df.createOrReplaceTempView("swa_prop_us")
+    val obs = df.select($"k", $"ts", $"ts_us")
+    val key = TypedKey("k", ValueType.INT64)
+
+    for (wUs <- Seq(1L, 63L, 127L)) {
+      val window = Durations.parse(s"${wUs}us")
+      val p = FeatureProject(s"propus$wUs")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_us"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+        AnchorFeature("f_sum", FeatureType.DOUBLE,
+          Transformation.WindowAgg("v", Aggregation.SUM, window), Seq(key)),
+        AnchorFeature("f_cnt", FeatureType.INT64,
+          Transformation.WindowAgg("v", Aggregation.COUNT, window), Seq(key)),
+        AnchorFeature("f_max", FeatureType.DOUBLE,
+          Transformation.WindowAgg("v", Aggregation.MAX, window), Seq(key)),
+        AnchorFeature("f_last", FeatureType.DOUBLE,
+          Transformation.WindowAgg("v", Aggregation.LATEST, window), Seq(key)),
+        AnchorFeature("f_top2", FeatureType.DOUBLE,
+          Transformation.WindowAgg("v", Aggregation.SUM, window, limit = Some(2)),
+          Seq(key))))
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(Seq("f_sum", "f_cnt", "f_max", "f_last", "f_top2"), Seq("k"))))
+        .collect()
+      assert(out.length == events.length)
+      out.foreach { r =>
+        val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+        val in = events.filter { case (k2, t2, _) => k2 == k && t2 > t - wUs && t2 <= t }
+        val ctx = s"window=${wUs}us k=$k t=$t"
+        assert(r.getAs[Long]("f_cnt") == in.size, ctx)
+        assert(math.abs(r.getAs[Double]("f_sum") - in.map(_._3).sum) < 1e-9, ctx)
+        assert(r.getAs[Double]("f_max") == in.map(_._3).max, ctx)
+        assert(r.getAs[Double]("f_last") == in.maxBy(e => (e._2, e._3))._3, ctx)
+        val top2 = in.sortBy { case (_, t2, v2) => (-t2, -v2) }.take(2).map(_._3).sum
+        assert(math.abs(r.getAs[Double]("f_top2") - top2) < 1e-9, ctx)
+      }
+    }
+  }
+
+  test("non-positive windows are refused by anchor group and feature") {
+    Seq((1L, 1700000000000000L, 1.0)).toDF("k", "ts_us", "v")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_bad")
+    val obs = Seq((1L, 1700000000000000L)).toDF("k", "ts_us")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+    for (w <- Seq("0ms", "-5d")) {
+      val p = FeatureProject("propbad")
+      p.addAnchorGroup("bad_window_anchor", Source("src", DataLocation.Table("swa_prop_bad"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+        AnchorFeature("f_bad_window", FeatureType.DOUBLE,
+          Transformation.windowAgg("v", "SUM", w), Seq(TypedKey("k", ValueType.INT64)))))
+      val e = intercept[IllegalArgumentException] {
+        FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+          Seq(FeatureQuery(Seq("f_bad_window"), Seq("k"))))
+      }
+      assert(e.getMessage.contains("bad_window_anchor") &&
+        e.getMessage.contains("f_bad_window"), s"window $w: ${e.getMessage}")
     }
   }
 }
