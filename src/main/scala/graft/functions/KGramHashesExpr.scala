@@ -9,15 +9,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Every word k-gram (shingle) of a whitespace-tokenized string as a
   * 64-bit rolling hash, WITH multiplicity, in one codegen'd pass —
-  * the zero-shuffle replacement for
-  * [[graft.operators.Dedup.shingleRows]]' posexplode + ordering-window
-  * formulation wherever the consumer only needs shingle EQUALITY
-  * (exact-Jaccard verification sets, repetition counting, the
-  * persisted near-dup index): O(tokens) total work, and the 8-byte
+  * zero-shuffle shingles wherever the consumer only needs shingle
+  * EQUALITY (exact-Jaccard verification sets, repetition counting, the
+  * persisted near-dup index) or a hash of each shingle (the MinHash
+  * signature, [[MinHashSig]]): O(tokens) total work, and the 8-byte
   * hashes replace k-token strings in every downstream exchange.
   *
-  * Edge parity with `shingleRows` (and with the DuckDB oracles'
-  * `string_split` formulation): fewer than `k` tokens emit ONE
+  * Edge parity with the word-string shingles of the DuckDB oracles'
+  * `string_split` formulation: fewer than `k` tokens emit ONE
   * truncated gram, and token-LESS input (empty / all-whitespace)
   * emits the single empty-token gram — `split("", " ")` yields one
   * empty token, and two empty documents must still Jaccard-match at
@@ -57,12 +56,16 @@ object KGramHashes64 {
     grams
   }
 
-  def hashes(s: UTF8String, k: Int): ArrayData = {
-    if (s == null) return null
-    val t0 = tokenHashes(s.toString)
-    val t = if (t0.length == 0) Array(EmptyTokenHash) else t0
-    new GenericArrayData(gramHashes(t, k))
+  /** Every k-gram hash of `str` with the edge cases above: token-less
+    * text hashes as the single empty token (shared by [[hashes]] and
+    * the MinHash signature, [[MinHashSig]]). */
+  private[functions] def grams(str: String, k: Int): Array[Long] = {
+    val t0 = tokenHashes(str)
+    gramHashes(if (t0.length == 0) Array(EmptyTokenHash) else t0, k)
   }
+
+  def hashes(s: UTF8String, k: Int): ArrayData =
+    if (s == null) null else new GenericArrayData(grams(s.toString, k))
 }
 
 case class KGramHashes64Expr(child: Expression, k: Int)

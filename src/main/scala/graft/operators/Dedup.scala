@@ -55,104 +55,39 @@ object Dedup {
     df.join(groups, Seq(idCol), "left_semi")
   }
 
-  /** Word n-gram shingles of the normalized text. */
-  def shingles(text: Column, n: Int): Column = {
-    val words = split(normText(text), " ")
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(words) - n, lit(0))),
-      i => concat_ws(" ", slice(words, i + 1, lit(n)))))
-  }
-
-  /** (id, shingle) ROWS via posexplode + lead windows — fully
-    * whole-stage-codegen'd, unlike the array-lambda [[shingles]] (HOFs
-    * run interpreted). One shuffle by id (the window), which downstream
-    * per-id aggregations then reuse. Preferred at scale.
-    *
-    * Rows are NOT deduplicated — a repeated shingle appears once per
-    * occurrence. This is deliberate: a `distinct()` here would shuffle
-    * the LARGEST intermediate in the dedup pipeline a second time, and
-    * neither consumer needs it — MinHash min-folds are
-    * duplicate-insensitive, and set-semantics consumers aggregate with
-    * `collect_set`.
-    */
-  def shingleRows(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(idCol).orderBy("__pos")
-    val parts = (1 until n).map(i => lead(col("__w"), i).over(w))
-    df.select(col(idCol), posexplode(split(normText(col(textCol)), " "))
-        .as(Seq("__pos", "__w")))
-      .select(col(idCol), col("__pos"),
-        concat_ws(" ", col("__w") +: parts: _*).as("__s"),
-        row_number().over(w).as("__rn"),
-        count(lit(1)).over(Window.partitionBy(idCol)).as("__n"))
-      .where(col("__rn") <= greatest(col("__n") - n + 1, lit(1)))
-      .select(col(idCol), col("__s"))
-  }
-
   /** The distinct shingle-HASH set of a document as a zero-shuffle
     * projection (codegen'd rolling k-gram hashes,
-    * [[graft.functions.KGramHashes64Expr]]) — replaces
-    * `shingleRows → groupBy(id) → collect_set(xxhash64)` wherever the
-    * consumer needs only shingle EQUALITY (exact-Jaccard verification,
-    * the persisted index): no ordering windows, no exchange, 8-byte
-    * elements. Edge parity with [[shingleRows]]: < n tokens → one
-    * truncated shingle, token-less text → the empty-token shingle (two
-    * empty documents still Jaccard-match at 1.0, as the string
-    * formulation and the DuckDB oracles do).
+    * [[graft.functions.KGramHashes64Expr]]) — shingle EQUALITY is all
+    * its consumers need (exact-Jaccard verification, the persisted
+    * index): no exchange, 8-byte elements. These are the same k-gram
+    * hashes the MinHash signature folds. Edge parity with the DuckDB
+    * oracles' `string_split` shingles: < n tokens → one truncated
+    * shingle, token-less text → the empty-token shingle (two empty
+    * documents still Jaccard-match at 1.0).
     */
   def shingleHashSet(text: Column, n: Int): Column =
     array_distinct(
       graft.functions.KGramHashes64Expr.kgramHashes64(normText(text), n))
 
-  /** MinHash signatures as an aggregation, the 100 TB-safe shape:
-    * explode shingles, hash each ONCE into two 64-bit values, and build
-    * the `numHashes` families via Kirsch-Mitzenmacher (`h1 + k*h2`) as
-    * `numHashes` map-side-combinable `min` aggregates. Everything is
-    * whole-stage-codegen'd; the only shuffle moves one 128-long partial
-    * state per doc. (A naive `transform(sequence(0,127), k ->
-    * array_min(transform(shingles, ...)))` column re-evaluates the
-    * interpreted shingle lambda once per hash family — 128× the scan.)
-    *
-    * Returns (idCol, sig: array<bigint>). Docs with no shingles
-    * (empty text) produce no row.
+  /** LSH band rows `(idCol, band_id, band_hash)` of every non-null
+    * text: the [[graft.functions.MinHashSigExpr]] signature, computed
+    * inside the scan projection, banded by [[lshBandsFromSig]]. The
+    * only corpus-wide shuffle in candidate generation then moves
+    * (id, band) rows, never shingles.
     */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 128, shingleSize: Int = 5): DataFrame =
-    minhashSignaturesFromRows(
-      shingleRows(df.repartition(col(idCol)), textCol, idCol, shingleSize),
-      idCol, numHashes)
-
-  /** Same, over precomputed (id, __s) shingle rows — lets one persisted
-    * shingle scan feed both the signatures and the verification join.
-    */
-  def minhashSignaturesFromRows(shRows: DataFrame, idCol: String,
-      numHashes: Int): DataFrame = {
-    // 31-bit masks keep h1 + k*h2 inside a long under ANSI arithmetic
-    // (max 2^31 + 127*2^31 << 2^63); 2^31 hash space per family is
-    // ample for min-hashing
-    // shingleRows shuffles by id for its windows; the groupBy(id)
-    // below reuses that partitioning (no second exchange). The whole
-    // family fold is ONE typed aggregate — not numHashes min columns,
-    // whose codegen dominated the pipeline (see MinHashAggregator).
-    val ex = shRows
-      .select(col(idCol),
-        xxhash64(col("__s")).bitwiseAND(0x7fffffffL).as("__h1"),
-        xxhash64(col("__s"), lit(1)).bitwiseAND(0x7fffffffL).as("__h2"))
-    ex.groupBy(col(idCol))
-      .agg(graft.functions.MinHashAggregator(numHashes)(
-        col("__h1"), col("__h2")).as("sig"))
-  }
+  private[operators] def minhashBands(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, bands: Int, shingleSize: Int): DataFrame =
+    lshBandsFromSig(
+      df.select(col(idCol), graft.functions.MinHashSigExpr.minhashSig(
+          normText(col(textCol)), numHashes, shingleSize).as("sig"))
+        .where(col("sig").isNotNull),
+      idCol, numHashes, bands)
 
   /** LSH banding: split the signature into `bands` groups of
     * `numHashes / bands` values each; docs agreeing on any full band
-    * become candidates. Returns (idCol, band_id, band_hash).
+    * become candidates. Input is a precomputed (id, sig) signature
+    * frame; returns (idCol, band_id, band_hash).
     */
-  def lshBands(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 128, bands: Int = 16, shingleSize: Int = 5): DataFrame =
-    lshBandsFromSig(minhashSignatures(df, textCol, idCol, numHashes, shingleSize),
-      idCol, numHashes, bands)
-
-  /** Banding over a precomputed (id, sig) signature frame. */
   def lshBandsFromSig(sig: DataFrame, idCol: String,
       numHashes: Int, bands: Int): DataFrame = {
     val rowsPerBand = numHashes / bands
@@ -256,16 +191,8 @@ object Dedup {
   def minhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double, numHashes: Int = 128, bands: Int = 16,
       shingleSize: Int = 5): DataFrame = {
-    // signatures computed inside the scan projection by the native
-    // codegen'd expression — the only corpus-wide shuffle in candidate
-    // generation moves (id, band) rows, never shingle rows (the
-    // pipeline formulation, kept as minhashSignatures, shuffles every
-    // shingle of every doc by id before folding)
-    val sig = df.select(col(idCol),
-      graft.functions.MinHashSigExpr.minhashSig(
-        normText(col(textCol)), numHashes, shingleSize).as("sig"))
-      .where(col("sig").isNotNull)
-    val capped = capBuckets(lshBandsFromSig(sig, idCol, numHashes, bands),
+    val capped = capBuckets(
+      minhashBands(df, textCol, idCol, numHashes, bands, shingleSize),
       Seq("band_id", "band_hash"), idCol)
     // the candidate set is bounded (bucket-capped pairs, not corpus):
     // spill it to parquet NOW — the downstream consumers analyze a
@@ -589,39 +516,10 @@ object Dedup {
       lit(0L), (acc, v) => acc.bitwiseOR(v))
   }
 
-  /** SimHash signatures as an aggregation (same rationale as
-    * [[minhashSignatures]]): explode tokens, hash each once, and build
-    * the 64 bit-sums as map-side-combinable aggregates, then assemble
-    * the signature from the signs. Returns (idCol, sig: bigint).
-    */
-  def simhashSignatures(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val ex = df.repartition(col(idCol))
-      .select(col(idCol), explode(split(normText(col(textCol)), " ")).as("__t"))
-      .select(col(idCol), xxhash64(col("__t")).as("__h"))
-    val sums = (0 until 64).map(i =>
-      sum(when(shiftright(col("__h"), i).bitwiseAND(1) === 1, 1L)
-        .otherwise(-1L)).as(s"__b$i"))
-    val sig = (0 until 64).map(i =>
-      when(col(s"__b$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    ex.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-      .select(col(idCol), sig.as("sig"))
-  }
-
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidates: group by signature prefix blocks
-    * (docs within hamming distance d share at least one of d+1 blocks —
-    * the classic pigeonhole blocking), verify with full hamming. Pairs
-    * come from the same in-bucket expansion as minhash
-    * ([[candidatePairs]] shape, carrying the signature alongside the
-    * id so the hamming verification happens inside the expansion) —
-    * one plan branch, no self-join, no operator-internal cache, and
-    * the returned frame is LAZY (nothing to release, so nothing to
-    * spill).
-    */
   /** Near-duplicate pairs between a DELTA corpus and a REFERENCE
     * corpus — the continuous-ingestion shape (today's crawl against
     * the accumulated corpus): candidates come from joining the delta's
@@ -646,13 +544,10 @@ object Dedup {
       textCol: String, idCol: String, threshold: Double,
       numHashes: Int = 128, bands: Int = 16,
       shingleSize: Int = 5): DataFrame = {
-    def sigOf(df: DataFrame): DataFrame = df.select(col(idCol),
-      graft.functions.MinHashSigExpr.minhashSig(
-        normText(col(textCol)), numHashes, shingleSize).as("sig"))
-      .where(col("sig").isNotNull)
-    val dBands = lshBandsFromSig(sigOf(delta), idCol, numHashes, bands)
+    val dBands = minhashBands(delta, textCol, idCol, numHashes, bands, shingleSize)
       .select(col("band_id"), col("band_hash"), col(idCol).as("id_delta"))
-    val rBands = capBuckets(lshBandsFromSig(sigOf(reference), idCol, numHashes, bands),
+    val rBands = capBuckets(
+      minhashBands(reference, textCol, idCol, numHashes, bands, shingleSize),
       Seq("band_id", "band_hash"), idCol)
       .select(col("band_id"), col("band_hash"), col(idCol).as("id_ref"))
     val (cands, candBytes) = Spill.roundTripSized(
@@ -752,10 +647,19 @@ object Dedup {
           x => x.getField("__para")), sep).as(textCol))
   }
 
+  /** SimHash near-dup candidates: group by signature prefix blocks
+    * (docs within hamming distance d share at least one of d+1 blocks —
+    * the classic pigeonhole blocking), verify with full hamming. Pairs
+    * come from the same in-bucket expansion as minhash
+    * ([[candidatePairs]] shape, carrying the signature alongside the
+    * id so the hamming verification happens inside the expansion) —
+    * one plan branch, no self-join, no operator-internal cache, and
+    * the returned frame is LAZY (nothing to release, so nothing to
+    * spill).
+    */
   def simhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, blocks: Int = 4): DataFrame =
     // the native codegen'd expression: one pass per row, zero shuffle
-    // (simhashSignatures remains as the SQL-combinator formulation)
     hamming64NearDuplicates(
       df.select(col(idCol),
         graft.functions.SimHash64Expr.simhash64(

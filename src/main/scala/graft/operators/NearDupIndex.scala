@@ -36,16 +36,21 @@ object NearDupIndex {
   private val S = "shingles"
   private val C = "config"
 
-  /** Persisted hash-family version. The shingle sets are hash VALUES
-    * on disk; a store written under one family intersected with a
-    * delta hashed under another gives jaccard ≈ 0 — every duplicate
-    * silently admitted. So the family is pinned in `config/` alongside
-    * the LSH parameters, and `query`/`append` refuse a store written
-    * under a different one (rebuild the index instead). Bump this
-    * whenever [[Dedup.shingleHashSet]] or the signature expression's
-    * hash family changes.
+  /** Persisted hash-family version: one k-gram hash, one family. The
+    * shingle sets are k-gram hash VALUES on disk
+    * ([[Dedup.shingleHashSet]]) and the band rows are bands of the one
+    * MinHash signature ([[graft.functions.MinHashSig]]), whose families
+    * fold those same k-gram hashes. A store written under one family
+    * intersected or band-joined with a delta hashed under another
+    * matches (almost) nothing — every duplicate silently admitted. So
+    * the family is pinned in `config/` alongside the LSH parameters,
+    * and `query`/`append` refuse a store written under a different one
+    * (rebuild the index instead). Bump this whenever the k-gram hash
+    * or the signature's families change. `kgram_fnv_v1` stores carry
+    * the same shingle sets but bands of the unreduced `h1 + k·h2`
+    * families.
     */
-  private val HashFamily = "kgram_fnv_v1"
+  private val HashFamily = "kgram_fnv_v2"
 
   def build(reference: DataFrame, path: String,
       textCol: String, idCol: String,
@@ -61,7 +66,7 @@ object NearDupIndex {
     // independent dirs, independent plans: concurrent (wall = max)
     Par.run(
       () => Dedup.capBuckets(
-        bandsOf(reference, textCol, idCol, numHashes, bands, shingleSize),
+        Dedup.minhashBands(reference, textCol, idCol, numHashes, bands, shingleSize),
         Seq("band_id", "band_hash"), idCol)
         .select(col("band_id"), col("band_hash"), col(idCol).as("id"))
         .write.mode("overwrite").parquet(s"$path/$B"),
@@ -77,7 +82,7 @@ object NearDupIndex {
   def append(delta: DataFrame, path: String,
       textCol: String, idCol: String): Unit = {
     val (numHashes, bands, shingleSize) = readConfig(delta.sparkSession, path)
-    bandsOf(delta, textCol, idCol, numHashes, bands, shingleSize)
+    Dedup.minhashBands(delta, textCol, idCol, numHashes, bands, shingleSize)
       .select(col("band_id"), col("band_hash"), col(idCol).as("id"))
       .write.mode("append").parquet(s"$path/$B")
     shingleStore(delta, textCol, idCol, shingleSize)
@@ -93,7 +98,7 @@ object NearDupIndex {
       textCol: String, idCol: String, threshold: Double): DataFrame = {
     val (numHashes, bands, shingleSize) = readConfig(spark, path)
     val (dBands, dBandBytes) = Spill.roundTripSized(
-      bandsOf(delta, textCol, idCol, numHashes, bands, shingleSize)
+      Dedup.minhashBands(delta, textCol, idCol, numHashes, bands, shingleSize)
         .select(col("band_id"), col("band_hash"), col(idCol).as("id_delta")))
     val bcLimit = spark.conf
       .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
@@ -263,7 +268,7 @@ object NearDupIndex {
     val nDelta = deltaRowsHint.getOrElse(delta.count())
     val dBandBytes = nDelta * bands * 48L
     val dBands =
-      bandsOf(delta, textCol, idCol, numHashes, bands, shingleSize)
+      Dedup.minhashBands(delta, textCol, idCol, numHashes, bands, shingleSize)
         .select(col("band_id"), col("band_hash"), col(idCol).as("id"))
         .persist()
     // ownership of the persisted dBands passes to admitAppend /
@@ -429,18 +434,6 @@ object NearDupIndex {
 
   private def bcLimit(spark: SparkSession): Long = spark.conf
     .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
-
-  /** Band rows via the codegen'd signature expression — signatures
-    * computed inside the scan projection, zero shuffle (the
-    * `minhashSignatures` pipeline formulation shuffles every shingle
-    * of every doc by id before folding). */
-  private def bandsOf(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, bands: Int, shingleSize: Int): DataFrame =
-    Dedup.lshBandsFromSig(
-      df.select(col(idCol), graft.functions.MinHashSigExpr.minhashSig(
-        Dedup.normText(col(textCol)), numHashes, shingleSize).as("sig"))
-        .where(col("sig").isNotNull),
-      idCol, numHashes, bands)
 
   private def shingleStore(df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int): DataFrame =

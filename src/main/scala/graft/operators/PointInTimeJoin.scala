@@ -204,10 +204,13 @@ object PointInTimeJoin {
         else snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
     }
     if (windowFeats.nonEmpty) {
-      // share one bucket join per identical window spec
-      val clusters = windowFeats.groupBy { case (f, _) =>
+      // share one bucket join per identical window spec; a record
+      // limit ranks by its feature's own measure or aggregate, so each
+      // limited feature is its own cluster — its value never depends on
+      // what else is requested beside it
+      val clusters = windowFeats.groupBy { case (f, out) =>
         val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
-        (wa.window, wa.filter, wa.groupBy, wa.limit)
+        (wa.window, wa.filter, wa.groupBy, wa.limit, wa.limit.map(_ => out))
       }.toSeq.sortBy(_._2.head._2)
       for ((_, cluster) <- clusters)
         joined = windowAggJoin(joined, pairs, obsKeyCols, keys, src0, cluster, g.name)
@@ -301,11 +304,14 @@ object PointInTimeJoin {
     * carries both fields side by side, feathr-rs/src/model.rs:267-272;
     * the engine-side meaning is the public Feathr SWA contract):
     *  - without `groupBy`: keep the top-k NEWEST source rows per
-    *    (key, obs_ts) before aggregating (record limit);
+    *    (key, obs_ts) before aggregating (record limit; ties at one
+    *    `src_ts` go to the larger measure);
     *  - with `groupBy`: aggregate every sub-key fully, then keep the
-    *    top-k GROUPS per (key, obs_ts) ranked by the first feature's
+    *    top-k GROUPS per (key, obs_ts) ranked by the feature's own
     *    aggregate descending (ties: sub-key ascending) — the feature
     *    value is a k-entry map, not an aggregate over k rows.
+    * A limited feature is always alone in its window cluster, so both
+    * rankings read only its own measure.
     *
     * One plan for every aggregation (SURVEY.md §4): source rows fold
     * ONCE to [[Partial]]s per (key, [sub-key,] time bucket); each spine

@@ -1436,13 +1436,13 @@ object ScaleProbe {
     if (axes == "all" || axes == "haminc") {
       import graft.operators.{Dedup, IncrementalHamming, Spill}
       val cfg = IncrementalHamming.Config(idCol = "doc_id", sigCol = "sig64")
-      // signatures via the AGGREGATION formulation — the HOF column
-      // expr (simhash64) evaluates interpreted (axis 17) and would
+      // signatures via the native codegen'd expression, spilled once —
+      // Dedup.simhash64's HOF column evaluates interpreted and would
       // dominate the axis with signature compute, not index mechanics
-      val sigs0 = Spill.roundTrip(Dedup.simhashSignatures(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text"), "text", "doc_id")
-        .select(col("doc_id"), col("sig").as("sig64")))
+      val sigs0 = Spill.roundTrip(
+        spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"),
+          graft.functions.SimHash64Expr.simhash64(
+            Dedup.normText(col("text"))).as("sig64")))
       def shifted(i: Int) = sigs0
         .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L))
       var warmedHam = false

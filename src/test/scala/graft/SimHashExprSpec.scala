@@ -103,6 +103,45 @@ class SimHashExprSpec extends SparkTestBase {
     assert(n.isNullAt(0))
   }
 
+  test("minhash_sig bands: every one-word edit of a 150-word document shares a band") {
+    import graft.functions.MinHashSigExpr
+    // 500 documents of 150 words drawn from a 4,000-word vocabulary, each
+    // beside a copy with one word replaced: shingle Jaccard is about
+    // 141/151, so with independent families a pair misses all 16 bands
+    // of 8 rows with probability about (1 − 0.93^8)^16 ≈ 1e-6
+    val rnd = new scala.util.Random(20261019)
+    val docs = (0 until 500).flatMap { i =>
+      val words = Array.fill(150)(s"w${rnd.nextInt(4000)}")
+      val edited = words.clone()
+      val at = rnd.nextInt(150)
+      var repl = words(at)
+      while (repl == words(at)) repl = s"w${rnd.nextInt(4000)}"
+      edited(at) = repl
+      Seq((2L * i, words.mkString(" ")), (2L * i + 1, edited.mkString(" ")))
+    }.toDF("id", "text")
+    val sig = docs.select($"id",
+      MinHashSigExpr.minhashSig(Dedup.normText($"text"), 128, 5).as("sig"))
+    val bands = Dedup.lshBandsFromSig(sig, "id", 128, 16)
+      .select($"id", $"band_id", $"band_hash").as[(Long, Int, Long)].collect()
+    assert(bands.length == 1000 * 16)
+    val byDoc = bands.groupBy(_._1).view.mapValues(_.map(b => (b._2, b._3)).toSet).toMap
+    val missed = (0 until 500).filter(i =>
+      (byDoc(2L * i) intersect byDoc(2L * i + 1)).isEmpty)
+    assert(missed.isEmpty,
+      s"${missed.size} of 500 one-word-edit pairs share no band: ${missed.take(10)}")
+  }
+
+  test("minhash_sig refuses a non-positive numHashes or shingleSize by name") {
+    import graft.functions.MinHashSigExpr
+    val df = Seq("a b c d e f").toDF("t")
+    for ((n, k) <- Seq((0, 5), (128, 0), (128, -1))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(MinHashSigExpr.minhashSig($"t", n, k)).collect()
+      }
+      assert(e.getMessage.contains("minhash_sig needs numHashes >= 1"), e.getMessage)
+    }
+  }
+
   test("GraftFunctions: all custom expressions usable from pure SQL") {
     import graft.functions.{GraftExtensions, GraftFunctions}
     GraftFunctions.registerAll(spark)

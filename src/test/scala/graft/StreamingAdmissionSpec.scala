@@ -52,6 +52,22 @@ class StreamingAdmissionSpec extends SparkTestBase {
     assert(e.getMessage.contains("hash family"), e.getMessage)
   }
 
+  test("a store written under the kgram_fnv_v1 family (unreduced MinHash bands) is refused") {
+    val reference = Seq((1L, words("base", 30))).toDF("doc_id", "text")
+    val idx = tmp() + "/idx"
+    NearDupIndex.build(reference, idx, "text", "doc_id")
+    // same shingle hash, but its band rows came from the unreduced
+    // h1 + k·h2 families: a delta banded today would miss them
+    Seq((128, 16, 5, "kgram_fnv_v1"))
+      .toDF("num_hashes", "bands", "shingle_size", "hash_family")
+      .write.mode("overwrite").parquet(idx + "/config")
+    val delta = Seq((9L, words("base", 30))).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      NearDupIndex.query(spark, idx, delta, "text", "doc_id", 0.9).collect()
+    }
+    assert(e.getMessage.contains("hash family"), e.getMessage)
+  }
+
   test("appendAdmitted: a later batch duplicating an earlier admission is rejected") {
     val reference = Seq((1L, words("base", 30))).toDF("doc_id", "text")
     val idx = tmp() + "/idx"

@@ -254,6 +254,60 @@ class SwaPropertySpec extends SparkTestBase {
     }
   }
 
+  test("a record-limited feature ranks by its own measure, whatever is requested beside it") {
+    // two source rows at one instant: a limit of 1 keeps v's larger row
+    // for f_v and w's larger row for f_w
+    val t0 = 1700000000000000L
+    Seq((1L, t0, 1.0, 9.0), (1L, t0, 2.0, 1.0)).toDF("k", "ts_us", "v", "w")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_tie")
+    val obs = Seq((1L, t0 + 1000L)).toDF("k", "ts_us")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+    val key = TypedKey("k", ValueType.INT64)
+    def feat(name: String, measure: String) = AnchorFeature(name, FeatureType.DOUBLE,
+      Transformation.WindowAgg(measure, Aggregation.SUM, Durations.parse("1d"),
+        limit = Some(1)), Seq(key))
+    for (anchorOrder <- Seq(Seq("f_v", "f_w"), Seq("f_w", "f_v"));
+         requested <- Seq(Seq("f_v"), Seq("f_w"), Seq("f_v", "f_w"), Seq("f_w", "f_v"))) {
+      val p = FeatureProject("proptie")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_tie"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))),
+        anchorOrder.map(n => feat(n, n.stripPrefix("f_"))))
+      val r = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(requested, Seq("k")))).head()
+      val ctx = s"anchors=$anchorOrder requested=$requested"
+      if (requested.contains("f_v")) assert(r.getAs[Double]("f_v") == 2.0, ctx)
+      if (requested.contains("f_w")) assert(r.getAs[Double]("f_w") == 9.0, ctx)
+    }
+  }
+
+  test("a top-k-groups feature ranks groups by its own aggregate, whatever is requested beside it") {
+    val t0 = 1700000000000000L
+    Seq((1L, t0, "a", 1.0, 9.0), (1L, t0, "b", 2.0, 1.0)).toDF("k", "ts_us", "g", "v", "w")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_gtie")
+    val obs = Seq((1L, t0 + 1000L)).toDF("k", "ts_us")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+    val key = TypedKey("k", ValueType.INT64)
+    def feat(name: String, measure: String) = AnchorFeature(name, FeatureType.DOUBLE,
+      Transformation.WindowAgg(measure, Aggregation.SUM, Durations.parse("1d"),
+        groupBy = Some("g"), limit = Some(1)), Seq(key))
+    for (anchorOrder <- Seq(Seq("f_v", "f_w"), Seq("f_w", "f_v"));
+         requested <- Seq(Seq("f_v"), Seq("f_w"), Seq("f_v", "f_w"), Seq("f_w", "f_v"))) {
+      val p = FeatureProject("propgtie")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_gtie"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))),
+        anchorOrder.map(n => feat(n, n.stripPrefix("f_"))))
+      val r = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(requested, Seq("k")))).head()
+      val ctx = s"anchors=$anchorOrder requested=$requested"
+      if (requested.contains("f_v"))
+        assert(r.getAs[Map[String, Double]]("f_v") == Map("b" -> 2.0), ctx)
+      if (requested.contains("f_w"))
+        assert(r.getAs[Map[String, Double]]("f_w") == Map("a" -> 9.0), ctx)
+    }
+  }
+
   /** Engine cell vs reference: Options, sequences and maps compared
     * element by element, doubles within 1e-9.
     */
