@@ -32,12 +32,28 @@ import org.apache.spark.sql.types.NumericType
   *  - the as-of join (J2) is a union-sort ("last value wins") plan: one
   *    shuffle of source ∪ spine-pairs by key, one sort by (ts, tag) —
   *    no range-join row explosion, no per-row subqueries;
-  *  - sliding-window aggs (J3) fold source rows ONCE to partials per
-  *    (key, time bucket); each spine pair merges the partials of the
-  *    full buckets inside its window with the raw rows of its two edge
-  *    buckets — per-pair work is O(window/bucket), not O(rows in the
-  *    window), for every aggregation kind; a record limit keeps the k
-  *    newest rows per bucket as its partial;
+  *  - sliding-window aggs (J3) take one of two plans, chosen by
+  *    exactness under subtraction, read off the analyzed schema:
+  *     - EXACT INVERTIBLE features — no `limit`, and COUNT, or SUM/AVG
+  *       of an integral (byte/short/int/long) measure — ride a
+  *       union-sort: each spine pair adds one row at T and one at T − W
+  *       per distinct window, and a running sum/count per key gives
+  *       `cum(≤ T) − cum(≤ T − W)`, exactly the window `(T − W, T]`
+  *       (subtract-on-evict, Tangwongsan et al., VLDB 2015). Without
+  *       group_by they share the as-of join's one shuffle and sort;
+  *       with group_by, one union-sort per (anchor group, group_by
+  *       expression). Per-pair work is two lookups;
+  *     - every other feature (MIN, MAX, LATEST, UNION, elementwise,
+  *       float/decimal SUM/AVG, any `limit`) folds source rows ONCE to
+  *       partials per (key, time bucket); each spine pair merges the
+  *       partials of the full buckets inside its window with the raw
+  *       rows of its two edge buckets — per-pair work is
+  *       O(window/bucket), not O(rows in the window); a record limit
+  *       keeps the k newest rows per bucket as its partial;
+  *  - hot keys: every union-sort partitions by key, so a hot key costs
+  *    one sort plus one linear pass in one task; the bucket plan's
+  *    equi-join on (key, coarse bucket) spreads a hot key's pairs over
+  *    its timeline instead ([[bucketWindowJoin]]);
   *  - joins back to the spine are plain equi joins that AQE can
   *    broadcast when the feature side is small.
   */
@@ -168,6 +184,33 @@ object PointInTimeJoin {
     case _ => false
   }
 
+  private def windowAggOf(f: AnchorFeature): Transformation.WindowAgg =
+    f.transform.asInstanceOf[Transformation.WindowAgg]
+
+  /** Splits window features into (exact, bucketed): exact ones — no
+    * `limit`, and COUNT, or SUM/AVG of an integral measure — are exact
+    * under subtraction and take the running-sum plan ([[RunningSums]]).
+    * Reads only the analyzed schema of the summed measures.
+    */
+  private def splitExact(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)])
+      : (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    def invertible(wa: Transformation.WindowAgg) = wa.limit.isEmpty &&
+      Seq(Aggregation.COUNT, Aggregation.SUM, Aggregation.AVG).contains(wa.aggFunc)
+    val summed = windowFeats.map(p => windowAggOf(p._1))
+      .filter(wa => invertible(wa) && wa.aggFunc != Aggregation.COUNT)
+      .map(_.defExpr).distinct
+    val integral =
+      if (summed.isEmpty) Set.empty[String]
+      else summed.zip(src.select(summed.map(FeathrExpr.column): _*).schema.fields)
+        .collect { case (e, f) if Seq(ByteType, ShortType, IntegerType, LongType)
+          .contains(f.dataType) => e }.toSet
+    windowFeats.partition { case (f, _) =>
+      val wa = windowAggOf(f)
+      invertible(wa) && (wa.aggFunc == Aggregation.COUNT || integral.contains(wa.defExpr))
+    }
+  }
+
   /** Joins one anchor group onto `obs`, the frame so far. Each feature
     * frame is built from the distinct (key, obs_ts) pairs of `base`, the
     * observation as given; a key column only an earlier passthrough
@@ -191,6 +234,13 @@ object PointInTimeJoin {
     val (windowFeats, rowFeats) = feats.partition(p => isWindowAgg(p._1))
     require(windowFeats.isEmpty || timeAware,
       s"anchor ${g.name}: window aggregations need a time-aware source AND an observation timestamp")
+    for ((f, _) <- windowFeats) {
+      val w = windowAggOf(f).window
+      require(Durations.toMicros(w) > 0,
+        s"anchor ${g.name}: window ${Durations.format(w)} of feature ${f.name} must be positive")
+    }
+    val (exact, bucketed) = splitExact(src0, windowFeats)
+    val (exactFlat, exactGrouped) = exact.partition(p => windowAggOf(p._1).groupBy.isEmpty)
 
     val pairSrc = if (obsKeyCols.forall(base.columns.contains)) base else obs
     lazy val pairs = pairSrc
@@ -198,18 +248,19 @@ object PointInTimeJoin {
       .na.drop("any").distinct()
 
     var joined = obs
-    if (rowFeats.nonEmpty) {
-      joined =
-        if (timeAware) asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats)
-        else snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
-    }
-    if (windowFeats.nonEmpty) {
+    if (timeAware && (rowFeats.nonEmpty || exactFlat.nonEmpty))
+      joined = asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats, exactFlat)
+    else if (rowFeats.nonEmpty)
+      joined = snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
+    for ((gb, fs) <- exactGrouped.groupBy(p => windowAggOf(p._1).groupBy.get).toSeq.sortBy(_._1))
+      joined = groupedRunningJoin(joined, pairs, obsKeyCols, keys, src0, gb, fs, g.name)
+    if (bucketed.nonEmpty) {
       // share one bucket join per identical window spec; a record
       // limit ranks by its feature's own measure or aggregate, so each
       // limited feature is its own cluster — its value never depends on
       // what else is requested beside it
-      val clusters = windowFeats.groupBy { case (f, out) =>
-        val wa = f.transform.asInstanceOf[Transformation.WindowAgg]
+      val clusters = bucketed.groupBy { case (f, out) =>
+        val wa = windowAggOf(f)
         (wa.window, wa.filter, wa.groupBy, wa.limit, wa.limit.map(_ => out))
       }.toSeq.sortBy(_._2.head._2)
       for ((_, cluster) <- clusters)
@@ -262,37 +313,189 @@ object PointInTimeJoin {
     * source ties at one timestamp the greatest value-struct wins
     * (deterministic). One shuffle + sort; no row explosion — this is
     * the 100 TB-safe shape (vs. an unbounded range join).
+    *
+    * The anchor group's exact window features without group_by
+    * (`exact`, [[RunningSums]]) ride the same shuffle and sort: each
+    * pair also gets a row at T − W per distinct window, the running
+    * sums are more columns of the same window, and one aggregation per
+    * pair (no shuffle: the rows are already partitioned by key) reads
+    * them at T and at each T − W.
     */
   private def asOfJoin(
       obs: DataFrame, obsPairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
-      src: DataFrame, feats: Seq[(AnchorFeature, String)]): DataFrame = {
+      src: DataFrame, feats: Seq[(AnchorFeature, String)],
+      exact: Seq[(AnchorFeature, String)]): DataFrame = {
     val ts = "__graft_ts"
     val vals = "__graft_vals"
     val keyCols = keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(obsKeyCols(i)) }
-    val valStruct = struct(feats.map { case (f, out) =>
-      rowCol(f.transform, src).as(out) }: _*)
+    val run = new RunningSums(exact)
+    val valStruct = if (feats.isEmpty) Nil else Seq(struct(feats.map { case (f, out) =>
+      rowCol(f.transform, src).as(out) }: _*).as(vals))
     val srcSel = src
-      .select(keyCols ++ Seq(col(Internal.SrcTs).as(ts), valStruct.as(vals)): _*)
+      .select(keyCols ++ (col(Internal.SrcTs).as(ts) +: valStruct) ++ run.sourceCols: _*)
       .withColumn(Tag, lit(0))
-    val valsType = srcSel.schema(vals).dataType
-
-    val pairs = obsPairs
-      .withColumnRenamed(ObsTs, ts)
-      .withColumn(vals, lit(null).cast(valsType))
-      .withColumn(Tag, lit(1))
 
     val w = Window
       .partitionBy(obsKeyCols.map(col): _*)
-      .orderBy(col(ts).asc, col(Tag).asc, col(vals).asc_nulls_first)
+      .orderBy(Seq(col(ts).asc, col(Tag).asc) ++ valStruct.map(_ => col(vals).asc_nulls_first): _*)
       .rowsBetween(Window.unboundedPreceding, 0)
+    val asOf = if (feats.isEmpty) Nil else Seq(vals -> last(col(vals), ignoreNulls = true).over(w))
 
-    val featRows = srcSel.unionByName(pairs)
-      .withColumn(vals, last(col(vals), ignoreNulls = true).over(w))
+    // pair rows carry no vals and no contributions: the union fills nulls
+    val sorted = srcSel
+      .unionByName(run.pairRows(obsPairs, ts).withColumn(Tag, lit(1)), allowMissingColumns = true)
+      .withColumns((asOf ++ run.cumulative(w)).toMap)
       .where(col(Tag) === 1)
-      .select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
-        feats.map { case (_, out) => col(s"$vals.$out").as(out) }: _*)
+    val featRows =
+      if (exact.isEmpty)
+        sorted.select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
+          feats.map { case (_, out) => col(s"$vals.$out").as(out) }: _*)
+      else {
+        val atT = col(RunningSums.Off) === 0L
+        val reads = run.reads ++ feats.map { case (_, out) =>
+          first(when(atT, col(s"$vals.$out")), ignoreNulls = true).as(out) }
+        sorted.groupBy((obsKeyCols :+ ObsTs).map(col): _*)
+          .agg(reads.head, reads.tail: _*)
+          .select((obsKeyCols :+ ObsTs).map(col) ++ feats.map(p => col(p._2)) ++
+            exact.map { case (f, out) => run.value(windowAggOf(f)).as(out) }: _*)
+      }
 
     obs.join(featRows, obsKeyCols :+ ObsTs, "left_outer")
+  }
+
+  /** J3, exact invertible features grouped by one sub-key expression
+    * `gb`: one union-sort partitioned by key. The pair rows are the
+    * distinct spine pairs joined to the distinct (key, sub-key) some
+    * feature's filter keeps; the running sums run per (key, sub-key),
+    * and a (pair, sub-key) enters a feature's map iff a row its filter
+    * keeps is in the window.
+    */
+  private def groupedRunningJoin(
+      obs: DataFrame, pairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
+      src: DataFrame, gb: String, feats: Seq[(AnchorFeature, String)],
+      anchorName: String): DataFrame = {
+    val ts = "__graft_ts"
+    val grp = "__graft_grp"
+    val pairKeys = obsKeyCols :+ ObsTs
+    val keyCols = keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(obsKeyCols(i)) }
+    val run = new RunningSums(feats)
+    val srcSel = src
+      .select(keyCols ++ Seq(col(Internal.SrcTs).as(ts), FeathrExpr.column(gb).as(grp)) ++
+        run.sourceCols: _*)
+      .withColumn(Tag, lit(0))
+    val subKeys = srcSel.where(run.keptByAny)
+      .select((obsKeyCols :+ grp).map(col): _*).distinct()
+    val pairRows = run.pairRows(pairs.join(subKeys, obsKeyCols), ts).withColumn(Tag, lit(1))
+
+    val w = Window.partitionBy((obsKeyCols :+ grp).map(col): _*)
+      .orderBy(col(ts).asc, col(Tag).asc)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    // partitioned by key alone, so the per-pair reads and the map
+    // collection below need no further shuffle
+    val perGroup = srcSel.unionByName(pairRows, allowMissingColumns = true)
+      .repartition(obsKeyCols.map(col): _*)
+      .withColumns(run.cumulative(w).toMap)
+      .where(col(Tag) === 1)
+      .groupBy((pairKeys :+ grp).map(col): _*)
+      .agg(run.reads.head, run.reads.tail: _*)
+      .select((pairKeys :+ grp).map(col) ++ feats.zipWithIndex.flatMap { case ((f, out), i) =>
+        val wa = windowAggOf(f)
+        Seq(run.value(wa).as(out), run.present(wa).as(s"__graft_in_$i"))
+      }: _*)
+    val aggDf = collectGroups(perGroup, pairKeys.map(col), grp,
+      feats.zipWithIndex.map { case ((_, out), i) => out -> Some(col(s"__graft_in_$i")) },
+      None, gb, anchorName)
+    obs.join(aggDf, pairKeys, "left_outer")
+  }
+
+  /** The running sums of exact window features (J3 without `limit`:
+    * COUNT, and SUM/AVG of integral measures). Each source row
+    * contributes, per distinct filter, whether the filter keeps it
+    * (`__graft_rp_i`), per distinct (filter, measure), whether it adds
+    * a non-null measure (`__graft_rc_i`), and for SUM/AVG the measure
+    * itself (`__graft_rs_i`), summed as DECIMAL(38, 0): a key's
+    * whole-history total may pass `Long.MaxValue` while every window
+    * sum fits, and Spark runs ANSI. A spine pair reads each running
+    * column at T and at T − W; the difference is the window
+    * `(T − W, T]`, since a source row at exactly T − W sorts before the
+    * pair row there.
+    * Results keep the bucket plan's types and nulls: COUNT is a long,
+    * null when no kept row is in the window; SUM a long, null when no
+    * non-null measure is; AVG `sum / count` as a double, else null.
+    */
+  private final class RunningSums(feats: Seq[(AnchorFeature, String)]) {
+    import RunningSums._
+    private val was = feats.map(p => windowAggOf(p._1))
+    private val filters = was.map(_.filter).distinct
+    private val measures = was.map(wa => (wa.filter, wa.defExpr)).distinct
+    private val summed = was.filter(_.aggFunc != Aggregation.COUNT)
+      .map(wa => (wa.filter, wa.defExpr)).distinct
+    private val windows = was.map(wa => Durations.toMicros(wa.window)).distinct
+
+    private def kept(wa: Transformation.WindowAgg) = s"__graft_rp_${filters.indexOf(wa.filter)}"
+    private def nonNull(wa: Transformation.WindowAgg) =
+      s"__graft_rc_${measures.indexOf((wa.filter, wa.defExpr))}"
+    private def total(wa: Transformation.WindowAgg) =
+      s"__graft_rs_${summed.indexOf((wa.filter, wa.defExpr))}"
+    private val counted = filters.indices.map(i => s"__graft_rp_$i") ++
+      measures.indices.map(i => s"__graft_rc_$i")
+    private val totals = summed.indices.map(i => s"__graft_rs_$i")
+
+    /** A source row's contributions, over source columns; null = none. */
+    def sourceCols: Seq[Column] = {
+      def keeps(f: Option[String]) = f.map(FeathrExpr.column).getOrElse(lit(true))
+      filters.zipWithIndex.map { case (f, i) => when(keeps(f), true).as(s"__graft_rp_$i") } ++
+        measures.zipWithIndex.map { case ((f, e), i) =>
+          when(keeps(f) && FeathrExpr.column(e).isNotNull, true).as(s"__graft_rc_$i") } ++
+        summed.zipWithIndex.map { case ((f, e), i) =>
+          when(keeps(f), FeathrExpr.column(e)).as(s"__graft_rs_$i") }
+    }
+
+    /** Some filter keeps the row (its sub-key can enter a map). */
+    def keptByAny: Column = filters.indices.map(i => col(s"__graft_rp_$i").isNotNull).reduce(_ || _)
+
+    /** One row per pair at T (offset 0) and at T − W per distinct window
+      * W, its sort time in `ts`; no windows leaves the pairs at T.
+      */
+    def pairRows(pairs: DataFrame, ts: String): DataFrame =
+      if (windows.isEmpty) pairs.withColumnRenamed(ObsTs, ts)
+      else pairs
+        .withColumn(Off, explode(array((0L +: windows).map(lit): _*)))
+        .withColumn(ts, timestamp_micros(unix_micros(col(ObsTs)) - col(Off)))
+
+    /** The running columns over the union-sort window `w`. */
+    def cumulative(w: org.apache.spark.sql.expressions.WindowSpec): Seq[(String, Column)] =
+      counted.map(c => c -> count(col(c)).over(w)) ++
+        totals.map(c => c -> coalesce(sum(col(c).cast(Exact)).over(w), lit(0).cast(Exact)))
+
+    /** Per-pair aggregations reading every running column at T and at
+      * each T − W.
+      */
+    def reads: Seq[Column] = for (c <- counted ++ totals; o <- 0L +: windows)
+      yield max(when(col(Off) === o, col(c))).as(s"${c}_$o")
+
+    private def inWindow(c: String, wa: Transformation.WindowAgg): Column =
+      col(s"${c}_0") - col(s"${c}_${Durations.toMicros(wa.window)}")
+
+    /** A row `wa`'s filter keeps is in the window. */
+    def present(wa: Transformation.WindowAgg): Column = inWindow(kept(wa), wa) > 0
+
+    /** The feature value, typed and nulled as the bucket plan's. */
+    def value(wa: Transformation.WindowAgg): Column = {
+      val n = inWindow(nonNull(wa), wa)
+      lazy val s = inWindow(total(wa), wa).cast("long")
+      wa.aggFunc match {
+        case Aggregation.COUNT => when(present(wa), n)
+        case Aggregation.SUM => when(n > 0, s)
+        case Aggregation.AVG => when(n > 0, s / n)
+        case other => throw new IllegalArgumentException(s"$other is not exact under subtraction")
+      }
+    }
+  }
+
+  private object RunningSums {
+    val Off = "__graft_off"
+    val Exact = org.apache.spark.sql.types.DecimalType(38, 0)
   }
 
   /** J3: sliding-window aggregation (SWA) — aggregate source rows in
@@ -313,7 +516,13 @@ object PointInTimeJoin {
     * A limited feature is always alone in its window cluster, so both
     * rankings read only its own measure.
     *
-    * One plan for every aggregation (SURVEY.md §4): source rows fold
+    * J3 has two plans, and exactness under subtraction picks one
+    * ([[splitExact]], from the analyzed schema alone): COUNT, and SUM/AVG
+    * of an integral measure, without `limit`, are running sums read at
+    * T and T − W off a union-sort ([[asOfJoin]] without group_by,
+    * [[groupedRunningJoin]] with it). This is the other plan, for every
+    * remaining feature — MIN, MAX, LATEST, UNION, elementwise, float or
+    * decimal SUM/AVG and every `limit` (SURVEY.md §4): source rows fold
     * ONCE to [[Partial]]s per (key, [sub-key,] time bucket); each spine
     * pair merges the partials of the ≤ window/bucket FULL buckets inside
     * its window with the raw rows of its two edge buckets
@@ -335,8 +544,6 @@ object PointInTimeJoin {
     val was = feats.map(_._1.transform.asInstanceOf[Transformation.WindowAgg])
     val wa0 = was.head
     val wUs = Durations.toMicros(wa0.window)
-    require(wUs > 0, s"anchor $anchorName: window ${Durations.format(wa0.window)} of " +
-      s"feature ${feats.map(_._1.name).mkString(", ")} must be positive")
     val bUs = math.max(1L, wUs / 64)
     val skCols = obsKeyCols.indices.map(i => s"__graft_sk_$i")
     val gcols = wa0.groupBy.map(_ => "__graft_grp").toSeq
@@ -410,30 +617,43 @@ object PointInTimeJoin {
         finish(ps.map(p => col(acc(i, p)))).as(out) }: _*)
     val aggDf =
       if (gcols.isEmpty) finished
-      else collectGroups(finished, pairKeys.map(col), gcols.head, feats, wa0.limit)
+      else collectGroups(finished, pairKeys.map(col), gcols.head,
+        feats.map { case (_, out) => out -> None }, wa0.limit, wa0.groupBy.get, anchorName)
     obs.join(aggDf, pairKeys, "left_outer")
   }
 
   /** A7 tail: optional A7×A9 top-k-groups limit, then collect
     * sub-key -> value into a deterministic (sorted) map. The input is
     * one row per (key, obs_ts, sub-key) — bounded by sub-key
-    * cardinality, so the ranking window is cheap at scale.
+    * cardinality, so the ranking window is cheap at scale. A feature
+    * with a presence column takes only the rows where it holds, and is
+    * null when none does. A map cannot hold a null key, so a null
+    * sub-key that would enter one is refused by anchor group, feature
+    * and group_by expression.
     */
   private def collectGroups(perGroup0: DataFrame, groupKeys: Seq[Column],
-      groupCol: String, feats: Seq[(AnchorFeature, String)],
-      limit: Option[Int]): DataFrame = {
+      groupCol: String, outs: Seq[(String, Option[Column])],
+      limit: Option[Int], groupBy: String, anchorName: String): DataFrame = {
     var perGroup = perGroup0
     limit.foreach { k =>
       val gw = Window.partitionBy(groupKeys: _*)
-        .orderBy(col(feats.head._2).desc, col(groupCol).asc)
+        .orderBy(col(outs.head._1).desc, col(groupCol).asc)
       perGroup = perGroup
         .withColumn("__graft_grn", row_number().over(gw))
         .where(col("__graft_grn") <= k)
         .drop("__graft_grn")
     }
-    val maps = feats.map { case (_, out) =>
-      map_from_entries(array_sort(collect_list(
-        struct(col(groupCol), col(out))))).as(out)
+    val maps = outs.map { case (out, present) =>
+      val subKey = coalesce(col(groupCol), raise_error(lit(s"anchor $anchorName: feature " +
+        s"$out: group_by sub-key ($groupBy) is null in a window; a map cannot hold a null " +
+        "key; filter those rows out or coalesce the sub-key")))
+      val entry = struct(subKey.as(groupCol), col(out))
+      present match {
+        case None => map_from_entries(array_sort(collect_list(entry))).as(out)
+        case Some(p) =>
+          val entries = collect_list(when(p, entry))
+          when(size(entries) > 0, map_from_entries(array_sort(entries))).as(out)
+      }
     }
     perGroup.groupBy(groupKeys: _*).agg(maps.head, maps.tail: _*)
   }

@@ -39,6 +39,32 @@ import org.apache.spark.sql.functions._
   * splits at any size worth probing.
   */
 object GenScale {
+  private val Consonants = "bcdfghjklmnpqrstvwxz"
+
+  /** How many distinct vowel rewrites exist: the 5-permutations of the
+    * 20 consonants.
+    */
+  val VowelMaps: Int = (16 to 20).product
+
+  /** The consonants replica `i` writes for "aeiou": the i-th
+    * 5-permutation of the 20 consonants (digits of `i` in the mixed
+    * radix 20·19·18·17·16, each picking from the consonants not yet
+    * taken). Each replica maps the five vowels to five distinct
+    * consonants, so words that differ only in a vowel stay apart, and
+    * no two replicas share a map, so cross-replica jaccard stays about 0.
+    */
+  def vowelMap(i: Int): String = {
+    require(i >= 0 && i < VowelMaps, s"replica $i: only $VowelMaps distinct vowel maps")
+    var rest = Consonants
+    var n = i
+    (0 until 5).map { _ =>
+      val c = rest(n % rest.length)
+      n /= rest.length
+      rest = rest.filterNot(_ == c)
+      c
+    }.mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val dst = args(0)
     val mult = args(1).toInt
@@ -53,11 +79,6 @@ object GenScale {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    val consonants = "bcdfghjklmnpqrstvwxz"
-    def vowelMap(i: Int): String =
-      (0 until 5).map(k => consonants(
-        (i / math.pow(consonants.length, k).toInt) % consonants.length)).mkString
 
     def replicate(df: DataFrame)(one: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until mult).map(i => one(df, i)).reduce(_ unionByName _)

@@ -244,18 +244,10 @@ object ScaleProbe {
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
     val docs0 = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
-    val consonants = "bcdfghjklmnpqrstvwxz"
-    // replacement string = consonants at i's base-20 digits — INJECTIVE
-    // in i (up to 20^5 replicas). The previous `(i*5+k) % 20` offset had
-    // period 4: replicas i and i+4 translated identically, so any run
-    // with >4 multiplied replicas planted an artificial clique per
-    // document and the probe measured quadratic pair output, not corpus
-    // growth. Adjacent digit-strings differ in the 'a' (or, when
-    // i ≡ j mod 20, the 'e') replacement — both frequent letters, so
-    // cross-replica jaccard stays ≈0.
-    def vowelMap(i: Int): String =
-      (0 until 5).map(k => consonants(
-        (i / math.pow(consonants.length, k).toInt) % consonants.length)).mkString
+    // replica i rewrites vowels by GenScale.vowelMap(i): injective in i
+    // and within each replica, so cross-replica jaccard stays about 0
+    // and the probe measures corpus growth, not planted cliques
+    import GenScale.vowelMap
     def replicatedDocs(n: Int): DataFrame =
       (0 until n).map(i => docs0
           .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L))

@@ -341,4 +341,96 @@ class PitJoinSpec extends SparkTestBase {
       .collect().map(r => r.getAs[Long]("user") -> r.getAs[Double]("f_parity_sum_7d")).toMap
     assert(out == Map(2L -> 1.0, 3L -> 2.0))
   }
+
+  test("exact windows ride one union-sort per (anchor group, group_by); only MAX keeps bucket partials") {
+    // a training-set-shaped project over an int measure: as-of, COUNT/
+    // SUM/AVG and MAX windows per user and per item, a group_by COUNT
+    Seq((1L, 10L, "2024-01-09 12:00:00", 3, "a"), (1L, 20L, "2024-01-05 00:00:00", -2, "b"),
+        (2L, 10L, "2024-01-02 00:00:00", 4, "a"),
+        (1L, 10L, "2024-01-03 00:00:00", 5, "a")) // exactly obs − 7d: outside 7d
+      .toDF("u", "i", "ts_s", "value", "category").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("plan_shape_src")
+    val obs = Seq((1L, 10L, "2024-01-10 00:00:00"), (2L, 20L, "2024-01-10 00:00:00"))
+      .toDF("user", "item", "ts_s").withColumn("ts", $"ts_s".cast("timestamp"))
+      .select("user", "item", "ts")
+    val src = Source("src", DataLocation.Table("plan_shape_src"),
+      timeWindow = Some(TimeWindowParameters("ts", "native")))
+    val uKey = TypedKey("u", ValueType.INT64)
+    val iKey = TypedKey("i", ValueType.INT64)
+    def win(name: String, agg: String, w: String, key: TypedKey, t: FeatureType) =
+      AnchorFeature(name, t, Transformation.windowAgg("value", agg, w), Seq(key))
+    import FeatureType.{DOUBLE, INT64}
+    val p = FeatureProject("plan_shape")
+    p.addAnchorGroup("user_feats", src, Seq(
+      AnchorFeature("u_last", INT64, Transformation.Expr("value"), Seq(uKey)),
+      win("u_sum_7d", "SUM", "7d", uKey, INT64), win("u_cnt_7d", "COUNT", "7d", uKey, INT64),
+      win("u_avg_7d", "AVG", "7d", uKey, DOUBLE), win("u_max_7d", "MAX", "7d", uKey, INT64),
+      AnchorFeature("u_cat_cnt_7d", INT64, Transformation.windowAgg("value", "COUNT", "7d")
+        .copy(groupBy = Some("category")), Seq(uKey))))
+    p.addAnchorGroup("item_feats", src, Seq(
+      AnchorFeature("i_last", INT64, Transformation.Expr("value"), Seq(iKey)),
+      win("i_cnt_1d", "COUNT", "1d", iKey, INT64), win("i_sum_1d", "SUM", "1d", iKey, INT64),
+      win("i_avg_30d", "AVG", "30d", iKey, DOUBLE), win("i_max_30d", "MAX", "30d", iKey, INT64)))
+    val userFeats = Seq("u_last", "u_sum_7d", "u_cnt_7d", "u_avg_7d", "u_max_7d", "u_cat_cnt_7d")
+    val itemFeats = Seq("i_last", "i_cnt_1d", "i_sum_1d", "i_avg_30d", "i_max_30d")
+    val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")), Seq(
+      FeatureQuery(userFeats, Seq("user")), FeatureQuery(itemFeats, Seq("item"))))
+
+    // one running window per union-sort: (user), (user, sub-key), (item)
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    val sorts = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        w.partitionSpec.collect { case a: Attribute => a.name }
+    }
+    assert(sorts.sortBy(_.mkString(",")) ==
+      Seq(Seq("item"), Seq("user"), Seq("user", "__graft_grp")), sorts)
+    // bucket partials only for the MAX features
+    val kinds = "__graft_ps_([a-z]+)_".r
+      .findAllMatchIn(df.queryExecution.analyzed.toString).map(_.group(1)).toSet
+    assert(kinds == Set("max"), kinds)
+
+    val r = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
+    assert(r.size == 2)
+    val one = r(1L)
+    assert(one.getAs[Long]("u_last") == 3L)
+    assert(one.getAs[Long]("u_sum_7d") == 1L && one.getAs[Long]("u_cnt_7d") == 2L)
+    assert(one.getAs[Double]("u_avg_7d") == 0.5 && one.getAs[Long]("u_max_7d") == 3L)
+    assert(one.getAs[Map[String, Long]]("u_cat_cnt_7d") == Map("a" -> 1L, "b" -> 1L))
+    assert(one.getAs[Long]("i_cnt_1d") == 1L && one.getAs[Long]("i_sum_1d") == 3L)
+    assert(one.getAs[Double]("i_avg_30d") == 4.0 && one.getAs[Long]("i_max_30d") == 5L)
+    // user 2's only row is 8 days old; item 20's is 5 days old
+    val two = r(2L)
+    for (c <- userFeats.filterNot(_ == "u_last") ++ Seq("i_cnt_1d", "i_sum_1d"))
+      assert(two.isNullAt(two.fieldIndex(c)), c)
+    assert(two.getAs[Long]("u_last") == 4L && two.getAs[Long]("i_last") == -2L)
+    assert(two.getAs[Double]("i_avg_30d") == -2.0 && two.getAs[Long]("i_max_30d") == -2L)
+  }
+
+  test("a null group_by sub-key in a window is refused by anchor group, feature and expression on both plans") {
+    Seq[(Long, String, Int, Option[String])]((1L, "2024-01-09 12:00:00", 3, Some("a")),
+        (1L, "2024-01-08 00:00:00", 4, None))
+      .toDF("k", "ts_s", "v", "cat").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("null_sub_key_src")
+    def obsAt(t: String) = Seq((1L, t)).toDF("k", "ts_s")
+      .withColumn("ts", $"ts_s".cast("timestamp")).select("k", "ts")
+    // COUNT takes the running-sum plan, MAX the bucket plan
+    for ((agg, name) <- Seq("COUNT" -> "f_cnt_by_cat", "MAX" -> "f_max_by_cat")) {
+      val p = FeatureProject("null_sub_key")
+      p.addAnchorGroup("null_sub_anchor", Source("src", DataLocation.Table("null_sub_key_src"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+        AnchorFeature(name, FeatureType.INT64, Transformation.WindowAgg("v",
+          Aggregation.parse(agg), Durations.parse("7d"), groupBy = Some("upper(cat)")),
+          Seq(TypedKey("k", ValueType.INT64)))))
+      def join(t: String) = FeathrClient.joinFeatures(spark, p, obsAt(t),
+        Some(("ts", "native")), Seq(FeatureQuery(Seq(name), Seq("k")))).collect()
+      val e = intercept[Exception](join("2024-01-10 00:00:00"))
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains("null_sub_anchor") && msg.contains(name) && msg.contains("upper(cat)"),
+        s"$agg: $msg")
+      // a window without the null row is answered
+      val ok = join("2024-01-16 00:00:00")
+      assert(ok.head.getAs[Map[String, Long]](name).keySet == Set("A"), agg)
+    }
+  }
 }

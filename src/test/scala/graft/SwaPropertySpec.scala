@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
 case class SwaKindEvent(k: Long, ts_us: Long, v: Option[Double], u: Option[Int],
     vec: Option[Seq[Double]], g: String)
 
+/** One source row of the exact-aggregation property: an int and a long
+  * measure, a filter flag and a sub-key, each possibly null.
+  */
+case class SwaExactEvent(k: Long, ts_us: Long, iv: Option[Int], lv: Option[Long],
+    f: Option[Int], g: String)
+
 /** Property test over duration grammar × SWA: random odd/sub-second
   * windows (100ms–4s at millisecond granularity, and 1–127 µs windows
   * whose buckets are single microseconds) over randomly-timed events
@@ -459,6 +465,118 @@ class SwaPropertySpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("bad_window_anchor") &&
         e.getMessage.contains("f_bad_window"), s"window $w: ${e.getMessage}")
+    }
+  }
+
+  /** The reference fold of one exact feature over the rows of a window:
+    * COUNT of non-null measures (null when no row is kept), SUM (null
+    * when no measure is non-null) and AVG as Spark divides a long sum
+    * by a long count.
+    */
+  private def exactFold(agg: String, kept: Seq[Option[Long]]): Option[Any] = {
+    val vs = kept.flatten
+    agg match {
+      case "COUNT" => if (kept.isEmpty) None else Some(vs.size.toLong)
+      case "SUM" => if (vs.isEmpty) None else Some(vs.map(BigInt(_)).sum.toLong)
+      case "AVG" => if (vs.isEmpty) None
+        else Some(vs.map(BigInt(_)).sum.toLong.toDouble / vs.size.toLong.toDouble)
+    }
+  }
+
+  test("exact COUNT/SUM/AVG over int and long measures match the reference fold (group_by or not)") {
+    val rnd = new scala.util.Random(61)
+    // a post-epoch and a pre-epoch timeline; 400 µs spans for the 1 µs
+    // window (ties and neighbours), 6 s spans for the 750 ms one
+    for (((base, wUs, span), round) <- Seq((1700000000000000L, 1L, 400L),
+        (-631152000000000L, 1L, 400L), (1700000000000000L, 750000L, 6000000L),
+        (-631152000000000L, 750000L, 6000000L)).zipWithIndex) {
+      // keys 0-2 carry negative and null measures and a filter flag that
+      // is sometimes null; every row of key 3, and of sub-key "gx", fails
+      // the filter
+      val events = for (k <- 0 until 4; i <- 0 until 30) yield {
+        val g = if (i % 7 == 0) "gx" else s"g${i % 3}"
+        def maybe[A](a: => A): Option[A] = if (rnd.nextInt(5) == 0) None else Some(a)
+        val flag = if (k == 3 || g == "gx") maybe(-rnd.nextInt(3)) else maybe(rnd.nextInt(3) - 1)
+        SwaExactEvent(k.toLong, base + (rnd.nextLong().abs % span),
+          maybe(rnd.nextInt(201) - 100), maybe(rnd.nextLong() % 1000000000000L), flag, g)
+      }
+      val df = events.toDF().withColumn("ts", timestamp_micros($"ts_us"))
+      val view = s"swa_prop_exact_$round"
+      df.createOrReplaceTempView(view)
+
+      val window = Durations.parse(s"${wUs}us")
+      val key = TypedKey("k", ValueType.INT64)
+      val specs = for (agg <- Seq("COUNT", "SUM", "AVG"); m <- Seq("iv", "lv");
+          filter <- Seq(None, Some("f > 0")); gb <- Seq(None, Some("g"))) yield {
+        val name = Seq(Some(agg.toLowerCase), Some(m), filter.map(_ => "f"), gb)
+          .flatten.mkString("e_", "_", "")
+        (name, agg, m, filter, gb)
+      }
+      val p = FeatureProject(s"propexact$view")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), specs.map {
+        case (name, agg, m, filter, gb) => AnchorFeature(name, FeatureType.UNSPECIFIED,
+          Transformation.WindowAgg(m, Aggregation.parse(agg), window, groupBy = gb,
+            filter = filter), Seq(key)) })
+      // every event's own time (a row at T) and the time one window
+      // later (a row at exactly T − W, outside), plus an empty window
+      val obsRows = (events.flatMap(e => Seq((e.k, e.ts_us), (e.k, e.ts_us + wUs))) ++
+        (0 until 4).map(k => (k.toLong, base - 3600000000L))).distinct
+      val obs = obsRows.toDF("k", "ts_us").withColumn("ts", timestamp_micros($"ts_us"))
+
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(specs.map(_._1), Seq("k")))).collect()
+      assert(out.length == obsRows.length)
+      out.foreach { r =>
+        val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+        val in = events.filter(e => e.k == k && e.ts_us > t - wUs && e.ts_us <= t)
+        for ((name, agg, m, filter, gb) <- specs) {
+          val kept = if (filter.isEmpty) in else in.filter(_.f.exists(_ > 0))
+          def measure(e: SwaExactEvent): Option[Long] =
+            if (m == "iv") e.iv.map(_.toLong) else e.lv
+          val want: Option[Any] = gb match {
+            case None => exactFold(agg, kept.map(measure))
+            case Some(_) => if (kept.isEmpty) None else Some(kept.groupBy(_.g)
+              .map { case (g, rows) => g -> exactFold(agg, rows.map(measure)) })
+          }
+          val got = Option(r.getAs[Any](name))
+          assert(same(got, want), s"$name: window=${wUs}us k=$k t=$t got=$got want=$want")
+        }
+      }
+    }
+  }
+
+  test("exact SUM/AVG of a long measure whose running total passes Long.MaxValue") {
+    // one row a second, each Long.MaxValue / 2: a 1.5 s window holds at
+    // most two (their sum fits), while the key's running total passes
+    // Long.MaxValue from the third row on
+    val t0 = 1700000000000000L
+    val big = Long.MaxValue / 2
+    val events = (0 until 6).map(i => (1L, t0 + i * 1000000L, big))
+    events.toDF("k", "ts_us", "lv").withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_overflow")
+    val key = TypedKey("k", ValueType.INT64)
+    val p = FeatureProject("propoverflow")
+    p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_overflow"),
+      timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      AnchorFeature("f_sum", FeatureType.INT64,
+        Transformation.windowAgg("lv", "SUM", "1500ms"), Seq(key)),
+      AnchorFeature("f_avg", FeatureType.DOUBLE,
+        Transformation.windowAgg("lv", "AVG", "1500ms"), Seq(key)),
+      AnchorFeature("f_by_k", FeatureType.INT64,
+        Transformation.WindowAgg("lv", Aggregation.SUM, Durations.parse("1500ms"),
+          groupBy = Some("cast(k AS string)")), Seq(key))))
+    val obs = events.map(e => (e._1, e._2)).toDF("k", "ts_us")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+    val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("f_sum", "f_avg", "f_by_k"), Seq("k")))).collect()
+    assert(out.length == events.length)
+    out.foreach { r =>
+      val t = r.getAs[Long]("ts_us")
+      val n = events.count(e => e._2 > t - 1500000L && e._2 <= t)
+      assert(r.getAs[Long]("f_sum") == big * n, s"t=$t")
+      assert(r.getAs[Double]("f_avg") == (big * n).toDouble / n, s"t=$t")
+      assert(r.getAs[Map[String, Long]]("f_by_k") == Map("1" -> big * n), s"t=$t")
     }
   }
 }
