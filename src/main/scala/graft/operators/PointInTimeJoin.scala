@@ -42,7 +42,11 @@ import org.apache.spark.sql.types.NumericType
   *       (subtract-on-evict, Tangwongsan et al., VLDB 2015). Without
   *       group_by they share the as-of join's one shuffle and sort;
   *       with group_by, one union-sort per (anchor group, group_by
-  *       expression). Per-pair work is two lookups;
+  *       expression), whose pair rows are each pair's sub-keys seen
+  *       within about 1.25 widest windows of T. Per-pair work is two
+  *       lookups. An exact feature with no as-of sort to share, whose
+  *       (window, filter, group_by) bucket cluster is built anyway for
+  *       another feature, joins that cluster instead ([[splitExact]]);
   *     - every other feature (MIN, MAX, LATEST, UNION, elementwise,
   *       float/decimal SUM/AVG, any `limit`) folds source rows ONCE to
   *       partials per (key, time bucket); each spine pair merges the
@@ -187,13 +191,18 @@ object PointInTimeJoin {
   private def windowAggOf(f: AnchorFeature): Transformation.WindowAgg =
     f.transform.asInstanceOf[Transformation.WindowAgg]
 
-  /** Splits window features into (exact, bucketed): exact ones — no
-    * `limit`, and COUNT, or SUM/AVG of an integral measure — are exact
-    * under subtraction and take the running-sum plan ([[RunningSums]]).
-    * Reads only the analyzed schema of the summed measures.
+  /** Splits window features into (exact, bucketed). A feature is exact
+    * under subtraction when it has no `limit` and is COUNT, or SUM/AVG
+    * of an integral measure (read off the analyzed schema). An exact
+    * feature takes the running-sum plan ([[RunningSums]]) only when
+    * that plan has a sort to share or saves a bucket join: it rides the
+    * as-of join (`asOf`: the group has as-of features, and the feature
+    * has no group_by), or no bucketed feature of the same (window,
+    * filter, group_by) is left to build that cluster anyway — else it
+    * joins that cluster, which already pays the shuffle it would add.
     */
-  private def splitExact(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)])
-      : (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
+  private def splitExact(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
+      asOf: Boolean): (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     def invertible(wa: Transformation.WindowAgg) = wa.limit.isEmpty &&
       Seq(Aggregation.COUNT, Aggregation.SUM, Aggregation.AVG).contains(wa.aggFunc)
@@ -205,10 +214,18 @@ object PointInTimeJoin {
       else summed.zip(src.select(summed.map(FeathrExpr.column): _*).schema.fields)
         .collect { case (e, f) if Seq(ByteType, ShortType, IntegerType, LongType)
           .contains(f.dataType) => e }.toSet
-    windowFeats.partition { case (f, _) =>
+    val (exact, inexact) = windowFeats.partition { case (f, _) =>
       val wa = windowAggOf(f)
       invertible(wa) && (wa.aggFunc == Aggregation.COUNT || integral.contains(wa.defExpr))
     }
+    def cluster(f: AnchorFeature) = {
+      val wa = windowAggOf(f)
+      (wa.window, wa.filter, wa.groupBy)
+    }
+    val built = inexact.collect { case (f, _) if windowAggOf(f).limit.isEmpty => cluster(f) }.toSet
+    val running = exact.filter { case (f, _) =>
+      (asOf && windowAggOf(f).groupBy.isEmpty) || !built(cluster(f)) }
+    windowFeats.partition(running.contains)
   }
 
   /** Joins one anchor group onto `obs`, the frame so far. Each feature
@@ -239,7 +256,7 @@ object PointInTimeJoin {
       require(Durations.toMicros(w) > 0,
         s"anchor ${g.name}: window ${Durations.format(w)} of feature ${f.name} must be positive")
     }
-    val (exact, bucketed) = splitExact(src0, windowFeats)
+    val (exact, bucketed) = splitExact(src0, windowFeats, asOf = rowFeats.nonEmpty)
     val (exactFlat, exactGrouped) = exact.partition(p => windowAggOf(p._1).groupBy.isEmpty)
 
     val pairSrc = if (obsKeyCols.forall(base.columns.contains)) base else obs
@@ -364,11 +381,20 @@ object PointInTimeJoin {
   }
 
   /** J3, exact invertible features grouped by one sub-key expression
-    * `gb`: one union-sort partitioned by key. The pair rows are the
-    * distinct spine pairs joined to the distinct (key, sub-key) some
-    * feature's filter keeps; the running sums run per (key, sub-key),
-    * and a (pair, sub-key) enters a feature's map iff a row its filter
-    * keeps is in the window.
+    * `gb`: one union-sort partitioned by key, over the source rows some
+    * feature's filter keeps (the others add nothing to a running sum).
+    * The running sums run per (key, sub-key), and a (pair, sub-key)
+    * enters a feature's map iff a row its filter keeps is in the
+    * window.
+    *
+    * A pair's candidate sub-keys are those with a kept row in the last
+    * `d + 1` cells, up to T's own, of a grid of width `c` = W/4 (W the
+    * widest window; `c` at least 1 µs): a row in `(T − W, T]` lies at
+    * most `d = (W + c − 2) / c` cells before T's. So the pair rows grow
+    * with the sub-keys a key shows within about 1.25 W of T, as the
+    * bucket plan's rows grow with the sub-keys in the window — not with
+    * every sub-key of the key's whole history, which for a
+    * high-cardinality group_by over a long history is far larger.
     */
   private def groupedRunningJoin(
       obs: DataFrame, pairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
@@ -383,16 +409,24 @@ object PointInTimeJoin {
       .select(keyCols ++ Seq(col(Internal.SrcTs).as(ts), FeathrExpr.column(gb).as(grp)) ++
         run.sourceCols: _*)
       .withColumn(Tag, lit(0))
-    val subKeys = srcSel.where(run.keptByAny)
-      .select((obsKeyCols :+ grp).map(col): _*).distinct()
-    val pairRows = run.pairRows(pairs.join(subKeys, obsKeyCols), ts).withColumn(Tag, lit(1))
+    val kept = srcSel.where(run.keptByAny)
+    val cell = "__graft_cell"
+    val c = math.max(1L, run.widest / 4)
+    val d = (run.widest + c - 2) / c
+    def cellOf(t: Column) = idiv(unix_micros(t), c)
+    val candidates = kept
+      .select((obsKeyCols :+ grp).map(col) :+
+        explode(sequence(cellOf(col(ts)), cellOf(col(ts)) + d)).as(cell): _*)
+      .distinct()
+    val pairRows = run.pairRows(pairs.withColumn(cell, cellOf(col(ObsTs)))
+      .join(candidates, obsKeyCols :+ cell).drop(cell), ts).withColumn(Tag, lit(1))
 
     val w = Window.partitionBy((obsKeyCols :+ grp).map(col): _*)
       .orderBy(col(ts).asc, col(Tag).asc)
       .rowsBetween(Window.unboundedPreceding, 0)
     // partitioned by key alone, so the per-pair reads and the map
     // collection below need no further shuffle
-    val perGroup = srcSel.unionByName(pairRows, allowMissingColumns = true)
+    val perGroup = kept.unionByName(pairRows, allowMissingColumns = true)
       .repartition(obsKeyCols.map(col): _*)
       .withColumns(run.cumulative(w).toMap)
       .where(col(Tag) === 1)
@@ -431,6 +465,9 @@ object PointInTimeJoin {
     private val summed = was.filter(_.aggFunc != Aggregation.COUNT)
       .map(wa => (wa.filter, wa.defExpr)).distinct
     private val windows = was.map(wa => Durations.toMicros(wa.window)).distinct
+
+    /** The widest window, in microseconds. */
+    def widest: Long = windows.max
 
     private def kept(wa: Transformation.WindowAgg) = s"__graft_rp_${filters.indexOf(wa.filter)}"
     private def nonNull(wa: Transformation.WindowAgg) =
@@ -517,12 +554,15 @@ object PointInTimeJoin {
     * rankings read only its own measure.
     *
     * J3 has two plans, and exactness under subtraction picks one
-    * ([[splitExact]], from the analyzed schema alone): COUNT, and SUM/AVG
-    * of an integral measure, without `limit`, are running sums read at
-    * T and T − W off a union-sort ([[asOfJoin]] without group_by,
-    * [[groupedRunningJoin]] with it). This is the other plan, for every
-    * remaining feature — MIN, MAX, LATEST, UNION, elementwise, float or
-    * decimal SUM/AVG and every `limit` (SURVEY.md §4): source rows fold
+    * ([[splitExact]], from the analyzed schema and the anchor group's
+    * features): COUNT, and SUM/AVG of an integral measure, without
+    * `limit`, are running sums read at T and T − W off a union-sort
+    * ([[asOfJoin]] without group_by, [[groupedRunningJoin]] with it),
+    * unless the group has no as-of sort for them to share and another
+    * feature builds their (window, filter, group_by) cluster here
+    * anyway. This is the other plan, for every remaining feature — MIN,
+    * MAX, LATEST, UNION, elementwise, float or decimal SUM/AVG, every
+    * `limit`, and those exact features (SURVEY.md §4): source rows fold
     * ONCE to [[Partial]]s per (key, [sub-key,] time bucket); each spine
     * pair merges the partials of the ≤ window/bucket FULL buckets inside
     * its window with the raw rows of its two edge buckets

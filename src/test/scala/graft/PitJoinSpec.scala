@@ -406,6 +406,55 @@ class PitJoinSpec extends SparkTestBase {
     assert(two.getAs[Double]("i_avg_30d") == -2.0 && two.getAs[Long]("i_max_30d") == -2L)
   }
 
+  test("without an as-of sort to share, exact windows join the bucket cluster of their (window, filter, group_by)") {
+    Seq((1L, "2024-01-09 12:00:00", 3, "a"), (1L, "2024-01-05 00:00:00", -2, "b"),
+        (1L, "2024-01-03 00:00:00", 5, "a"), // exactly obs − 7d: outside 7d
+        (2L, "2024-01-02 00:00:00", 4, "a"))
+      .toDF("u", "ts_s", "value", "category").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("window_only_src")
+    val obs = Seq((1L, "2024-01-10 00:00:00"), (2L, "2024-01-10 00:00:00"))
+      .toDF("user", "ts_s").withColumn("ts", $"ts_s".cast("timestamp")).select("user", "ts")
+    val uKey = TypedKey("u", ValueType.INT64)
+    def win(name: String, agg: String, w: String, gb: Option[String] = None) =
+      AnchorFeature(name, FeatureType.UNSPECIFIED,
+        Transformation.windowAgg("value", agg, w).copy(groupBy = gb), Seq(uKey))
+    val p = FeatureProject("window_only")
+    // no as-of feature: COUNT/SUM 7d share MAX 7d's bucket cluster, and
+    // the group_by COUNT 7d its group_by MAX's; the 1d COUNTs have no
+    // cluster to join and take the running-sum plan
+    p.addAnchorGroup("window_only_feats", Source("src", DataLocation.Table("window_only_src"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      win("u_cnt_7d", "COUNT", "7d"), win("u_sum_7d", "SUM", "7d"), win("u_max_7d", "MAX", "7d"),
+      win("u_cnt_1d", "COUNT", "1d"),
+      win("u_cat_cnt_7d", "COUNT", "7d", Some("category")),
+      win("u_cat_max_7d", "MAX", "7d", Some("category")),
+      win("u_cat_cnt_1d", "COUNT", "1d", Some("category"))))
+    val feats = Seq("u_cnt_7d", "u_sum_7d", "u_max_7d", "u_cnt_1d", "u_cat_cnt_7d",
+      "u_cat_max_7d", "u_cat_cnt_1d")
+    val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(feats, Seq("user"))))
+
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    val sorts = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        w.partitionSpec.collect { case a: Attribute => a.name }
+    }
+    assert(sorts.sortBy(_.mkString(",")) == Seq(Seq("user"), Seq("user", "__graft_grp")), sorts)
+    val kinds = "__graft_ps_([a-z]+)_".r
+      .findAllMatchIn(df.queryExecution.analyzed.toString).map(_.group(1)).toSet
+    assert(kinds == Set("cnt", "sum", "max"), kinds)
+
+    val r = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
+    val one = r(1L)
+    assert(one.getAs[Long]("u_cnt_7d") == 2L && one.getAs[Long]("u_sum_7d") == 1L)
+    assert(one.getAs[Int]("u_max_7d") == 3 && one.getAs[Long]("u_cnt_1d") == 1L)
+    assert(one.getAs[Map[String, Long]]("u_cat_cnt_7d") == Map("a" -> 1L, "b" -> 1L))
+    assert(one.getAs[Map[String, Int]]("u_cat_max_7d") == Map("a" -> 3, "b" -> -2))
+    assert(one.getAs[Map[String, Long]]("u_cat_cnt_1d") == Map("a" -> 1L))
+    val two = r(2L)
+    for (c <- feats) assert(two.isNullAt(two.fieldIndex(c)), c)
+  }
+
   test("a null group_by sub-key in a window is refused by anchor group, feature and expression on both plans") {
     Seq[(Long, String, Int, Option[String])]((1L, "2024-01-09 12:00:00", 3, Some("a")),
         (1L, "2024-01-08 00:00:00", 4, None))

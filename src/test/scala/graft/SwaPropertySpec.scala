@@ -546,6 +546,55 @@ class SwaPropertySpec extends SparkTestBase {
     }
   }
 
+  test("exact group_by windows over a long, high-cardinality history match the reference fold") {
+    // 60 sub-keys over 40 widest windows, so most of a key's sub-keys lie
+    // outside any one pair's window; two windows share one union-sort,
+    // and rows and pairs sit on and beside the edges of the widest
+    // window's grid cells, post- and pre-epoch
+    val rnd = new scala.util.Random(67)
+    val wide = 700000L
+    val narrow = 250000L
+    for ((base, round) <- Seq(1700000000000000L, -631152000000000L).zipWithIndex) {
+      val cell0 = base - Math.floorMod(base, wide)
+      val times = (0 until 120).map(_ => base + (rnd.nextLong().abs % (40 * wide))) ++
+        (1 to 20).flatMap(c => Seq(cell0 + c * wide, cell0 + c * wide - 1))
+      val events = for (t <- times; k <- 0 until 2 if rnd.nextInt(3) > 0) yield
+        SwaExactEvent(k.toLong, t, Some(rnd.nextInt(21) - 10), None,
+          Some(rnd.nextInt(2)), s"g${rnd.nextInt(60)}")
+      val view = s"swa_prop_sparse_$round"
+      events.toDF().withColumn("ts", timestamp_micros($"ts_us")).createOrReplaceTempView(view)
+      val key = TypedKey("k", ValueType.INT64)
+      val specs = for (agg <- Seq("COUNT", "SUM"); w <- Seq(wide, narrow);
+          filter <- Seq(None, Some("f > 0"))) yield
+        ((Seq(agg.toLowerCase, w.toString) ++ filter.map(_ => "f")).mkString("s_", "_", ""),
+          agg, w, filter)
+      val p = FeatureProject(s"propsparse$round")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), specs.map {
+        case (name, agg, w, filter) => AnchorFeature(name, FeatureType.UNSPECIFIED,
+          Transformation.WindowAgg("iv", Aggregation.parse(agg), Durations.parse(s"${w}us"),
+            groupBy = Some("g"), filter = filter), Seq(key)) })
+      val obsRows = (events.flatMap(e => Seq((e.k, e.ts_us), (e.k, e.ts_us + narrow),
+          (e.k, e.ts_us + wide - 1), (e.k, e.ts_us + wide))) ++
+        (1 to 20).flatMap(c => Seq((0L, cell0 + c * wide), (1L, cell0 + c * wide - 1)))).distinct
+      val obs = obsRows.toDF("k", "ts_us").withColumn("ts", timestamp_micros($"ts_us"))
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(specs.map(_._1), Seq("k")))).collect()
+      assert(out.length == obsRows.length)
+      out.foreach { r =>
+        val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+        for ((name, agg, w, filter) <- specs) {
+          val in = events.filter(e => e.k == k && e.ts_us > t - w && e.ts_us <= t)
+          val kept = if (filter.isEmpty) in else in.filter(_.f.exists(_ > 0))
+          val want = if (kept.isEmpty) None else Some(kept.groupBy(_.g)
+            .map { case (g, rows) => g -> exactFold(agg, rows.map(_.iv.map(_.toLong))) })
+          val got = Option(r.getAs[Any](name))
+          assert(same(got, want), s"$name: k=$k t=$t got=$got want=$want")
+        }
+      }
+    }
+  }
+
   test("exact SUM/AVG of a long measure whose running total passes Long.MaxValue") {
     // one row a second, each Long.MaxValue / 2: a 1.5 s window holds at
     // most two (their sum fits), while the key's running total passes
