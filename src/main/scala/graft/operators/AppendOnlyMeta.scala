@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 
 /** The append-only ingest discipline shared by the maintained index
-  * stores ([[IncrementalBm25]], [[IncrementalIvfPq]]): one driver-side
-  * text row per version recording the delta's id bounds, row count,
-  * and an order-independent content fingerprint. The guard enforces,
-  * by name:
+  * stores ([[IncrementalBm25]], [[IncrementalHamming]],
+  * [[IncrementalIvfPq]], each through [[VersionLog.append]]): one
+  * driver-side text row per version recording the delta's id bounds,
+  * row count, and an order-independent content fingerprint. The guard
+  * enforces, by name:
   *
   *   - NO NULL ids — a null id would bypass the monotone check
   *     (min/max ignore nulls) and be permanently unerasable (anti-join
@@ -33,6 +34,21 @@ import java.nio.charset.StandardCharsets
 private[operators] object AppendOnlyMeta {
 
   case class Bounds(minId: Long, maxId: Long, rows: Long, fp: Long)
+
+  /** One ingest's check: `delta`'s ids and its fingerprint over
+    * `fpCols` ([[boundsOf]]) against the version rows under `dir`;
+    * `what` names the store's entries in refusals.
+    */
+  final case class Check(dir: String, delta: DataFrame, idCol: String,
+      fpCols: Seq[String], what: String) {
+    /** The delta's bounds, and whether `version` is a replay
+      * ([[AppendOnlyMeta.guard]]).
+      */
+    def guard(spark: SparkSession, version: Long): (Bounds, Boolean) = {
+      val b = boundsOf(delta, idCol, fpCols)
+      (b, AppendOnlyMeta.guard(spark, dir, version, b, what))
+    }
+  }
 
   /** One job over the delta: id bounds, row count, null-id count,
     * distinct-id count, and the content fingerprint over `fpCols` (the
@@ -87,13 +103,9 @@ private[operators] object AppendOnlyMeta {
   }
 
   /** The guard — run INSIDE the writer lease, before the version
-    * write. Returns whether `version` was ALREADY recorded (a replay):
-    * callers record meta before the data write, and on a NON-crash
-    * data-write failure a FRESH record must be compensated away
-    * ([[unrecord]]) or the version and its id range stay burned
-    * against a corrected delta (the fingerprint would refuse it as an
-    * imposter) — while a REPLAY's pre-existing record belongs to an
-    * earlier successful ingest and must survive the failed overwrite.
+    * write. Returns whether `version` was ALREADY recorded (a replay),
+    * which decides whether a failed write may [[unrecord]] it
+    * ([[VersionLog]]'s meta-before-data order).
     */
   def guard(spark: SparkSession, dir: String, version: Long,
       b: Bounds, what: String): Boolean = {

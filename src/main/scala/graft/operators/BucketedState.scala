@@ -7,21 +7,18 @@ import org.apache.spark.sql.functions._
 /** The one lifecycle of the bucketed incremental stores
   * ([[IncrementalSwa]], [[IncrementalUnion]], [[IncrementalVector]],
   * [[IncrementalDistinct]], [[IncrementalQuantile]],
-  * [[IncrementalTopK]]). A store supplies only its [[Aggregate]]; this
-  * kernel writes every step once:
+  * [[IncrementalTopK]]) over [[VersionLog]]'s versioned layout. A
+  * store supplies only its [[Aggregate]]; this kernel writes every
+  * step once:
   *
   *  - state is a version log of per-(key, time-bucket) partials: each
-  *    [[ingest]] shuffles only its delta and lands it as
-  *    `__v=<version>/` of the live [[Publish]] generation, sorted by
+  *    [[ingest]] shuffles only its delta and appends it as one version
+  *    ([[VersionLog.append]]: writer lease, fold guard), sorted by
   *    `__b` so a serve's `[lo, hi)` bucket filter prunes parquet row
-  *    groups. A replay of a live version overwrites itself; a version
-  *    at or below [[IncrementalSwa.foldedThrough]] is refused — its
-  *    history was rebased into a fold, and re-applying it would
-  *    double-count (single writer per store, under
-  *    [[IncrementalSwa.locked]]).
-  *  - [[serve]] answers one [[Read]]: the window `[asOf − W, asOf)` at
-  *    a bucket boundary, the same truncated at a version (state time
-  *    travel; versions a fold rebased away are refused by name), or
+  *    groups. A replay of a live version overwrites itself.
+  *  - [[serve]] answers one [[Read]] from one resolution of the live
+  *    generation: the window `[asOf − W, asOf)` at a bucket boundary,
+  *    the same truncated at a version ([[VersionLog.Live.asOf]]), or
   *    the one-pass daily table. The partials are merged with the
   *    aggregate's merge aggregations — the same ones the fold uses —
   *    and finished into served columns. A window reaching below a
@@ -29,11 +26,12 @@ import org.apache.spark.sql.functions._
   *    empty.
   *  - [[compact]], [[compactRetaining]] and [[forgetKeys]] re-fold the
   *    version tail into one partial per (key, bucket) in a new
-  *    generation ([[IncrementalSwa.compactFold]]'s atomic flip): whole,
+  *    generation ([[VersionLog.compactFold]]'s atomic flip): whole,
   *    trimmed at a horizon, or without the erased keys.
   */
 private[operators] object BucketedState {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import VersionLog.{Live, VCol}
 
   /** Which served view of a store a read takes. */
   sealed trait Read
@@ -50,7 +48,7 @@ private[operators] object BucketedState {
     */
   final case class Rolling(countCol: String) extends Daily
   /** Each state row re-addressed to every output bucket it feeds
-    * ([[IncrementalSwa.expandToWindows]]) and merged once more — for
+    * ([[expandToWindows]]) and merged once more — for
     * state sparse below the bucket, where a dense spine would be
     * keys × sub-keys × buckets.
     */
@@ -92,17 +90,10 @@ private[operators] object BucketedState {
     val missing = ((agg.keyCols :+ agg.tsCol) ++ agg.inputCols)
       .filterNot(delta.columns.contains)
     require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, dir) {
-      val folded = IncrementalSwa.foldedThrough(spark, dir)
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) " +
-          s"at $dir — state cannot replay rebased history without " +
-          "double-counting; re-ingest under a fresh version only if the " +
-          "delta was never applied")
+    VersionLog.append(spark, dir, version) { (_, _) =>
       val partials = agg.partial(delta.withColumn(BCol,
         IncrementalSwa.bucketOf(col(agg.tsCol), agg.bucketUs)))
-      agg.write(partials.sortWithinPartitions(BCol), dir,
-        IncrementalSwa.liveGen(spark, dir), version)
+      agg.write(partials.sortWithinPartitions(BCol), dir, _, version)
     }
   }
 
@@ -110,35 +101,31 @@ private[operators] object BucketedState {
       read: Read, windowBuckets: Int, arg: A): DataFrame = {
     val finish = agg.finish(arg)
     require(windowBuckets > 0, s"windowBuckets must be positive: $windowBuckets")
+    val live = VersionLog.live(spark, dir)
     read match {
       case PerBucket(partial, through) =>
-        perBucket(spark, dir, agg, windowBuckets, partial, through, finish)
+        perBucket(spark, live, agg, windowBuckets, partial, through, finish)
       case AtBoundary(asOfUs) =>
-        boundary(spark, dir, agg, asOfUs, windowBuckets, finish)(identity)
+        boundary(live, agg, asOfUs, windowBuckets, finish)(live.state(spark))
       case AtVersion(asOfUs, v) =>
-        val folded = IncrementalSwa.foldedThrough(spark, dir)
-        require(folded < 0 || v >= folded,
-          s"version $v predates the compaction fold ($folded) at $dir — " +
-            "that history was rebased; serving the fold instead would be " +
-            "a reproducibility lie")
-        boundary(spark, dir, agg, asOfUs, windowBuckets, finish)(
-          _.where(col(VCol) <= v))
+        // a rebased version is refused before any window check
+        val state = live.asOf(spark, v)
+        boundary(live, agg, asOfUs, windowBuckets, finish)(state)
     }
   }
 
-  /** The boundary serve: partials of buckets `[asOf − W, asOf)` of the
-    * `versions`-selected state, merged per key.
+  /** The boundary serve: partials of buckets `[asOf − W, asOf)` of
+    * `state`, merged per key.
     */
-  private def boundary(spark: SparkSession, dir: String, agg: Aggregate[_],
-      asOfUs: Long, windowBuckets: Int, finish: Finish)(
-      versions: DataFrame => DataFrame): DataFrame = {
+  private def boundary(live: Live, agg: Aggregate[_], asOfUs: Long,
+      windowBuckets: Int, finish: Finish)(state: => DataFrame): DataFrame = {
     require(asOfUs % agg.bucketUs == 0,
       s"asOf $asOfUs is not aligned to the ${agg.bucketUs}µs bucket grid — " +
         "the store serves snapshot boundaries; sub-bucket observation " +
         "times belong to the windowed join (J3)")
     val hiB = asOfUs / agg.bucketUs
-    requireWithinRetention(spark, dir, hiB - windowBuckets)
-    val inWindow = versions(readState(spark, dir))
+    requireWithinRetention(live, hiB - windowBuckets)
+    val inWindow = state
       .where(col(BCol) >= hiB - windowBuckets && col(BCol) < hiB)
     finish(merged(inWindow, agg, agg.keyCols), agg.keyCols)
   }
@@ -147,23 +134,27 @@ private[operators] object BucketedState {
     * boundary serve at `(b + 1)·bucketUs` ([[IncrementalSwa.serveDaily]]'s
     * contract).
     */
-  private def perBucket(spark: SparkSession, dir: String, agg: Aggregate[_],
+  private def perBucket(spark: SparkSession, live: Live, agg: Aggregate[_],
       windowBuckets: Int, includeHorizonPartialRows: Boolean,
       throughBucket: Option[Long], finish: Finish): DataFrame = {
-    val completeFrom = IncrementalSwa.dailyCompleteFrom(spark, dir,
-      windowBuckets, includeHorizonPartialRows)
+    // the first output bucket whose window is COMPLETE over retained
+    // state: erased ≠ empty, unless the caller opted into left-edge
+    // semantics
+    val completeFrom = live.retainedFrom
+      .filterNot(_ => includeHorizonPartialRows)
+      .map(_ + windowBuckets - 1L).getOrElse(Long.MinValue)
     def range(st: DataFrame, bounds: Column*) = {
       val r = st.agg(bounds.head, bounds.tail: _*).head()
-      require(!r.isNullAt(0), s"state at $dir holds no partials")
+      require(!r.isNullAt(0), s"state at ${live.dir} holds no partials")
       (0 until r.size).map(r.getLong)
     }
     agg.daily match {
       case Rolling(countCol) =>
         val keys = agg.keyCols
-        val state = fold(spark, dir, agg)
+        val state = fold(live.state(spark), agg)
         // one two-long collect: the global bucket range (the spine)
         val Seq(loB, hiB) = range(state, min(col(BCol)), max(col(BCol)))
-        val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
+        val capB = dailyCap(hiB, windowBuckets, throughBucket)
         val spine = state.select(keys.map(col): _*).distinct()
           .withColumn(BCol, explode(sequence(lit(loB), lit(capB))))
         val w = Window.partitionBy(keys.map(col): _*).orderBy(col(BCol))
@@ -177,16 +168,39 @@ private[operators] object BucketedState {
           .withColumnRenamed(BCol, "bucket")
         finish(rolled, keys :+ "bucket")
       case Expand =>
-        val st = readState(spark, dir)
+        val st = live.state(spark)
         val Seq(hiB) = range(st, max(col(BCol)))
-        val capB = IncrementalSwa.dailyCap(hiB, windowBuckets, throughBucket)
+        val capB = dailyCap(hiB, windowBuckets, throughBucket)
         val dayKeys = agg.keyCols :+ "__day"
-        val expanded = IncrementalSwa.expandToWindows(st, windowBuckets, capB)
+        val expanded = expandToWindows(st, windowBuckets, capB)
           .where(col("__day") >= completeFrom)
         finish(merged(expanded, agg, dayKeys), dayKeys)
           .withColumnRenamed("__day", "bucket")
     }
   }
+
+  /** Each state row re-addressed to every output bucket its time
+    * bucket feeds (`__day` ∈ [bucket, min(bucket + W − 1, hiB)]) — the
+    * daily-table expansion of the stores whose window aggregate has NO
+    * inverse (set union, register max, candidate counts): a rolling
+    * frame cannot subtract the leaving bucket, so the one-pass daily
+    * table pays O(state rows × W) intermediate rows instead — still ONE
+    * state read vs the per-day serve loop's N (axis 28).
+    */
+  private def expandToWindows(st: DataFrame, windowBuckets: Int,
+      hiB: Long): DataFrame =
+    st.withColumn("__day", explode(sequence(col(BCol),
+      least(col(BCol) + (windowBuckets - 1L), lit(hiB)))))
+
+  /** The last output bucket a daily table emits: the state's last
+    * event bucket by default (the publication shape), extendable by
+    * the training-set join to min(throughBucket, hiB + W − 1) — past
+    * that every window is empty, so emitting further is pure spine.
+    */
+  private def dailyCap(hiB: Long, windowBuckets: Int,
+      throughBucket: Option[Long]): Long =
+    throughBucket.map(t => math.min(math.max(t, hiB), hiB + windowBuckets - 1L))
+      .getOrElse(hiB)
 
   def compact(spark: SparkSession, dir: String, agg: Aggregate[_]): Long =
     refold(spark, dir, agg, Some(s"compaction of $dir"))(identity)
@@ -208,14 +222,13 @@ private[operators] object BucketedState {
   private def refold(spark: SparkSession, dir: String, agg: Aggregate[_],
       checkAt: Option[String], newRetainedFrom: Option[Long] = None)(
       trim: DataFrame => DataFrame): Long =
-    IncrementalSwa.compactFold(spark, dir, () => {
-      val trimmed = trim(fold(spark, dir, agg))
+    VersionLog.compactFold(spark, dir, state => {
+      val trimmed = trim(fold(state, agg))
       checkAt.fold(trimmed)(agg.checkFold(trimmed, _))
-    }, newRetainedFrom = newRetainedFrom)
+    }, sortCol = BCol, newRetainedFrom = newRetainedFrom)
 
-  private def fold(spark: SparkSession, dir: String,
-      agg: Aggregate[_]): DataFrame =
-    merged(readState(spark, dir), agg, agg.keyCols :+ BCol)
+  private def fold(state: DataFrame, agg: Aggregate[_]): DataFrame =
+    merged(state, agg, agg.keyCols :+ BCol)
 
   /** `state` grouped by `by` and the sub-keys, every state column
     * merged under its own name.
@@ -226,18 +239,13 @@ private[operators] object BucketedState {
     state.groupBy((by ++ agg.subKeys).map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  private def readState(spark: SparkSession, dir: String): DataFrame =
-    // partition discovery reads __v back as a column
-    spark.read.parquet(IncrementalSwa.requireLiveGen(spark, dir))
-
   /** A window reaching below the retention horizon would silently
     * under-aggregate (the buckets are GONE, not empty): refused.
     */
-  private def requireWithinRetention(spark: SparkSession, dir: String,
-      loB: Long): Unit =
-    IncrementalSwa.retainedFrom(spark, dir).foreach(h =>
+  private def requireWithinRetention(live: Live, loB: Long): Unit =
+    live.retainedFrom.foreach(h =>
       require(loB >= h,
-        s"window reaches bucket $loB but the state at $dir was " +
+        s"window reaches bucket $loB but the state at ${live.dir} was " +
           s"retention-compacted from bucket $h — buckets below the " +
           "horizon are erased, not empty; serve a window within the " +
           "retained range, or re-ingest the history and re-run " +

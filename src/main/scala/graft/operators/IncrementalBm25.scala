@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *     a DIFFERENT delta claiming a written version is refused.
   *   - `serveAsOf(version)` replays any pre-compaction index state;
   *     compaction folds the version tail into one partition and
-  *     refuses rebased reads after ([[IncrementalSwa.compactFold]]).
+  *     refuses rebased reads after ([[VersionLog]]).
   *   - `forgetDocs(ids)` is the GDPR fold: one anti-join removes a
   *     document's postings AND sentinel, so its content stops
   *     influencing scores and its length stops influencing avgdl —
@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * corpus-sized tokenization pass in front of it).
   */
 object IncrementalBm25 {
-  import IncrementalSwa.VCol
+  import VersionLog.VCol
 
   case class Config(idCol: String = "doc_id", textCol: String = "text") {
     require(idCol.nonEmpty && textCol.nonEmpty, "empty column name")
@@ -61,50 +61,26 @@ object IncrementalBm25 {
     val spark = delta.sparkSession
     val missing = Seq(cfg.idCol, cfg.textCol).filterNot(delta.columns.contains)
     require(missing.isEmpty, s"delta is missing columns $missing")
-    // one lease path for every mutator: ingest locks the idx store dir
-    // directly, and compact/forget inherit the same path through
-    // compactFold's internal lock
-    IncrementalSwa.locked(spark, idxDir(dir)) {
-      val folded = IncrementalSwa.foldedThrough(spark, idxDir(dir))
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$dir — the index cannot replay rebased history")
-      val bounds = AppendOnlyMeta.boundsOf(delta, cfg.idCol,
-        Seq(cfg.idCol, cfg.textCol))
-      val isReplay =
-        AppendOnlyMeta.guard(spark, metaDir(dir), version, bounds, "document")
-      // meta BEFORE data: a crash between the two then leaves a benign
-      // hole (the version's ids are reserved in the high-water meta but
-      // its partition is absent — a replay overwrites it idempotently),
-      // whereas data-first leaves SERVED postings whose ids the meta
-      // never recorded, so a later delta re-presenting them would pass
-      // the monotone guard and silently double-count df/N. A non-crash
-      // write FAILURE compensates a FRESH record away so a corrected
-      // delta can still claim the slot (a replay's record survives —
-      // it belongs to the earlier successful ingest).
-      AppendOnlyMeta.record(spark, metaDir(dir), version, bounds)
-      try {
-        // spilled ONCE: the postings leg and the sentinel leg of the
-        // union would otherwise each re-run the delta scan +
-        // tokenization — the cost this store exists to pay once
-        val base = Spill.roundTrip(
-          delta.select(col(cfg.idCol).cast("long").as("__id"),
-              Retrieval.bm25Toks(col(cfg.textCol)).as("__w"))
-            .select(col("__id"), size(col("__w")).as("__dl"), col("__w")))
-        val postings = base
-          .select(col("__id"), col("__dl"), explode(col("__w")).as("__term"))
-          .groupBy(col("__id"), col("__dl"), col("__term"))
-          .agg(count(lit(1)).as("__tf"))
-        val sentinels = base.select(col("__id"), col("__dl"),
-          lit(null).cast("string").as("__term"), lit(0L).as("__tf"))
-        postings.unionByName(sentinels)
-          .sortWithinPartitions("__term")
-          .write.mode("overwrite")
-          .parquet(s"${IncrementalSwa.liveGen(spark, idxDir(dir))}/$VCol=$version")
-      } catch { case t: Throwable =>
-        if (!isReplay) AppendOnlyMeta.unrecord(spark, metaDir(dir), version)
-        throw t
-      }
+    VersionLog.append(spark, idxDir(dir), version,
+      Some(AppendOnlyMeta.Check(metaDir(dir), delta, cfg.idCol,
+        Seq(cfg.idCol, cfg.textCol), "document"))) { (_, _) => gen =>
+      // spilled ONCE: the postings leg and the sentinel leg of the
+      // union would otherwise each re-run the delta scan +
+      // tokenization — the cost this store exists to pay once
+      val base = Spill.roundTrip(
+        delta.select(col(cfg.idCol).cast("long").as("__id"),
+            Retrieval.bm25Toks(col(cfg.textCol)).as("__w"))
+          .select(col("__id"), size(col("__w")).as("__dl"), col("__w")))
+      val postings = base
+        .select(col("__id"), col("__dl"), explode(col("__w")).as("__term"))
+        .groupBy(col("__id"), col("__dl"), col("__term"))
+        .agg(count(lit(1)).as("__tf"))
+      val sentinels = base.select(col("__id"), col("__dl"),
+        lit(null).cast("string").as("__term"), lit(0L).as("__tf"))
+      postings.unionByName(sentinels)
+        .sortWithinPartitions("__term")
+        .write.mode("overwrite")
+        .parquet(s"$gen/$VCol=$version")
     }
   }
 
@@ -125,15 +101,9 @@ object IncrementalBm25 {
   def serveAsOf(spark: SparkSession, dir: String, cfg: Config,
       queries: DataFrame, asOfVersion: Long, k: Int = 10, k1: Double = 1.2,
       b: Double = 0.75, maxDfFrac: Double = 1.0, qidCol: String = "q_id",
-      qtextCol: String = "q_text"): DataFrame = {
-    val folded = IncrementalSwa.foldedThrough(spark, idxDir(dir))
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$dir — that history was rebased; serving the fold instead would " +
-        "be a reproducibility lie")
+      qtextCol: String = "q_text"): DataFrame =
     serveFiltered(spark, dir, cfg, queries, k, k1, b, maxDfFrac,
       qidCol, qtextCol, Some(asOfVersion))
-  }
 
   private def serveFiltered(spark: SparkSession, dir: String, cfg: Config,
       queries: DataFrame, k: Int, k1: Double, b: Double, maxDfFrac: Double,
@@ -145,9 +115,8 @@ object IncrementalBm25 {
     val bcLimit = spark.conf
       .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
       .toLong
-    val st0 = spark.read.parquet(
-      IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-    val st = asOfVersion.map(v => st0.where(col(VCol) <= v)).getOrElse(st0)
+    val live = VersionLog.live(spark, idxDir(dir))
+    val st = asOfVersion.fold(live.state(spark))(live.asOf(spark, _))
     val stats = st.where(col("__term").isNull)
       .agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__sumdl"))
     val (qt, qBytes) = Spill.roundTripSized(
@@ -168,28 +137,21 @@ object IncrementalBm25 {
     * plain rewrite behind the atomic [[Publish]] pointer flip.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    // drop the partition-discovered __v column: the fold is rewritten
-    // as one new version, and carrying the old one as a data column
-    // would collide with partition discovery on read
-    IncrementalSwa.compactFold(spark, idxDir(dir),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-        .drop(VCol),
-      sortCol = "__term")
+    VersionLog.compactFold(spark, idxDir(dir), identity, sortCol = "__term")
 
   /** The dashboard read for the postings store —
     * [[IncrementalSwa.describe]] at this index's state dir. */
   def describe(spark: SparkSession, dir: String): IncrementalSwa.StoreInfo =
     IncrementalSwa.describe(spark, idxDir(dir))
 
-  /** One-call nightly maintenance ([[IncrementalSwa.maintainStore]]):
+  /** One-call nightly maintenance ([[VersionLog.maintainStore]]):
     * fold when live versions exceed the threshold, gc superseded
     * generations. Returns whether a fold ran.
     */
   def maintain(spark: SparkSession, dir: String, cfg: Config,
       compactWhenVersionsExceed: Int = 8,
       gcKeepGenerations: Int = 2): Boolean =
-    IncrementalSwa.maintainStore(spark, idxDir(dir),
+    VersionLog.maintainStore(spark, idxDir(dir),
       compactWhenVersionsExceed, gcKeepGenerations)(
       () => { compact(spark, dir, cfg); () })
 
@@ -203,11 +165,7 @@ object IncrementalBm25 {
   def forgetDocs(spark: SparkSession, dir: String, cfg: Config,
       ids: DataFrame): Long = {
     val keys = ids.select(col(ids.columns.head).cast("long").as("__id"))
-    IncrementalSwa.compactFold(spark, idxDir(dir),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-        .drop(VCol)
-        .join(keys, Seq("__id"), "left_anti"),
-      sortCol = "__term")
+    VersionLog.compactFold(spark, idxDir(dir),
+      _.join(keys, Seq("__id"), "left_anti"), sortCol = "__term")
   }
 }

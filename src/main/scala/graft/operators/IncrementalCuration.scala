@@ -59,7 +59,10 @@ import java.nio.charset.StandardCharsets
   * idempotent; a replayed refresh re-appends its band/shingle rows,
   * which duplicates index rows but cannot change any future admission
   * decision (candidates are distinct-ed, verification joins by id).
-  * Single writer per state dir, the [[MergeLog]] assumption.
+  * Single writer per state dir, the [[MergeLog]] assumption, enforced
+  * by the root's writer lease ([[WriterLease.locked]]) around every
+  * mutation (bootstrap, refresh, forget, purge); reads (snapshot,
+  * preview) hold no lock.
   */
 object IncrementalCuration {
 
@@ -115,18 +118,9 @@ object IncrementalCuration {
     * near-dup index over every stage entrant. Returns the curated
     * snapshot.
     */
-  /** Writer-lease wrap for every lineage MUTATION
-    * (bootstrap/refresh/forget/purge): the curation state's documented
-    * single-writer assumption, enforced cross-process the same way as
-    * the incremental feature stores ([[WriterLease]]). Reads
-    * (snapshot/preview) hold no lock.
-    */
-  private def locked[A](spark: SparkSession, root: String)(f: => A): A =
-    WriterLease.withLease(spark, root, WriterLease.ownerOf(spark))(f)
-
   def bootstrap(corpus: DataFrame, pipeline: CurationPipeline, root: String,
       reference: Option[(DataFrame, String, String)] = None): DataFrame =
-    locked(corpus.sparkSession, root) {
+    WriterLease.locked(corpus.sparkSession, root) {
       bootstrapLocked(corpus, pipeline, root, reference)
     }
 
@@ -177,7 +171,7 @@ object IncrementalCuration {
     */
   def refresh(delta: DataFrame, root: String, version: Long,
       reference: Option[(DataFrame, String, String)] = None): DataFrame =
-    locked(delta.sparkSession, root) {
+    WriterLease.locked(delta.sparkSession, root) {
       refreshLocked(delta, root, version, reference)
     }
 
@@ -375,7 +369,9 @@ object IncrementalCuration {
     * the index and log in a maintenance window.
     */
   def forget(ids: DataFrame, root: String, version: Long): Unit =
-    locked(ids.sparkSession, root) { forgetLocked(ids, root, version) }
+    WriterLease.locked(ids.sparkSession, root) {
+      forgetLocked(ids, root, version)
+    }
 
   private def forgetLocked(ids: DataFrame, root: String,
       version: Long): Unit = {
@@ -467,7 +463,7 @@ object IncrementalCuration {
     * erasure deadline, not per request.
     */
   def purgeForgotten(spark: SparkSession, root: String): Unit =
-    locked(spark, root) {
+    WriterLease.locked(spark, root) {
     val pipeline = readConfig(spark, root)
     forgottenBefore(spark, root, Long.MaxValue).foreach { ids =>
       // the index purge and the log compaction touch independent state

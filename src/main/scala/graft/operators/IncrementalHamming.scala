@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *     replay idempotence); a replayed version overwrites its own
   *     partition and — because matching is strict-ordered — reaches the
   *     same decision against its previously-appended sibling rows.
-  *   - `forgetIds` / `compact` ride [[IncrementalSwa.compactFold]]'s
+  *   - `forgetIds` / `compact` ride [[VersionLog.compactFold]]'s
   *     atomic generation flip; [[admittedIds]] with `asOfVersion`
   *     replays any pre-compaction decision boundary and refuses rebased
   *     history by name.
@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * verification stays exact and skew is AQE's to split.
   */
 object IncrementalHamming {
-  import IncrementalSwa.VCol
+  import VersionLog.{Live, VCol}
 
   case class Config(idCol: String = "doc_id", sigCol: String = "sig64",
       blocks: Int = 4) {
@@ -95,27 +95,22 @@ object IncrementalHamming {
     delta.select(col(cfg.idCol).cast("long").as("__id"),
       col(cfg.sigCol).cast("long").as("__sig"))
 
-  /** Stored `(__id, __sig)` rows, optionally truncated to
-    * `asOfVersion`. `allowEmpty` (the bootstrap [[admit]]/[[ingest]]
-    * write path only) returns a typed empty frame for a store with no
-    * versions yet; READ paths must not pass it — a mistyped or
-    * not-yet-ingested path serving an empty index would silently admit
-    * everything downstream, so reads fail by name instead
-    * ([[IncrementalSwa.requireLiveGen]]'s posture).
+  /** Stored `(__id, __sig)` rows of `live`, optionally truncated to
+    * `asOfVersion`. `allowEmpty` (the bootstrap [[admit]] write path
+    * only) returns a typed empty frame for a store with no versions
+    * yet; READ paths must not pass it — a mistyped or not-yet-ingested
+    * path serving an empty index would silently admit everything
+    * downstream, so reads fail by name instead.
     */
-  private def stored(spark: SparkSession, dir: String,
+  private def stored(spark: SparkSession, live: Live,
       asOfVersion: Option[Long], allowEmpty: Boolean = false): DataFrame =
-    if (IncrementalSwa.versions(spark, idxDir(dir)).isEmpty) {
-      require(allowEmpty, s"no hamming index state at ${idxDir(dir)} — " +
+    if (live.versions.isEmpty) {
+      require(allowEmpty, s"no hamming index state at ${live.dir} — " +
         "ingest or admit at least one delta first (reads never create " +
         "stores, and an empty index would silently match nothing)")
       spark.range(0).select(col("id").as("__id"), col("id").as("__sig"))
-    } else {
-      val st = spark.read.parquet(
-        IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-      asOfVersion.map(v => st.where(col(VCol) <= v)).getOrElse(st)
-        .select(col("__id"), col("__sig"))
-    }
+    } else asOfVersion.fold(live.state(spark))(live.asOf(spark, _))
+      .select(col("__id"), col("__sig"))
 
   /** Append pre-admitted signatures as `version` with NO admission
     * decision — the bulk path for a corpus already deduplicated (or
@@ -126,9 +121,8 @@ object IncrementalHamming {
       version: Long): Unit = {
     val spark = delta.sparkSession
     val d = normalized(delta, cfg).persist()
-    try IncrementalSwa.locked(spark, idxDir(dir)) {
-      appendLocked(spark, d, dir, version)
-    } finally d.unpersist()
+    try append(spark, d, dir, version)((_, _) => ())
+    finally d.unpersist()
   }
 
   /** The one-pass admission step: decide ordered losers for the delta
@@ -148,53 +142,31 @@ object IncrementalHamming {
     val spark = delta.sparkSession
     requireExact(cfg, maxHamming)
     val d = normalized(delta, cfg).persist()
-    try IncrementalSwa.locked(spark, idxDir(dir)) {
-      val (bounds, isReplay) = guardLocked(spark, d, dir, version)
-      val losers = Spill.roundTrip(
-        losersAgainst(spark,
-          stored(spark, dir, None, allowEmpty = true), d, cfg, maxHamming,
-          deltaRowsHint = Some(bounds.rows)))
-      writeLocked(spark, d, dir, version, bounds, isReplay)
-      losers.select(col("__id").as(cfg.idCol))
-    } finally d.unpersist()
+    try append(spark, d, dir, version) { (live, rows) =>
+      Spill.roundTrip(losersAgainst(spark,
+        stored(spark, live, None, allowEmpty = true), d, cfg, maxHamming,
+        deltaRowsHint = rows))
+    }.select(col("__id").as(cfg.idCol))
+    finally d.unpersist()
   }
 
-  private def appendLocked(spark: SparkSession, d: DataFrame, dir: String,
-      version: Long): Unit = {
-    val (bounds, isReplay) = guardLocked(spark, d, dir, version)
-    writeLocked(spark, d, dir, version, bounds, isReplay)
-  }
-
-  private def guardLocked(spark: SparkSession, d: DataFrame, dir: String,
-      version: Long): (AppendOnlyMeta.Bounds, Boolean) = {
-    val folded = IncrementalSwa.foldedThrough(spark, idxDir(dir))
-    require(version > folded,
-      s"version $version is at or below the compaction fold ($folded) at " +
-        s"$dir — the index cannot replay rebased history")
-    val bounds = AppendOnlyMeta.boundsOf(d, "__id", Seq("__id", "__sig"))
-    val isReplay =
-      AppendOnlyMeta.guard(spark, metaDir(dir), version, bounds, "signature")
-    (bounds, isReplay)
-  }
-
-  private def writeLocked(spark: SparkSession, d: DataFrame, dir: String,
-      version: Long, bounds: AppendOnlyMeta.Bounds,
-      isReplay: Boolean): Unit = {
-    // meta BEFORE data (the IncrementalBm25 ordering): a crash after
-    // the record leaves a benign hole a replay fills idempotently; a
-    // data-first write would serve signatures whose ids the high-water
-    // meta never saw, letting a later delta re-present them. A
-    // non-crash write failure compensates a FRESH record away so a
-    // corrected delta can still claim the slot.
-    AppendOnlyMeta.record(spark, metaDir(dir), version, bounds)
-    try d.sortWithinPartitions("__id")
-      .write.mode("overwrite")
-      .parquet(s"${IncrementalSwa.liveGen(spark, idxDir(dir))}/$VCol=$version")
-    catch { case t: Throwable =>
-      if (!isReplay) AppendOnlyMeta.unrecord(spark, metaDir(dir), version)
-      throw t
+  /** Appends the normalized delta `d` as `version`
+    * ([[VersionLog.append]] under the signature meta guard); `decide`
+    * runs between the guard and the write, given the live generation
+    * and the delta's row count.
+    */
+  private def append[A](spark: SparkSession, d: DataFrame, dir: String,
+      version: Long)(decide: (Live, Option[Long]) => A): A =
+    VersionLog.append(spark, idxDir(dir), version,
+      Some(AppendOnlyMeta.Check(metaDir(dir), d, "__id", Seq("__id", "__sig"),
+        "signature"))) { (live, bounds) =>
+      val decided = decide(live, bounds.map(_.rows))
+      gen => {
+        d.sortWithinPartitions("__id")
+          .write.mode("overwrite").parquet(s"$gen/$VCol=$version")
+        decided
+      }
     }
-  }
 
   /** Delta ids with a strictly-smaller-id entrant (in `refs` ∪ the
     * delta itself) within `maxHamming`. The delta's block rows are
@@ -235,6 +207,7 @@ object IncrementalHamming {
   def pairs(spark: SparkSession, dir: String, cfg: Config,
       probe: DataFrame, maxHamming: Int): DataFrame = {
     requireExact(cfg, maxHamming)
+    val st = stored(spark, VersionLog.live(spark, idxDir(dir)), None)
     val bcLimit = spark.conf
       .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
       .toLong
@@ -245,7 +218,7 @@ object IncrementalHamming {
     // hamming filter BEFORE the distinct: a hot block value produces
     // candidate rows up to hamming 48, and deduping matches is a
     // match-sized shuffle where deduping candidates is candidate-sized
-    blockRows(stored(spark, dir, None), cfg)
+    blockRows(st, cfg)
       .join(pSide, Seq("block_id", "block_val"))
       .where(col("__id") =!= col("__id_p"))
       .select(col("__id_p"), col("__id"),
@@ -267,14 +240,7 @@ object IncrementalHamming {
   def admittedIds(spark: SparkSession, dir: String, cfg: Config,
       maxHamming: Int, asOfVersion: Option[Long] = None): DataFrame = {
     requireExact(cfg, maxHamming)
-    asOfVersion.foreach { v =>
-      val folded = IncrementalSwa.foldedThrough(spark, idxDir(dir))
-      require(folded < 0 || v >= folded,
-        s"version $v predates the compaction fold ($folded) at $dir — " +
-          "that history was rebased; serving the fold instead would be " +
-          "a reproducibility lie")
-    }
-    val st = stored(spark, dir, asOfVersion)
+    val st = stored(spark, VersionLog.live(spark, idxDir(dir)), asOfVersion)
     // the state is its own "delta" for the self-decision (the refs
     // argument contributes nothing extra); both join sides are
     // state-sized, so the hint forces the shuffle plan — no broadcast,
@@ -290,25 +256,21 @@ object IncrementalHamming {
     * [[Publish]] pointer flip; reads after are served from the fold.
     */
   def compact(spark: SparkSession, dir: String, cfg: Config): Long =
-    IncrementalSwa.compactFold(spark, idxDir(dir),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-        .drop(VCol),
-      sortCol = "__id")
+    VersionLog.compactFold(spark, idxDir(dir), identity, sortCol = "__id")
 
   /** The dashboard read for the signature store —
     * [[IncrementalSwa.describe]] at this index's state dir. */
   def describe(spark: SparkSession, dir: String): IncrementalSwa.StoreInfo =
     IncrementalSwa.describe(spark, idxDir(dir))
 
-  /** One-call nightly maintenance ([[IncrementalSwa.maintainStore]]):
+  /** One-call nightly maintenance ([[VersionLog.maintainStore]]):
     * fold when live versions exceed the threshold, gc superseded
     * generations. Returns whether a fold ran.
     */
   def maintain(spark: SparkSession, dir: String, cfg: Config,
       compactWhenVersionsExceed: Int = 8,
       gcKeepGenerations: Int = 2): Boolean =
-    IncrementalSwa.maintainStore(spark, idxDir(dir),
+    VersionLog.maintainStore(spark, idxDir(dir),
       compactWhenVersionsExceed, gcKeepGenerations)(
       () => { compact(spark, dir, cfg); () })
 
@@ -320,11 +282,7 @@ object IncrementalHamming {
   def forgetIds(spark: SparkSession, dir: String, cfg: Config,
       ids: DataFrame): Long = {
     val keys = ids.select(col(ids.columns.head).cast("long").as("__id"))
-    IncrementalSwa.compactFold(spark, idxDir(dir),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, idxDir(dir)))
-        .drop(VCol)
-        .join(keys, Seq("__id"), "left_anti"),
-      sortCol = "__id")
+    VersionLog.compactFold(spark, idxDir(dir),
+      _.join(keys, Seq("__id"), "left_anti"), sortCol = "__id")
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * rebased-fold refusal, [[forgetVectors]] as one anti-join fold.
   */
 object IncrementalIvfPq {
-  import IncrementalSwa.VCol
+  import VersionLog.VCol
 
   // the versioned store lives BESIDE the static build's flat vectors/
   // dir, never at it: the writer lease is a file INSIDE the store dir,
@@ -43,7 +43,7 @@ object IncrementalIvfPq {
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The quantizer layout the LIVE generation was encoded under: a
+  /** The quantizer layout generation `gen` was encoded under: a
     * [[rebuild]] installs retrained quantizers INSIDE its generation
     * dir (`gen=<g>/_quantizers/`), so the atomic pointer flip swaps
     * codes and quantizers together — a reader can never pair one
@@ -52,27 +52,15 @@ object IncrementalIvfPq {
     * [[IvfPqIndex.build]] flat layout at `root`. Plain [[compact]] /
     * [[forgetVectors]] CARRY the quantizers into their new generation
     * (codes stay valid — folds move rows, they never re-encode).
+    * Lock-free readers take `gen` from the one resolution their codes
+    * come from; writers resolve it under the writer lease.
     */
-  private def quantPathIn(spark: SparkSession, root: String,
-      gen: String): String = {
-    val p = s"$gen/_quantizers"
-    if (fs(spark, p).exists(new Path(p))) p else root
-  }
+  private def quantPath(spark: SparkSession, root: String,
+      gen: Option[String]): String =
+    gen.map(g => s"$g/_quantizers")
+      .filter(p => fs(spark, p).exists(new Path(p))).getOrElse(root)
 
-  /** Resolve the quantizer path for the CURRENT live generation. Only
-    * safe where the generation cannot flip underneath the caller (under
-    * the writer lease); lock-free readers must resolve the generation
-    * ONCE and derive both the codes path and the quantizer path from
-    * it ([[quantPathIn]]) — resolving the pointer twice lets a rebuild
-    * commit in between and pairs one generation's codes with
-    * another's codebooks.
-    */
-  private def quantPath(spark: SparkSession, root: String): String =
-    IncrementalSwa.liveGenOpt(spark, vecDir(root))
-      .map(quantPathIn(spark, root, _))
-      .getOrElse(root)
-
-  /** The [[IncrementalSwa.compactFold]] install hook that carries the
+  /** The [[VersionLog.compactFold]] install hook that carries the
     * live generation's quantizers into the fold's new generation —
     * resolved INSIDE the publish callback (the pointer still names the
     * OLD generation there, and the whole fold runs under the writer
@@ -80,7 +68,7 @@ object IncrementalIvfPq {
     */
   private def carryQuantizers(spark: SparkSession, root: String)(
       gen: String): Unit =
-    IncrementalSwa.liveGenOpt(spark, vecDir(root)).foreach { live =>
+    VersionLog.live(spark, vecDir(root)).path.foreach { live =>
       val f = fs(spark, root)
       val src = new Path(s"$live/_quantizers")
       if (f.exists(src))
@@ -107,7 +95,7 @@ object IncrementalIvfPq {
       vecCol: String = "embedding", kmeansIters: Int = 3, pqIters: Int = 5,
       trainSampleCap: Int = 1 << 16): Unit = {
     val spark = initial.sparkSession
-    IncrementalSwa.locked(spark, vecDir(root)) {
+    WriterLease.locked(spark, vecDir(root)) {
       val f = fs(spark, root)
       // the re-build reset: a previous lifetime's generations and
       // high-water rows are stale against the new quantizers. The
@@ -122,13 +110,11 @@ object IncrementalIvfPq {
       AppendOnlyMeta.clear(spark, metaDir(root))
       val bounds = AppendOnlyMeta.boundsOf(initial, idCol,
         Seq(idCol, vecCol))
-      // meta BEFORE the data install (the ingest ordering): a crash
-      // after the record leaves a store with reserved ids and no
-      // committed generation — loud (reads fail by name) and repaired
-      // by re-running build (which clears the meta first); the reverse
-      // order would serve v0 vectors the high-water meta never saw.
-      // A non-crash build failure compensates the record away so a
-      // corrected corpus can rebuild without a hand-cleaned meta dir.
+      // meta before the data install ([[VersionLog]]'s order): a crash
+      // after the record leaves reserved ids and no committed
+      // generation — loud (reads fail by name) and repaired by
+      // re-running build, which clears the meta first. The reset has
+      // no replay, so any build failure removes the record.
       AppendOnlyMeta.record(spark, metaDir(root), 0L, bounds)
       try {
         // the static build trains the quantizers and encodes the
@@ -163,36 +149,19 @@ object IncrementalIvfPq {
     val spark = delta.sparkSession
     val missing = Seq(idCol, vecCol).filterNot(delta.columns.contains)
     require(missing.isEmpty, s"delta is missing columns $missing")
-    IncrementalSwa.locked(spark, vecDir(root)) {
+    VersionLog.append(spark, vecDir(root), version,
+      Some(AppendOnlyMeta.Check(metaDir(root), delta, idCol,
+        Seq(idCol, vecCol), "vector"))) { (live, _) =>
       // quantizers resolved INSIDE the lock: a concurrent rebuild could
       // flip the generation (and with it the quantizer epoch) between
       // an unlocked read and the encode
-      val qp = quantPath(spark, root)
+      val qp = quantPath(spark, root, live.path)
       IvfPqIndex.requireEncoding(spark, qp)
-      val folded = IncrementalSwa.foldedThrough(spark, vecDir(root))
-      require(version > folded,
-        s"version $version is at or below the compaction fold ($folded) at " +
-          s"$root — the index cannot replay rebased history")
-      val bounds = AppendOnlyMeta.boundsOf(delta, idCol, Seq(idCol, vecCol))
-      val isReplay =
-        AppendOnlyMeta.guard(spark, metaDir(root), version, bounds, "vector")
-      // meta BEFORE data (the IncrementalBm25 ordering): a crash after
-      // the record leaves a benign hole a replay fills idempotently; a
-      // crash after a data-first write would serve vectors whose ids the
-      // high-water meta never saw, letting a later delta re-present
-      // them. A non-crash write failure compensates a FRESH record away
-      // so a corrected delta can still claim the slot.
-      AppendOnlyMeta.record(spark, metaDir(root), version, bounds)
-      try {
-        val centroids = spark.read.parquet(s"$qp/centroids")
-        val cb = IvfPqIndex.loadCodebooks(spark, qp)
-        IvfPqIndex.encodeAssign(delta, centroids, cb, idCol, vecCol)
-          .write.mode("overwrite").partitionBy("cell_id")
-          .parquet(s"${IncrementalSwa.liveGen(spark, vecDir(root))}/$VCol=$version")
-      } catch { case t: Throwable =>
-        if (!isReplay) AppendOnlyMeta.unrecord(spark, metaDir(root), version)
-        throw t
-      }
+      gen => IvfPqIndex.encodeAssign(delta,
+          spark.read.parquet(s"$qp/centroids"),
+          IvfPqIndex.loadCodebooks(spark, qp), idCol, vecCol)
+        .write.mode("overwrite").partitionBy("cell_id")
+        .parquet(s"$gen/$VCol=$version")
     }
   }
 
@@ -206,9 +175,9 @@ object IncrementalIvfPq {
     // the generation pointer is resolved ONCE: codes and quantizers
     // both derive from it, so a rebuild committing mid-query can never
     // pair this generation's codes with another's codebooks
-    val gen = IncrementalSwa.requireLiveGen(spark, vecDir(root))
-    IvfPqIndex.queryVectors(spark, quantPathIn(spark, root, gen),
-      spark.read.parquet(gen),
+    val live = VersionLog.live(spark, vecDir(root))
+    IvfPqIndex.queryVectors(spark, quantPath(spark, root, live.path),
+      live.state(spark),
       queries, k, nProbe, rescoreFactor, idCol, vecCol, qIdCol, qVecCol)
   }
 
@@ -220,35 +189,20 @@ object IncrementalIvfPq {
       idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec"): DataFrame = {
     // ONE pointer resolution for the fold check, the codes, and the
-    // quantizers (see [[query]]): a rebuild committing between two
-    // resolutions could pass the OLD fold check and then silently
-    // filter the NEW generation down to nothing (or score its codes
-    // under the wrong codebooks)
-    val gen = IncrementalSwa.requireLiveGen(spark, vecDir(root))
-    val folded = IncrementalSwa.foldedThroughIn(spark, gen)
-    require(folded < 0 || asOfVersion >= folded,
-      s"version $asOfVersion predates the compaction fold ($folded) at " +
-        s"$root — that history was rebased; serving the fold instead " +
-        "would be a reproducibility lie")
-    IvfPqIndex.queryVectors(spark, quantPathIn(spark, root, gen),
-      spark.read.parquet(gen)
-        .where(col(VCol) <= asOfVersion),
+    // quantizers (see [[query]])
+    val live = VersionLog.live(spark, vecDir(root))
+    IvfPqIndex.queryVectors(spark, quantPath(spark, root, live.path),
+      live.asOf(spark, asOfVersion),
       queries, k, nProbe, rescoreFactor, idCol, vecCol, qIdCol, qVecCol)
   }
 
   /** Fold the version tail into one `cell_id`-partitioned partition —
-    * [[IncrementalSwa.compactFold]]'s shared choreography (codes stay
+    * [[VersionLog.compactFold]]'s shared choreography (codes stay
     * valid: the quantizers are frozen, a fold moves rows, it never
     * re-encodes).
     */
   def compact(spark: SparkSession, root: String): Long =
-    // drop the partition-discovered __v column: the fold is REWRITTEN
-    // as a single new version, and carrying the old one as a data
-    // column would collide with partition discovery on read
-    IncrementalSwa.compactFold(spark, vecDir(root),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, vecDir(root)))
-        .drop(VCol),
+    VersionLog.compactFold(spark, vecDir(root), identity,
       sortCol = "cell_id", partitionCols = Seq("cell_id"),
       install = carryQuantizers(spark, root))
 
@@ -258,11 +212,8 @@ object IncrementalIvfPq {
   def forgetVectors(spark: SparkSession, root: String, ids: DataFrame,
       idCol: String = "vec_id"): Long = {
     val keys = ids.select(col(ids.columns.head).cast("long").as(idCol))
-    IncrementalSwa.compactFold(spark, vecDir(root),
-      () => spark.read.parquet(
-          IncrementalSwa.requireLiveGen(spark, vecDir(root)))
-        .drop(VCol)
-        .join(keys, Seq(idCol), "left_anti"),
+    VersionLog.compactFold(spark, vecDir(root),
+      _.join(keys, Seq(idCol), "left_anti"),
       sortCol = "cell_id", partitionCols = Seq("cell_id"),
       install = carryQuantizers(spark, root))
   }
@@ -272,7 +223,7 @@ object IncrementalIvfPq {
   def describe(spark: SparkSession, root: String): IncrementalSwa.StoreInfo =
     IncrementalSwa.describe(spark, vecDir(root))
 
-  /** One-call nightly maintenance ([[IncrementalSwa.maintainStore]]):
+  /** One-call nightly maintenance ([[VersionLog.maintainStore]]):
     * fold when live versions exceed the threshold, gc superseded
     * generations. Quantizer drift is NOT a maintenance decision — a
     * [[rebuild]] re-scores history and is the operator's own call.
@@ -281,7 +232,7 @@ object IncrementalIvfPq {
   def maintain(spark: SparkSession, root: String,
       compactWhenVersionsExceed: Int = 8,
       gcKeepGenerations: Int = 2): Boolean =
-    IncrementalSwa.maintainStore(spark, vecDir(root),
+    VersionLog.maintainStore(spark, vecDir(root),
       compactWhenVersionsExceed, gcKeepGenerations)(
       () => { compact(spark, root); () })
 
@@ -315,14 +266,12 @@ object IncrementalIvfPq {
     // pin one state); the staged quantizers are renamed into the new
     // generation by the install hook, so a crash anywhere leaves the
     // old generation (old codes + old quantizers) fully live
-    IncrementalSwa.compactFold(spark, vecDir(root),
-      () => {
-        val qpOld = quantPath(spark, root)
+    VersionLog.compactFold(spark, vecDir(root),
+      state => {
+        val qpOld = quantPath(spark, root,
+          VersionLog.live(spark, vecDir(root)).path)
         val oldCb = IvfPqIndex.loadCodebooks(spark, qpOld)
-        val survivors = Spill.roundTrip(
-          spark.read.parquet(
-              IncrementalSwa.requireLiveGen(spark, vecDir(root)))
-            .select(col(idCol), col(vecCol)))
+        val survivors = Spill.roundTrip(state.select(col(idCol), col(vecCol)))
         f.delete(new Path(staging), true)
         val q = IvfPqIndex.trainQuantizersTo(survivors, staging,
           nCells.getOrElse(

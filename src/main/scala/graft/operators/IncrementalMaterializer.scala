@@ -320,9 +320,10 @@ object IncrementalMaterializer {
     * "max >= v" as healed would silently launder the tear away.
     */
   private def holdsVersion(spark: SparkSession, d: String,
-      v: Long): Boolean =
-    IncrementalSwa.versions(spark, d).contains(v) ||
-      IncrementalSwa.foldedThrough(spark, d) >= v
+      v: Long): Boolean = {
+    val live = VersionLog.live(spark, d)
+    live.versions.contains(v) || live.foldedThrough >= v
+  }
 
   /** Sweep pending markers at or below `version` — but ONLY those
     * whose every covered store verifiably holds their version (the
@@ -737,20 +738,21 @@ object IncrementalMaterializer {
       else Nil
     }.toMap
 
-  /** The per-store policy step: describe (driver-side), decide, act
-    * under the store's own lease, gc. A retention need subsumes the
-    * version-count fold (compactRetaining IS a compaction).
+  /** The per-store policy step: read the live generation
+    * (driver-side), decide, act under the store's own lease, gc. A
+    * retention need subsumes the version-count fold (compactRetaining
+    * IS a compaction).
     */
   private def maintainOne(spark: SparkSession, dir: String,
       featNames: Seq[String], policy: MaintenancePolicy,
       torn: Option[Long], agg: BucketedState.Aggregate[_]): MaintenanceAction = {
-    val info = IncrementalSwa.describe(spark, dir)
-    val hasState = info.versions.nonEmpty
+    val live = VersionLog.live(spark, dir)
+    val hasState = live.versions.nonEmpty
     val needRetain = policy.retainFromBucket
-      .filter(mb => hasState && !info.retainedFrom.contains(mb))
+      .filter(mb => hasState && !live.retainedFrom.contains(mb))
       .filter(_ => torn.isEmpty)
     val needCompact = torn.isEmpty &&
-      info.versions.size > policy.compactWhenVersionsExceed
+      live.versions.size > policy.compactWhenVersionsExceed
     needRetain match {
       case Some(mb) => BucketedState.compactRetaining(spark, dir, agg, mb)
       case None => if (needCompact) BucketedState.compact(spark, dir, agg)
@@ -758,12 +760,10 @@ object IncrementalMaterializer {
     // gc is fold-free (it drops SUPERSEDED generations; the live one —
     // where any torn version lives — is never collected), so it runs
     // even for skipped stores
-    val before = Publish.committed(spark, dir).size
-    Publish.gc(spark, dir, policy.gcKeepGenerations)
     MaintenanceAction(dir, featNames,
       compacted = needRetain.isDefined || needCompact,
       horizonSet = needRetain,
-      generationsCollected = before - Publish.committed(spark, dir).size,
+      generationsCollected = Publish.gc(spark, dir, policy.gcKeepGenerations),
       blockedByTornRefresh = torn)
   }
 

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import org.apache.hadoop.fs.Path
-
 /** Incrementally-maintained sliding-window aggregate state — the
   * production shape of the M1 backfill loop. The step-loop
   * (feathr-rs/src/materialization.rs:200-231) recomputes each step's
@@ -42,16 +40,15 @@ import org.apache.hadoop.fs.Path
   *
   * The lifecycle (version log, replay and fold rules, serves,
   * compactions) is [[BucketedState]]'s, shared with the sibling
-  * stores; this object also holds the generation helpers every
-  * incremental store uses. State rows are bounded by keys × live
+  * stores, over [[VersionLog]]'s on-disk layout; [[versions]],
+  * [[foldedThrough]], [[retainedFrom]] and [[describe]] read that
+  * layout for any store dir. State rows are bounded by keys × live
   * buckets after [[compact]], not by event count.
   */
 object IncrementalSwa {
   import BucketedState.{AtBoundary, AtVersion, PerBucket}
-  val VCol = "__v"
+  val VCol: String = VersionLog.VCol
   val BCol = "__b"
-  private[operators] val FoldPrefix = "_folded_through_"
-  private[operators] val RetainPrefix = "_retained_from_"
 
   /** `bucketUs` is the maintenance grain (day/hour) in epoch-micros;
     * sums are maintained on the exact integer grid `round(value·100)`
@@ -62,9 +59,6 @@ object IncrementalSwa {
     require(keyCols.nonEmpty, "at least one key column")
     require(bucketUs > 0, s"bucketUs must be positive: $bucketUs")
   }
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Operational snapshot of one incremental store — the dashboard /
     * runbook read (all driver-side metadata, NO Spark job): committed
@@ -81,124 +75,20 @@ object IncrementalSwa {
       liveFiles: Long, liveBytes: Long,
       leaseOwner: Option[String], leaseAgeMs: Option[Long])
 
-  def describe(spark: SparkSession, dir: String): StoreInfo = {
-    val f = fs(spark, dir)
-    // one root listing (Publish markers) + ONE live-generation listing
-    // shared by the version/fold/retention fields — versions(),
-    // foldedThrough() and retainedFrom() each re-list the same dir,
-    // which an object-store FS turns into per-call round trips
-    val gens = Publish.committed(spark, dir)
-    val live = gens.lastOption
-    val (vs, folded, retained, files, bytes) = live.map { g =>
-      val gp = new Path(Publish.genPath(dir, g))
-      if (!f.exists(gp)) (Seq.empty[Long], -1L, None, 0L, 0L)
-      else {
-        val entries = f.listStatus(gp).toSeq
-        val names = entries.map(_.getPath.getName)
-        val vs = entries
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$VCol="))
-          .map(_.getPath.getName.stripPrefix(s"$VCol=").toLong).sorted
-        val folded = names.filter(_.startsWith(FoldPrefix))
-          .map(_.drop(FoldPrefix.length).toLong).foldLeft(-1L)(math.max)
-        val retained = names.filter(_.startsWith(RetainPrefix))
-          .map(_.drop(RetainPrefix.length).toLong).maxOption
-        val cs = f.getContentSummary(gp)
-        (vs, folded, retained, cs.getFileCount, cs.getLength)
-      }
-    }.getOrElse((Seq.empty[Long], -1L, None, 0L, 0L))
-    val lease = WriterLease.readLease(spark, dir)
-    StoreInfo(dir, gens, live, vs, folded, retained, files, bytes,
-      lease.map(_._1), WriterLease.leaseAgeMs(spark, dir))
-  }
-
-  /** The one-call store-level maintenance policy step shared by the
-    * index stores ([[IncrementalBm25]]/[[IncrementalHamming]]/
-    * [[IncrementalIvfPq]].maintain — the
-    * [[IncrementalMaterializer.maintain]] decision rules at single-store
-    * granularity): fold the version tail when the live generation holds
-    * more than `compactWhenVersionsExceed` partitions, then gc all but
-    * the newest `gcKeepGenerations` committed generations. Idempotent —
-    * a second run finds one version and nothing to collect. Returns
-    * whether a fold ran.
-    */
-  private[operators] def maintainStore(spark: SparkSession, dir: String,
-      compactWhenVersionsExceed: Int, gcKeepGenerations: Int)(
-      compactStore: () => Unit): Boolean = {
-    require(compactWhenVersionsExceed >= 1,
-      s"compactWhenVersionsExceed must be >= 1: $compactWhenVersionsExceed")
-    // BOTH params validated before any action: a bad gc bound failing
-    // only after the compaction fold would leave a half-applied call
-    require(gcKeepGenerations >= 1,
-      s"gcKeepGenerations must keep the live generation: $gcKeepGenerations")
-    val folded = versions(spark, dir).size > compactWhenVersionsExceed
-    if (folded) compactStore()
-    Publish.gc(spark, dir, gcKeepGenerations)
-    folded
-  }
-
-  /** Live generation dir if the store exists. Read paths go through
-    * this (or [[requireLiveGen]]) so that a read of a mistyped or
-    * missing path FAILS by name instead of committing an empty
-    * generation there as a side effect.
-    */
-  private[operators] def liveGenOpt(spark: SparkSession,
-      dir: String): Option[String] =
-    Publish.current(spark, dir).map(Publish.genPath(dir, _))
-
-  /** [[liveGenOpt]] or a named error — the read-path entry. */
-  private[operators] def requireLiveGen(spark: SparkSession,
-      dir: String): String =
-    liveGenOpt(spark, dir).getOrElse(throw new IllegalArgumentException(
-      s"no incremental state at $dir — ingest at least one delta first " +
-        "(reads never create stores)"))
-
-  /** Live generation dir for WRITERS, creating (and committing) an
-    * empty generation 0 for a brand-new store.
-    */
-  private[operators] def liveGen(spark: SparkSession, dir: String): String = {
-    val g = Publish.current(spark, dir)
-      .getOrElse(Publish.publish(spark, dir) { p =>
-        fs(spark, dir).mkdirs(new Path(p))
-      })
-    Publish.genPath(dir, g)
-  }
+  def describe(spark: SparkSession, dir: String): StoreInfo =
+    VersionLog.describe(spark, dir)
 
   /** Versions present in the live generation, ascending; Nil for a
     * missing store (no side effects).
     */
   def versions(spark: SparkSession, dir: String): Seq[Long] =
-    liveGenOpt(spark, dir).toSeq.flatMap { g =>
-      val gen = new Path(g)
-      val f = fs(spark, dir)
-      if (!f.exists(gen)) Nil
-      else f.listStatus(gen).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$VCol="))
-        .map(_.getPath.getName.stripPrefix(s"$VCol=").toLong)
-        .sorted
-    }
+    VersionLog.live(spark, dir).versions
 
   /** Highest version a [[compact]] has folded history through in the
     * live generation; -1 when never compacted (or no store yet).
     */
   def foldedThrough(spark: SparkSession, dir: String): Long =
-    liveGenOpt(spark, dir).map(foldedThroughIn(spark, _)).getOrElse(-1L)
-
-  /** [[foldedThrough]] read from an ALREADY-RESOLVED generation dir —
-    * for lock-free readers that must resolve the generation pointer
-    * exactly once and derive every read from it (a second resolution
-    * can land on a generation published in between).
-    */
-  private[operators] def foldedThroughIn(spark: SparkSession,
-      genDir: String): Long = {
-    val gen = new Path(genDir)
-    val f = fs(spark, genDir)
-    if (!f.exists(gen)) -1L
-    else f.listStatus(gen).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(FoldPrefix))
-      .map(_.drop(FoldPrefix.length).toLong)
-      .foldLeft(-1L)(math.max)
-  }
+    VersionLog.live(spark, dir).foldedThrough
 
   /** Epoch-micros timestamp → bucket index under `bucketUs`. ONE
     * definition shared by every incremental store and gate — the
@@ -210,122 +100,12 @@ object IncrementalSwa {
     ((us - pmod(us, lit(bucketUs))) / lit(bucketUs)).cast("long")
   }
 
-  /** Cross-process writer-lease wrap shared by every incremental
-    * store's write path (ingest/compact): the single-writer assumption,
-    * enforced ([[WriterLease]]). Owner = `spark.graft.lease.owner`
-    * when configured (same-owner crash-restart reclaim) else the
-    * application id — [[WriterLease.ownerOf]], ONE resolution for
-    * every leased writer in the engine.
-    */
-  private[operators] def locked[A](spark: SparkSession, dir: String)(f: => A): A =
-    WriterLease.withLease(spark, dir, WriterLease.ownerOf(spark))(f)
-
-  /** Shared compaction choreography for every incremental store: write
-    * the fold as the single `__v=<vmax>` of a NEW [[Publish]]
-    * generation, record the fold horizon marker, and atomically flip
-    * the pointer. The caller supplies the store-specific fold
-    * aggregation as a THUNK, evaluated under the writer lease: a
-    * `spark.read.parquet` pins its file listing at plan construction,
-    * so a fold built before the lock would silently drop any version a
-    * concurrent leased ingest lands in the gap — the listing, the fold
-    * read, and the vmax it is written as must all resolve inside one
-    * lease scope.
-    */
-  private[operators] def compactFold(spark: SparkSession, dir: String,
-      mkFold: () => DataFrame,
-      newRetainedFrom: Option[Long] = None,
-      sortCol: String = BCol,
-      partitionCols: Seq[String] = Nil,
-      install: String => Unit = _ => (),
-      bumpVersion: Boolean = false): Long = locked(spark, dir) {
-    val fold = mkFold()
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"state at $dir is empty or missing — ingest at " +
-      "least one delta before compacting")
-    // a plain compact folds AS the max version (as-of that version is
-    // still answerable — the fold holds exactly its state); a fold that
-    // CHANGES how existing versions would be answered (the IvfPq
-    // rebuild: same corpus, new quantizers) bumps to a fresh slot so
-    // every prior version is refused as rebased, not silently answered
-    // under semantics it never had
-    val vmax = if (bumpVersion) vs.max + 1 else vs.max
-    // the retention horizon SURVIVES later plain compactions: without
-    // the carry, a plain compact after a retaining one would drop the
-    // marker and a serve reaching below the horizon would silently
-    // under-aggregate instead of failing by name. An EXPLICIT horizon
-    // REPLACES the carried one (not max): compactRetaining is the
-    // operator's assertion "state is complete from minBucket", which
-    // is exactly how a re-ingested history becomes servable again —
-    // lowering it without re-ingesting is the operator's own claim to
-    // make, loudly, through the same call.
-    val carried = retainedFrom(spark, dir)
-    val horizon = newRetainedFrom.orElse(carried)
-    Publish.publish(spark, dir) { gen =>
-      val w = fold.sortWithinPartitions(sortCol)
-        .write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(s"$gen/$VCol=$vmax")
-      val f = new Path(gen).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.create(new Path(s"$gen/$FoldPrefix$vmax"), false).close()
-      horizon.foreach(h =>
-        f.create(new Path(s"$gen/$RetainPrefix$h"), false).close())
-      // store-specific sidecar install (e.g. IncrementalIvfPq's
-      // per-generation quantizers) — INSIDE the publish callback, so
-      // the sidecar flips atomically with the fold under one marker
-      install(gen)
-    }
-  }
-
   /** The oldest bucket the live generation still fully covers, if a
     * retention compaction ever trimmed history (None = everything ever
     * ingested is present).
     */
   def retainedFrom(spark: SparkSession, dir: String): Option[Long] =
-    liveGenOpt(spark, dir).flatMap { g =>
-      val gen = new Path(g)
-      val f = fs(spark, dir)
-      if (!f.exists(gen)) None
-      else f.listStatus(gen).iterator
-        .map(_.getPath.getName)
-        .filter(_.startsWith(RetainPrefix))
-        .map(_.drop(RetainPrefix.length).toLong)
-        .maxOption
-    }
-
-  /** Each state row re-addressed to every output bucket its time
-    * bucket feeds (`__day` ∈ [bucket, min(bucket + W − 1, hiB)]) — the
-    * daily-table expansion shared by the stores whose window aggregate
-    * has NO inverse (set union, register max, candidate counts): a
-    * rolling frame cannot subtract the leaving bucket, so the one-pass
-    * daily table pays O(state rows × W) intermediate rows instead —
-    * still ONE state read vs the per-day serve loop's N (axis 28).
-    */
-  private[operators] def expandToWindows(st: DataFrame, windowBuckets: Int,
-      hiB: Long): DataFrame =
-    st.withColumn("__day", explode(sequence(col(BCol),
-      least(col(BCol) + (windowBuckets - 1L), lit(hiB)))))
-
-  /** The last output bucket a daily table emits: the state's last
-    * event bucket by default (the publication shape), extendable by
-    * the training-set join to min(throughBucket, hiB + W − 1) — past
-    * that every window is empty, so emitting further is pure spine.
-    */
-  private[operators] def dailyCap(hiB: Long, windowBuckets: Int,
-      throughBucket: Option[Long]): Long =
-    throughBucket.map(t => math.min(math.max(t, hiB), hiB + windowBuckets - 1L))
-      .getOrElse(hiB)
-
-  /** The first output bucket whose window is COMPLETE over retained
-    * state — the daily tables' default emission floor (erased ≠
-    * empty; [[serveDaily]]'s horizon posture, shared by every store's
-    * daily variant). `Long.MinValue` when no horizon applies or the
-    * caller opted into left-edge semantics.
-    */
-  private[operators] def dailyCompleteFrom(spark: SparkSession, dir: String,
-      windowBuckets: Int, includeHorizonPartialRows: Boolean): Long =
-    if (includeHorizonPartialRows) Long.MinValue
-    else retainedFrom(spark, dir).map(_ + windowBuckets - 1L)
-      .getOrElse(Long.MinValue)
+    VersionLog.live(spark, dir).retainedFrom
 
   /** The scalar partials per (key, bucket): sum on the exact integer
     * cent grid, count, min, max and latest — each merged by its own

@@ -29,7 +29,8 @@ import org.apache.hadoop.fs.Path
   * the lifecycle is [[BucketedState]]'s.
   */
 object IncrementalUnion {
-  import IncrementalSwa.{BCol, VCol}
+  import IncrementalSwa.BCol
+  import VersionLog.VCol
   import BucketedState.{AtBoundary, AtVersion, PerBucket}
 
   case class Config(keyCols: Seq[String], tsCol: String, itemCol: String,
@@ -143,7 +144,7 @@ object IncrementalUnion {
     * has no inverse, so a rolling frame cannot subtract the bucket
     * leaving the window; instead each stored set contributes itself
     * to the `windowBuckets` output buckets its bucket feeds
-    * ([[IncrementalSwa.expandToWindows]]) and one groupBy re-unions.
+    * ([[BucketedState.Expand]]) and one groupBy re-unions.
     * Honest cost: O(state sets × windowBuckets) intermediate rows —
     * state is bounded by keys × buckets × cap, and this is still far
     * below the N serve() scans (each a full state read) a per-day loop

@@ -33,28 +33,20 @@ import org.apache.hadoop.fs.Path
   * one retained row per deleted key (they are filtered at read);
   * history below the fold is REBASED — [[snapshotAsOf]] refuses
   * versions older than the oldest surviving partition with a named
-  * error rather than silently returning the fold. Writers are assumed
-  * single-writer per log dir (the streaming `foreachBatch` posture);
-  * concurrent appends during a compact could collide with the fold's
-  * `max+1` slot — use [[nextVersion]] to continue the lineage.
+  * error rather than silently returning the fold. Both mutation paths
+  * ([[append]], [[compact]]) run under the log dir's writer lease
+  * ([[WriterLease.locked]]): a concurrent append during a compact would
+  * collide with the fold's `max+1` slot, and two appends to one version
+  * would interleave part files — use [[nextVersion]] to continue the
+  * lineage. Callers holding a lease on a PARENT dir (the curation
+  * lineage leases its root) nest fine — the log dir is its own lock
+  * scope.
   */
 object MergeLog {
 
   private val VCol = "__v"
   private val DeadCol = "__dead"
   private val AsidePrefix = "_aside_v"
-
-  /** Cross-process writer lease around both mutation paths
-    * ([[append]], [[compact]]) — the enforcement of the single-writer
-    * assumption this log documents, same discipline as the incremental
-    * feature stores ([[IncrementalSwa.locked]]): a concurrent append
-    * during a compact would collide with the fold's `max+1` slot, and
-    * two appends to one version would interleave part files. Callers
-    * holding a lease on a PARENT dir (the curation lineage leases its
-    * root) nest fine — the log dir is its own lock scope.
-    */
-  private def locked[A](spark: SparkSession, dir: String)(f: => A): A =
-    WriterLease.withLease(spark, dir, WriterLease.ownerOf(spark))(f)
 
   /** Append one delta as `version`. Keys must be unique WITHIN the
     * delta (checked, delta-sized) — cross-version conflicts are what
@@ -66,7 +58,7 @@ object MergeLog {
     */
   def append(delta: DataFrame, dir: String, version: Long,
       keyCols: Seq[String], tombstoneCol: Option[String] = None): Unit =
-    locked(delta.sparkSession, dir) {
+    WriterLease.locked(delta.sparkSession, dir) {
       appendLocked(delta, dir, version, keyCols, tombstoneCol)
     }
 
@@ -264,7 +256,7 @@ object MergeLog {
     * amplification back to 1; history below the fold is rebased.
     */
   def compact(spark: SparkSession, dir: String, keyCols: Seq[String]): Unit =
-    locked(spark, dir) {
+    WriterLease.locked(spark, dir) {
       recoverAsides(new Path(dir).getFileSystem(
         spark.sparkContext.hadoopConfiguration), dir)
       val vs = versions(spark, dir)

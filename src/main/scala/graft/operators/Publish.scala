@@ -84,12 +84,13 @@ object Publish {
     * (markers are how gc finds work). The reverse order would orphan
     * the data forever — with the marker gone, no later gc or publish
     * ever looks at that generation again. `keep >= 1`; the live
-    * generation is never collected.
+    * generation is never collected. Returns the number of generations
+    * collected.
     */
-  def gc(spark: SparkSession, dir: String, keep: Int = 2): Unit = {
+  def gc(spark: SparkSession, dir: String, keep: Int = 2): Int = {
     require(keep >= 1, s"gc must keep at least the live generation (keep=$keep)")
     val f = fs(spark, dir)
-    committed(spark, dir).dropRight(keep).foreach { g =>
+    committed(spark, dir).dropRight(keep).count { g =>
       f.delete(new Path(genPath(dir, g)), true)
       f.delete(new Path(s"$dir/$MarkerPrefix$g"), false)
     }

@@ -77,7 +77,7 @@ object WriterLease {
     * (stable across restarts — enables same-owner reclaim), else the
     * application id.
     */
-  private[operators] def ownerOf(spark: SparkSession): String =
+  private def ownerOf(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.lease.owner")
       .getOrElse(spark.sparkContext.applicationId)
 
@@ -300,4 +300,13 @@ object WriterLease {
       catch { case r: Throwable => if (primary == null) throw r }
     }
   }
+
+  /** [[withLease]] as this engine's writer ([[ownerOf]]): the one wrap
+    * around every leased write path — the incremental stores' ingests
+    * and folds, [[MergeLog]]'s appends and compactions, the curation
+    * lineage's mutations.
+    */
+  private[operators] def locked[A](spark: SparkSession, dir: String)(
+      f: => A): A =
+    withLease(spark, dir, ownerOf(spark))(f)
 }

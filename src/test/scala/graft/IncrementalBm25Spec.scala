@@ -170,4 +170,28 @@ class IncrementalBm25Spec extends SparkTestBase {
     assert(rows(IncrementalBm25.serve(spark, root, cfg, queries, k = 3))
       == rows(Retrieval.bm25TopK(corpus, queries, k = 3)))
   }
+
+  test("a folded version is refused by the fold before the meta guard; " +
+      "forget records its fold") {
+    val root = Spill.newPath(spark) + "/bm"
+    val d1 = corpus.where(col("doc_id") > 3)
+    IncrementalBm25.ingest(corpus.where(col("doc_id") <= 3), root, cfg, 0L)
+    IncrementalBm25.ingest(d1, root, cfg, 1L)
+    IncrementalBm25.compact(spark, root, cfg)
+    // the identical delta is what the meta guard accepts as a replay,
+    // an imposter what it refuses as "already written": both must
+    // meet the fold guard first
+    val replay = intercept[IllegalArgumentException] {
+      IncrementalBm25.ingest(d1, root, cfg, 1L)
+    }
+    assert(replay.getMessage.contains("fold"), replay.getMessage)
+    val imposter = intercept[IllegalArgumentException] {
+      IncrementalBm25.ingest(docs((4L, "other text")), root, cfg, 1L)
+    }
+    assert(imposter.getMessage.contains("fold") &&
+      !imposter.getMessage.contains("already written"), imposter.getMessage)
+    IncrementalBm25.ingest(docs((6L, "late data")), root, cfg, 2L)
+    IncrementalBm25.forgetDocs(spark, root, cfg, Seq(6L).toDF("doc_id"))
+    assert(IncrementalBm25.describe(spark, root).foldedThrough == 2L)
+  }
 }

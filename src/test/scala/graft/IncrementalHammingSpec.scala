@@ -206,4 +206,28 @@ class IncrementalHammingSpec extends SparkTestBase {
     }.map(_._1).toSet
     assert(got == expected)
   }
+
+  test("a folded version is refused by the fold before the meta guard; " +
+      "forget records its fold") {
+    val root = Spill.newPath(spark) + "/h9"
+    val d1 = sigs((10L, far), (11L, 0x0F0FL))
+    IncrementalHamming.admit(sigs((1L, 0L), (2L, 1L)), root, cfg, 3, 0L)
+    IncrementalHamming.admit(d1, root, cfg, 3, 1L)
+    IncrementalHamming.compact(spark, root, cfg)
+    // the identical delta is what the meta guard accepts as a replay,
+    // an imposter what it refuses as "already written": both must
+    // meet the fold guard first, on the admission and the bulk path
+    val replay = intercept[IllegalArgumentException] {
+      IncrementalHamming.admit(d1, root, cfg, 3, 1L)
+    }
+    assert(replay.getMessage.contains("fold"), replay.getMessage)
+    val imposter = intercept[IllegalArgumentException] {
+      IncrementalHamming.ingest(sigs((10L, 7L)), root, cfg, 1L)
+    }
+    assert(imposter.getMessage.contains("fold") &&
+      !imposter.getMessage.contains("already written"), imposter.getMessage)
+    IncrementalHamming.ingest(sigs((20L, 3L)), root, cfg, 2L)
+    IncrementalHamming.forgetIds(spark, root, cfg, Seq(20L).toDF("doc_id"))
+    assert(IncrementalHamming.describe(spark, root).foldedThrough == 2L)
+  }
 }

@@ -187,4 +187,27 @@ class IncrementalIvfPqSpec extends SparkTestBase {
     assert(hits(IncrementalIvfPq.query(spark, root, queries,
       k = 5, nProbe = 2)) == hits(grown))
   }
+
+  test("a folded version is refused by the fold before the meta guard; " +
+      "forget records its fold") {
+    val root = Spill.newPath(spark) + "/ivff"
+    IncrementalIvfPq.build(initial, root, nCells = 4, m = 4, kCodes = 8)
+    IncrementalIvfPq.ingest(delta, root, version = 1L)
+    IncrementalIvfPq.compact(spark, root)
+    // the identical delta is what the meta guard accepts as a replay,
+    // an imposter what it refuses as "already written": both must
+    // meet the fold guard first
+    val replay = intercept[IllegalArgumentException] {
+      IncrementalIvfPq.ingest(delta, root, version = 1L)
+    }
+    assert(replay.getMessage.contains("fold"), replay.getMessage)
+    val imposter = intercept[IllegalArgumentException] {
+      IncrementalIvfPq.ingest(vecs(128 until 140), root, version = 1L)
+    }
+    assert(imposter.getMessage.contains("fold") &&
+      !imposter.getMessage.contains("already written"), imposter.getMessage)
+    IncrementalIvfPq.ingest(vecs(192 until 200), root, version = 2L)
+    IncrementalIvfPq.forgetVectors(spark, root, Seq(193L).toDF("vec_id"))
+    assert(IncrementalIvfPq.describe(spark, root).foldedThrough == 2L)
+  }
 }
