@@ -58,31 +58,31 @@ object IncrementalUnion {
     def finish(u: Unit): BucketedState.Finish = (m, keys) =>
       m.select(keys.map(col) :+ array_sort(col("pset")).as("f_union"): _*)
 
-    /** Stage to a PENDING path (the `_pending_` prefix is invisible to
-      * versions()'s `__v=` filter), cap-check the staged files, and only
+    /** Stage to [[stagingPath]], cap-check the staged files, and only
       * then swap into the version slot: writing straight to the slot
       * would let a failing REPLAY destroy the committed version it was
-      * overwriting before the check had run.
+      * overwriting before the check had run. The staging dir sits beside
+      * the generations, not in one, so no generation or `__v=` listing
+      * sees it, and its name has no leading `_` or `.`, which Spark's
+      * reader would take for a hidden path.
       */
     override def write(partials: DataFrame, dir: String, gen: String,
         version: Long): Unit = {
       val spark = partials.sparkSession
       val path = new Path(s"$gen/$VCol=$version")
-      val pending = new Path(s"$gen/_pending_$version")
+      val staging = new Path(stagingPath(dir))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // sweep staging dirs stranded by crashed ingests (safe under the
-      // lease: no other writer can have one in flight)
-      fs.listStatus(new Path(gen)).iterator
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("_pending_"))
-        .foreach(s => fs.delete(s.getPath, true))
-      partials.write.mode("overwrite").parquet(pending.toString)
-      capCheck(spark.read.parquet(pending.toString),
+      // sweep what a crashed ingest stranded (safe under the lease: no
+      // other writer can have one in flight)
+      fs.delete(staging, true)
+      partials.write.parquet(staging.toString)
+      capCheck(spark.read.parquet(staging.toString),
         s"ingest of version $version into $dir").foreach { msg =>
-        fs.delete(pending, true)
+        fs.delete(staging, true)
         throw new IllegalStateException(msg)
       }
       fs.delete(path, true)
-      fs.rename(pending, path)
+      fs.rename(staging, path)
     }
 
     /** Versions each under the cap can union past it: a fold is
@@ -117,7 +117,7 @@ object IncrementalUnion {
     * ingest.
     *
     * Crash recovery: a crashed (or cap-failed-then-killed) ingest
-    * leaves a `_pending_<v>` staging dir — invisible to reads, but
+    * leaves its staging dir ([[stagingPath]]) — invisible to reads, but
     * garbage — which the next leased ingest sweeps. The final
     * delete→rename swap of a REPLAY has a window where the committed
     * version partition is absent; recovery from a crash inside it is
@@ -127,6 +127,9 @@ object IncrementalUnion {
     */
   def ingest(delta: DataFrame, dir: String, cfg: Config, version: Long): Unit =
     BucketedState.ingest(State(cfg), delta, dir, version)
+
+  /** Where an ingest stages its partials before the cap check. */
+  private[graft] def stagingPath(dir: String): String = s"$dir/staging"
 
   /** Per-key distinct-item union over [asOf − W, asOf), as a SORTED
     * array (`f_union`) — collect_set order is partition-dependent, so

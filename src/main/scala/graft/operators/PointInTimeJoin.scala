@@ -3,7 +3,7 @@ package graft.operators
 import graft.model._
 import graft.project._
 import graft.sources._
-import graft.functions.{FeathrExpr, UdfRegistry, VectorAggregator}
+import graft.functions.{FeathrExpr, SlidingExtreme, UdfRegistry, VectorAggregator}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,26 +32,34 @@ import org.apache.spark.sql.types.NumericType
   *  - the as-of join (J2) is a union-sort ("last value wins") plan: one
   *    shuffle of source ∪ spine-pairs by key, one sort by (ts, tag) —
   *    no range-join row explosion, no per-row subqueries;
-  *  - sliding-window aggs (J3) take one of two plans, chosen by
-  *    exactness under subtraction, read off the analyzed schema:
+  *  - sliding-window aggs (J3) either ride a union-sort or take the
+  *    bucket plan, chosen by aggregation kind and the analyzed schema
+  *    ([[splitRiding]]):
   *     - EXACT INVERTIBLE features — no `limit`, and COUNT, or SUM/AVG
-  *       of an integral (byte/short/int/long) measure — ride a
-  *       union-sort: each spine pair adds one row at T and one at T − W
-  *       per distinct window, and a running sum/count per key gives
+  *       of an integral (byte/short/int/long) measure — ride as running
+  *       sums: each spine pair adds one row at T and one at T − W per
+  *       distinct window, and a running sum/count per key gives
   *       `cum(≤ T) − cum(≤ T − W)`, exactly the window `(T − W, T]`
   *       (subtract-on-evict, Tangwongsan et al., VLDB 2015). Without
   *       group_by they share the as-of join's one shuffle and sort;
   *       with group_by, one union-sort per (anchor group, group_by
   *       expression), whose pair rows are each pair's sub-keys seen
   *       within about 1.25 widest windows of T. Per-pair work is two
-  *       lookups. An exact feature with no as-of sort to share, whose
-  *       (window, filter, group_by) bucket cluster is built anyway for
-  *       another feature, joins that cluster instead ([[splitExact]]);
-  *     - every other feature (MIN, MAX, LATEST, UNION, elementwise,
-  *       float/decimal SUM/AVG, any `limit`) folds source rows ONCE to
-  *       partials per (key, time bucket); each spine pair merges the
-  *       partials of the full buckets inside its window with the raw
-  *       rows of its two edge buckets — per-pair work is
+  *       lookups;
+  *     - SLIDING EXTREMES — MIN, MAX and LATEST with no `limit` and no
+  *       group_by — ride the same sort as a monotonic deque per key
+  *       ([[graft.functions.SlidingExtreme]]): amortized O(1) per row,
+  *       read once per pair at T;
+  *     - without as-of features, a group builds that one union-sort
+  *       and no bucket cluster when every window feature can ride;
+  *       otherwise its extremes take the bucket plan, and an exact
+  *       feature whose (window, filter, group_by) bucket cluster is
+  *       built anyway for another feature joins that cluster;
+  *     - every other feature (UNION, elementwise, float/decimal
+  *       SUM/AVG, any `limit`, group_by MIN/MAX/LATEST) folds source
+  *       rows ONCE to partials per (key, time bucket); each spine pair
+  *       merges the partials of the full buckets inside its window with
+  *       the raw rows of its two edge buckets — per-pair work is
   *       O(window/bucket), not O(rows in the window); a record limit
   *       keeps the k newest rows per bucket as its partial;
   *  - hot keys: every union-sort partitions by key, so a hot key costs
@@ -191,17 +199,26 @@ object PointInTimeJoin {
   private def windowAggOf(f: AnchorFeature): Transformation.WindowAgg =
     f.transform.asInstanceOf[Transformation.WindowAgg]
 
-  /** Splits window features into (exact, bucketed). A feature is exact
-    * under subtraction when it has no `limit` and is COUNT, or SUM/AVG
-    * of an integral measure (read off the analyzed schema). An exact
-    * feature takes the running-sum plan ([[RunningSums]]) only when
-    * that plan has a sort to share or saves a bucket join: it rides the
-    * as-of join (`asOf`: the group has as-of features, and the feature
-    * has no group_by), or no bucketed feature of the same (window,
-    * filter, group_by) is left to build that cluster anyway — else it
-    * joins that cluster, which already pays the shuffle it would add.
+  /** Splits window features into (riding, bucketed): those that ride a
+    * union-sort, and those the bucket plan serves. Two kinds can ride,
+    * both without `limit`:
+    *  - exact under subtraction: COUNT, or SUM/AVG of an integral
+    *    measure (read off the analyzed schema), as running sums
+    *    ([[RunningSums]]), with or without group_by;
+    *  - sliding extremes: MIN, MAX and LATEST without group_by, as
+    *    running deques ([[RunningExtremes]]).
+    *
+    * When the group has as-of features (`asOf`), every extreme rides
+    * their sort. A window-only group builds one union-sort and no bucket
+    * cluster when every one of its window features can ride; otherwise
+    * its extremes stay bucketed. An exact feature then takes the
+    * running-sum plan only when that plan has a sort to share or saves
+    * a bucket join: it rides the as-of sort (`asOf`, and no group_by),
+    * or no bucketed feature of the same (window, filter, group_by) is
+    * left to build that cluster anyway — else it joins that cluster,
+    * which already pays the shuffle it would add.
     */
-  private def splitExact(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
+  private def splitRiding(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
       asOf: Boolean): (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     def invertible(wa: Transformation.WindowAgg) = wa.limit.isEmpty &&
@@ -218,14 +235,18 @@ object PointInTimeJoin {
       val wa = windowAggOf(f)
       invertible(wa) && (wa.aggFunc == Aggregation.COUNT || integral.contains(wa.defExpr))
     }
+    val (extreme, rest) = inexact.partition(p => RunningExtremes.rides(windowAggOf(p._1)))
+    val extremesRide = asOf || rest.isEmpty
     def cluster(f: AnchorFeature) = {
       val wa = windowAggOf(f)
       (wa.window, wa.filter, wa.groupBy)
     }
-    val built = inexact.collect { case (f, _) if windowAggOf(f).limit.isEmpty => cluster(f) }.toSet
+    val built = (if (extremesRide) rest else inexact)
+      .collect { case (f, _) if windowAggOf(f).limit.isEmpty => cluster(f) }.toSet
     val running = exact.filter { case (f, _) =>
       (asOf && windowAggOf(f).groupBy.isEmpty) || !built(cluster(f)) }
-    windowFeats.partition(running.contains)
+    val riding = if (extremesRide) running ++ extreme else running
+    windowFeats.partition(riding.contains)
   }
 
   /** Joins one anchor group onto `obs`, the frame so far. Each feature
@@ -256,8 +277,8 @@ object PointInTimeJoin {
       require(Durations.toMicros(w) > 0,
         s"anchor ${g.name}: window ${Durations.format(w)} of feature ${f.name} must be positive")
     }
-    val (exact, bucketed) = splitExact(src0, windowFeats, asOf = rowFeats.nonEmpty)
-    val (exactFlat, exactGrouped) = exact.partition(p => windowAggOf(p._1).groupBy.isEmpty)
+    val (riding, bucketed) = splitRiding(src0, windowFeats, asOf = rowFeats.nonEmpty)
+    val (ridingFlat, exactGrouped) = riding.partition(p => windowAggOf(p._1).groupBy.isEmpty)
 
     val pairSrc = if (obsKeyCols.forall(base.columns.contains)) base else obs
     lazy val pairs = pairSrc
@@ -265,8 +286,8 @@ object PointInTimeJoin {
       .na.drop("any").distinct()
 
     var joined = obs
-    if (timeAware && (rowFeats.nonEmpty || exactFlat.nonEmpty))
-      joined = asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats, exactFlat)
+    if (timeAware && (rowFeats.nonEmpty || ridingFlat.nonEmpty))
+      joined = asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats, ridingFlat)
     else if (rowFeats.nonEmpty)
       joined = snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
     for ((gb, fs) <- exactGrouped.groupBy(p => windowAggOf(p._1).groupBy.get).toSeq.sortBy(_._1))
@@ -331,25 +352,32 @@ object PointInTimeJoin {
     * (deterministic). One shuffle + sort; no row explosion — this is
     * the 100 TB-safe shape (vs. an unbounded range join).
     *
-    * The anchor group's exact window features without group_by
-    * (`exact`, [[RunningSums]]) ride the same shuffle and sort: each
-    * pair also gets a row at T − W per distinct window, the running
-    * sums are more columns of the same window, and one aggregation per
-    * pair (no shuffle: the rows are already partitioned by key) reads
-    * them at T and at each T − W.
+    * The anchor group's riding window features without group_by
+    * (`windows`, [[splitRiding]]) share the same shuffle and sort:
+    *  - exact ones ([[RunningSums]]): each pair also gets a row at
+    *    T − W per distinct window, the running sums are more columns of
+    *    the same window, and one aggregation per pair (no shuffle: the
+    *    rows are already partitioned by key) reads them at T and at each
+    *    T − W;
+    *  - MIN, MAX and LATEST ([[RunningExtremes]]): a sliding deque per
+    *    (key column, window) over the same window, read once per pair,
+    *    at T, like the as-of values.
     */
   private def asOfJoin(
       obs: DataFrame, obsPairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
       src: DataFrame, feats: Seq[(AnchorFeature, String)],
-      exact: Seq[(AnchorFeature, String)]): DataFrame = {
+      windows: Seq[(AnchorFeature, String)]): DataFrame = {
     val ts = "__graft_ts"
     val vals = "__graft_vals"
     val keyCols = keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(obsKeyCols(i)) }
+    val (extreme, exact) = windows.partition(p => RunningExtremes.rides(windowAggOf(p._1)))
     val run = new RunningSums(exact)
+    val ext = new RunningExtremes(extreme)
     val valStruct = if (feats.isEmpty) Nil else Seq(struct(feats.map { case (f, out) =>
       rowCol(f.transform, src).as(out) }: _*).as(vals))
     val srcSel = src
-      .select(keyCols ++ (col(Internal.SrcTs).as(ts) +: valStruct) ++ run.sourceCols: _*)
+      .select(keyCols ++ (col(Internal.SrcTs).as(ts) +: valStruct) ++ run.sourceCols ++
+        ext.sourceCols: _*)
       .withColumn(Tag, lit(0))
 
     val w = Window
@@ -361,19 +389,21 @@ object PointInTimeJoin {
     // pair rows carry no vals and no contributions: the union fills nulls
     val sorted = srcSel
       .unionByName(run.pairRows(obsPairs, ts).withColumn(Tag, lit(1)), allowMissingColumns = true)
-      .withColumns((asOf ++ run.cumulative(w)).toMap)
+      .withColumns((asOf ++ run.cumulative(w) ++ ext.running(col(ts), w)).toMap)
       .where(col(Tag) === 1)
+    // the values read at T only: as-of features and sliding extremes
+    val atT = feats.map { case (_, out) => out -> col(s"$vals.$out") } ++ ext.values
     val featRows =
       if (exact.isEmpty)
         sorted.select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
-          feats.map { case (_, out) => col(s"$vals.$out").as(out) }: _*)
+          atT.map { case (out, c) => c.as(out) }: _*)
       else {
-        val atT = col(RunningSums.Off) === 0L
-        val reads = run.reads ++ feats.map { case (_, out) =>
-          first(when(atT, col(s"$vals.$out")), ignoreNulls = true).as(out) }
+        val isT = col(RunningSums.Off) === 0L
+        val reads = run.reads ++ atT.map { case (out, c) =>
+          first(when(isT, c), ignoreNulls = true).as(out) }
         sorted.groupBy((obsKeyCols :+ ObsTs).map(col): _*)
           .agg(reads.head, reads.tail: _*)
-          .select((obsKeyCols :+ ObsTs).map(col) ++ feats.map(p => col(p._2)) ++
+          .select((obsKeyCols :+ ObsTs).map(col) ++ atT.map(p => col(p._1)) ++
             exact.map { case (f, out) => run.value(windowAggOf(f)).as(out) }: _*)
       }
 
@@ -535,6 +565,55 @@ object PointInTimeJoin {
     val Exact = org.apache.spark.sql.types.DecimalType(38, 0)
   }
 
+  /** The sliding extremes of MIN, MAX and LATEST window features with
+    * no `limit` and no group_by, over a union-sort's running frame
+    * ([[graft.functions.SlidingExtreme]]). Each source row carries, per
+    * distinct (filter, measure, LATEST or not), its key `__graft_rk_i`:
+    * the measure, or for LATEST `struct(src_ts, measure)`, where the
+    * filter keeps the row, else null. One kernel `__graft_rx_i` runs per
+    * distinct (key, window, MIN or not); LATEST is the MAX of its struct
+    * and reads `.v` — the bucket plan's `max(struct)`: the newest kept
+    * row wins even when its measure is null, and a tie at one `src_ts`
+    * goes to the larger value. Values keep the bucket plan's types, and
+    * are null when no kept row is in the window.
+    */
+  private final class RunningExtremes(feats: Seq[(AnchorFeature, String)]) {
+    private def latest(wa: Transformation.WindowAgg) = wa.aggFunc == Aggregation.LATEST
+    private def keyOf(wa: Transformation.WindowAgg) = (wa.filter, wa.defExpr, latest(wa))
+    private def kernelOf(wa: Transformation.WindowAgg) =
+      (keyOf(wa), Durations.toMicros(wa.window), wa.aggFunc == Aggregation.MIN)
+    private val was = feats.map(p => windowAggOf(p._1))
+    private val keys = was.map(keyOf).distinct
+    private val kernels = was.map(kernelOf).distinct
+
+    /** Each row's keys, over source columns; null = the filter drops it. */
+    def sourceCols: Seq[Column] = keys.zipWithIndex.map { case ((filter, e, isLatest), i) =>
+      val m = FeathrExpr.column(e)
+      val k = if (isLatest) struct(col(Internal.SrcTs).as("t"), m.as("v")) else m
+      filter.fold(k)(f => when(FeathrExpr.column(f), k)).as(s"__graft_rk_$i")
+    }
+
+    /** The kernels over the union-sort window `w`, sorted by `ts`. */
+    def running(ts: Column, w: org.apache.spark.sql.expressions.WindowSpec): Seq[(String, Column)] =
+      kernels.zipWithIndex.map { case ((k, wUs, isMin), i) =>
+        s"__graft_rx_$i" -> SlidingExtreme.slidingExtreme(
+          ts, col(s"__graft_rk_${keys.indexOf(k)}"), wUs, isMin).over(w)
+      }
+
+    /** Each feature's value at a pair row at T. */
+    def values: Seq[(String, Column)] = feats.map { case (f, out) =>
+      val wa = windowAggOf(f)
+      val x = col(s"__graft_rx_${kernels.indexOf(kernelOf(wa))}")
+      out -> (if (latest(wa)) x.getField("v") else x)
+    }
+  }
+
+  private object RunningExtremes {
+    /** MIN, MAX and LATEST without `limit` and group_by. */
+    def rides(wa: Transformation.WindowAgg): Boolean = wa.limit.isEmpty && wa.groupBy.isEmpty &&
+      Seq(Aggregation.MIN, Aggregation.MAX, Aggregation.LATEST).contains(wa.aggFunc)
+  }
+
   /** J3: sliding-window aggregation (SWA) — aggregate source rows in
     * `(obs_ts - window, obs_ts]` per key, per distinct spine (key, ts)
     * pair. Pre-aggregation `filter` (A8) is pushed below the join;
@@ -553,16 +632,19 @@ object PointInTimeJoin {
     * A limited feature is always alone in its window cluster, so both
     * rankings read only its own measure.
     *
-    * J3 has two plans, and exactness under subtraction picks one
-    * ([[splitExact]], from the analyzed schema and the anchor group's
-    * features): COUNT, and SUM/AVG of an integral measure, without
-    * `limit`, are running sums read at T and T − W off a union-sort
-    * ([[asOfJoin]] without group_by, [[groupedRunningJoin]] with it),
-    * unless the group has no as-of sort for them to share and another
-    * feature builds their (window, filter, group_by) cluster here
-    * anyway. This is the other plan, for every remaining feature — MIN,
-    * MAX, LATEST, UNION, elementwise, float or decimal SUM/AVG, every
-    * `limit`, and those exact features (SURVEY.md §4): source rows fold
+    * J3 has two plans, and [[splitRiding]] picks one from the analyzed
+    * schema and the anchor group's features. Without `limit`, COUNT
+    * and SUM/AVG of an integral measure are running sums read at T and
+    * T − W off a union-sort ([[asOfJoin]] without group_by,
+    * [[groupedRunningJoin]] with it), and MIN, MAX and LATEST without
+    * group_by are sliding deques read at T off the as-of union-sort —
+    * unless the group has no as-of features and some window feature
+    * cannot ride: then the extremes stay here, and an exact feature
+    * whose (window, filter, group_by) cluster another feature builds
+    * here anyway joins it. This is the other plan, for every remaining
+    * feature — UNION, elementwise, float or decimal SUM/AVG, every
+    * `limit`, group_by MIN/MAX/LATEST, and those stayed features
+    * (SURVEY.md §4): source rows fold
     * ONCE to [[Partial]]s per (key, [sub-key,] time bucket); each spine
     * pair merges the partials of the ≤ window/bucket FULL buckets inside
     * its window with the raw rows of its two edge buckets

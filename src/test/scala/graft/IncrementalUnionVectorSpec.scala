@@ -130,19 +130,31 @@ class IncrementalUnionVectorSpec extends SparkTestBase {
     assert(e.getMessage.contains("rebased"), e.getMessage)
   }
 
-  test("union: a crashed ingest's stranded _pending_ dir is swept by the next ingest") {
+  test("union: ingest stages beside the generations; a crash's stranded staging is swept, an over-cap ingest leaves none") {
     val dir = Spill.newPath(spark)
     IncrementalUnion.ingest(ev((1L, 0, "a")), dir, uCfg, 0L)
-    // simulate a killed ingest: staging dir left behind, never swapped
-    val gen = new org.apache.hadoop.fs.Path(
-      graft.operators.Publish.genPath(dir,
-        graft.operators.Publish.current(spark, dir).get))
-    val fs = gen.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stranded = new org.apache.hadoop.fs.Path(s"$gen/_pending_99")
-    fs.mkdirs(stranded)
+    // a visible name outside every generation dir: Spark reads it back
+    // for the cap check without taking it for a hidden path
+    val staging = new org.apache.hadoop.fs.Path(IncrementalUnion.stagingPath(dir))
+    assert(!staging.getName.startsWith("_") && !staging.getName.startsWith("."))
+    assert(staging.getParent.toString == new org.apache.hadoop.fs.Path(dir).toString)
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // simulate a killed ingest: staged files left behind, never swapped
+    fs.mkdirs(staging)
+    fs.create(new org.apache.hadoop.fs.Path(staging, "part-stranded.parquet")).close()
     IncrementalUnion.ingest(ev((1L, 1, "b")), dir, uCfg, 1L)
-    assert(!fs.exists(stranded), "stale staging dirs must not accumulate")
+    assert(!fs.exists(staging), "stale staging must not accumulate")
     assert(IncrementalSwa.versions(spark, dir) == Seq(0L, 1L))
+    // an over-cap ingest is still refused by name and leaves no staging
+    val e = intercept[IllegalStateException] {
+      IncrementalUnion.ingest(
+        ev((1L, 2, "a"), (1L, 2, "b"), (1L, 2, "c"), (1L, 2, "d")), dir, uCfg, 2L)
+    }
+    assert(e.getMessage.contains("cap") && e.getMessage.contains("k=1"), e.getMessage)
+    assert(!fs.exists(staging))
+    assert(IncrementalSwa.versions(spark, dir) == Seq(0L, 1L))
+    assert(IncrementalUnion.serve(spark, dir, uCfg, 3 * DayUs, 3)
+      .as[(Long, Seq[String])].collect().toSeq == Seq((1L, Seq("a", "b"))))
   }
 
   private def vec(rows: (Long, Int, Seq[Double])*) =

@@ -342,7 +342,7 @@ class PitJoinSpec extends SparkTestBase {
     assert(out == Map(2L -> 1.0, 3L -> 2.0))
   }
 
-  test("exact windows ride one union-sort per (anchor group, group_by); only MAX keeps bucket partials") {
+  test("exact and sliding MIN/MAX windows ride one union-sort per (anchor group, group_by); no bucket partials") {
     // a training-set-shaped project over an int measure: as-of, COUNT/
     // SUM/AVG and MAX windows per user and per item, a group_by COUNT
     Seq((1L, 10L, "2024-01-09 12:00:00", 3, "a"), (1L, 20L, "2024-01-05 00:00:00", -2, "b"),
@@ -384,10 +384,10 @@ class PitJoinSpec extends SparkTestBase {
     }
     assert(sorts.sortBy(_.mkString(",")) ==
       Seq(Seq("item"), Seq("user"), Seq("user", "__graft_grp")), sorts)
-    // bucket partials only for the MAX features
-    val kinds = "__graft_ps_([a-z]+)_".r
-      .findAllMatchIn(df.queryExecution.analyzed.toString).map(_.group(1)).toSet
-    assert(kinds == Set("max"), kinds)
+    // no bucket partials: the MAX features ride the as-of sorts too
+    val analyzed = df.queryExecution.analyzed.toString
+    assert(!analyzed.contains("__graft_ps_"), analyzed)
+    assert(analyzed.contains("sliding_extreme"), analyzed)
 
     val r = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
     assert(r.size == 2)
@@ -451,6 +451,47 @@ class PitJoinSpec extends SparkTestBase {
     assert(one.getAs[Map[String, Long]]("u_cat_cnt_7d") == Map("a" -> 1L, "b" -> 1L))
     assert(one.getAs[Map[String, Int]]("u_cat_max_7d") == Map("a" -> 3, "b" -> -2))
     assert(one.getAs[Map[String, Long]]("u_cat_cnt_1d") == Map("a" -> 1L))
+    val two = r(2L)
+    for (c <- feats) assert(two.isNullAt(two.fieldIndex(c)), c)
+  }
+
+  test("a window-only group whose window features all ride builds one union-sort and no bucket partials") {
+    Seq((1L, "2024-01-09 12:00:00", 3, "a"), (1L, "2024-01-05 00:00:00", -2, "b"),
+        (1L, "2024-01-03 00:00:00", 5, "a"), // exactly obs − 7d: outside 7d
+        (1L, "2024-01-09 12:00:00", 1, "b"), (2L, "2024-01-02 00:00:00", 4, "a"))
+      .toDF("u", "ts_s", "value", "category").withColumn("ts", $"ts_s".cast("timestamp"))
+      .createOrReplaceTempView("all_ride_src")
+    val obs = Seq((1L, "2024-01-10 00:00:00"), (2L, "2024-01-10 00:00:00"))
+      .toDF("user", "ts_s").withColumn("ts", $"ts_s".cast("timestamp")).select("user", "ts")
+    val uKey = TypedKey("u", ValueType.INT64)
+    def win(name: String, agg: String, w: String, measure: String = "value") =
+      AnchorFeature(name, FeatureType.UNSPECIFIED,
+        Transformation.windowAgg(measure, agg, w), Seq(uKey))
+    val p = FeatureProject("all_ride")
+    p.addAnchorGroup("all_ride_feats", Source("src", DataLocation.Table("all_ride_src"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      win("u_cnt_7d", "COUNT", "7d"), win("u_sum_7d", "SUM", "7d"),
+      win("u_max_7d", "MAX", "7d"), win("u_min_1d", "MIN", "1d"),
+      win("u_last_cat_7d", "LATEST", "7d", "category")))
+    val feats = Seq("u_cnt_7d", "u_sum_7d", "u_max_7d", "u_min_1d", "u_last_cat_7d")
+    val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(feats, Seq("user"))))
+
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    val sorts = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
+        w.partitionSpec.collect { case a: Attribute => a.name }
+    }
+    assert(sorts == Seq(Seq("user")), sorts)
+    val analyzed = df.queryExecution.analyzed.toString
+    assert(!analyzed.contains("__graft_ps_") && !analyzed.contains("__graft_bl_rn"), analyzed)
+
+    val r = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
+    val one = r(1L)
+    assert(one.getAs[Long]("u_cnt_7d") == 3L && one.getAs[Long]("u_sum_7d") == 2L)
+    assert(one.getAs[Int]("u_max_7d") == 3 && one.getAs[Int]("u_min_1d") == 1)
+    // two rows tie at the newest instant: the larger category wins
+    assert(one.getAs[String]("u_last_cat_7d") == "b")
     val two = r(2L)
     for (c <- feats) assert(two.isNullAt(two.fieldIndex(c)), c)
   }

@@ -18,6 +18,15 @@ case class SwaKindEvent(k: Long, ts_us: Long, v: Option[Double], u: Option[Int],
 case class SwaExactEvent(k: Long, ts_us: Long, iv: Option[Int], lv: Option[Long],
     f: Option[Int], g: String)
 
+/** One source row of the sliding-extreme property: an int, a long
+  * past 2^53, a double (NaN or null), a decimal, a string and a
+  * timestamp (epoch micros) measure, each possibly null, and a filter
+  * flag that is sometimes null.
+  */
+case class SwaExtremeEvent(k: Long, ts_us: Long, iv: Option[Int], lv: Option[Long],
+    dv: Option[Double], cv: Option[BigDecimal], sv: Option[String], tv_us: Option[Long],
+    f: Option[Int])
+
 /** Property test over duration grammar × SWA: random odd/sub-second
   * windows (100ms–4s at millisecond granularity, and 1–127 µs windows
   * whose buckets are single microseconds) over randomly-timed events
@@ -626,6 +635,107 @@ class SwaPropertySpec extends SparkTestBase {
       assert(r.getAs[Long]("f_sum") == big * n, s"t=$t")
       assert(r.getAs[Double]("f_avg") == (big * n).toDouble / n, s"t=$t")
       assert(r.getAs[Map[String, Long]]("f_by_k") == Map("1" -> big * n), s"t=$t")
+    }
+  }
+
+  test("sliding MIN/MAX/LATEST on the union-sort match the reference fold") {
+    val rnd = new scala.util.Random(71)
+    val big = 1L << 60 // neighbouring longs a double cannot tell apart
+    def maybe[A](a: => A): Option[A] = if (rnd.nextInt(5) == 0) None else Some(a)
+    def event(k: Long, t: Long, x: Int) = SwaExtremeEvent(k, t, maybe(x), maybe(big + x),
+      maybe(if (rnd.nextInt(6) == 0) Double.NaN else x.toDouble), maybe(BigDecimal(x) / 8),
+      maybe("abcde".take(rnd.nextInt(6)) + x), maybe(t + x), maybe(rnd.nextInt(3) - 1))
+    // each measure with its getter and the ordering Spark's max uses
+    def measure[A](m: String, get: SwaExtremeEvent => Option[A], ord: Ordering[A]) =
+      (m, get, ord.asInstanceOf[Ordering[Any]])
+    val measures = Seq(measure("iv", _.iv, Ordering.Int), measure("lv", _.lv, Ordering.Long),
+      measure("dv", _.dv, Ordering.Double.TotalOrdering),
+      measure("cv", _.cv, Ordering.BigDecimal), measure("sv", _.sv, Ordering.String),
+      measure("tv", _.tv_us, Ordering.Long))
+    // a post-epoch and a pre-epoch timeline; two 1 µs-scale windows over
+    // 400 µs spans (ties and neighbours), two ms windows over 6 s spans
+    for (((base, windows, span), round) <- Seq(
+        (1700000000000000L, Seq(1L, 3L), 400L), (-631152000000000L, Seq(1L, 3L), 400L),
+        (1700000000000000L, Seq(750000L, 2000000L), 6000000L),
+        (-631152000000000L, Seq(750000L, 2000000L), 6000000L)).zipWithIndex) {
+      val random = for (k <- 0 until 4; _ <- 0 until 30) yield
+        event(k.toLong, base + (rnd.nextLong().abs % span), rnd.nextInt(201) - 100)
+      // the newest instant ties: key 1 has a row whose every measure is
+      // null beside one with values, key 2 only the null row
+      val newest = base + span + 10
+      val ties = Seq(
+        SwaExtremeEvent(1L, newest, None, None, None, None, None, None, Some(1)),
+        event(1L, newest, 7), event(1L, newest, -7),
+        SwaExtremeEvent(2L, newest, None, None, None, None, None, None, Some(1)))
+      // the ms rounds add a hot key whose 3000 rows, 100 µs apart, all
+      // fit one window; falling values grow MAX's deque, rising
+      // timestamp measures MIN's
+      val hot = if (windows.head > 1000L) (0 until 3000).map(i => event(9L, base + i * 100L, -i))
+        else Nil
+      val events = random ++ ties ++ hot
+      val view = s"swa_prop_extreme_$round"
+      events.toDF().withColumn("ts", timestamp_micros($"ts_us"))
+        .withColumn("tv", timestamp_micros($"tv_us")).createOrReplaceTempView(view)
+
+      val key = TypedKey("k", ValueType.INT64)
+      // (aggregation, measure, getter, ordering, window, filtered)
+      val specs = for (agg <- Seq("MIN", "MAX", "LATEST"); (m, get, ord) <- measures;
+          w <- windows; filter <- Seq(false, true)) yield (agg, m, get, ord, w, filter)
+      def name(group: String, agg: String, m: String, w: Long, filter: Boolean) =
+        (Seq(group, agg.toLowerCase, m, w.toString) ++ (if (filter) Seq("f") else Nil))
+          .mkString("_")
+      def feats(group: String) = specs.map { case (agg, m, _, _, w, filter) =>
+        AnchorFeature(name(group, agg, m, w, filter), FeatureType.UNSPECIFIED,
+          Transformation.WindowAgg(m, Aggregation.parse(agg), Durations.parse(s"${w}us"),
+            filter = if (filter) Some("f > 0") else None), Seq(key)) }
+      // one group beside an as-of feature, one of windows only
+      val p = FeatureProject(s"propextreme$round")
+      val src = Source("src", DataLocation.Table(view),
+        timeWindow = Some(TimeWindowParameters("ts", "native")))
+      p.addAnchorGroup("with_asof", src,
+        AnchorFeature("a_last", FeatureType.UNSPECIFIED, Transformation.Expr("iv"), Seq(key)) +:
+          feats("a"))
+      p.addAnchorGroup("windows_only", src, feats("w"))
+      // every event's own time (a row at T) and each window later (a row
+      // at exactly T − W, outside); the hot key at every 100th row; and
+      // an empty window per key
+      val obsRows = ((random ++ ties ++ hot.grouped(100).map(_.head))
+        .flatMap(e => (0L +: windows).map(w => (e.k, e.ts_us + w))) ++
+        Seq(0L, 1L, 2L, 3L, 9L).map(k => (k, base - 3600000000L))).distinct
+      val obs = obsRows.toDF("k", "ts_us").withColumn("ts", timestamp_micros($"ts_us"))
+      val requested = "a_last" +: Seq("a", "w").flatMap(g => feats(g).map(_.name))
+      val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+        Seq(FeatureQuery(requested, Seq("k")))).collect()
+      assert(out.length == obsRows.length)
+
+      def norm(v: Any): Any = v match {
+        case d: java.math.BigDecimal => BigDecimal(d)
+        case t: java.sql.Timestamp =>
+          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+        case other => other
+      }
+      def eq(got: Option[Any], want: Option[Any]) = (got.map(norm), want) match {
+        case (Some(g: Double), Some(w: Double)) => g.isNaN && w.isNaN || g == w
+        case (g, w) => g == w
+      }
+      out.foreach { r =>
+        val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+        val near = events.filter(e => e.k == k && e.ts_us <= t && e.ts_us > t - windows.max)
+        for ((agg, m, get, ord, w, filter) <- specs) {
+          val in = near.filter(e => e.ts_us > t - w && (!filter || e.f.exists(_ > 0)))
+          val want = agg match {
+            case "MIN" => in.flatMap(get).minOption(ord)
+            case "MAX" => in.flatMap(get).maxOption(ord)
+            case "LATEST" => in.maxByOption(e => (e.ts_us, get(e)))(
+              Ordering.Tuple2(Ordering.Long, Ordering.Option(ord))).flatMap(get)
+          }
+          for (g <- Seq("a", "w")) {
+            val n = name(g, agg, m, w, filter)
+            val got = Option(r.getAs[Any](n))
+            assert(eq(got, want), s"$n: k=$k t=$t got=$got want=$want")
+          }
+        }
+      }
     }
   }
 }
