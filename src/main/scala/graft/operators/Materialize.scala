@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.model._
 import graft.project._
 import graft.sources._
 

@@ -3,11 +3,11 @@ package graft.operators
 import graft.model._
 import graft.project._
 import graft.sources._
-import graft.functions.{FeathrExpr, SlidingExtreme, UdfRegistry, VectorAggregator}
+import graft.functions.{FeathrExpr, SlidingWindow, UdfRegistry, VectorAggregator}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types.NumericType
 
 /** The engine's core relational operator: LEFT OUTER join of an
@@ -32,24 +32,20 @@ import org.apache.spark.sql.types.NumericType
   *  - the as-of join (J2) is a union-sort ("last value wins") plan: one
   *    shuffle of source ∪ spine-pairs by key, one sort by (ts, tag) —
   *    no range-join row explosion, no per-row subqueries;
-  *  - sliding-window aggs (J3) either ride a union-sort or take the
+  *  - sliding-window aggs (J3) either ride that union-sort or take the
   *    bucket plan, chosen by aggregation kind and the analyzed schema
   *    ([[splitRiding]]):
-  *     - EXACT INVERTIBLE features — no `limit`, and COUNT, or SUM/AVG
-  *       of an integral (byte/short/int/long) measure — ride as running
-  *       sums: each spine pair adds one row at T and one at T − W per
-  *       distinct window, and a running sum/count per key gives
-  *       `cum(≤ T) − cum(≤ T − W)`, exactly the window `(T − W, T]`
-  *       (subtract-on-evict, Tangwongsan et al., VLDB 2015). Without
-  *       group_by they share the as-of join's one shuffle and sort;
-  *       with group_by, one union-sort per (anchor group, group_by
-  *       expression), whose pair rows are each pair's sub-keys seen
-  *       within about 1.25 widest windows of T. Per-pair work is two
-  *       lookups;
-  *     - SLIDING EXTREMES — MIN, MAX and LATEST with no `limit` and no
-  *       group_by — ride the same sort as a monotonic deque per key
-  *       ([[graft.functions.SlidingExtreme]]): amortized O(1) per row,
-  *       read once per pair at T;
+  *     - a riding feature is a running kernel over the sort's frame
+  *       ([[graft.functions.SlidingWindow]]), read on the pair's one row
+  *       at T. EXACT INVERTIBLE features — no `limit`, and COUNT, or
+  *       SUM/AVG of an integral (byte/short/int/long) measure, with or
+  *       without group_by — keep per-sub-key counts and long sums of the
+  *       rows in `(T − W, T]`, adding a row as it enters and subtracting
+  *       it as it leaves (subtract-on-evict, Tangwongsan et al., VLDB
+  *       2015). SLIDING EXTREMES — MIN, MAX and LATEST with no `limit`
+  *       and no group_by — keep a monotonic deque. Both cost amortized
+  *       O(1) per row (O(log sub-keys) with group_by), and an anchor
+  *       group builds one shuffle and sort for all its riding features;
   *     - without as-of features, a group builds that one union-sort
   *       and no bucket cluster when every window feature can ride;
   *       otherwise its extremes take the bucket plan, and an exact
@@ -199,24 +195,29 @@ object PointInTimeJoin {
   private def windowAggOf(f: AnchorFeature): Transformation.WindowAgg =
     f.transform.asInstanceOf[Transformation.WindowAgg]
 
-  /** Splits window features into (riding, bucketed): those that ride a
-    * union-sort, and those the bucket plan serves. Two kinds can ride,
-    * both without `limit`:
+  /** A sliding extreme: MIN, MAX or LATEST without `limit` and group_by. */
+  private def slides(wa: Transformation.WindowAgg): Boolean = wa.limit.isEmpty &&
+    wa.groupBy.isEmpty && Seq(Aggregation.MIN, Aggregation.MAX, Aggregation.LATEST)
+      .contains(wa.aggFunc)
+
+  /** Splits window features into (riding, bucketed): those that ride
+    * the anchor group's union-sort as running kernels
+    * ([[RunningWindows]]), and those the bucket plan serves. Two kinds
+    * can ride, both without `limit`:
     *  - exact under subtraction: COUNT, or SUM/AVG of an integral
-    *    measure (read off the analyzed schema), as running sums
-    *    ([[RunningSums]]), with or without group_by;
-    *  - sliding extremes: MIN, MAX and LATEST without group_by, as
-    *    running deques ([[RunningExtremes]]).
+    *    measure (read off the analyzed schema), with or without
+    *    group_by;
+    *  - sliding extremes: MIN, MAX and LATEST without group_by.
     *
     * When the group has as-of features (`asOf`), every extreme rides
     * their sort. A window-only group builds one union-sort and no bucket
     * cluster when every one of its window features can ride; otherwise
-    * its extremes stay bucketed. An exact feature then takes the
-    * running-sum plan only when that plan has a sort to share or saves
-    * a bucket join: it rides the as-of sort (`asOf`, and no group_by),
-    * or no bucketed feature of the same (window, filter, group_by) is
-    * left to build that cluster anyway — else it joins that cluster,
-    * which already pays the shuffle it would add.
+    * its extremes stay bucketed. An exact feature then rides only when
+    * its kernel has a sort to share or saves a bucket join: the group
+    * has as-of features and it has no group_by, or no bucketed feature
+    * of the same (window, filter, group_by) is left to build that
+    * cluster anyway — else it joins that cluster, which already pays
+    * the shuffle it would add.
     */
   private def splitRiding(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
       asOf: Boolean): (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
@@ -235,7 +236,7 @@ object PointInTimeJoin {
       val wa = windowAggOf(f)
       invertible(wa) && (wa.aggFunc == Aggregation.COUNT || integral.contains(wa.defExpr))
     }
-    val (extreme, rest) = inexact.partition(p => RunningExtremes.rides(windowAggOf(p._1)))
+    val (extreme, rest) = inexact.partition(p => slides(windowAggOf(p._1)))
     val extremesRide = asOf || rest.isEmpty
     def cluster(f: AnchorFeature) = {
       val wa = windowAggOf(f)
@@ -278,7 +279,6 @@ object PointInTimeJoin {
         s"anchor ${g.name}: window ${Durations.format(w)} of feature ${f.name} must be positive")
     }
     val (riding, bucketed) = splitRiding(src0, windowFeats, asOf = rowFeats.nonEmpty)
-    val (ridingFlat, exactGrouped) = riding.partition(p => windowAggOf(p._1).groupBy.isEmpty)
 
     val pairSrc = if (obsKeyCols.forall(base.columns.contains)) base else obs
     lazy val pairs = pairSrc
@@ -286,12 +286,10 @@ object PointInTimeJoin {
       .na.drop("any").distinct()
 
     var joined = obs
-    if (timeAware && (rowFeats.nonEmpty || ridingFlat.nonEmpty))
-      joined = asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats, ridingFlat)
+    if (timeAware && (rowFeats.nonEmpty || riding.nonEmpty))
+      joined = asOfJoin(joined, pairs, obsKeyCols, keys, src0, rowFeats, riding, g.name)
     else if (rowFeats.nonEmpty)
       joined = snapshotJoin(joined, obsKeyCols, keys, src0, rowFeats, g.name)
-    for ((gb, fs) <- exactGrouped.groupBy(p => windowAggOf(p._1).groupBy.get).toSeq.sortBy(_._1))
-      joined = groupedRunningJoin(joined, pairs, obsKeyCols, keys, src0, gb, fs, g.name)
     if (bucketed.nonEmpty) {
       // share one bucket join per identical window spec; a record
       // limit ranks by its feature's own measure or aggregate, so each
@@ -352,32 +350,23 @@ object PointInTimeJoin {
     * (deterministic). One shuffle + sort; no row explosion — this is
     * the 100 TB-safe shape (vs. an unbounded range join).
     *
-    * The anchor group's riding window features without group_by
-    * (`windows`, [[splitRiding]]) share the same shuffle and sort:
-    *  - exact ones ([[RunningSums]]): each pair also gets a row at
-    *    T − W per distinct window, the running sums are more columns of
-    *    the same window, and one aggregation per pair (no shuffle: the
-    *    rows are already partitioned by key) reads them at T and at each
-    *    T − W;
-    *  - MIN, MAX and LATEST ([[RunningExtremes]]): a sliding deque per
-    *    (key column, window) over the same window, read once per pair,
-    *    at T, like the as-of values.
+    * The anchor group's riding window features (`windows`,
+    * [[splitRiding]]) share the same shuffle and sort, as running
+    * kernels over its frame ([[RunningWindows]]), read like the as-of
+    * values on the one pair row at T.
     */
   private def asOfJoin(
       obs: DataFrame, obsPairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
       src: DataFrame, feats: Seq[(AnchorFeature, String)],
-      windows: Seq[(AnchorFeature, String)]): DataFrame = {
+      windows: Seq[(AnchorFeature, String)], anchorName: String): DataFrame = {
     val ts = "__graft_ts"
     val vals = "__graft_vals"
     val keyCols = keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(obsKeyCols(i)) }
-    val (extreme, exact) = windows.partition(p => RunningExtremes.rides(windowAggOf(p._1)))
-    val run = new RunningSums(exact)
-    val ext = new RunningExtremes(extreme)
+    val run = new RunningWindows(windows, anchorName)
     val valStruct = if (feats.isEmpty) Nil else Seq(struct(feats.map { case (f, out) =>
       rowCol(f.transform, src).as(out) }: _*).as(vals))
     val srcSel = src
-      .select(keyCols ++ (col(Internal.SrcTs).as(ts) +: valStruct) ++ run.sourceCols ++
-        ext.sourceCols: _*)
+      .select(keyCols ++ (col(Internal.SrcTs).as(ts) +: valStruct) ++ run.sourceCols: _*)
       .withColumn(Tag, lit(0))
 
     val w = Window
@@ -386,232 +375,93 @@ object PointInTimeJoin {
       .rowsBetween(Window.unboundedPreceding, 0)
     val asOf = if (feats.isEmpty) Nil else Seq(vals -> last(col(vals), ignoreNulls = true).over(w))
 
-    // pair rows carry no vals and no contributions: the union fills nulls
-    val sorted = srcSel
-      .unionByName(run.pairRows(obsPairs, ts).withColumn(Tag, lit(1)), allowMissingColumns = true)
-      .withColumns((asOf ++ run.cumulative(w) ++ ext.running(col(ts), w)).toMap)
+    // pair rows carry no vals and no kernel inputs: the union fills nulls
+    val featRows = srcSel
+      .unionByName(obsPairs.withColumnRenamed(ObsTs, ts).withColumn(Tag, lit(1)),
+        allowMissingColumns = true)
+      .withColumns((asOf ++ run.kernels(col(ts), col(Tag) === 1, w)).toMap)
       .where(col(Tag) === 1)
-    // the values read at T only: as-of features and sliding extremes
-    val atT = feats.map { case (_, out) => out -> col(s"$vals.$out") } ++ ext.values
-    val featRows =
-      if (exact.isEmpty)
-        sorted.select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
-          atT.map { case (out, c) => c.as(out) }: _*)
-      else {
-        val isT = col(RunningSums.Off) === 0L
-        val reads = run.reads ++ atT.map { case (out, c) =>
-          first(when(isT, c), ignoreNulls = true).as(out) }
-        sorted.groupBy((obsKeyCols :+ ObsTs).map(col): _*)
-          .agg(reads.head, reads.tail: _*)
-          .select((obsKeyCols :+ ObsTs).map(col) ++ atT.map(p => col(p._1)) ++
-            exact.map { case (f, out) => run.value(windowAggOf(f)).as(out) }: _*)
-      }
-
+      .select(obsKeyCols.map(col) ++ Seq(col(ts).as(ObsTs)) ++
+        feats.map { case (_, out) => col(s"$vals.$out").as(out) } ++ run.values: _*)
     obs.join(featRows, obsKeyCols :+ ObsTs, "left_outer")
   }
 
-  /** J3, exact invertible features grouped by one sub-key expression
-    * `gb`: one union-sort partitioned by key, over the source rows some
-    * feature's filter keeps (the others add nothing to a running sum).
-    * The running sums run per (key, sub-key), and a (pair, sub-key)
-    * enters a feature's map iff a row its filter keeps is in the
-    * window.
-    *
-    * A pair's candidate sub-keys are those with a kept row in the last
-    * `d + 1` cells, up to T's own, of a grid of width `c` = W/4 (W the
-    * widest window; `c` at least 1 µs): a row in `(T − W, T]` lies at
-    * most `d = (W + c − 2) / c` cells before T's. So the pair rows grow
-    * with the sub-keys a key shows within about 1.25 W of T, as the
-    * bucket plan's rows grow with the sub-keys in the window — not with
-    * every sub-key of the key's whole history, which for a
-    * high-cardinality group_by over a long history is far larger.
+  /** The window features that ride a union-sort ([[splitRiding]]), as
+    * running kernels over its frame ([[graft.functions.SlidingWindow]]).
+    * Each source row carries, per distinct filter, whether the filter
+    * keeps it (`__graft_rf_i`), per distinct measure its value
+    * (`__graft_rm_i`), and per distinct group_by its sub-key
+    * (`__graft_rg_i`). One kernel `__graft_rx_i` runs per distinct
+    * (filter, measure, window, group_by, kind):
+    *  - MIN, MAX and LATEST each take a sliding extreme of the kept
+    *    measures. LATEST is the MAX of `struct(ts, measure)` and reads
+    *    `.v` — the bucket plan's `max(struct)`: the newest kept row wins
+    *    even when its measure is null, and a tie at one `src_ts` goes to
+    *    the larger value;
+    *  - COUNT, SUM and AVG share one sliding sums kernel, over a
+    *    constant sub-key without group_by, and finish from its (n, s)
+    *    cells with the bucket plan's types and nulls: COUNT the non-null
+    *    measures, a long; SUM a long, null when no measure is non-null;
+    *    AVG `s / n` as a double, else null. Without group_by the value
+    *    is null when no kept row is in the window; with it, a map from
+    *    each sub-key with a kept row there to its value, and null when
+    *    there is none.
     */
-  private def groupedRunningJoin(
-      obs: DataFrame, pairs: DataFrame, obsKeyCols: Seq[String], keys: Seq[TypedKey],
-      src: DataFrame, gb: String, feats: Seq[(AnchorFeature, String)],
-      anchorName: String): DataFrame = {
-    val ts = "__graft_ts"
-    val grp = "__graft_grp"
-    val pairKeys = obsKeyCols :+ ObsTs
-    val keyCols = keys.zipWithIndex.map { case (k, i) => col(k.keyColumn).as(obsKeyCols(i)) }
-    val run = new RunningSums(feats)
-    val srcSel = src
-      .select(keyCols ++ Seq(col(Internal.SrcTs).as(ts), FeathrExpr.column(gb).as(grp)) ++
-        run.sourceCols: _*)
-      .withColumn(Tag, lit(0))
-    val kept = srcSel.where(run.keptByAny)
-    val cell = "__graft_cell"
-    val c = math.max(1L, run.widest / 4)
-    val d = (run.widest + c - 2) / c
-    def cellOf(t: Column) = idiv(unix_micros(t), c)
-    val candidates = kept
-      .select((obsKeyCols :+ grp).map(col) :+
-        explode(sequence(cellOf(col(ts)), cellOf(col(ts)) + d)).as(cell): _*)
-      .distinct()
-    val pairRows = run.pairRows(pairs.withColumn(cell, cellOf(col(ObsTs)))
-      .join(candidates, obsKeyCols :+ cell).drop(cell), ts).withColumn(Tag, lit(1))
-
-    val w = Window.partitionBy((obsKeyCols :+ grp).map(col): _*)
-      .orderBy(col(ts).asc, col(Tag).asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // partitioned by key alone, so the per-pair reads and the map
-    // collection below need no further shuffle
-    val perGroup = kept.unionByName(pairRows, allowMissingColumns = true)
-      .repartition(obsKeyCols.map(col): _*)
-      .withColumns(run.cumulative(w).toMap)
-      .where(col(Tag) === 1)
-      .groupBy((pairKeys :+ grp).map(col): _*)
-      .agg(run.reads.head, run.reads.tail: _*)
-      .select((pairKeys :+ grp).map(col) ++ feats.zipWithIndex.flatMap { case ((f, out), i) =>
-        val wa = windowAggOf(f)
-        Seq(run.value(wa).as(out), run.present(wa).as(s"__graft_in_$i"))
-      }: _*)
-    val aggDf = collectGroups(perGroup, pairKeys.map(col), grp,
-      feats.zipWithIndex.map { case ((_, out), i) => out -> Some(col(s"__graft_in_$i")) },
-      None, gb, anchorName)
-    obs.join(aggDf, pairKeys, "left_outer")
-  }
-
-  /** The running sums of exact window features (J3 without `limit`:
-    * COUNT, and SUM/AVG of integral measures). Each source row
-    * contributes, per distinct filter, whether the filter keeps it
-    * (`__graft_rp_i`), per distinct (filter, measure), whether it adds
-    * a non-null measure (`__graft_rc_i`), and for SUM/AVG the measure
-    * itself (`__graft_rs_i`), summed as DECIMAL(38, 0): a key's
-    * whole-history total may pass `Long.MaxValue` while every window
-    * sum fits, and Spark runs ANSI. A spine pair reads each running
-    * column at T and at T − W; the difference is the window
-    * `(T − W, T]`, since a source row at exactly T − W sorts before the
-    * pair row there.
-    * Results keep the bucket plan's types and nulls: COUNT is a long,
-    * null when no kept row is in the window; SUM a long, null when no
-    * non-null measure is; AVG `sum / count` as a double, else null.
-    */
-  private final class RunningSums(feats: Seq[(AnchorFeature, String)]) {
-    import RunningSums._
+  private final class RunningWindows(feats: Seq[(AnchorFeature, String)], anchorName: String) {
     private val was = feats.map(p => windowAggOf(p._1))
     private val filters = was.map(_.filter).distinct
-    private val measures = was.map(wa => (wa.filter, wa.defExpr)).distinct
-    private val summed = was.filter(_.aggFunc != Aggregation.COUNT)
-      .map(wa => (wa.filter, wa.defExpr)).distinct
-    private val windows = was.map(wa => Durations.toMicros(wa.window)).distinct
+    private val measures = was.map(_.defExpr).distinct
+    private val groupBys = was.flatMap(_.groupBy).distinct
+    private def kernelOf(wa: Transformation.WindowAgg) = (wa.filter, wa.defExpr, wa.window,
+      wa.groupBy, Some(wa.aggFunc).filter(_ => slides(wa)))
+    private val kernelKeys = was.map(kernelOf).distinct
 
-    /** The widest window, in microseconds. */
-    def widest: Long = windows.max
+    /** A source row's kernel inputs, over source columns. */
+    def sourceCols: Seq[Column] =
+      filters.zipWithIndex.map { case (f, i) =>
+        f.fold(lit(true))(FeathrExpr.column).as(s"__graft_rf_$i") } ++
+      measures.zipWithIndex.map { case (e, i) => FeathrExpr.column(e).as(s"__graft_rm_$i") } ++
+      groupBys.zipWithIndex.map { case (e, i) => FeathrExpr.column(e).as(s"__graft_rg_$i") }
 
-    private def kept(wa: Transformation.WindowAgg) = s"__graft_rp_${filters.indexOf(wa.filter)}"
-    private def nonNull(wa: Transformation.WindowAgg) =
-      s"__graft_rc_${measures.indexOf((wa.filter, wa.defExpr))}"
-    private def total(wa: Transformation.WindowAgg) =
-      s"__graft_rs_${summed.indexOf((wa.filter, wa.defExpr))}"
-    private val counted = filters.indices.map(i => s"__graft_rp_$i") ++
-      measures.indices.map(i => s"__graft_rc_$i")
-    private val totals = summed.indices.map(i => s"__graft_rs_$i")
-
-    /** A source row's contributions, over source columns; null = none. */
-    def sourceCols: Seq[Column] = {
-      def keeps(f: Option[String]) = f.map(FeathrExpr.column).getOrElse(lit(true))
-      filters.zipWithIndex.map { case (f, i) => when(keeps(f), true).as(s"__graft_rp_$i") } ++
-        measures.zipWithIndex.map { case ((f, e), i) =>
-          when(keeps(f) && FeathrExpr.column(e).isNotNull, true).as(s"__graft_rc_$i") } ++
-        summed.zipWithIndex.map { case ((f, e), i) =>
-          when(keeps(f), FeathrExpr.column(e)).as(s"__graft_rs_$i") }
-    }
-
-    /** Some filter keeps the row (its sub-key can enter a map). */
-    def keptByAny: Column = filters.indices.map(i => col(s"__graft_rp_$i").isNotNull).reduce(_ || _)
-
-    /** One row per pair at T (offset 0) and at T − W per distinct window
-      * W, its sort time in `ts`; no windows leaves the pairs at T.
+    /** The kernels over the union-sort window `w`, sorted by `ts`;
+      * `pair` holds on the pair rows.
       */
-    def pairRows(pairs: DataFrame, ts: String): DataFrame =
-      if (windows.isEmpty) pairs.withColumnRenamed(ObsTs, ts)
-      else pairs
-        .withColumn(Off, explode(array((0L +: windows).map(lit): _*)))
-        .withColumn(ts, timestamp_micros(unix_micros(col(ObsTs)) - col(Off)))
-
-    /** The running columns over the union-sort window `w`. */
-    def cumulative(w: org.apache.spark.sql.expressions.WindowSpec): Seq[(String, Column)] =
-      counted.map(c => c -> count(col(c)).over(w)) ++
-        totals.map(c => c -> coalesce(sum(col(c).cast(Exact)).over(w), lit(0).cast(Exact)))
-
-    /** Per-pair aggregations reading every running column at T and at
-      * each T − W.
-      */
-    def reads: Seq[Column] = for (c <- counted ++ totals; o <- 0L +: windows)
-      yield max(when(col(Off) === o, col(c))).as(s"${c}_$o")
-
-    private def inWindow(c: String, wa: Transformation.WindowAgg): Column =
-      col(s"${c}_0") - col(s"${c}_${Durations.toMicros(wa.window)}")
-
-    /** A row `wa`'s filter keeps is in the window. */
-    def present(wa: Transformation.WindowAgg): Column = inWindow(kept(wa), wa) > 0
-
-    /** The feature value, typed and nulled as the bucket plan's. */
-    def value(wa: Transformation.WindowAgg): Column = {
-      val n = inWindow(nonNull(wa), wa)
-      lazy val s = inWindow(total(wa), wa).cast("long")
-      wa.aggFunc match {
-        case Aggregation.COUNT => when(present(wa), n)
-        case Aggregation.SUM => when(n > 0, s)
-        case Aggregation.AVG => when(n > 0, s / n)
-        case other => throw new IllegalArgumentException(s"$other is not exact under subtraction")
-      }
-    }
-  }
-
-  private object RunningSums {
-    val Off = "__graft_off"
-    val Exact = org.apache.spark.sql.types.DecimalType(38, 0)
-  }
-
-  /** The sliding extremes of MIN, MAX and LATEST window features with
-    * no `limit` and no group_by, over a union-sort's running frame
-    * ([[graft.functions.SlidingExtreme]]). Each source row carries, per
-    * distinct (filter, measure, LATEST or not), its key `__graft_rk_i`:
-    * the measure, or for LATEST `struct(src_ts, measure)`, where the
-    * filter keeps the row, else null. One kernel `__graft_rx_i` runs per
-    * distinct (key, window, MIN or not); LATEST is the MAX of its struct
-    * and reads `.v` — the bucket plan's `max(struct)`: the newest kept
-    * row wins even when its measure is null, and a tie at one `src_ts`
-    * goes to the larger value. Values keep the bucket plan's types, and
-    * are null when no kept row is in the window.
-    */
-  private final class RunningExtremes(feats: Seq[(AnchorFeature, String)]) {
-    private def latest(wa: Transformation.WindowAgg) = wa.aggFunc == Aggregation.LATEST
-    private def keyOf(wa: Transformation.WindowAgg) = (wa.filter, wa.defExpr, latest(wa))
-    private def kernelOf(wa: Transformation.WindowAgg) =
-      (keyOf(wa), Durations.toMicros(wa.window), wa.aggFunc == Aggregation.MIN)
-    private val was = feats.map(p => windowAggOf(p._1))
-    private val keys = was.map(keyOf).distinct
-    private val kernels = was.map(kernelOf).distinct
-
-    /** Each row's keys, over source columns; null = the filter drops it. */
-    def sourceCols: Seq[Column] = keys.zipWithIndex.map { case ((filter, e, isLatest), i) =>
-      val m = FeathrExpr.column(e)
-      val k = if (isLatest) struct(col(Internal.SrcTs).as("t"), m.as("v")) else m
-      filter.fold(k)(f => when(FeathrExpr.column(f), k)).as(s"__graft_rk_$i")
-    }
-
-    /** The kernels over the union-sort window `w`, sorted by `ts`. */
-    def running(ts: Column, w: org.apache.spark.sql.expressions.WindowSpec): Seq[(String, Column)] =
-      kernels.zipWithIndex.map { case ((k, wUs, isMin), i) =>
-        s"__graft_rx_$i" -> SlidingExtreme.slidingExtreme(
-          ts, col(s"__graft_rk_${keys.indexOf(k)}"), wUs, isMin).over(w)
+    def kernels(ts: Column, pair: Column, w: WindowSpec): Seq[(String, Column)] =
+      kernelKeys.zipWithIndex.map { case (k @ (filter, e, window, gb, extreme), i) =>
+        val keep = col(s"__graft_rf_${filters.indexOf(filter)}")
+        val m = col(s"__graft_rm_${measures.indexOf(e)}")
+        val wUs = Durations.toMicros(window)
+        s"__graft_rx_$i" -> (extreme match {
+          case Some(agg) =>
+            val key = if (agg == Aggregation.LATEST) struct(ts.as("t"), m.as("v")) else m
+            SlidingWindow.slidingExtreme(ts, when(keep, key), wUs, agg == Aggregation.MIN)
+          case None =>
+            val outs = feats.collect { case (f, out) if kernelOf(windowAggOf(f)) == k => out }
+            SlidingWindow.slidingSums(ts, pair, keep,
+              gb.fold(lit(0))(g => col(s"__graft_rg_${groupBys.indexOf(g)}")), m, wUs,
+              s"anchor $anchorName: feature ${outs.mkString(", ")}", gb.getOrElse(""))
+        }).over(w)
       }
 
-    /** Each feature's value at a pair row at T. */
-    def values: Seq[(String, Column)] = feats.map { case (f, out) =>
+    /** Each feature's value on a pair row at T. */
+    def values: Seq[Column] = feats.map { case (f, out) =>
       val wa = windowAggOf(f)
-      val x = col(s"__graft_rx_${kernels.indexOf(kernelOf(wa))}")
-      out -> (if (latest(wa)) x.getField("v") else x)
+      val x = col(s"__graft_rx_${kernelKeys.indexOf(kernelOf(wa))}")
+      def finish(cell: Column) = {
+        val n = cell.getField("n")
+        wa.aggFunc match {
+          case Aggregation.COUNT => n
+          case Aggregation.SUM => when(n > 0, cell.getField("s"))
+          case _ => when(n > 0, cell.getField("s") / n)
+        }
+      }
+      (wa.aggFunc match {
+        case Aggregation.LATEST => x.getField("v")
+        case Aggregation.MIN | Aggregation.MAX => x
+        case _ if wa.groupBy.isEmpty => finish(x.getItem(0))
+        case _ => map_from_entries(transform(x, c => struct(c.getField("k"), finish(c))))
+      }).as(out)
     }
-  }
-
-  private object RunningExtremes {
-    /** MIN, MAX and LATEST without `limit` and group_by. */
-    def rides(wa: Transformation.WindowAgg): Boolean = wa.limit.isEmpty && wa.groupBy.isEmpty &&
-      Seq(Aggregation.MIN, Aggregation.MAX, Aggregation.LATEST).contains(wa.aggFunc)
   }
 
   /** J3: sliding-window aggregation (SWA) — aggregate source rows in
@@ -634,12 +484,11 @@ object PointInTimeJoin {
     *
     * J3 has two plans, and [[splitRiding]] picks one from the analyzed
     * schema and the anchor group's features. Without `limit`, COUNT
-    * and SUM/AVG of an integral measure are running sums read at T and
-    * T − W off a union-sort ([[asOfJoin]] without group_by,
-    * [[groupedRunningJoin]] with it), and MIN, MAX and LATEST without
-    * group_by are sliding deques read at T off the as-of union-sort —
-    * unless the group has no as-of features and some window feature
-    * cannot ride: then the extremes stay here, and an exact feature
+    * and SUM/AVG of an integral measure (with or without group_by) and
+    * MIN, MAX and LATEST without group_by are running kernels read at T
+    * off the anchor group's one union-sort ([[asOfJoin]]) — unless the
+    * group has no as-of features and some window feature cannot ride:
+    * then the extremes stay here, and an exact feature
     * whose (window, filter, group_by) cluster another feature builds
     * here anyway joins it. This is the other plan, for every remaining
     * feature — UNION, elementwise, float or decimal SUM/AVG, every
@@ -739,43 +588,35 @@ object PointInTimeJoin {
         finish(ps.map(p => col(acc(i, p)))).as(out) }: _*)
     val aggDf =
       if (gcols.isEmpty) finished
-      else collectGroups(finished, pairKeys.map(col), gcols.head,
-        feats.map { case (_, out) => out -> None }, wa0.limit, wa0.groupBy.get, anchorName)
+      else collectGroups(finished, pairKeys.map(col), gcols.head, feats.map(_._2), wa0.limit,
+        wa0.groupBy.get, anchorName)
     obs.join(aggDf, pairKeys, "left_outer")
   }
 
   /** A7 tail: optional A7×A9 top-k-groups limit, then collect
     * sub-key -> value into a deterministic (sorted) map. The input is
     * one row per (key, obs_ts, sub-key) — bounded by sub-key
-    * cardinality, so the ranking window is cheap at scale. A feature
-    * with a presence column takes only the rows where it holds, and is
-    * null when none does. A map cannot hold a null key, so a null
-    * sub-key that would enter one is refused by anchor group, feature
-    * and group_by expression.
+    * cardinality, so the ranking window is cheap at scale. A map cannot
+    * hold a null key, so a null sub-key that would enter one is refused
+    * by anchor group, feature and group_by expression.
     */
   private def collectGroups(perGroup0: DataFrame, groupKeys: Seq[Column],
-      groupCol: String, outs: Seq[(String, Option[Column])],
+      groupCol: String, outs: Seq[String],
       limit: Option[Int], groupBy: String, anchorName: String): DataFrame = {
     var perGroup = perGroup0
     limit.foreach { k =>
       val gw = Window.partitionBy(groupKeys: _*)
-        .orderBy(col(outs.head._1).desc, col(groupCol).asc)
+        .orderBy(col(outs.head).desc, col(groupCol).asc)
       perGroup = perGroup
         .withColumn("__graft_grn", row_number().over(gw))
         .where(col("__graft_grn") <= k)
         .drop("__graft_grn")
     }
-    val maps = outs.map { case (out, present) =>
+    val maps = outs.map { out =>
       val subKey = coalesce(col(groupCol), raise_error(lit(s"anchor $anchorName: feature " +
         s"$out: group_by sub-key ($groupBy) is null in a window; a map cannot hold a null " +
         "key; filter those rows out or coalesce the sub-key")))
-      val entry = struct(subKey.as(groupCol), col(out))
-      present match {
-        case None => map_from_entries(array_sort(collect_list(entry))).as(out)
-        case Some(p) =>
-          val entries = collect_list(when(p, entry))
-          when(size(entries) > 0, map_from_entries(array_sort(entries))).as(out)
-      }
+      map_from_entries(array_sort(collect_list(struct(subKey.as(groupCol), col(out))))).as(out)
     }
     perGroup.groupBy(groupKeys: _*).agg(maps.head, maps.tail: _*)
   }

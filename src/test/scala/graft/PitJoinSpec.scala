@@ -342,7 +342,7 @@ class PitJoinSpec extends SparkTestBase {
     assert(out == Map(2L -> 1.0, 3L -> 2.0))
   }
 
-  test("exact and sliding MIN/MAX windows ride one union-sort per (anchor group, group_by); no bucket partials") {
+  test("exact and sliding MIN/MAX windows, grouped or not, ride one union-sort per anchor group; no bucket partials") {
     // a training-set-shaped project over an int measure: as-of, COUNT/
     // SUM/AVG and MAX windows per user and per item, a group_by COUNT
     Seq((1L, 10L, "2024-01-09 12:00:00", 3, "a"), (1L, 20L, "2024-01-05 00:00:00", -2, "b"),
@@ -376,18 +376,18 @@ class PitJoinSpec extends SparkTestBase {
     val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")), Seq(
       FeatureQuery(userFeats, Seq("user")), FeatureQuery(itemFeats, Seq("item"))))
 
-    // one running window per union-sort: (user), (user, sub-key), (item)
+    // one running window per anchor group: (user), with the group_by
+    // COUNT on it, and (item)
     import org.apache.spark.sql.catalyst.expressions.Attribute
     val sorts = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
         w.partitionSpec.collect { case a: Attribute => a.name }
     }
-    assert(sorts.sortBy(_.mkString(",")) ==
-      Seq(Seq("item"), Seq("user"), Seq("user", "__graft_grp")), sorts)
+    assert(sorts.sortBy(_.mkString(",")) == Seq(Seq("item"), Seq("user")), sorts)
     // no bucket partials: the MAX features ride the as-of sorts too
     val analyzed = df.queryExecution.analyzed.toString
     assert(!analyzed.contains("__graft_ps_"), analyzed)
-    assert(analyzed.contains("sliding_extreme"), analyzed)
+    assert(analyzed.contains("sliding_extreme") && analyzed.contains("sliding_sums"), analyzed)
 
     val r = df.collect().map(r => r.getAs[Long]("user") -> r).toMap
     assert(r.size == 2)
@@ -421,7 +421,7 @@ class PitJoinSpec extends SparkTestBase {
     val p = FeatureProject("window_only")
     // no as-of feature: COUNT/SUM 7d share MAX 7d's bucket cluster, and
     // the group_by COUNT 7d its group_by MAX's; the 1d COUNTs have no
-    // cluster to join and take the running-sum plan
+    // cluster to join and ride the group's one union-sort
     p.addAnchorGroup("window_only_feats", Source("src", DataLocation.Table("window_only_src"),
         timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
       win("u_cnt_7d", "COUNT", "7d"), win("u_sum_7d", "SUM", "7d"), win("u_max_7d", "MAX", "7d"),
@@ -439,7 +439,7 @@ class PitJoinSpec extends SparkTestBase {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
         w.partitionSpec.collect { case a: Attribute => a.name }
     }
-    assert(sorts.sortBy(_.mkString(",")) == Seq(Seq("user"), Seq("user", "__graft_grp")), sorts)
+    assert(sorts == Seq(Seq("user")), sorts)
     val kinds = "__graft_ps_([a-z]+)_".r
       .findAllMatchIn(df.queryExecution.analyzed.toString).map(_.group(1)).toSet
     assert(kinds == Set("cnt", "sum", "max"), kinds)
@@ -503,7 +503,8 @@ class PitJoinSpec extends SparkTestBase {
       .createOrReplaceTempView("null_sub_key_src")
     def obsAt(t: String) = Seq((1L, t)).toDF("k", "ts_s")
       .withColumn("ts", $"ts_s".cast("timestamp")).select("k", "ts")
-    // COUNT takes the running-sum plan, MAX the bucket plan
+    // COUNT rides the union-sort as a sliding sums kernel, MAX takes the
+    // bucket plan
     for ((agg, name) <- Seq("COUNT" -> "f_cnt_by_cat", "MAX" -> "f_max_by_cat")) {
       val p = FeatureProject("null_sub_key")
       p.addAnchorGroup("null_sub_anchor", Source("src", DataLocation.Table("null_sub_key_src"),
