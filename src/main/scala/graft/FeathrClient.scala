@@ -1,5 +1,6 @@
 package graft
 
+import graft.model._
 import graft.operators._
 import graft.project._
 import graft.sources._

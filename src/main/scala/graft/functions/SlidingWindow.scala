@@ -119,17 +119,19 @@ case class SlidingExtreme(ts: Expression, key: Expression, windowUs: Long, min: 
   * rows where `keep` holds (subtract-on-evict: Tangwongsan et al.,
   * "General Incremental Sliding-Window Aggregation", VLDB 2015). The
   * ring is a FIFO of the kept rows in the window. Each sub-key with a
-  * kept row there has a [[SlidingWindow.Cell]] of three longs: its
-  * kept rows, its non-null measures `n`, and their sum `s`, which only
-  * an integral (byte, short, int, long) measure adds to. A row adds on
-  * push and subtracts on evict, so after each row every cell holds a
-  * window's own sum, never a running total; a sum past the long range
-  * is refused, naming `label`. A sub-key leaves with its last row.
+  * kept row there has a [[SlidingWindow.Cell]]: its kept rows, its
+  * non-null measures `n`, and their sum `s`, which only an integral
+  * (byte, short, int, long) measure adds to. A row adds on push and
+  * subtracts on evict, so after each row every cell holds a window's
+  * own sum, never a running total. The sum is kept in 128 bits, so no
+  * order of adds and evicts among rows that tie on `ts` can overflow
+  * it. A sub-key leaves with its last row.
   *
   * Only a row where `pair` holds reads the state: it evaluates to the
   * cells as `(k, n, s)` sorted by sub-key, or null when no kept row is
-  * in the window. Every other row evaluates to null. A kept row with a
-  * null sub-key in a pair's window is refused, naming `label` and the
+  * in the window. Every other row evaluates to null. A pair's window
+  * whose sum passes the long range is refused, naming `label`; so is
+  * a kept row with a null sub-key in it, naming `label` and the
   * `groupBy` expression: a map cannot hold a null key.
   */
 case class SlidingSums(ts: Expression, pair: Expression, keep: Expression,
@@ -153,10 +155,6 @@ case class SlidingSums(ts: Expression, pair: Expression, keep: Expression,
 
   @transient private lazy val summed =
     Seq(ByteType, ShortType, IntegerType, LongType).contains(measure.dataType)
-  @transient private lazy val overflow: PartialFunction[Throwable, Long] = {
-    case _: ArithmeticException => throw new ArithmeticException(
-      s"$label: a window's sum passes the long range; sliding sums are exact longs")
-  }
 
   override def createAggregationBuffer(): SlidingWindow.Sums = new SlidingWindow.Sums(ordering)
 
@@ -167,7 +165,7 @@ case class SlidingSums(ts: Expression, pair: Expression, keep: Expression,
       c.rows -= 1
       if (r.hasMeasure) {
         c.n -= 1
-        c.s = try Math.subtractExact(c.s, r.m) catch overflow
+        c.subtract(r.m)
       }
       if (c.rows == 0 && (c ne buf.nullCell)) buf.cells.remove(c.key)
     }
@@ -193,7 +191,7 @@ case class SlidingSums(ts: Expression, pair: Expression, keep: Expression,
       val v = if (m != null && summed) m.asInstanceOf[Number].longValue else 0L
       if (m != null) {
         c.n += 1
-        c.s = try Math.addExact(c.s, v) catch overflow
+        c.add(v)
       }
       buf.fifo.push(now, new SlidingWindow.Kept(c, m != null, v))
     }
@@ -205,8 +203,11 @@ case class SlidingSums(ts: Expression, pair: Expression, keep: Expression,
       s"sub-key ($groupBy) is null in a window; a map cannot hold a null key; filter those " +
       "rows out or coalesce the sub-key")
     else if (buf.cells.isEmpty) null
-    else new GenericArrayData(buf.cells.values.asScala.map(c => InternalRow(c.key, c.n, c.s))
-      .toArray)
+    else new GenericArrayData(buf.cells.values.asScala.map { c =>
+      if (!c.fits) throw new ArithmeticException(
+        s"$label: a window's sum passes the long range; sliding sums are exact longs")
+      InternalRow(c.key, c.n, c.s)
+    }.toArray)
 
   override def withNewMutableAggBufferOffset(offset: Int): SlidingSums =
     copy(mutableAggBufferOffset = offset)
@@ -268,8 +269,25 @@ object SlidingWindow {
     case other => InternalRow.copyValue(other)
   }
 
-  /** One sub-key's kept rows, non-null measures and their sum. */
-  final class Cell(val key: Any) { var rows, n, s = 0L }
+  /** One sub-key's kept rows, non-null measures and their sum: the
+    * two's-complement 128-bit integer `hi:s`, a long when it [[fits]].
+    */
+  final class Cell(val key: Any) {
+    var rows, n, s, hi = 0L
+
+    def add(v: Long): Unit = {
+      val lo = s + v
+      hi += (v >> 63) + (if (java.lang.Long.compareUnsigned(lo, s) < 0) 1 else 0)
+      s = lo
+    }
+
+    def subtract(v: Long): Unit = {
+      hi -= (v >> 63) + (if (java.lang.Long.compareUnsigned(s, v) < 0) 1 else 0)
+      s -= v
+    }
+
+    def fits: Boolean = hi == s >> 63
+  }
 
   /** A kept row in the FIFO: its sub-key's cell and its measure. */
   final class Kept(val cell: Cell, val hasMeasure: Boolean, val m: Long)

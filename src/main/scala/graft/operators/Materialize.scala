@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.model._
 import graft.project._
 import graft.sources._
 

@@ -212,12 +212,10 @@ object PointInTimeJoin {
     * When the group has as-of features (`asOf`), every extreme rides
     * their sort. A window-only group builds one union-sort and no bucket
     * cluster when every one of its window features can ride; otherwise
-    * its extremes stay bucketed. An exact feature then rides only when
-    * its kernel has a sort to share or saves a bucket join: the group
-    * has as-of features and it has no group_by, or no bucketed feature
-    * of the same (window, filter, group_by) is left to build that
-    * cluster anyway — else it joins that cluster, which already pays
-    * the shuffle it would add.
+    * its extremes stay bucketed. An exact feature then rides when the
+    * group has as-of features and it has no group_by, or when no
+    * bucketed feature of the same (window, filter, group_by) is left
+    * to build that cluster anyway — else it joins that cluster.
     */
   private def splitRiding(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
       asOf: Boolean): (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
@@ -399,8 +397,9 @@ object PointInTimeJoin {
     *    even when its measure is null, and a tie at one `src_ts` goes to
     *    the larger value;
     *  - COUNT, SUM and AVG share one sliding sums kernel, over a
-    *    constant sub-key without group_by, and finish from its (n, s)
-    *    cells with the bucket plan's types and nulls: COUNT the non-null
+    *    constant sub-key without group_by, which sums the measure only
+    *    when a SUM or AVG reads it, and finish from its (n, s) cells
+    *    with the bucket plan's types and nulls: COUNT the non-null
     *    measures, a long; SUM a long, null when no measure is non-null;
     *    AVG `s / n` as a double, else null. Without group_by the value
     *    is null when no kept row is in the window; with it, a map from
@@ -436,10 +435,14 @@ object PointInTimeJoin {
             val key = if (agg == Aggregation.LATEST) struct(ts.as("t"), m.as("v")) else m
             SlidingWindow.slidingExtreme(ts, when(keep, key), wUs, agg == Aggregation.MIN)
           case None =>
-            val outs = feats.collect { case (f, out) if kernelOf(windowAggOf(f)) == k => out }
+            val readers = feats.filter(p => kernelOf(windowAggOf(p._1)) == k)
+            // a kernel only COUNT reads must not sum: a count cannot overflow
+            val summed = readers.exists(p => windowAggOf(p._1).aggFunc != Aggregation.COUNT)
             SlidingWindow.slidingSums(ts, pair, keep,
-              gb.fold(lit(0))(g => col(s"__graft_rg_${groupBys.indexOf(g)}")), m, wUs,
-              s"anchor $anchorName: feature ${outs.mkString(", ")}", gb.getOrElse(""))
+              gb.fold(lit(0))(g => col(s"__graft_rg_${groupBys.indexOf(g)}")),
+              if (summed) m else when(m.isNotNull, true), wUs,
+              s"anchor $anchorName: feature ${readers.map(_._2).mkString(", ")}",
+              gb.getOrElse(""))
         }).over(w)
       }
 

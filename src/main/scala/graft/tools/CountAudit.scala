@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 /** Dev check: does `df.count()` on a query actually execute the
   * query's joins, or does the optimizer collapse row-preserving

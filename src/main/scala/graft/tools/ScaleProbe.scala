@@ -84,6 +84,12 @@ object ScaleProbe {
       .normalizeEventTime
       .select("event_id", "user_id", "ts", "event_type", "value", "props")
 
+    def densified(n: Int): DataFrame =
+      (0 until n).map(i => ev0
+          .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37} SECONDS"))
+          .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
+        .reduce(_ unionByName _)
+
     /** (seconds, shuffle-write MB) of one action. */
     def time(f: => Long): (Double, Double) = {
       Thread.sleep(300) // let the async listener bus drain prior events

@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * is never merged — the kernels run only over a running window frame.
   * The sliding sums kernel, driven row by row: its eviction edge, what
   * a kept row, a null measure and a dropped row add, its sub-key map,
-  * and its refusal of a sum past the long range.
+  * tied rows near the long bounds, and its refusal of a read sum past
+  * the long range.
   */
 class SlidingExtremeSpec extends SparkTestBase {
   import spark.implicits._
@@ -90,10 +91,31 @@ class SlidingExtremeSpec extends SparkTestBase {
     val fits = sums(10L, (1L, false, true, "a", Long.MaxValue), (11L, false, true, "a", 1L),
       (12L, true, false, null, null))
     assert(fits.last == Some(Seq(("a", 1L, 1L))), fits)
-    val e = intercept[ArithmeticException](sums(10L, (1L, false, true, "a", Long.MaxValue),
-      (2L, false, true, "a", 1L)))
-    assert(e.getMessage.contains("anchor a: feature f_sum") &&
-      e.getMessage.contains("long range"), e.getMessage)
+    // only a pair that reads the window refuses it
+    val unread = sums(10L, (1L, false, true, "a", Long.MaxValue), (2L, false, true, "a", 1L))
+    assert(unread == Seq(None, None), unread)
+    for (big <- Seq(Long.MaxValue, Long.MinValue)) {
+      val e = intercept[ArithmeticException](sums(10L, (1L, false, true, "a", big),
+        (2L, false, true, "a", big), (3L, true, false, null, null)))
+      assert(e.getMessage.contains("anchor a: feature f_sum") &&
+        e.getMessage.contains("long range"), e.getMessage)
+    }
+  }
+
+  test("sliding sums: rows that tie on ts add and evict in any order near the long bounds") {
+    val M = Long.MaxValue
+    // every order of three tied rows whose sum fits though a partial
+    // sum may not, read at T and evicted before a later row
+    for (tied <- Seq(Seq(M, 1L, -2L), Seq(Long.MinValue, -1L, 2L), Seq(M, M, -M, -10L))
+        .flatMap(_.permutations)) {
+      val later = if (tied.sum > 0) -5L else 5L
+      val out = sums(10L, tied.map(v => (1L, false, true, "a", v: Any)) ++ Seq(
+        (1L, true, false, null, null), (5L, false, true, "a", later),
+        (5L, true, false, null, null), (11L, true, false, null, null)): _*)
+      assert(out.flatten == Seq(Seq(("a", tied.size.toLong, tied.sum)),
+        Seq(("a", tied.size + 1L, tied.sum + later)), Seq(("a", 1L, later))),
+        s"$tied: $out")
+    }
   }
 
   test("sliding sums: a keep flag that is not BOOLEAN is refused at analysis") {

@@ -638,6 +638,77 @@ class SwaPropertySpec extends SparkTestBase {
     }
   }
 
+  test("exact COUNT of a long measure whose in-window sum passes the long range") {
+    // one Long.MaxValue row a second: a 2.5 s window holds up to three,
+    // whose sum no long holds; a count never sums them
+    val t0 = 1700000000000000L
+    val events = (0 until 5).map(i => (1L, t0 + i * 1000000L, Long.MaxValue, s"g${i % 2}"))
+    events.toDF("k", "ts_us", "lv", "g").withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_count_big")
+    val key = TypedKey("k", ValueType.INT64)
+    val p = FeatureProject("propcountbig")
+    p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_count_big"),
+      timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      AnchorFeature("f_cnt", FeatureType.INT64,
+        Transformation.windowAgg("lv", "COUNT", "2500ms"), Seq(key)),
+      AnchorFeature("f_cnt_by_g", FeatureType.INT64,
+        Transformation.WindowAgg("lv", Aggregation.COUNT, Durations.parse("2500ms"),
+          groupBy = Some("g")), Seq(key))))
+    val obs = events.map(e => (e._1, e._2)).toDF("k", "ts_us")
+      .withColumn("ts", timestamp_micros($"ts_us"))
+    val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("f_cnt", "f_cnt_by_g"), Seq("k")))).collect()
+    assert(out.length == events.length)
+    out.foreach { r =>
+      val t = r.getAs[Long]("ts_us")
+      val in = events.filter(e => e._2 > t - 2500000L && e._2 <= t)
+      assert(r.getAs[Long]("f_cnt") == in.size, s"t=$t")
+      assert(r.getAs[Map[String, Long]]("f_cnt_by_g") ==
+        in.groupBy(_._4).map { case (g, rows) => g -> rows.size.toLong }, s"t=$t")
+    }
+  }
+
+  test("exact SUM/AVG over rows that tie on ts near the long bounds match the reference fold") {
+    // per key, one order of rows tied at t0 whose sum fits though a
+    // partial sum may not, then a row at t0 + 1 s; pairs at t0, at
+    // t0 + 1 s, and at t0 + 2 s, where the tied rows are evicted
+    val t0 = 1700000000000000L
+    val w = 2000000L
+    val M = Long.MaxValue
+    val orders = Seq(Seq(M, 1L, -2L), Seq(Long.MinValue, -1L, 2L), Seq(-10L, M, M, -M))
+      .flatMap(_.permutations)
+    val events = orders.zipWithIndex.flatMap { case (tied, k) =>
+      tied.map(v => (k.toLong, t0, v)) :+ (k.toLong, t0 + w / 2, if (tied.sum > 0) -5L else 5L)
+    }
+    events.toDF("k", "ts_us", "lv").withColumn("ts", timestamp_micros($"ts_us"))
+      .createOrReplaceTempView("swa_prop_tied_bounds")
+    val key = TypedKey("k", ValueType.INT64)
+    val p = FeatureProject("proptiedbounds")
+    p.addAnchorGroup("g", Source("src", DataLocation.Table("swa_prop_tied_bounds"),
+      timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      AnchorFeature("f_sum", FeatureType.INT64,
+        Transformation.windowAgg("lv", "SUM", "2s"), Seq(key)),
+      AnchorFeature("f_avg", FeatureType.DOUBLE,
+        Transformation.windowAgg("lv", "AVG", "2s"), Seq(key)),
+      AnchorFeature("f_by_k", FeatureType.INT64,
+        Transformation.WindowAgg("lv", Aggregation.SUM, Durations.parse("2s"),
+          groupBy = Some("cast(k AS string)")), Seq(key))))
+    val obsRows = orders.indices.flatMap(k => Seq(0L, w / 2, w).map(d => (k.toLong, t0 + d)))
+    val obs = obsRows.toDF("k", "ts_us").withColumn("ts", timestamp_micros($"ts_us"))
+    val out = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("f_sum", "f_avg", "f_by_k"), Seq("k")))).collect()
+    assert(out.length == obsRows.length)
+    out.foreach { r =>
+      val k = r.getAs[Long]("k"); val t = r.getAs[Long]("ts_us")
+      val in = events.filter(e => e._1 == k && e._2 > t - w && e._2 <= t).map(e => Some(e._3))
+      for ((name, want) <- Seq("f_sum" -> exactFold("SUM", in), "f_avg" -> exactFold("AVG", in),
+          "f_by_k" -> Some(Map(k.toString -> exactFold("SUM", in))))) {
+        val got = Option(r.getAs[Any](name))
+        assert(same(got, want), s"$name: k=$k t=$t got=$got want=$want")
+      }
+    }
+  }
+
   test("sliding MIN/MAX/LATEST on the union-sort match the reference fold") {
     val rnd = new scala.util.Random(71)
     val big = 1L << 60 // neighbouring longs a double cannot tell apart
