@@ -4387,7 +4387,7 @@ object SparkEntry {
     * drops, truncated docs → quality drops) and the pipeline config.
     * `sqlCurateIncremental` is the batch meaning of both.
     */
-  private[graft] def curateDelta(docs: DataFrame): DataFrame = {
+  private def curateDelta(docs: DataFrame): DataFrame = {
     val revText = concat_ws(" ",
       reverse(split(Dedup.normText(col("text")), " ")))
     docs.where(col("doc_id") % 10 === 0)
@@ -4407,7 +4407,7 @@ object SparkEntry {
     * twins of non-forgotten docs (must still DROP), and second twins
     * of forgotten docs (must drop against their +6000000 sibling —
     * the delta-internal ordered pair still applies). */
-  private[graft] def curateForgetDelta(docs: DataFrame): DataFrame =
+  private def curateForgetDelta(docs: DataFrame): DataFrame =
     docs.where(col("doc_id") % 20 === 2)
       .select((col("doc_id") + 6000000L).as("doc_id"), col("text"))
       .unionByName(docs.where(col("doc_id") % 20 === 12)
@@ -4415,7 +4415,7 @@ object SparkEntry {
       .unionByName(docs.where(col("doc_id") % 20 === 2)
         .select((col("doc_id") + 8000000L).as("doc_id"), col("text")))
 
-  private[graft] def curatePipeline = graft.operators.CurationPipeline(
+  private def curatePipeline = graft.operators.CurationPipeline(
     "text", "doc_id", Seq(
       CurationStage.Quality(50, 100000, 2),
       CurationStage.NearDupDrop(0.8, ordered = true)))

@@ -56,7 +56,7 @@ object DotProduct {
     * a BINARY vector is 1 B/element but `getBinary` COPIES the byte
     * array on every read — in a nested-loop scoring join that is one
     * fresh allocation per (corpus, query) PAIR, which measured SLOWER
-    * than float32 (ScaleProbe axis 7, first revision). `array<bigint>`
+    * than float32 (SCALE.md axis 7, first revision). `array<bigint>`
     * reads are zero-copy `UnsafeArrayData`/ColumnVector views like the
     * float path's, at 1 B/element density; lanes unpack with shifts in
     * registers. Zero-padded tail lanes contribute 0 — exact.

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * × queries nested-loop join); the higher-order-function formulation
   * (`aggregate(zip_with(codes, sequence(...), ...))`) evaluates
   * interpreted per pair and measured SLOWER than the 512-dim float
-  * dot kernel it is meant to beat (ScaleProbe axis 17, first
+  * dot kernel it is meant to beat (SCALE.md axis 17, first
   * revision) — as a native expression the lookups inline into
   * whole-stage codegen like [[DotProduct]].
   */

@@ -51,8 +51,8 @@ object BucketedLayout {
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
   /** Number of `Exchange hashpartitioning` operators in the executed
-    * plan — the probe both the spec and ScaleProbe use to prove a
-    * bucketed join stayed shuffle-free.
+    * plan — the check both the spec and SCALE.md axis 15 use to prove
+    * a bucketed join stayed shuffle-free.
     */
   def shuffleCount(df: DataFrame): Int =
     "Exchange hashpartitioning".r

@@ -129,10 +129,6 @@ case class CurationPipeline(textCol: String, idCol: String,
 
   import CurationStage._
 
-  private def bcLimit(df: DataFrame): Long = df.sparkSession.conf
-    .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-    .toLong
-
   private def checkedInput(df: DataFrame,
       reference: Option[(DataFrame, String, String)]): DataFrame = {
     require(reference.isDefined ||
@@ -281,7 +277,8 @@ case class CurationPipeline(textCol: String, idCol: String,
           val (rep, repBytes) = Spill.roundTripSized(
             TextAnalysis.repetitionStats(cur, textCol, idCol, n, maxDup)
               .where(col("rule_repetition")).select(idCol))
-          val hinted = if (repBytes <= bcLimit(cur)) broadcast(rep) else rep
+          val hinted =
+            if (repBytes <= Spill.broadcastLimit(cur.sparkSession)) broadcast(rep) else rep
           cur.join(hinted, Seq(idCol), "left_semi")
         case NearDupDrop(threshold, ordered) =>
           val spilled = Spill.roundTrip(cur)

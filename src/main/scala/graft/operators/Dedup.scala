@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** The largest spilled shingle-set frame ([[Spill.roundTripSized]]) that
+    * exact-jaccard verification broadcasts into its pair joins: 32 MB. */
+  private val BroadcastShinglesBytes = 32L << 20
+
   /** Normalized text used by all fingerprints: lowercase, CJK-segmented,
     * collapsed whitespace.
     *
@@ -113,8 +117,7 @@ object Dedup {
     * a planted duplicate of a *normal* document still collides with its
     * original. Rows over the cap lose LSH recall for that bucket only
     * (they are precisely the rows exact-dedup or a dedicated boilerplate
-    * pass should own). Set `spark.graft.lsh.logDropped=true` to spend
-    * one extra job counting and logging what was skipped.
+    * pass should own).
     *
     * `dropOverCap = true` drops an over-cap bucket ENTIRELY instead of
     * keeping its `cap` smallest ids. LSH bands keep the truncation
@@ -129,8 +132,7 @@ object Dedup {
   private[operators] def capBuckets(df: DataFrame, bucketCols: Seq[String],
       ordCol: String, dropOverCap: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val conf = df.sparkSession.conf
-    val cap = conf.get("spark.graft.lsh.maxBucket", "1000").toInt
+    val cap = df.sparkSession.conf.get("spark.graft.lsh.maxBucket", "1000").toInt
     if (cap <= 0) df
     else {
       val byBucket = Window.partitionBy(bucketCols.map(col): _*)
@@ -138,14 +140,6 @@ object Dedup {
         if (dropOverCap) df.withColumn("__graft_bn", count(lit(1)).over(byBucket))
         else df.withColumn("__graft_bn",
           row_number().over(byBucket.orderBy(col(ordCol).asc)))
-      if (conf.get("spark.graft.lsh.logDropped", "false").toBoolean) {
-        val over = ranked.where(col("__graft_bn") > cap)
-          .agg(count(lit(1)), count_distinct(struct(bucketCols.map(col): _*)))
-          .head()
-        if (over.getLong(0) > 0)
-          System.err.println(s"[graft] LSH hot-bucket guard: dropped " +
-            s"${over.getLong(0)} rows across ${over.getLong(1)} buckets over cap=$cap")
-      }
       ranked.where(col("__graft_bn") <= cap).drop("__graft_bn")
     }
   }
@@ -208,8 +202,7 @@ object Dedup {
     // 320k docs and shuffling the corpus once — still linear, but 1.7×
     // the bytes; the exact on-disk size is a better gate than the
     // estimate).
-    val bcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
+    val bcLimit = Spill.broadcastLimit(df.sparkSession)
     def maybeBc(small: DataFrame): DataFrame =
       if (candBytes <= bcLimit) broadcast(small) else small
     val candIds = cands.select(col("id_a").as(idCol))
@@ -218,7 +211,7 @@ object Dedup {
       .join(maybeBc(candIds), Seq(idCol), "left_semi")
     // Shingle sets are spilled (not persisted) so their EXACT on-disk
     // size gates a broadcast hint, like the candidate frame's. Plan
-    // regimes, all measured on the scale probe (SCALE.md):
+    // regimes, all measured in SCALE.md axis 2:
     //  - cands and sh both under their limits → both pair-joins
     //    broadcast, the verification adds ZERO shuffle (the per-pair
     //    expanded arrays never cross the wire);
@@ -234,10 +227,8 @@ object Dedup {
     val (sh, shBytes) = Spill.roundTripSized(
       candDocs.select(col(idCol),
         shingleHashSet(col(textCol), shingleSize).as("sh")))
-    val shBcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastShinglesBytes", (32L << 20).toString).toLong
     def bcSh(p: DataFrame): DataFrame =
-      if (shBytes <= shBcLimit) broadcast(p) else p
+      if (shBytes <= BroadcastShinglesBytes) broadcast(p) else p
     val result = maybeBc(cands)
       .join(bcSh(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a"))), "id_a")
       .join(bcSh(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b"))), "id_b")
@@ -553,8 +544,7 @@ object Dedup {
     val (cands, candBytes) = Spill.roundTripSized(
       dBands.join(rBands, Seq("band_id", "band_hash"))
         .select(col("id_delta"), col("id_ref")).distinct())
-    val bcLimit = delta.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
+    val bcLimit = Spill.broadcastLimit(delta.sparkSession)
     def maybeBc(small: DataFrame): DataFrame =
       if (candBytes <= bcLimit) broadcast(small) else small
     // exact-jaccard verification: shingle ONLY the candidate docs of
@@ -568,10 +558,8 @@ object Dedup {
       cands.select(col("id_delta").as(idCol)).distinct(), "sh_d")
     val (rSh, rShBytes) = shingleSets(reference,
       cands.select(col("id_ref").as(idCol)).distinct(), "sh_r")
-    val shBcLimit = delta.sparkSession.conf
-      .get("spark.graft.dedup.broadcastShinglesBytes", (32L << 20).toString).toLong
     def bcSh(p: DataFrame, bytes: Long): DataFrame =
-      if (bytes <= shBcLimit) broadcast(p) else p
+      if (bytes <= BroadcastShinglesBytes) broadcast(p) else p
     val result = maybeBc(cands)
       .join(bcSh(dSh.select(col(idCol).as("id_delta"), col("sh_d")), dShBytes), "id_delta")
       .join(bcSh(rSh.select(col(idCol).as("id_ref"), col("sh_r")), rShBytes), "id_ref")
@@ -637,8 +625,7 @@ object Dedup {
       .groupBy(col("__ph")).agg(count(lit(1)).as("__df"))
       .where(col("__df") >= minDocFreq).select(col("__ph"))
     val (boiler, boilerBytes) = Spill.roundTripSized(boiler0)
-    val bcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
+    val bcLimit = Spill.broadcastLimit(df.sparkSession)
     val boilerHinted = if (boilerBytes <= bcLimit) broadcast(boiler) else boiler
     paras.join(boilerHinted, Seq("__ph"), "left_anti")
       .groupBy(col(idCol))

@@ -112,9 +112,7 @@ object IncrementalBm25 {
     require(k >= 1, s"k must be >= 1: $k")
     require(k1 >= 0 && b >= 0 && b <= 1, s"bad BM25 params: k1=$k1 b=$b")
     require(maxDfFrac > 0 && maxDfFrac <= 1, s"bad maxDfFrac: $maxDfFrac")
-    val bcLimit = spark.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(spark)
     val live = VersionLog.live(spark, idxDir(dir))
     val st = asOfVersion.fold(live.state(spark))(live.asOf(spark, _))
     val stats = st.where(col("__term").isNull)

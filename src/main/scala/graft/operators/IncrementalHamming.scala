@@ -177,9 +177,7 @@ object IncrementalHamming {
   private def losersAgainst(spark: SparkSession, refs: DataFrame,
       d: DataFrame, cfg: Config, maxHamming: Int,
       deltaRowsHint: Option[Long]): DataFrame = {
-    val bcLimit = spark.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(spark)
     // ~24 bytes per (block_id, block_val, id, sig) row, division form
     // so a state-sized hint cannot overflow the product
     val perRow = cfg.blocks * 24L
@@ -208,9 +206,7 @@ object IncrementalHamming {
       probe: DataFrame, maxHamming: Int): DataFrame = {
     requireExact(cfg, maxHamming)
     val st = stored(spark, VersionLog.live(spark, idxDir(dir)), None)
-    val bcLimit = spark.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(spark)
     val (pBlocks, pBytes) = Spill.roundTripSized(
       blockRows(normalized(probe, cfg), cfg).withColumnsRenamed(
         Map("__id" -> "__id_p", "__sig" -> "__sig_p")))

@@ -87,17 +87,4 @@ object IvfIndex {
       .where(col("cell_id").isin(cells.map(c => c: Any): _*))
     Similarity.scoreProbed(vectors, probed, k, idCol, vecCol, qIdCol, qVecCol)
   }
-
-  /** The distinct cells a query batch would touch — the introspection
-    * behind [[query]]'s partition filter, exposed for capacity
-    * planning ("what fraction of the index does this batch read?") and
-    * for the scale probe's ground-truth pruning measurement.
-    */
-  def probedCells(
-      spark: SparkSession, path: String, queries: DataFrame, nProbe: Int,
-      qIdCol: String = "q_id", qVecCol: String = "q_vec"): Seq[Int] = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    Similarity.probeCells(queries, centroids, nProbe, qIdCol, qVecCol)
-      .select("cell_id").distinct().collect().map(_.getInt(0)).toSeq.sorted
-  }
 }

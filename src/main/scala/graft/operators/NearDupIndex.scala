@@ -100,8 +100,7 @@ object NearDupIndex {
     val (dBands, dBandBytes) = Spill.roundTripSized(
       Dedup.minhashBands(delta, textCol, idCol, numHashes, bands, shingleSize)
         .select(col("band_id"), col("band_hash"), col(idCol).as("id_delta")))
-    val bcLimit = spark.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
+    val bcLimit = Spill.broadcastLimit(spark)
     def maybeBc(small: DataFrame): DataFrame =
       if (dBandBytes <= bcLimit) broadcast(small) else small
     val rBands = readStore(spark, s"$path/$B")
@@ -277,7 +276,7 @@ object NearDupIndex {
     // accumulate orphaned cached frames)
     try {
     def maybeBcD(small: DataFrame): DataFrame =
-      if (dBandBytes <= bcLimit(spark)) broadcast(small) else small
+      if (dBandBytes <= Spill.broadcastLimit(spark)) broadcast(small) else small
 
     // cross candidates: delta bands against the stored reference bands
     // (the big side streams); internal candidates: capped self-pairs
@@ -326,7 +325,7 @@ object NearDupIndex {
         .unionByName(intCands.select(col("id_b").as("id_delta"),
           col("id_a").as("id_ref"), lit(false).as("__cross"))))
     def bcCand(small: DataFrame): DataFrame =
-      if (candBytes <= bcLimit(spark)) broadcast(small) else small
+      if (candBytes <= Spill.broadcastLimit(spark)) broadcast(small) else small
     val cCross = cands.where(col("__cross"))
     val cInt = cands.where(!col("__cross"))
 
@@ -431,9 +430,6 @@ object NearDupIndex {
 
   private def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
-
-  private def bcLimit(spark: SparkSession): Long = spark.conf
-    .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
 
   private def shingleStore(df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int): DataFrame =

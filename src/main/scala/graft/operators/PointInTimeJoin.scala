@@ -46,9 +46,10 @@ import org.apache.spark.sql.types.NumericType
   *       and no group_by — keep a monotonic deque. Both cost amortized
   *       O(1) per row (O(log sub-keys) with group_by), and an anchor
   *       group builds one shuffle and sort for all its riding features;
-  *     - without as-of features, a group builds that one union-sort
-  *       and no bucket cluster when every window feature can ride;
-  *       otherwise its extremes take the bucket plan, and an exact
+  *     - with as-of features, every exact feature and every sliding
+  *       extreme rides that sort; without them, a group builds that one
+  *       union-sort and no bucket cluster when every window feature can
+  *       ride; otherwise its extremes take the bucket plan, and an exact
   *       feature whose (window, filter, group_by) bucket cluster is
   *       built anyway for another feature joins that cluster;
   *     - every other feature (UNION, elementwise, float/decimal
@@ -209,13 +210,13 @@ object PointInTimeJoin {
     *    group_by;
     *  - sliding extremes: MIN, MAX and LATEST without group_by.
     *
-    * When the group has as-of features (`asOf`), every extreme rides
-    * their sort. A window-only group builds one union-sort and no bucket
-    * cluster when every one of its window features can ride; otherwise
-    * its extremes stay bucketed. An exact feature then rides when the
-    * group has as-of features and it has no group_by, or when no
-    * bucketed feature of the same (window, filter, group_by) is left
-    * to build that cluster anyway — else it joins that cluster.
+    * When the group has as-of features (`asOf`), every exact feature
+    * and every extreme rides their sort. A window-only group builds one
+    * union-sort and no bucket cluster when every one of its window
+    * features can ride; otherwise its extremes stay bucketed, and an
+    * exact feature rides unless a bucketed feature of the same (window,
+    * filter, group_by) is left to build that cluster anyway — then it
+    * joins that cluster.
     */
   private def splitRiding(src: DataFrame, windowFeats: Seq[(AnchorFeature, String)],
       asOf: Boolean): (Seq[(AnchorFeature, String)], Seq[(AnchorFeature, String)]) = {
@@ -242,8 +243,7 @@ object PointInTimeJoin {
     }
     val built = (if (extremesRide) rest else inexact)
       .collect { case (f, _) if windowAggOf(f).limit.isEmpty => cluster(f) }.toSet
-    val running = exact.filter { case (f, _) =>
-      (asOf && windowAggOf(f).groupBy.isEmpty) || !built(cluster(f)) }
+    val running = exact.filter { case (f, _) => asOf || !built(cluster(f)) }
     val riding = if (extremesRide) running ++ extreme else running
     windowFeats.partition(riding.contains)
   }

@@ -57,9 +57,7 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1: $k")
     require(k1 >= 0 && b >= 0 && b <= 1, s"bad BM25 params: k1=$k1 b=$b")
     require(maxDfFrac > 0 && maxDfFrac <= 1, s"bad maxDfFrac: $maxDfFrac")
-    val bcLimit = corpus.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(corpus.sparkSession)
 
     def toks(text: org.apache.spark.sql.Column) = bm25Toks(text)
 

@@ -14,6 +14,12 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
 
+  /** int8 rescoring pushes the candidate ids into the corpus scan only
+    * from this estimated corpus size on (256 MB), and only up to this
+    * many distinct ids (1 << 20); see [[bruteForceTopKInt8]]. */
+  private val RescorePushdownMinCorpusBytes = 256L << 20
+  private val RescoreIdPushdownMax = 1 << 20
+
   /** Dot product of two equal-length float/double arrays — a native
     * codegen'd Catalyst expression ([[graft.functions.DotProductExpr]];
     * the HOF `aggregate`/`zip_with` formulation is CodegenFallback and
@@ -119,7 +125,7 @@ object Similarity {
     // density like a BINARY vector, but read as a zero-copy
     // UnsafeArrayData view like the float path — `getBinary` COPIES per
     // access, which in this nested-loop scoring join meant one fresh
-    // byte[] per PAIR and measured slower than float32 (ScaleProbe
+    // byte[] per PAIR and measured slower than float32 (SCALE.md
     // axis 7, first revision). Norms computed once per side, never per
     // pair. Input forms: a pre-PACKED `<vecCol>_b8` BINARY column (the
     // 100 TB storage shape — build at ingest with
@@ -175,19 +181,14 @@ object Similarity {
     // skinny) — pre-joining them would replicate each query vector
     // rescoreFactor·k times in the broadcast. Corpus-side l2Norm is
     // computed after the join, over candidates ≪ corpus.
-    val conf = corpus.sparkSession.conf
-    val minPushdownBytes = conf
-      .get("spark.graft.sim.rescorePushdownMinCorpusBytes", (256L << 20).toString).toLong
     val corpusBytes = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
     val (cand, corpusSrc) =
-      if (corpusBytes < minPushdownBytes) (cand0, corpus)
+      if (corpusBytes < RescorePushdownMinCorpusBytes) (cand0, corpus)
       else {
         val spilled = Spill.roundTrip(cand0)
-        val cap = conf
-          .get("spark.graft.sim.rescoreIdPushdownMax", (1 << 20).toString).toInt
-        val ids = spilled.select(col(idCol)).distinct().limit(cap + 1).collect()
-          .map(_.get(0))
-        if (ids.length <= cap) {
+        val ids = spilled.select(col(idCol)).distinct()
+          .limit(RescoreIdPushdownMax + 1).collect().map(_.get(0))
+        if (ids.length <= RescoreIdPushdownMax) {
           // a single InSet node, NOT isInCollection — the latter builds
           // an In with |ids| Literal children and the analyzer/optimizer
           // walk all of them on every rule pass (measured: seconds of

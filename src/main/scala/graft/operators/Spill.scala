@@ -47,6 +47,12 @@ object Spill {
     (spark.read.schema(df.schema).parquet(path), bytes)
   }
 
+  /** The largest [[roundTripSized]] byte count an operator broadcasts:
+    * `spark.graft.dedup.broadcastCandidatesBytes`, 16 MB by default.
+    */
+  private[graft] def broadcastLimit(spark: SparkSession): Long =
+    spark.conf.get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString).toLong
+
   def newPath(spark: SparkSession): String = {
     val base = spark.conf.get("spark.graft.spillDir",
       sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-spill")

@@ -327,9 +327,7 @@ object TextAnalysis {
     val (refFps, refBytes) = Spill.roundTripSized(
       winnowFingerprints(reference, refTextCol, refIdCol, k, w)
         .select(col("fp")).distinct())
-    val bcLimit = session.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(session.sparkSession)
     if (refBytes <= bcLimit) (broadcast(refFps), true) else (refFps, false)
   }
 
@@ -442,9 +440,7 @@ object TextAnalysis {
       case DecontaminateAction.Drop =>
         val (bad, badBytes) = Spill.roundTripSized(
           stats.where(col("contaminated")).select(col(idCol)))
-        val bcLimit = df.sparkSession.conf
-          .get("spark.graft.dedup.broadcastCandidatesBytes",
-            (16L << 20).toString).toLong
+        val bcLimit = Spill.broadcastLimit(df.sparkSession)
         df.join(if (badBytes <= bcLimit) broadcast(bad) else bad,
           Seq(idCol), "left_anti")
     }
@@ -537,9 +533,7 @@ object TextAnalysis {
     */
   def domainBlocklistStats(df: DataFrame, textCol: String, idCol: String,
       blocklist: DataFrame, domainCol: String = "domain"): DataFrame = {
-    val bcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(df.sparkSession)
     val (bl, blBytes) = Spill.roundTripSized(
       blocklist.select(col(domainCol).as("__bd")))
     val blH = if (blBytes <= bcLimit) broadcast(bl) else bl
@@ -655,9 +649,7 @@ object TextAnalysis {
       lm: DataFrame, n: Int = 2, gramCol: String = "gram",
       countCol: String = "count"): DataFrame = {
     require(n >= 1, s"bad n: $n")
-    val bcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(df.sparkSession)
     val (lmS, lmBytes) = Spill.roundTripSized(
       lm.select(col(gramCol).as("__gram"), col(countCol).as("__lmc")))
     val lmH = if (lmBytes <= bcLimit) broadcast(lmS) else lmS
@@ -759,9 +751,7 @@ object TextAnalysis {
       .groupBy(col("__h")).agg(count(lit(1)).as("__df"))
       .where(col("__df") >= minDocFreq)
       .select(col("__h"), lit(1L).as("__rep"))
-    val bcLimit = spans.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(spans.sparkSession)
     val (rep, repBytes) = Spill.roundTripSized(rep0)
     if (repBytes <= bcLimit) broadcast(rep) else rep
   }
@@ -836,9 +826,7 @@ object TextAnalysis {
   def scoreLinear(df: DataFrame, textCol: String, idCol: String,
       weights: DataFrame, termCol: String = "term",
       weightCol: String = "weight", bias: Double = 0.0): DataFrame = {
-    val bcLimit = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastCandidatesBytes", (16L << 20).toString)
-      .toLong
+    val bcLimit = Spill.broadcastLimit(df.sparkSession)
     val (wts, wBytes) = Spill.roundTripSized(
       weights.select(col(termCol).as("__term"), col(weightCol).as("__w")))
     val wHinted = if (wBytes <= bcLimit) broadcast(wts) else wts

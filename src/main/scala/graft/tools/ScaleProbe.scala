@@ -9,31 +9,19 @@ import graft.sources._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale audit (SURVEY.md §4): replicates the sf0.1 events
-  * table N× with jittered timestamps on the SAME keys — window DENSITY
-  * grows N×, the regime where a 100 TB deployment breaks a naive plan —
-  * and times the competing physical strategies:
-  *
-  *  - SWA bucketed pre-aggregation: per-pair work is O(window/bucket),
-  *    not O(rows-in-window), so it must stay ~linear as density rises;
-  *  - the as-of join (union-sort, one shuffle): must stay ~linear in N;
-  *  - MinHash near-dup on a corpus replicated with distinct ids: the
-  *    capped-bucket pipeline must stay ~linear in corpus size.
+/** Hot-key audit of the point-in-time join (SCALE.md axis 6): replicates
+  * the sf0.1 events table N× with jittered timestamps on the SAME keys,
+  * then runs the bucketed 30d SUM and the as-of union-sort on uniform
+  * keys and on Zipf-remapped keys, and prints one `SKEW` line per plan
+  * and N: wall seconds, shuffle-write MB and the max/median task time.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *          runMain graft.tools.ScaleProbe [multipliers...]
-  * Prints one line per (strategy, N). This is a dev tool, not a gate —
-  * the numbers land in SCALE.md.
+  * This is a dev tool, not a gate — the numbers land in SCALE.md.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_PROBE=swa|minhash|text|curate|ivf|int8|incdedup|
-    //   sessionize|ivfindex|skew|bm25|topfrac|spans|winnow|bucket|
-    //   layout|pq|bloom|inccur|audit|optorder|rangejoin|swainc|
-    //   featday|bpe|unionvec|uvdaily|bm25inc|haminc|ivfrebuild|all
-    //   selects the axis
-    val axes = sys.env.getOrElse("SPARK_GRAFT_PROBE", "all")
     val mults = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 4, 16)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -48,75 +36,37 @@ object ScaleProbe {
     // entirely, so wall-clock alone understates what a real cluster
     // pays — shuffle volume is the 100 TB-relevant metric
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    // bytes READ from storage (parquet): the axis-8 metric — partition
-    // pruning shows up here, not in shuffle volume
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong
     // per-task durations: max/median over an action is the SKEW
-    // signature (axis 6) — a hot key serializes into one straggler
-    // task, which wall-clock alone hides at probe sizes
+    // signature — a hot key serializes into one straggler task, which
+    // wall-clock alone hides at probe sizes
     val taskDurations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null) {
+        if (t.taskMetrics != null)
           shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          inputBytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-        }
         if (t.taskInfo != null) taskDurations.add(t.taskInfo.duration)
       }
-      private val jobSites = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobStarts.put(j.jobId, j.time)
-        jobSites.put(j.jobId, Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?"))
-      }
-      override def onJobEnd(
-          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (sys.env.contains("SPARK_GRAFT_PROBE_JOBS")) {
-          val t0 = jobStarts.getOrDefault(j.jobId, j.time)
-          println(f"[scale]   job ${j.jobId}%-4d ${(j.time - t0) / 1e3}%7.2fs  ${jobSites.getOrDefault(j.jobId, "?")}")
-        }
     })
 
     val ev0 = spark.read.parquet(s"$dir/events.parquet")
       .normalizeEventTime
       .select("event_id", "user_id", "ts", "event_type", "value", "props")
 
-    def densified(n: Int): DataFrame =
-      (0 until n).map(i => ev0
-          .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37} SECONDS"))
-          .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-        .reduce(_ unionByName _)
-
-    /** (seconds, shuffle-write MB) of one action. */
-    def time(f: => Long): (Double, Double) = {
+    /** (seconds, shuffle-write MB, max/median task duration) of one
+      * action — the third number is the straggler signature: tasks
+      * ≥ 50 ms only (empty-partition tasks would drive the median to ~0
+      * and inflate every ratio into noise).
+      */
+    def timeSkew(f: => Long): (Double, Double, Double) = {
       Thread.sleep(300) // let the async listener bus drain prior events
+      taskDurations.clear()
       val b0 = shuffleBytes.get()
       val t0 = System.nanoTime(); val n = f
       val sec = (System.nanoTime() - t0) / 1e9
       require(n > 0, "probe produced no rows")
       Thread.sleep(300)
-      (sec, (shuffleBytes.get() - b0) / 1e6)
-    }
-
-    /** (seconds, shuffle-write MB, max/median task duration) — the
-      * third number is the straggler signature: tasks ≥ 50 ms only
-      * (empty-partition tasks would drive the median to ~0 and inflate
-      * every ratio into noise).
-      */
-    def timeSkew(f: => Long): (Double, Double, Double) = {
-      Thread.sleep(300)
-      taskDurations.clear()
-      val (sec, mb) = {
-        val b0 = shuffleBytes.get()
-        val t0 = System.nanoTime(); val n = f
-        val s = (System.nanoTime() - t0) / 1e9
-        require(n > 0, "probe produced no rows")
-        Thread.sleep(300)
-        (s, (shuffleBytes.get() - b0) / 1e6)
-      }
+      val mb = (shuffleBytes.get() - b0) / 1e6
       val ds = {
         import scala.jdk.CollectionConverters._
         taskDurations.iterator().asScala.map(_.toDouble).filter(_ >= 50).toArray.sorted
@@ -133,1549 +83,76 @@ object ScaleProbe {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
-    // warmup: run both plan shapes once so the first timed row doesn't
-    // absorb codegen compilation
-    var warmedUp = false
+    // Zipfian KEY SKEW. Real 100 TB key distributions are Zipfian, and
+    // a hot key serializes its rows into one reducer/window task. Keys
+    // are remapped through the inverse-CDF construction floor(K^u),
+    // u = uniform from xxhash64(user_id): P(rank r) = ln((r+1)/r)/ln(K)
+    // ≈ 1/(r·lnK) — Zipf s = 1.0 with K = 1000, so the hottest key
+    // carries ln2/ln1000 ≈ 10.0 % of ALL rows. Each n runs uniform vs
+    // zipf on identical row counts: the DELTA in (wall, shuffle,
+    // max/median task time) is the skew cost. SWA runs the bucketed
+    // plan (a double SUM does not ride the union-sort); as-of runs the
+    // union-sort plan whose per-key window is the textbook straggler.
+    def zipfKey(c: org.apache.spark.sql.Column) =
+      floor(pow(lit(1000.0),
+        pmod(xxhash64(c), lit(1000000)).cast("double") / 1000000.0))
+        .cast("long")
 
-    // warm up at a multiplier OUTSIDE the measured set: Spark reuses
-    // map output of identical shuffle stages across queries in the
-    // same session, so re-running the same n would report ~0 shuffle
-    for (n <- Seq(3) ++ mults; if axes == "all" || axes == "swa") {
-      // per-run timestamp offset: Spark reuses the map output of
-      // shuffle stages whose canonical plan matches an earlier query's
-      // in the same session, so sharing one lineage across the SWA and
-      // as-of runs (and the warmup) would report ~0 shuffle bytes for
-      // everything after the first run — a 1-second data offset per
-      // run keeps the data statistically identical while defeating
-      // the reuse
-      def densifiedOff(offsetSec: Int): DataFrame =
-        (0 until n).map(i => ev0
-            .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
-            .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-
-      def swaProject(view: String): FeatureProject = {
-        val p = FeatureProject(s"probe${n}_$view")
-        p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
-          timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
-          AnchorFeature("f_sum_30d", FeatureType.DOUBLE,
-            Transformation.windowAgg("value", "SUM", "30d"), Seq(userKey)),
-          AnchorFeature("f_cnt_30d", FeatureType.INT64,
-            Transformation.windowAgg("value", "COUNT", "30d"), Seq(userKey))))
-        p
-      }
-      var rows = 0L
-      def runSwa(offsetSec: Int): (Double, Double) = {
-        val view = s"probe_events_${n}_swa"
-        val all = densifiedOff(offsetSec).cache()
-        all.count()
-        val dense = all.where(col("event_type") === "purchase")
-        rows = dense.count()
-        dense.createOrReplaceTempView(view)
-        // the spine scales WITH the source — the real workload shape
-        // (every click is a spine row)
-        val spine = all.where(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        try {
-          val df = FeathrClient.joinFeatures(spark, swaProject(view), spine,
-            Some(("ts", "native")),
-            Seq(FeatureQuery(Seq("f_sum_30d", "f_cnt_30d"), Seq("user_id"))))
-          if (sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN")) df.explain()
-          // count a FEATURE column, not rows: the join is row-preserving
-          // (the feature side aggregates on the join keys), so a plain
-          // count() lets the optimizer skip the join entirely and times
-          // a cached spine scan instead of the operator
-          time(df.select(count(col("f_sum_30d"))).head().getLong(0))
-        } finally all.unpersist()
-      }
-      val (bucketed, bucketedMb) = runSwa(1)
-      if (warmedUp && sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN")) {
-        val (_, sanityMb) = time(
-          spark.range(5000000).repartition(64, col("id")).count())
-        println(f"[scale] sanity 5M-long repartition shuffle = $sanityMb%.1fMB")
-      }
-
-      val (asOf, asOfMb) = {
-        val view = s"probe_events_${n}_asof"
-        val all = densifiedOff(3).cache()
-        all.count()
-        all.where(col("event_type") === "purchase").createOrReplaceTempView(view)
-        val spine = all.where(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val p = FeatureProject(s"probeasof$n")
-        p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
-          timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
-          AnchorFeature("f_last", FeatureType.DOUBLE,
-            Transformation.Expr("value"), Seq(userKey))))
-        val r = time(FeathrClient.joinFeatures(spark, p, spine,
-          Some(("ts", "native")),
-          Seq(FeatureQuery(Seq("f_last"), Seq("user_id"))))
-          .select(count(col("f_last"))).head().getLong(0))
-        all.unpersist()
-        r
-      }
-
-      if (warmedUp)
-        println(f"[scale] n=$n%-3d srcRows=$rows%-9d " +
-          f"swaBucketed=$bucketed%6.2fs/${bucketedMb}%8.1fMB " +
-          f"asOfJoin=$asOf%6.2fs/${asOfMb}%8.1fMB")
-      warmedUp = true
+    def runPit(view: String, dense0: DataFrame, spine: DataFrame,
+        swa: Boolean): (Double, Double, Double) = {
+      dense0.createOrReplaceTempView(view)
+      val p = FeatureProject(s"probe_$view")
+      p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+        if (swa) AnchorFeature("f_sum_30d", FeatureType.DOUBLE,
+          Transformation.windowAgg("value", "SUM", "30d"), Seq(userKey))
+        else AnchorFeature("f_last", FeatureType.DOUBLE,
+          Transformation.Expr("value"), Seq(userKey))))
+      val out = if (swa) "f_sum_30d" else "f_last"
+      // count a FEATURE column, not rows: the join is row-preserving, so
+      // a plain count() lets the optimizer skip the join entirely
+      timeSkew(FeathrClient.joinFeatures(spark, p, spine,
+        Some(("ts", "native")),
+        Seq(FeatureQuery(Seq(out), Seq("user_id"))))
+        .select(count(col(out))).head().getLong(0))
     }
 
-    // minhash: corpus replicated with DISTINCT ids AND per-replica
-    // REWRITTEN text — replicas must NOT near-dup each other, or the
-    // probe measures an artificial n-member clique per document
-    // (quadratic pair output) instead of corpus growth at a constant
-    // duplicate rate. An appended salt is NOT enough: shingle overlap
-    // of "text"+"salt i" vs "text"+"salt j" stays ≈1 on any
-    // non-trivial document. A per-replica `translate` of the vowels
-    // rewrites nearly every word, driving cross-replica jaccard ≈0.
-    // restore broadcast for the dedup axis: the LSH pipeline's internal
-    // semi-joins legitimately broadcast their small sides in production.
-    // SPARK_GRAFT_PROBE_BROADCAST (bytes) overrides the threshold — used
-    // to attribute shuffle growth to the verification semi-join falling
-    // off the broadcast cliff as the candidate-id set outgrows it
-    sys.env.get("SPARK_GRAFT_PROBE_BROADCAST") match {
-      case Some(b) =>
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", b)
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", b)
-      case None =>
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
-    // replica i rewrites vowels by GenScale.vowelMap(i): injective in i
-    // and within each replica, so cross-replica jaccard stays about 0
-    // and the probe measures corpus growth, not planted cliques
-    import GenScale.vowelMap
-    def replicatedDocs(n: Int): DataFrame =
-      (0 until n).map(i => docs0
-          .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L))
-          .withColumn("text",
-            if (i == 0) col("text")
-            else translate(col("text"), "aeiou", vowelMap(i))))
+    // a per-run timestamp offset keeps the data statistically identical
+    // while defeating Spark's reuse of an earlier query's shuffle output
+    // (identical canonical plans in one session would report ~0 shuffle)
+    def densifiedOffAxis6(n: Int, offsetSec: Int): DataFrame =
+      (0 until n).map(i => ev0
+          .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
+          .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
         .reduce(_ unionByName _)
-    for (n <- mults; if axes == "all" || axes == "minhash") {
-      val corpus = replicatedDocs(n).cache()
-      val rows = corpus.count()
-      val (sec, mb) = time(graft.operators.Dedup
-        .minhashNearDuplicates(corpus, "text", "doc_id", 0.8).count() + 1)
-      println(f"[scale] n=$n%-3d docs=$rows%-9d minhashNearDup=$sec%6.2fs/${mb}%8.1fMB")
-      corpus.unpersist()
+
+    def runPair(n: Int, tag: String, offsetSec: Int, swa: Boolean) = {
+      val base = densifiedOffAxis6(n, offsetSec).cache()
+      base.count()
+      val uni = base.where(col("event_type") === "purchase")
+      val uniSpine = base.where(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val u = runPit(s"probe_skew_${tag}_u_$n", uni, uniSpine, swa)
+      val zBase = base.withColumn("user_id", zipfKey(col("user_id"))).cache()
+      zBase.count()
+      val zip = zBase.where(col("event_type") === "purchase")
+      val zipSpine = zBase.where(col("event_type") === "click")
+        .select("event_id", "user_id", "ts")
+      val z = runPit(s"probe_skew_${tag}_z_$n", zip, zipSpine, swa)
+      base.unpersist(); zBase.unpersist()
+      (u, z)
     }
 
-    // text-operator axis (winnow fingerprints, repetition stats, gopher
-    // rules) over an n×-replicated corpus — same distinct-id +
-    // injectively-rewritten-text replica discipline as the minhash
-    // axis. All three are per-document: expect LINEAR wall + shuffle.
-    // Winnow and repetition exchange ONCE by doc id; gopher is a pure
-    // projection with zero shuffle, so its time is the codegen
-    // throughput of the rule stack. The timed aggregations reference
-    // the computed columns explicitly (sum/conditional-sum, never a
-    // bare count()) so the optimizer cannot prune the operator out.
-    {
-      import graft.operators.TextAnalysis
-      var warmedText = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "text") {
-        val corpus = replicatedDocs(n).cache()
-        val rows = corpus.count()
-        val (wSec, wMb) = time(
-          TextAnalysis.winnowFingerprints(corpus, "text", "doc_id").count())
-        val (rSec, rMb) = time(
-          TextAnalysis.repetitionStats(corpus, "text", "doc_id")
-            .agg(sum(when(col("dup_frac") >= 0 && col("rule_repetition").isNotNull,
-              col("n_grams")))).head().getLong(0))
-        val (gSec, gMb) = time(
-          TextAnalysis.gopherRules(corpus, "text")
-            .agg(sum(when(col("passes"), lit(1L)).otherwise(lit(2L))))
-            .head().getLong(0))
-        if (warmedText)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d " +
-            f"winnow=$wSec%6.2fs/${wMb}%8.1fMB " +
-            f"repetition=$rSec%6.2fs/${rMb}%8.1fMB " +
-            f"gopherRules=$gSec%6.2fs/${gMb}%8.1fMB")
-        warmedText = true
-        corpus.unpersist()
-      }
-    }
-    // curation-funnel axis: the composed pipeline (quality rules →
-    // repetition over survivors → near-dup drop → split), exactly the
-    // q_corpus_curate plan shape. Its parts are measured linear on the
-    // text and minhash axes; this measures the COMPOSITION (the joins
-    // between stages and the spilled hand-off) at corpus growth.
-    {
-      import graft.operators.{CurationPipeline, CurationStage, Dedup,
-        Sampling, Spill, TextAnalysis}
-      // the plain vowel-rewrite would fail EVERY replica at the quality
-      // gate (it destroys the English stopwords the rule needs), so the
-      // funnel would silently process only the original docs at every n
-      // — measured: flat 1.3 MB shuffle across 64× "data". Replicas get
-      // a stopword-rich literal suffix: quality passage is restored,
-      // and ~10 shared suffix words on 40+-word docs keep cross-replica
-      // jaccard far below the 0.8 threshold (no artificial cliques).
-      def replicatedQualityDocs(n: Int): DataFrame =
-        (0 until n).map(i => docs0
-            .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L))
-            .withColumn("text",
-              if (i == 0) col("text")
-              else concat(translate(col("text"), "aeiou", vowelMap(i)),
-                lit(" the of and to in is that with some more"))))
-          .reduce(_ unionByName _)
-      var warmedCurate = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "curate") {
-        val corpus = replicatedQualityDocs(n).cache()
-        val rows = corpus.count()
-        val (sec, mb) = time {
-          val quality = TextAnalysis.gopherRules(corpus, "text")
-            .where(col("passes")).select("doc_id", "text")
-          // exact-bytes broadcast gate, mirroring q_corpus_curate
-          val (rep, repBytes) = Spill.roundTripSized(
-            TextAnalysis.repetitionStats(quality, "text", "doc_id")
-              .where(col("rule_repetition")).select("doc_id"))
-          val bcLimit = spark.conf.get(
-            "spark.graft.dedup.broadcastCandidatesBytes",
-            (16L << 20).toString).toLong
-          val repHinted = if (repBytes <= bcLimit) broadcast(rep) else rep
-          val kept = Spill.roundTrip(
-            quality.join(repHinted, Seq("doc_id"), "left_semi"))
-          val deduped = Dedup.dropNearDuplicates(kept, "text", "doc_id", 0.8)
-          Sampling.splitByHash(deduped.select("doc_id"), "doc_id",
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-            .agg(sum(when(col("split") === "train", lit(1L)).otherwise(lit(2L))))
-            .head().getLong(0)
-        }
-        if (warmedCurate)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d curateFunnel=$sec%6.2fs/${mb}%8.1fMB")
-        warmedCurate = true
-        corpus.unpersist()
-      }
+    def fmt(r: (Double, Double, Double)) = f"${r._1}%6.2fs/${r._2}%8.1fMB/x${r._3}%5.1f"
 
-      // audit axis: the disposition audit claims O(funnel), not
-      // O(stages × funnel) — its per-stage spill must prevent upstream
-      // recomputation, and the id-only anti-joins must stay in the
-      // noise next to the stages' own corpus-sized work. Measured as
-      // run() vs audit() on the SAME 3-stage pipeline (projection
-      // filter + shuffling Repetition + hash sample): expect both
-      // linear in corpus, with the audit/run wall ratio bounded by a
-      // small constant at every n.
-      var warmedAudit = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "audit") {
-        val corpus = replicatedQualityDocs(n).cache()
-        val rows = corpus.count()
-        val pipeA = CurationPipeline("text", "doc_id", Seq(
-          CurationStage.Quality(), CurationStage.Repetition(),
-          CurationStage.Sample(0.5)))
-        val (rSec, rMb) = time(pipeA.run(corpus).count() + 1)
-        val (aSec, aMb) = time(
-          pipeA.audit(corpus).groupBy(col("disposition")).count()
-            .agg(sum("count")).head().getLong(0))
-        if (warmedAudit)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d run=$rSec%6.2fs/${rMb}%8.1fMB " +
-            f"audit=$aSec%6.2fs/${aMb}%8.1fMB ratio=${aSec / rSec}%4.2f")
-        warmedAudit = true
-        corpus.unpersist()
-      }
-
-      // predicate-order axis: a pessimal authored order (the shuffling
-      // Repetition stage FIRST, a 0.25 hash-sample LAST) vs
-      // optimized()'s measured cost/(1-sel) order. The win is bounded
-      // by how much of the funnel's cost sits in reorderable stages
-      // seeing avoidable rows — here Repetition should see 4× fewer
-      // docs once Sample ranks ahead of it. Probe/reorder time is
-      // charged to the optimized side (it is part of that plan's cost).
-      var warmedOpt = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "optorder") {
-        val corpus = replicatedQualityDocs(n).cache()
-        val rows = corpus.count()
-        val pess = CurationPipeline("text", "doc_id", Seq(
-          CurationStage.Repetition(), CurationStage.Quality(),
-          CurationStage.Sample(0.25)))
-        val (pSec, pMb) = time(pess.run(corpus).count() + 1)
-        val (oSec, oMb) = time {
-          pess.optimized(corpus).run(corpus).count() + 1
-        }
-        if (warmedOpt)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d pessimal=$pSec%6.2fs/${pMb}%8.1fMB " +
-            f"optimized=$oSec%6.2fs/${oMb}%8.1fMB speedup=${pSec / oSec}%4.2fx")
-        warmedOpt = true
-        corpus.unpersist()
-      }
-    }
-    // IVF axis: corpus replicated with distinct ids, FIXED query load
-    // (the serving shape: the index grows, the probe set doesn't).
-    // Validates the r7 redesign claim directly — k-means training is a
-    // bounded driver-side sample, so the corpus feeds exactly ONE
-    // distributed assignment pass and cost stays linear regardless of
-    // kmeansIters.
-    {
-      import graft.operators.Similarity
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select("vec_id", "embedding")
-      val queries = emb0.where(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      var warmedIvf = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "ivf") {
-        val corpus = (0 until n).map(i => emb0
-            .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _).cache()
-        val rows = corpus.count()
-        val (sec, mb) = time(
-          Similarity.ivfTopK(corpus, queries, 10, nCells = 16, nProbe = 10,
-            kmeansIters = 3)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        if (warmedIvf)
-          println(f"[scale] n=$n%-3d vecs=$rows%-9d ivfTopK=$sec%6.2fs/${mb}%8.1fMB")
-        warmedIvf = true
-        corpus.unpersist()
-      }
-    }
-    // ── axis 7: int8-packed scan vs float scan, brute-force top-k ────
-    // The int8 path's reason to exist is scan bandwidth: stage 1 reads
-    // 1 B/element packed vectors instead of 4 B/element floats, at the
-    // price of a second (candidate-only) pass for the exact rescore.
-    // At gate scale the extra stage's fixed cost dominates (bench shows
-    // ~1.4× float); this axis measures where the trade inverts: corpus
-    // replicated n× with distinct ids, FIXED query load, the corpus
-    // pre-quantized AND pre-packed OUTSIDE the timed region (the
-    // ingest-time posture — store packed int8, scan packed int8; the
-    // float column rides along for the rescore, exactly the serving
-    // layout).
-    {
-      import graft.operators.Similarity
-      // the sf embeddings are dim 64 — toy scale for a bandwidth probe.
-      // Widen to dim 512 (8× self-concat; values stay realistic, norms
-      // scale uniformly so rankings are untouched) and probe 200
-      // queries: the regime of a real embedding corpus (768–1536 dims,
-      // batched query load), where stage-1 scan+score is the dominant
-      // term rather than fixed stage overhead.
-      val dimX = 8
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"),
-          flatten(array_repeat(col("embedding"), dimX)).as("embedding"))
-      val queries = emb0.where(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      var warmedI8 = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "int8") {
-        val corpusF = (0 until n).map(i => emb0
-            .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-          .withColumn("embedding_b8",
-            graft.functions.DotProductExpr.quantizePackInt8(col("embedding")))
-          .cache()
-        val rows = corpusF.count()
-        val (fSec, fMb) = time(
-          Similarity.bruteForceTopK(corpusF, queries, 10)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        val (iSec, iMb) = time(
-          Similarity.bruteForceTopKInt8(corpusF, queries, 10, rescoreFactor = 8)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        // stage-level attribution: the int8 CANDIDATE stage alone
-        // (score packed + top-80), mirroring the operator's stage 1 —
-        // isolates scan+score cost from the rescore job's fixed price
-        val (sSec, sMb) = if (!sys.env.contains("SPARK_GRAFT_PROBE_I8DETAIL")) (0.0, 0.0)
-        else {
-          import graft.functions.DotProductExpr.{int8PackedDot => pdot, int8PackedLongs}
-          val c8 = corpusF.select(col("vec_id"), int8PackedLongs(col("embedding_b8")).as("__c8"))
-            .withColumn("__c8n", greatest(sqrt(pdot(col("__c8"), col("__c8"))), lit(1e-30)))
-          val q8 = queries.select(col("q_id"), int8PackedLongs(col("q_vec")).as("__q8"))
-            .withColumn("__q8n", greatest(sqrt(pdot(col("__q8"), col("__q8"))), lit(1e-30)))
-          val scored = c8.join(broadcast(q8))
-            .select(col("q_id"), col("vec_id"),
-              (pdot(col("__c8"), col("__q8")) / (col("__c8n") * col("__q8n"))).as("score"))
-          val agg = scored.groupBy(col("q_id"))
-            .agg(graft.functions.TopKAggregator(80)(col("score"), col("vec_id")).as("tk"))
-          if (warmedI8 && sys.env.contains("SPARK_GRAFT_PROBE_EXPLAIN"))
-            scored.explain("codegen")
-          time(agg.agg(count(col("tk"))).head().getLong(0))
-        }
-        if (warmedI8)
-          println(f"[scale] n=$n%-3d vecs=$rows%-9d " +
-            f"floatTopK=$fSec%6.2fs/${fMb}%8.1fMB " +
-            f"int8TopK=$iSec%6.2fs/${iMb}%8.1fMB " +
-            f"i8stage1=$sSec%6.2fs/${sMb}%8.1fMB")
-        warmedI8 = true
-        corpusF.unpersist()
-      }
-    }
-    // ── axis 9: incremental dedup — fixed delta, growing reference ───
-    // nearDuplicatesAgainst's claim: incremental cost is O(delta) band
-    // rows joined into the reference's buckets — as the accumulated
-    // reference grows n×, the shuffle should grow ~linearly (the
-    // reference's band rows must be computed once per call here) and
-    // the verification stays bounded by the delta's match count, so
-    // wall should grow SUB-linearly, nothing quadratic. Delta fixed at
-    // ~10 % of the base corpus: half verbatim copies (match), half
-    // vowel-rewritten (no match).
-    {
-      import graft.operators.Dedup
-      val delta = docs0.where(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 90000000L).as("doc_id"), col("text"))
-        .unionByName(docs0.where(col("doc_id") % 10 === 1)
-          .select((col("doc_id") + 91000000L).as("doc_id"),
-            translate(col("text"), "aeiou", "bcdfg").as("text")))
-        .cache()
-      val dRows = delta.count()
-      var warmedInc = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "incdedup") {
-        val reference = replicatedDocs(n).cache()
-        val rRows = reference.count()
-        val (sec, mb) = time(Dedup.nearDuplicatesAgainst(
-          delta, reference, "text", "doc_id", 0.9).count() + 1)
-        // the steady-state comparison: the same query against the
-        // PERSISTED index (reference bands/shingles on disk) — the
-        // build is paid once, so only query cost is timed
-        val idxPath = graft.operators.Spill.newPath(spark) + s"/probe_ndidx_$n"
-        graft.operators.NearDupIndex.build(reference, idxPath, "text", "doc_id")
-        val (qSec, qMb) = time(graft.operators.NearDupIndex.query(
-          spark, idxPath, delta, "text", "doc_id", 0.9).count() + 1)
-        if (warmedInc)
-          println(f"[scale] n=$n%-3d refDocs=$rRows%-9d deltaDocs=$dRows%-7d " +
-            f"incNearDup=$sec%6.2fs/${mb}%8.1fMB idxQuery=$qSec%6.2fs/${qMb}%8.1fMB")
-        warmedInc = true
-        reference.unpersist()
-      }
-      delta.unpersist()
-    }
-    // ── axis 10: sessionize under Zipfian key skew ───────────────────
-    // Sessionization's scale hazard is the per-key window sort: a hot
-    // key's whole timeline serializes into ONE task. Same Zipf
-    // construction as axis 6 (hottest key ~10 % of rows); uniform vs
-    // zipf on identical row counts, straggler signature = max/median
-    // task time.
-    {
-      import graft.operators.Sessionize
-      var warmedSess = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "sessionize") {
-        def zipfKey(c: org.apache.spark.sql.Column) =
-          floor(pow(lit(1000.0),
-            pmod(xxhash64(c), lit(1000000)).cast("double") / 1000000.0))
-            .cast("long")
-        def dens(offsetSec: Int): DataFrame =
-          (0 until n).map(i => ev0
-              .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
-              .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-            .reduce(_ unionByName _)
-        val uni = dens(21).select("user_id", "ts").cache()
-        val uRows = uni.count()
-        val u = timeSkew(
-          Sessionize.sessions(uni, "user_id", "ts", 1800L).count())
-        val zip = dens(22)
-          .select(zipfKey(col("user_id")).as("user_id"), col("ts")).cache()
-        zip.count()
-        val z = timeSkew(
-          Sessionize.sessions(zip, "user_id", "ts", 1800L).count())
-        uni.unpersist(); zip.unpersist()
-        if (warmedSess)
-          println(f"[scale] n=$n%-3d SKEW sessionize   rows=$uRows%-9d " +
-            f"uniform=${u._1}%6.2fs/${u._2}%8.1fMB/x${u._3}%5.1f  " +
-            f"zipf=${z._1}%6.2fs/${z._2}%8.1fMB/x${z._3}%5.1f")
-        warmedSess = true
-      }
-    }
-    // ── axis 8: persisted IVF index — bytes read under pruning ───────
-    // The index's claim is that a probe READS ~(probed cells)/nCells
-    // of the corpus (partition pruning on cell_id). Task
-    // inputMetrics.bytesRead under-reports the local vectorized
-    // parquet path (measured ~1 % of file size), so the measurement is
-    // GROUND TRUTH instead: the on-disk bytes of exactly the
-    // cell_id=… directories the query's partition filter selects
-    // (IvfIndex.probedCells — the same cell set query() plants in the
-    // filter) vs the whole index and the flat corpus. Corpus
-    // replicated n× on DISK, 5 fixed queries probing 4 of 64 cells
-    // each (≤ 20/64 of cells in the worst union).
-    {
-      import graft.operators.{IvfIndex, Similarity, Spill}
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select("vec_id", "embedding")
-      val queries = emb0.where(col("vec_id") % 400 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")).cache()
-      queries.count()
-      def diskMb(p: String): Double = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength / 1e6
-      }
-      var warmedIdx = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "ivfindex") {
-        val base = Spill.newPath(spark)
-        val corpusPath = s"$base/corpus"
-        (0 until n).map(i => emb0
-            .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(corpusPath)
-        val corpusDisk = spark.read.parquet(corpusPath)
-        val rows = corpusDisk.count()
-        val t0 = System.nanoTime()
-        IvfIndex.build(corpusDisk, s"$base/idx", nCells = 64, kmeansIters = 1)
-        val buildSec = (System.nanoTime() - t0) / 1e9
-        val (qSec, _) = time(
-          IvfIndex.query(spark, s"$base/idx", queries, 10, nProbe = 4)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        val (bSec, _) = time(
-          Similarity.bruteForceTopK(corpusDisk, queries, 10)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        val cells = IvfIndex.probedCells(spark, s"$base/idx", queries, nProbe = 4)
-        val prunedMb = cells.map(c => diskMb(s"$base/idx/vectors/cell_id=$c")).sum
-        if (warmedIdx)
-          println(f"[scale] n=$n%-3d vecs=$rows%-9d build=$buildSec%6.2fs " +
-            f"idxQuery=$qSec%6.2fs bruteScan=$bSec%6.2fs " +
-            f"prunedRead=${prunedMb}%.1fMB (${cells.size} cells) " +
-            f"idxDisk=${diskMb(s"$base/idx/vectors")}%.1fMB " +
-            f"corpusDisk=${diskMb(corpusPath)}%.1fMB")
-        warmedIdx = true
-      }
-    }
-    // ── axis 6: Zipfian KEY SKEW ──────────────────────────────────────
-    // Every other axis replicates data uniformly; real 100 TB key
-    // distributions are Zipfian, and a hot key serializes its rows into
-    // one reducer/window task. Keys are remapped through the inverse-
-    // CDF construction floor(K^u), u = uniform from xxhash64(user_id):
-    // P(rank r) = ln((r+1)/r)/ln(K) ≈ 1/(r·lnK) — Zipf s = 1.0 with
-    // K = 1000, so the hottest key carries ln2/ln1000 ≈ 10.0 % of ALL
-    // rows (the VERDICT-specified regime). Each n runs uniform vs zipf
-    // on identical row counts: the DELTA in (wall, shuffle, max/median
-    // task time) is the skew cost. SWA runs the default bucketed plan;
-    // as-of runs the union-sort plan whose per-key window is the
-    // textbook straggler; minhash runs with a 10 %-hot duplicated text
-    // (LSH bucket skew) against the established bucket caps.
-    {
-      var warmedSkew = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "skew") {
-        def zipfKey(c: org.apache.spark.sql.Column) =
-          floor(pow(lit(1000.0),
-            pmod(xxhash64(c), lit(1000000)).cast("double") / 1000000.0))
-            .cast("long")
-        def skewed(df: DataFrame): DataFrame =
-          df.withColumn("user_id", zipfKey(col("user_id")))
-
-        def runPit(view: String, dense0: DataFrame, spine: DataFrame,
-            swa: Boolean): (Double, Double, Double) = {
-          dense0.createOrReplaceTempView(view)
-          val p = FeatureProject(s"probe_$view")
-          p.addAnchorGroup("g", Source("src", DataLocation.Table(view),
-            timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
-            if (swa) AnchorFeature("f_sum_30d", FeatureType.DOUBLE,
-              Transformation.windowAgg("value", "SUM", "30d"), Seq(userKey))
-            else AnchorFeature("f_last", FeatureType.DOUBLE,
-              Transformation.Expr("value"), Seq(userKey))))
-          val out = if (swa) "f_sum_30d" else "f_last"
-          timeSkew(FeathrClient.joinFeatures(spark, p, spine,
-            Some(("ts", "native")),
-            Seq(FeatureQuery(Seq(out), Seq("user_id"))))
-            .select(count(col(out))).head().getLong(0))
-        }
-
-        def runPair(tag: String, offsetSec: Int, swa: Boolean) = {
-          val base = densifiedOffAxis6(n, offsetSec).cache()
-          base.count()
-          val uni = base.where(col("event_type") === "purchase")
-          val uniSpine = base.where(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val u = runPit(s"probe_skew_${tag}_u_$n", uni, uniSpine, swa)
-          val zBase = skewed(base).cache()
-          zBase.count()
-          val zip = zBase.where(col("event_type") === "purchase")
-          val zipSpine = zBase.where(col("event_type") === "click")
-            .select("event_id", "user_id", "ts")
-          val z = runPit(s"probe_skew_${tag}_z_$n", zip, zipSpine, swa)
-          base.unpersist(); zBase.unpersist()
-          (u, z)
-        }
-        // per-variant offsets defeat shuffle-stage reuse (pitfall #1)
-        def densifiedOffAxis6(nn: Int, offsetSec: Int): DataFrame =
-          (0 until nn).map(i => ev0
-              .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 37 + offsetSec} SECONDS"))
-              .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-            .reduce(_ unionByName _)
-
-        // the PIT joins measure the 100 TB shuffle plans (no broadcast
-        // shortcut); LSH keeps broadcast for its internal semi-joins —
-        // same per-axis posture as axes 1 and 2
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        val (swaU, swaZ) = runPair("swa", 11, swa = true)
-        val (asofU, asofZ) = runPair("asof", 12, swa = false)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-        // LSH bucket skew: 10 % of docs REPLACED by one duplicated hot
-        // text — the degenerate-bucket regime the caps exist for
-        val hotCorpus = replicatedDocs(n)
-          .withColumn("text", when(pmod(xxhash64(col("doc_id")), lit(10)) === 0,
-            lit("the hot boilerplate document that every mirror " +
-              "reprints verbatim across the whole crawl corpus again"))
-            .otherwise(col("text"))).cache()
-        val hotRows = hotCorpus.count()
-        val lsh = timeSkew(graft.operators.Dedup
-          .minhashNearDuplicates(hotCorpus, "text", "doc_id", 0.8).count() + 1)
-        hotCorpus.unpersist()
-
-        if (warmedSkew) {
-          println(f"[scale] n=$n%-3d SKEW swaBucketed  uniform=${swaU._1}%6.2fs/${swaU._2}%8.1fMB/x${swaU._3}%5.1f  zipf=${swaZ._1}%6.2fs/${swaZ._2}%8.1fMB/x${swaZ._3}%5.1f")
-          println(f"[scale] n=$n%-3d SKEW asOfJoin     uniform=${asofU._1}%6.2fs/${asofU._2}%8.1fMB/x${asofU._3}%5.1f  zipf=${asofZ._1}%6.2fs/${asofZ._2}%8.1fMB/x${asofZ._3}%5.1f")
-          println(f"[scale] n=$n%-3d SKEW minhashHot10 docs=$hotRows%-9d ${lsh._1}%6.2fs/${lsh._2}%8.1fMB/x${lsh._3}%5.1f")
-        }
-        warmedSkew = true
-      }
-    }
-    // ── axis 11: BM25 retrieval under fixed query load ───────────────
-    // The retrieval claim (Retrieval.bm25TopK): the corpus side is a
-    // zero-shuffle scan+explode — only query-matched postings enter an
-    // exchange, so with a FIXED query set the shuffle is bounded by
-    // Σ df(query terms) while the corpus grows n×. Replica texts are
-    // injectively vowel-rewritten (the minhash-axis discipline), so
-    // replica tokens do not collide with base-corpus query terms;
-    // queries come from en docs only (CJK text has no vowels to
-    // rewrite — zh replicas WOULD collide and re-grow df). Expected
-    // signature: wall grows with the scan, shuffle stays ~flat.
-    {
-      var warmedBm = false
-      val enDocs = spark.read.parquet(s"$dir/documents.parquet")
-        .where(col("lang") === "en").select("doc_id", "text")
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "bm25") {
-        val corpus = replicatedDocs(n).cache()
-        val rows = corpus.count()
-        val queries = enDocs.where(col("doc_id") % 10 === 0)
-          .select(col("doc_id").as("q_id"),
-            substring(col("text"), 1, 120).as("q_text"))
-        val (sec, mb) = time(graft.operators.Retrieval
-          .bm25TopK(corpus, queries, k = 10)
-          .select(count(lit(1))).head().getLong(0))
-        if (warmedBm)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d bm25TopK=$sec%6.2fs/${mb}%8.1fMB")
-        warmedBm = true
-        corpus.unpersist()
-      }
-    }
-    // ── axis 12: top-fraction cutoff — histogram vs global rank ──────
-    // topFractionByScore's claim: the textbook rank()-over-(score desc)
-    // formulation collapses the WHOLE corpus into one window task (the
-    // orderBy-without-partitionBy shape), while the histogram cutoff
-    // pays a partial-agg'd score histogram plus an ordered take of the
-    // boundary class only. Same replicated-ids corpus, score =
-    // n_chars (a realistic bounded integer grid — cardinality stays
-    // constant as the corpus grows). Expected signature: the window
-    // plan's wall AND max/median task ratio grow with n (one task
-    // sorts everything); the histogram plan stays linear-flat with
-    // near-zero shuffle.
-    {
-      import graft.operators.Sampling
-      import org.apache.spark.sql.expressions.Window
-      val docsC0 = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "n_chars")
-      var warmedTf = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "topfrac") {
-        val corpus = (0 until n).map(i => docsC0
-            .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _).cache()
-        val rows = corpus.count()
-        val quota = math.ceil(0.25 * rows).toLong
-        val h = timeSkew(
-          Sampling.topFractionByScore(corpus, "doc_id", "n_chars", 0.25)
-            .agg(count(col("doc_id"))).head().getLong(0))
-        val w = timeSkew(
-          corpus.withColumn("__rn", row_number().over(
-              Window.orderBy(col("n_chars").desc, col("doc_id").asc)))
-            .where(col("__rn") <= quota)
-            .agg(count(col("doc_id"))).head().getLong(0))
-        if (warmedTf)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d " +
-            f"topFracHist=${h._1}%6.2fs/${h._2}%8.1fMB/x${h._3}%5.1f " +
-            f"globalRankWindow=${w._1}%6.2fs/${w._2}%8.1fMB/x${w._3}%5.1f")
-        warmedTf = true
-        corpus.unpersist()
-      }
-    }
-    // ── axis 13: repeated-span dedup — rolling expr vs HOF hash vs
-    // span strings ─ Two independent claims, measured separately:
-    // (a) BYTES: hashing each window (either way) means the exploded
-    //     stream carries 8-byte longs, so shuffle grows with token
-    //     COUNT, not token count × span length — the string strawman
-    //     explodes the L-token span STRINGS instead;
-    // (b) CPU: the codegen'd Rabin-Karp rolling expression
-    //     (RollingSpanHash64Expr, the production path) does O(tokens)
-    //     hash work where the interpreted HOF transform+xxhash64 does
-    //     O(tokens·L) — same bytes, less wall.
-    // Same replicated-ids + injective-rewrite corpus (the minhash-axis
-    // discipline: cross-replica spans never collide, so the repeated
-    // RATE stays constant as the corpus grows).
-    {
-      import graft.operators.TextAnalysis
-      val spanL = 8
-      def statsOver(spans: DataFrame, spanCol: String): Long = {
-        val rep = spans.where(col(spanCol).isNotNull)
-          .select(col("doc_id"), col(spanCol)).distinct()
-          .groupBy(col(spanCol)).agg(count(lit(1)).as("__df"))
-          .where(col("__df") >= 2).select(col(spanCol), lit(1L).as("__rep"))
-        spans.join(rep, Seq(spanCol), "left_outer")
-          .groupBy(col("doc_id"))
-          .agg(count(col(spanCol)).as("n_windows"),
-            count(col("__rep")).as("n_repeated"))
-          .agg(sum(col("n_windows")) + sum(col("n_repeated")))
-          .head().getLong(0)
-      }
-      def tokCol = filter(split(graft.operators.Dedup.normText(col("text")),
-        " "), t => t =!= lit(""))
-      var warmedSp = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "spans") {
-        val corpus = replicatedDocs(n).cache()
-        val rows = corpus.count()
-        // production path: codegen'd rolling hash (spill-once inside)
-        val (eSec, eMb) = time(
-          TextAnalysis.repeatedSpanStats(corpus, "text", "doc_id",
-              spanTokens = spanL)
-            .agg(sum(col("n_windows")) + sum(col("n_repeated")))
-            .head().getLong(0))
-        // HOF strawman: per-window xxhash64(array_join(slice)) lambda
-        val (hSec, hMb) = time(statsOver(
-          corpus.select(col("doc_id"), tokCol.as("__w"))
-            .select(col("doc_id"), explode_outer(
-              when(size(col("__w")) >= spanL,
-                transform(sequence(lit(1), size(col("__w")) - lit(spanL - 1)),
-                  i => xxhash64(array_join(slice(col("__w"), i, lit(spanL)),
-                    " "))))
-                .otherwise(array().cast("array<bigint>"))).as("__h")), "__h"))
-        // string strawman: the L-token span text itself shuffles
-        val (sSec, sMb) = time(statsOver(
-          corpus.select(col("doc_id"), tokCol.as("__w"))
-            .select(col("doc_id"), explode_outer(
-              when(size(col("__w")) >= spanL,
-                transform(sequence(lit(1), size(col("__w")) - lit(spanL - 1)),
-                  i => array_join(slice(col("__w"), i, lit(spanL)), " ")))
-                .otherwise(array().cast("array<string>"))).as("__s")), "__s"))
-        if (warmedSp)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d " +
-            f"spanRollingExpr=$eSec%6.2fs/${eMb}%8.1fMB " +
-            f"spanHofHash=$hSec%6.2fs/${hMb}%8.1fMB " +
-            f"spanStrings=$sSec%6.2fs/${sMb}%8.1fMB")
-        warmedSp = true
-        corpus.unpersist()
-      }
-    }
-    // ── axis 14: winnow fingerprints — codegen'd expression vs
-    // ordering-window formulation ─ winnowFingerprints' claim: the
-    // single-pass WinnowFps64Expr makes fingerprinting a ZERO-SHUFFLE
-    // projection, where the posexplode + three-ordering-windows
-    // formulation (the pre-r10 implementation, inlined here as the
-    // strawman) exchanges and sorts EVERY TOKEN in the corpus by doc
-    // id, then pays a global distinct. The timed consumer aggregates
-    // the fingerprints per doc so neither plan can prune the operator.
-    // Expected signature: both linear in wall; the window formulation
-    // shuffles ~token-stream bytes, the expression ~0.
-    {
-      import graft.operators.{Dedup, TextAnalysis}
-      import org.apache.spark.sql.expressions.Window
-      def consume(fps: DataFrame): Long = fps
-        .groupBy(col("doc_id")).agg(count(col("fp")).as("n"))
-        .agg(sum(col("n"))).head().getLong(0)
-      def windowFormulation(corpus: DataFrame, k: Int, w: Int): DataFrame = {
-        val byPos = Window.partitionBy(col("doc_id")).orderBy("__pos")
-        val gramParts = (1 until k).map(i => lead(col("__w"), i).over(byPos))
-        val grams = corpus
-          .select(col("doc_id"),
-            posexplode(split(Dedup.normText(col("text")), " "))
-              .as(Seq("__pos", "__w")))
-          .select(col("doc_id"), col("__pos"),
-            xxhash64(concat_ws(" ", col("__w") +: gramParts: _*)).as("__h"),
-            row_number().over(byPos).as("__rn"),
-            count(lit(1)).over(Window.partitionBy(col("doc_id"))).as("__n"))
-          .where(col("__rn") <= greatest(col("__n") - k + 1, lit(1)))
-        val slide = Window.partitionBy(col("doc_id")).orderBy("__pos")
-          .rowsBetween(-(w - 1), Window.currentRow)
-        grams.select(col("doc_id"), min(col("__h")).over(slide).as("fp"))
-          .distinct()
-      }
-      var warmedWf = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "winnow") {
-        val corpus = replicatedDocs(n).cache()
-        val rows = corpus.count()
-        val (eSec, eMb) = time(consume(
-          TextAnalysis.winnowFingerprints(corpus, "text", "doc_id")))
-        val (wSec, wMb) = time(consume(windowFormulation(corpus, 5, 4)))
-        if (warmedWf)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d " +
-            f"winnowExpr=$eSec%6.2fs/${eMb}%8.1fMB " +
-            f"winnowWindows=$wSec%6.2fs/${wMb}%8.1fMB")
-        warmedWf = true
-        corpus.unpersist()
-      }
-    }
-    // ── axis 15: bucketed co-located join — join-time shuffle bytes ──
-    // BucketedLayout's claim: writing the fact table bucketBy(custkey)
-    // pays the join shuffle once at write time; every later equi-join
-    // plans Exchange-free. Expected signature: plain-join shuffle MB
-    // grows linearly with the fact side, bucketed-join shuffle stays
-    // ~0 at every multiplier (wall follows once shuffle dominates).
-    {
-      import graft.operators.{BucketedLayout, Spill}
-      val ord0 = spark.read.parquet(s"$dir/orders.parquet")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      def factOf(n: Int): DataFrame =
-        (0 until n).map(i => ord0
-            .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 100000000L)))
-          .reduce(_ unionByName _)
-      val cust = spark.read.parquet(s"$dir/customer.parquet")
-        .select("c_custkey", "c_mktsegment")
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-      var warmedBkt = false
-      for (n <- Seq(1) ++ mults; if axes == "all" || axes == "bucket") {
-        val plainPath = Spill.newPath(spark)
-        factOf(n).write.parquet(plainPath)
-        BucketedLayout.write(cust.repartition(32, col("c_custkey")),
-          "probe_bkt_cust", Spill.newPath(spark), Seq("c_custkey"), 32)
-        val (wSec, _) = time {
-          BucketedLayout.write(
-            spark.read.parquet(plainPath).repartition(32, col("o_custkey")),
-            "probe_bkt_ord", Spill.newPath(spark), Seq("o_custkey"), 32)
-          1L
-        }
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        def consume(c: DataFrame, o: DataFrame): Long =
-          c.join(o, col("c_custkey") === col("o_custkey"))
-            .groupBy("c_mktsegment")
-            .agg(sum("o_totalprice").as("s")).count()
-        val (pSec, pMb) = time(consume(
-          spark.read.parquet(s"$dir/customer.parquet"),
-          spark.read.parquet(plainPath)))
-        val (bSec, bMb) = time(consume(
-          BucketedLayout.table(spark, "probe_bkt_cust"),
-          BucketedLayout.table(spark, "probe_bkt_ord")))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        if (warmedBkt)
-          println(f"[scale] n=$n%-3d layoutWrite=$wSec%6.2fs " +
-            f"plainJoin=$pSec%6.2fs/${pMb}%8.1fMB " +
-            f"bucketedJoin=$bSec%6.2fs/${bMb}%8.1fMB")
-        warmedBkt = true
-      }
-    }
-
-    // ── axis 17: PQ code scan vs float scan, fixed query load ────────
-    // PQ's reason to exist is one bandwidth octave past int8: the scan
-    // side reads m=16 code ints per 512-dim vector (64 B boxed, 2 KB
-    // of floats avoided) and scores via m table lookups. The ingest
-    // posture holds: codebooks trained + corpus encoded OUTSIDE the
-    // timed region; timed = ADC scan → bounded candidates → exact
-    // rescore of candidates only, vs the float brute force.
-    {
-      import graft.operators.{ProductQuant, Similarity}
-      val dimX = 8
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"),
-          flatten(array_repeat(col("embedding"), dimX)).as("embedding"))
-      val pqueries = emb0.where(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      var warmedPq = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "pq") {
-        val corpus = (0 until n).map(i => emb0
-            .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _).cache()
-        val rows = corpus.count()
-        val cb = ProductQuant.trainCodebooks(corpus, m = 16, kCodes = 16,
-          iters = 3)
-        val codes = ProductQuant.encode(corpus, cb).cache()
-        codes.count()
-        val (fSec, fMb) = time(
-          Similarity.bruteForceTopK(corpus, pqueries, 10)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        val (pSec, pMb) = time(
-          ProductQuant.pqTopKEncoded(codes, corpus, pqueries, cb, 10,
-              rescoreFactor = 8)
-            .agg(count(col("vec_id"))).head().getLong(0))
-        if (warmedPq)
-          println(f"[scale] n=$n%-3d vecs=$rows%-9d " +
-            f"floatTopK=$fSec%6.2fs/${fMb}%8.1fMB " +
-            f"pqTopK=$pSec%6.2fs/${pMb}%8.1fMB")
-        warmedPq = true
-        corpus.unpersist(); codes.unpersist()
-      }
-    }
-
-    // ── axis 18: bloom prefilter — shuffle under an OVERSIZE reference ─
-    // contaminatedWith's claim: when the reference outgrows broadcast,
-    // the bloom prefilter shuffles only matches + ε instead of the
-    // whole corpus fingerprint stream. Forced oversize via the bcLimit
-    // conf; A/B on the SAME growing corpus against a fixed reference
-    // (corpus replicas rewritten injectively, so true matches stay
-    // constant while the fingerprint stream grows).
-    {
-      import graft.operators.TextAnalysis
-      val key = "spark.graft.dedup.broadcastCandidatesBytes"
-      val prevBc2 = spark.conf.get(key, (16L << 20).toString)
-      val docs0b = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      val reference = docs0b.where(col("doc_id") % 20 === 0)
-        .select((col("doc_id") + 90000000L).as("doc_id"), col("text"))
-      var warmedBloom = false
-      for (n <- Seq(1) ++ mults; if axes == "all" || axes == "bloom") {
-        val corpus = replicatedDocs(n).cache()
-        val rows = corpus.count()
-        def consume(): Long = TextAnalysis.contaminatedWith(
-          corpus, "text", "doc_id", reference, "text", "doc_id")
-          .agg(count(lit(1))).head().getLong(0)
-        // strawman: the pre-bloom oversize fallback — the full corpus
-        // fingerprint stream meets the reference in a shuffled join
-        def naive(): Long = {
-          val cfps = TextAnalysis.winnowFingerprints(corpus, "text", "doc_id")
-          val rfps = TextAnalysis.winnowFingerprints(
-            reference, "text", "doc_id").select("fp").distinct()
-          cfps.join(rfps, Seq("fp"), "left_semi")
-            .groupBy(col("doc_id")).agg(count(lit(1)))
-            .agg(count(lit(1))).head().getLong(0)
-        }
-        val (bSec, bMb) = time(consume()) // broadcast path (default)
-        spark.conf.set(key, "1") // force the oversize/bloom path
-        val (fSec, fMb) = time(consume())
-        spark.conf.set(key, prevBc2)
-        val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val (nSec, nMb) = time(naive())
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-        if (warmedBloom)
-          println(f"[scale] n=$n%-3d docs=$rows%-9d " +
-            f"broadcastJoin=$bSec%6.2fs/${bMb}%8.1fMB " +
-            f"bloomShuffleJoin=$fSec%6.2fs/${fMb}%8.1fMB " +
-            f"naiveShuffleJoin=$nSec%6.2fs/${nMb}%8.1fMB")
-        warmedBloom = true
-        corpus.unpersist()
-      }
-    }
-
-    // ── axis 16: range-clustered layout — bytes READ under a fixed
-    // key-range predicate ─ Compaction.rangeLayout's claim: footer
-    // min/max pruning makes per-query input bytes a function of the
-    // PREDICATE, not the corpus. Expected signature: scattered-layout
-    // bytes read grow linearly with n, ranged-layout bytes stay ~flat
-    // (only the overlapping files open).
-    {
-      import graft.operators.{Compaction, Spill}
-      def readBytes(f: => Long): (Double, Double) = {
-        Thread.sleep(300)
-        val b0 = inputBytes.get()
-        val t0 = System.nanoTime(); val r = f
-        val sec = (System.nanoTime() - t0) / 1e9
-        require(r > 0, "probe scan matched no rows")
-        Thread.sleep(300)
-        (sec, (inputBytes.get() - b0) / 1e6)
-      }
-      var warmedLay = false
-      for (n <- Seq(1) ++ mults; if axes == "all" || axes == "layout") {
-        val scattered = Spill.newPath(spark)
-        replicatedDocs(n)
-          .repartition(32, md5(col("doc_id").cast("string")))
-          .write.parquet(scattered)
-        val (_, bytes) = Compaction.fileStats(spark, scattered)
-        val ranged = Spill.newPath(spark)
-        Compaction.rangeLayout(spark, scattered, ranged,
-          Seq("doc_id"), targetBytes = math.max(bytes / 32, 1L))
-        def q(p: String): DataFrame = spark.read.parquet(p)
-          .where(col("doc_id").between(100, 1099))
-          .agg(sum(length(col("text"))))
-        def scan(p: String): Long = q(p).head().getLong(0)
-        val (sSec, sMb) = readBytes(scan(scattered))
-        val (rSec, rMb) = readBytes(scan(ranged))
-        // rows the scan emitted after row-group/page skipping — the
-        // semantic pruning signal (byte reads flatten early because
-        // parquet's page-level column index already skips pages in
-        // BOTH layouts; at 100 TB the file-level skip is what saves
-        // the opens/seeks)
-        val sRows = Compaction.scannedRows(q(scattered))
-        val rRows = Compaction.scannedRows(q(ranged))
-        if (warmedLay)
-          println(f"[scale] n=$n%-3d " +
-            f"scatteredScan=$sSec%6.2fs/${sMb}%8.1fMBread/$sRows%7d rows " +
-            f"rangedScan=$rSec%6.2fs/${rMb}%8.1fMBread/$rRows%7d rows")
-        warmedLay = true
-      }
-    }
-    // ── axis 23: range join — theta post-filter vs bucketed equi-join ──
-    // The naive point-in-interval plan equi-joins on the KEY and
-    // post-filters the BETWEEN: every same-key (point, interval) pair
-    // materializes first, so growing a key's TIMELINE n× grows the
-    // join's intermediate ~n² while the true match count grows ~n —
-    // On UNIFORM keys the theta plan is competitive at probe sizes —
-    // measured first: codegen'd SMJ streams each key block at ~3·10⁸
-    // comparisons/s/core, so the quadratic intermediate is cheap CPU
-    // while the bucketed plan pays a real 4× interval-replication
-    // shuffle (theta 2.5 s vs bucketed 3.7 s at 6.4 M rows, disjoint
-    // 31-day-shifted replicas). The regime the bucketed plan exists
-    // for is SKEW: a hot key's whole (views × purchases) block
-    // serializes into ONE SMJ task — quadratic in the hot share, on
-    // one core — while bucketing spreads the same work across the
-    // key's time buckets. 30 % of rows remapped to one user
-    // (a pathological hot share); max/median task time is the
-    // straggler signature. Outputs asserted identical per n.
-    {
-      import graft.operators.RangeJoin
-      def spread(n: Int): DataFrame =
-        (0 until n).map(i => ev0
-            .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 31} DAYS"))
-            .withColumn("event_id", col("event_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-          .withColumn("user_id",
-            when(pmod(col("event_id"), lit(10)) < 3, lit(1L))
-              .otherwise(col("user_id")))
-      var warmedRj = false
-      for (n <- Seq(2) ++ mults; if axes == "all" || axes == "rangejoin") {
-        val ev = spread(n).cache()
-        val rows = ev.count()
-        val pts = ev.where(col("event_type") === "view")
-          .select(col("user_id"), col("event_id").as("p_id"),
-            unix_micros(col("ts")).as("t_us"))
-        val ivs = ev.where(col("event_type") === "purchase")
-          .select(col("user_id").as("iv_user_id"),
-            col("event_id").as("iv_id"),
-            (unix_micros(col("ts")) - 7200L * 1000000L).as("lo_us"),
-            (unix_micros(col("ts")) + 3600L * 1000000L).as("hi_us"))
-        def theta = pts.join(ivs, col("user_id") === col("iv_user_id") &&
-          col("t_us") >= col("lo_us") && col("t_us") <= col("hi_us"))
-        // capture the match counts FROM the timed actions — a separate
-        // parity pass would re-execute both joins (doubling the most
-        // expensive axis; the n=16 theta run alone is ~17 s)
-        var nTheta = -1L
-        var nBucket = -1L
-        val t3 = timeSkew {
-          nTheta = theta.agg(count(col("iv_id"))).head().getLong(0); nTheta
-        }
-        val b3 = timeSkew {
-          nBucket = RangeJoin.pointInInterval(pts, "t_us", ivs, "lo_us",
-            "hi_us", Seq("user_id" -> "iv_user_id"),
-            widthUs = 3600L * 1000000L)
-            .agg(count(col("iv_id"))).head().getLong(0)
-          nBucket
-        }
-        require(nTheta == nBucket,
-          s"range-join parity broke: $nTheta != $nBucket")
-        if (warmedRj)
-          println(f"[scale] n=$n%-3d rows=$rows%-9d matches=$nBucket%-9d " +
-            f"theta=${t3._1}%6.2fs/${t3._2}%8.1fMB/x${t3._3}%5.1f " +
-            f"bucketed=${b3._1}%6.2fs/${b3._2}%8.1fMB/x${b3._3}%5.1f")
-        warmedRj = true
-        ev.unpersist()
-      }
-    }
-    // ── axis 20: incremental curation — refresh cost vs corpus, vs delta ─
-    // IncrementalCuration's claim: a refresh pays O(delta), not
-    // O(corpus). Two sweeps: (a) accumulated corpus grows n× with the
-    // delta FIXED — refresh wall/shuffle must stay ~flat (the index's
-    // reference bands stream from disk, three int columns, never
-    // shuffle; only the delta side hashes/joins); (b) corpus fixed,
-    // delta grows k× — cost tracks k. Bootstrap is the one-time batch
-    // pass and is not timed. refresh() itself is the timed unit — its
-    // eager work is the admission decision + index/log appends; the
-    // returned snapshot stays lazy (consumers pay the corpus read when
-    // THEY scan, which no nightly refresh does).
-    {
-      import graft.operators._
-      val pipe = CurationPipeline("text", "doc_id", Seq(
-        CurationStage.Quality(50, 100000, 2),
-        CurationStage.NearDupDrop(0.9, ordered = true)))
-      // copies of replica-0 docs (index hits) + word-reversed docs (no
-      // shared shingles with any forward text — admitted); id offsets
-      // clear every replicated base id
-      def deltaOf(k: Int): DataFrame =
-        (0 until k).map { i =>
-          val off = 900000000L + i.toLong * 1000000L
-          docs0.where(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + off).as("doc_id"), col("text"))
-            .unionByName(docs0.where(col("doc_id") % 10 === 1)
-              .select((col("doc_id") + off + 500000L).as("doc_id"),
-                concat_ws(" ", reverse(split(
-                  graft.operators.Dedup.normText(col("text")), " "))).as("text")))
-        }.reduce(_ unionByName _)
-      var warmedIc = false
-      for (n <- Seq(1) ++ mults; if axes == "all" || axes == "inccur") {
-        val root = Spill.newPath(spark) + s"/probe_inccur_$n"
-        val base = replicatedDocs(n)
-        IncrementalCuration.bootstrap(base, pipe, root)
-        val delta = deltaOf(1).cache()
-        val dRows = delta.count()
-        val bRows = base.count()
-        val (sec, mb) = time {
-          IncrementalCuration.refresh(delta, root, 1L); dRows
-        }
-        if (warmedIc)
-          println(f"[scale] n=$n%-3d baseDocs=$bRows%-9d deltaDocs=$dRows%-7d " +
-            f"incRefresh=$sec%6.2fs/${mb}%8.1fMB")
-        warmedIc = true
-        delta.unpersist()
-      }
-      var warmedIcD = false
-      for (k <- Seq(1) ++ mults; if axes == "all" || axes == "inccur") {
-        val root = Spill.newPath(spark) + s"/probe_inccur_d$k"
-        IncrementalCuration.bootstrap(docs0, pipe, root)
-        val delta = deltaOf(k).cache()
-        val dRows = delta.count()
-        val (sec, mb) = time {
-          IncrementalCuration.refresh(delta, root, 1L); dRows
-        }
-        if (warmedIcD)
-          println(f"[scale] k=$k%-3d deltaDocs=$dRows%-9d fixedBase " +
-            f"incRefresh=$sec%6.2fs/${mb}%8.1fMB")
-        warmedIcD = true
-        delta.unpersist()
-      }
-    }
-
-    // ---- axis 24: incrementally-maintained SWA state. Grow the state
-    // to n versions of the fixture, then (a) ingest ONE more fixture-
-    // sized delta — wall and shuffle must stay FLAT as state grows,
-    // the O(delta) nightly-refresh claim — and (b) serve the 7-day
-    // window before and after compaction: pre-compact serve scans n+1
-    // version partitions (linear in history), post-compact it scans
-    // one folded partial per (key, day) (flat) — the read-amplification
-    // motivation for the atomic generation fold.
-    if (axes == "all" || axes == "swainc") {
-      import graft.operators.{IncrementalSwa, Publish, Spill}
-      val dayUs = 86400000000L
-      val cfg = IncrementalSwa.Config(Seq("user_id"), "ts", "value", dayUs)
-      val evs = ev0.select("user_id", "ts", "value")
-      val maxB = evs.agg(max(IncrementalSwa.bucketOf(col("ts"), dayUs)))
-        .head().getLong(0)
-      val asOf = (maxB + 1) * dayUs
-      var warmedSw = false
-      for (n <- Seq(1) ++ mults) {
-        val root = Spill.newPath(spark) + s"/probe_swainc_$n"
-        (0 until n).foreach(i =>
-          IncrementalSwa.ingest(evs, root, cfg, i.toLong))
-        val (iSec, iMb) = time {
-          IncrementalSwa.ingest(evs, root, cfg, n.toLong); 1L
-        }
-        val (sSec, _) = time {
-          IncrementalSwa.serve(spark, root, cfg, asOf, 7).count()
-        }
-        IncrementalSwa.compact(spark, root, cfg)
-        Publish.gc(spark, root, keep = 1)
-        val (cSec, _) = time {
-          IncrementalSwa.serve(spark, root, cfg, asOf, 7).count()
-        }
-        if (warmedSw)
-          println(f"[scale] n=$n%-3d stateVersions=${n + 1}%-4d " +
-            f"ingestFixedDelta=$iSec%6.2fs/${iMb}%7.1fMB " +
-            f"serve=$sSec%6.2fs serveCompacted=$cSec%6.2fs")
-        warmedSw = true
-      }
-    }
-
-    // ---- axis 27: the UNION and ELEMENTWISE incremental stores (r13).
-    // Same shape as axis 24: grow state to n versions, then (a) ingest
-    // one more fixture-sized delta — flat wall/shuffle is the O(delta)
-    // claim — and (b) serve the 7-day window pre- and post-compaction
-    // (pre scans n+1 version partitions, post scans the fold). The
-    // union store's per-(key, bucket) sets and the vector store's
-    // O(dim) partials must both keep ingest independent of history.
-    if (axes == "all" || axes == "unionvec") {
-      import graft.operators.{IncrementalSwa, IncrementalUnion, IncrementalVector, Publish, Spill}
-      val dayUs = 86400000000L
-      val uCfg = IncrementalUnion.Config(Seq("user_id"), "ts", "props", dayUs)
-      val vCfg = IncrementalVector.Config(Seq("user_id"), "ts", "vec", dayUs)
-      val uEvs = spark.read.parquet(s"$dir/events.parquet")
-        .normalizeEventTime
-        .select("user_id", "ts", "props")
-      // a fixture-sized vector delta: dim-8 arrays derived per event
-      val vEvs = ev0.select(col("user_id"), col("ts"),
-        array((0 until 8).map(i => col("value") * (i + 1)): _*).as("vec"))
-      val maxB = uEvs.agg(max(IncrementalSwa.bucketOf(col("ts"), dayUs)))
-        .head().getLong(0)
-      val asOf = (maxB + 1) * dayUs
-      var warmedUv = false
-      for (n <- Seq(1) ++ mults) {
-        val uRoot = Spill.newPath(spark) + s"/probe_uv_u_$n"
-        val vRoot = Spill.newPath(spark) + s"/probe_uv_v_$n"
-        (0 until n).foreach { i =>
-          IncrementalUnion.ingest(uEvs, uRoot, uCfg, i.toLong)
-          IncrementalVector.ingest(vEvs, vRoot, vCfg, i.toLong)
-        }
-        val (uiSec, uiMb) = time {
-          IncrementalUnion.ingest(uEvs, uRoot, uCfg, n.toLong); 1L
-        }
-        val (viSec, viMb) = time {
-          IncrementalVector.ingest(vEvs, vRoot, vCfg, n.toLong); 1L
-        }
-        val (usSec, _) = time {
-          IncrementalUnion.serve(spark, uRoot, uCfg, asOf, 7).count()
-        }
-        val (vsSec, _) = time {
-          IncrementalVector.serve(spark, vRoot, vCfg, asOf, 7).count()
-        }
-        IncrementalUnion.compact(spark, uRoot, uCfg)
-        IncrementalVector.compact(spark, vRoot, vCfg)
-        Publish.gc(spark, uRoot, keep = 1)
-        Publish.gc(spark, vRoot, keep = 1)
-        val (ucSec, _) = time {
-          IncrementalUnion.serve(spark, uRoot, uCfg, asOf, 7).count()
-        }
-        val (vcSec, _) = time {
-          IncrementalVector.serve(spark, vRoot, vCfg, asOf, 7).count()
-        }
-        if (warmedUv)
-          println(f"[scale] n=$n%-3d stateVersions=${n + 1}%-4d " +
-            f"unionIngest=$uiSec%6.2fs/${uiMb}%7.1fMB " +
-            f"unionServe=$usSec%5.2fs/compacted=$ucSec%5.2fs " +
-            f"vecIngest=$viSec%6.2fs/${viMb}%7.1fMB " +
-            f"vecServe=$vsSec%5.2fs/compacted=$vcSec%5.2fs")
-        warmedUv = true
-      }
-    }
-
-    // ---- axis 28: daily feature tables for the UNION and VECTOR
-    // stores (r14 serveDaily parity). Same read-amplification claim as
-    // axis 25, measured separately because the two stores pay
-    // differently: vector rides the scalar store's one-pass RANGE
-    // frame (flat in days), while union has NO rolling shortcut (set
-    // union has no inverse) — its one pass is explode+sequence over
-    // state items × window, so its one-pass cost grows with the output
-    // grid but still beats N full state scans. Both measured on the
-    // same compacted single-generation state.
-    if (axes == "all" || axes == "uvdaily") {
-      import graft.operators.{IncrementalSwa, IncrementalUnion, IncrementalVector, Spill}
-      val dayUs = 86400000000L
-      val uCfg = IncrementalUnion.Config(Seq("user_id"), "ts", "props", dayUs)
-      val vCfg = IncrementalVector.Config(Seq("user_id"), "ts", "vec", dayUs)
-      val uEvs = ev0.select("user_id", "ts", "props")
-      val vEvs = ev0.select(col("user_id"), col("ts"),
-        array((0 until 8).map(i => col("value") * (i + 1)): _*).as("vec"))
-      val maxB = uEvs.agg(max(IncrementalSwa.bucketOf(col("ts"), dayUs)))
-        .head().getLong(0)
-      val uRoot = Spill.newPath(spark) + "/probe_uvd_u"
-      val vRoot = Spill.newPath(spark) + "/probe_uvd_v"
-      IncrementalUnion.ingest(uEvs, uRoot, uCfg, 0L)
-      IncrementalVector.ingest(vEvs, vRoot, vCfg, 0L)
-      var warmedUd = false
-      for (days <- Seq(2) ++ mults.map(_.min(28))) {
-        val (uOneSec, uOneMb) = time {
-          IncrementalUnion.serveDaily(spark, uRoot, uCfg, 7)
-            .where(col("bucket") > maxB - days).count()
-        }
-        val (uLoopSec, uLoopMb) = time {
-          (0 until days).map { i =>
-            IncrementalUnion.serve(spark, uRoot, uCfg,
-              (maxB - i + 1) * dayUs, 7).count()
-          }.sum.max(1L)
-        }
-        val (vOneSec, vOneMb) = time {
-          IncrementalVector.serveDaily(spark, vRoot, vCfg, 7)
-            .where(col("bucket") > maxB - days).count()
-        }
-        val (vLoopSec, vLoopMb) = time {
-          (0 until days).map { i =>
-            IncrementalVector.serve(spark, vRoot, vCfg,
-              (maxB - i + 1) * dayUs, 7).count()
-          }.sum.max(1L)
-        }
-        if (warmedUd)
-          println(f"[scale] days=$days%-3d " +
-            f"unionDaily=$uOneSec%6.2fs/${uOneMb}%6.1fMB " +
-            f"unionLoop=$uLoopSec%6.2fs/${uLoopMb}%6.1fMB " +
-            f"vecDaily=$vOneSec%6.2fs/${vOneMb}%6.1fMB " +
-            f"vecLoop=$vLoopSec%6.2fs/${vLoopMb}%6.1fMB")
-        warmedUd = true
-      }
-    }
-
-    // ---- axis 29: the incremental BM25 index. (a) Ingesting a
-    // fixture-sized doc delta into a 1- vs n-version index must stay
-    // flat (the existing index is never rescanned — O(delta tokens));
-    // (b) serving a fixed query load over an n×-grown index pays the
-    // query-pruned postings (Σ df(query terms) grows with corpus term
-    // frequency, NOT with a corpus-sized tokenization pass — compare
-    // the batch operator, which re-tokenizes everything per call).
-    if (axes == "all" || axes == "bm25inc") {
-      import graft.operators.{IncrementalBm25, Retrieval, Spill}
-      val cfg = IncrementalBm25.Config()
-      val docs0 = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      val queries = docs0.where(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("q_id"),
-          substring(col("text"), 1, 120).as("q_text"))
-      var warmedBm = false
-      for (n <- Seq(1) ++ mults) {
-        val root = Spill.newPath(spark) + s"/probe_bm_$n"
-        (0 until n).foreach { i =>
-          IncrementalBm25.ingest(
-            docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L)),
-            root, cfg, i.toLong)
-        }
-        val (iSec, iMb) = time {
-          IncrementalBm25.ingest(
-            docs0.withColumn("doc_id", col("doc_id") + lit(n.toLong * 10000000L)),
-            root, cfg, n.toLong); 1L
-        }
-        val (sSec, sMb) = time {
-          IncrementalBm25.serve(spark, root, cfg, queries, k = 10).count()
-        }
-        val (bSec, bMb) = time {
-          Retrieval.bm25TopK(
-            (0 to n).map(i => docs0.withColumn("doc_id",
-                col("doc_id") + lit(i.toLong * 10000000L)))
-              .reduce(_ unionByName _),
-            queries, k = 10).count()
-        }
-        if (warmedBm)
-          println(f"[scale] n=$n%-3d indexVersions=${n + 1}%-4d " +
-            f"ingestFixedDelta=$iSec%6.2fs/${iMb}%6.1fMB " +
-            f"serveFixedLoad=$sSec%6.2fs/${sMb}%6.1fMB " +
-            f"batchRecompute=$bSec%6.2fs/${bMb}%6.1fMB")
-        warmedBm = true
-      }
-    }
-
-    // ---- axis 30: the incremental hamming admission index. A FIXED
-    // simhash delta admitted against state grown n× (the nightly-batch
-    // shape): the delta's block rows broadcast, the stored side
-    // streams, so admit's shuffle volume must stay flat while the
-    // batch recompute re-blocks the whole corpus every run. The served
-    // admitted-set self-join is the one state-sized pass.
-    if (axes == "all" || axes == "haminc") {
-      import graft.operators.{Dedup, IncrementalHamming, Spill}
-      val cfg = IncrementalHamming.Config(idCol = "doc_id", sigCol = "sig64")
-      // signatures via the native codegen'd expression, spilled once —
-      // Dedup.simhash64's HOF column evaluates interpreted and would
-      // dominate the axis with signature compute, not index mechanics
-      val sigs0 = Spill.roundTrip(
-        spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"),
-          graft.functions.SimHash64Expr.simhash64(
-            Dedup.normText(col("text"))).as("sig64")))
-      def shifted(i: Int) = sigs0
-        .withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L))
-      var warmedHam = false
-      for (n <- Seq(1) ++ mults) {
-        val root = Spill.newPath(spark) + s"/probe_ham_$n"
-        (0 until n).foreach(i =>
-          IncrementalHamming.ingest(shifted(i), root, cfg, i.toLong))
-        val (aSec, aMb) = time {
-          IncrementalHamming.admit(shifted(n), root, cfg, maxHamming = 3,
-            version = n.toLong).count()
-        }
-        val (sSec, sMb) = time {
-          IncrementalHamming.admittedIds(spark, root, cfg, maxHamming = 3)
-            .count()
-        }
-        val (bSec, bMb) = time {
-          Dedup.hamming64NearDuplicates(
-            (0 to n).map(shifted).reduce(_ unionByName _),
-            "doc_id", "sig64", maxHamming = 3).count()
-        }
-        if (warmedHam)
-          println(f"[scale] n=$n%-3d stateVersions=${n + 1}%-4d " +
-            f"admitFixedDelta=$aSec%6.2fs/${aMb}%6.1fMB " +
-            f"serveAdmitted=$sSec%6.2fs/${sMb}%6.1fMB " +
-            f"batchRecompute=$bSec%6.2fs/${bMb}%6.1fMB")
-        warmedHam = true
-      }
-    }
-
-    // ---- axis 31: the IVF-PQ rebuild (drift remedy) vs ingest. The
-    // FAISS tradeoff made explicit: ingest of a fixed delta stays FLAT
-    // as the index grows (frozen quantizers, O(delta) encode), while
-    // rebuild retrains + re-encodes the WHOLE surviving corpus —
-    // honestly linear, which is exactly why it is a scheduled remedy
-    // and never a silent per-ingest re-train. Query cost after the
-    // rebuild must stay flat (same probe-pruned serving shape).
-    if (axes == "all" || axes == "ivfrebuild") {
-      import graft.operators.{IncrementalIvfPq, Spill}
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select("vec_id", "embedding")
-      val queries = emb0.where(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      def shifted(i: Int) = emb0
-        .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L))
-      var warmedIr = false
-      for (n <- Seq(1) ++ mults) {
-        val root = Spill.newPath(spark) + s"/probe_ivfr_$n"
-        IncrementalIvfPq.build(shifted(0), root, nCells = 16, m = 8,
-          kCodes = 16)
-        (1 until n).foreach(i =>
-          IncrementalIvfPq.ingest(shifted(i), root, version = i.toLong))
-        val (iSec, iMb) = time {
-          IncrementalIvfPq.ingest(shifted(n), root, version = n.toLong); 1L
-        }
-        val (rSec, rMb) = time { IncrementalIvfPq.rebuild(spark, root); 1L }
-        val (qSec, qMb) = time {
-          IncrementalIvfPq.query(spark, root, queries, k = 10, nProbe = 4)
-            .count()
-        }
-        if (warmedIr)
-          println(f"[scale] n=$n%-3d corpus=${n + 1}x " +
-            f"ingestFixedDelta=$iSec%6.2fs/${iMb}%6.1fMB " +
-            f"rebuildSurvivors=$rSec%6.2fs/${rMb}%6.1fMB " +
-            f"queryFixedLoad=$qSec%6.2fs/${qMb}%6.1fMB")
-        warmedIr = true
-      }
-    }
-
-    // ---- NOT a scale axis: phase-level timing of the forget-lifecycle
-    // gate (q_curate_forget is the bench's top line; this names which
-    // phase carries the wall — combine with SPARK_GRAFT_PROBE_JOBS=1
-    // for the per-job breakdown inside a phase).
-    if (axes == "forgetgate") {
-      import graft.operators.{IncrementalCuration, Spill}
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      def run(tag: String): Unit = {
-        val root = Spill.newPath(spark) + s"/probe_fgt_$tag"
-        def phase(name: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          println(f"[scale] forgetgate($tag) $name%-9s " +
-            f"${(System.nanoTime() - t0) / 1e9}%6.2fs")
-        }
-        phase("bootstrap") {
-          IncrementalCuration.bootstrap(docs, graft.SparkEntry.curatePipeline,
-            root)
-        }
-        phase("refresh1") {
-          IncrementalCuration.refresh(graft.SparkEntry.curateDelta(docs),
-            root, 1L)
-        }
-        phase("forget") {
-          IncrementalCuration.forget(
-            docs.where(col("doc_id") % 20 === 2).select("doc_id"), root, 2L)
-        }
-        phase("refresh2") {
-          IncrementalCuration.refresh(
-            graft.SparkEntry.curateForgetDelta(docs), root, 3L)
-        }
-        phase("purge") { IncrementalCuration.purgeForgotten(spark, root) }
-        phase("snapshot") {
-          IncrementalCuration.snapshot(spark, root).select("doc_id").count()
-            : Unit
-        }
-      }
-      run("cold"); run("warm")
-    }
-
-    // ---- axis 25: the daily feature table. One serveDaily pass vs N
-    // separate serve() scans for an N-day publication — the
-    // read-amplification claim behind serveDaily. Both are measured on
-    // the SAME compacted state; the loop pays one state scan per day,
-    // the rolling-window pass pays one total.
-    if (axes == "all" || axes == "featday") {
-      import graft.operators.{IncrementalSwa, Spill}
-      val dayUs = 86400000000L
-      val cfg = IncrementalSwa.Config(Seq("user_id"), "ts", "value", dayUs)
-      val evs = ev0.select("user_id", "ts", "value")
-      val maxB = evs.agg(max(IncrementalSwa.bucketOf(col("ts"), dayUs)))
-        .head().getLong(0)
-      val root = Spill.newPath(spark) + "/probe_featday"
-      IncrementalSwa.ingest(evs, root, cfg, 0L)
-      var warmedFd = false
-      for (days <- Seq(2) ++ mults.map(_.min(28))) {
-        val (oneSec, oneMb) = time {
-          IncrementalSwa.serveDaily(spark, root, cfg, 7)
-            .where(col("bucket") > maxB - days).count()
-        }
-        val (loopSec, loopMb) = time {
-          (0 until days).map { i =>
-            IncrementalSwa.serve(spark, root, cfg, (maxB - i + 1) * dayUs, 7)
-              .count()
-          }.sum.max(1L)
-        }
-        if (warmedFd)
-          println(f"[scale] days=$days%-3d serveDailyOnePass=$oneSec%6.2fs/" +
-            f"${oneMb}%7.1fMB perDayLoop=$loopSec%6.2fs/${loopMb}%7.1fMB")
-        warmedFd = true
-      }
-    }
-
-    // ---- axis 26: BPE trainer. Merge iterations run over the
-    // DISTINCT-WORD table, so replicating the corpus n× (same
-    // vocabulary) must leave per-iteration cost ~flat — only the one
-    // wordFreq corpus pass grows. Replicas use distinct doc ids but
-    // identical text.
-    if (axes == "all" || axes == "bpe") {
-      import graft.operators.BpeTrainer
-      val docs0 = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      var warmedBpe = false
-      for (n <- Seq(1) ++ mults) {
-        val corpus = (0 until n).map(i =>
-            docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-        val (wfSec, wfMb) = time {
-          val wf = graft.operators.Spill.roundTrip(
-            BpeTrainer.wordFreq(corpus, "text"))
-          wf.count()
-        }
-        val wf = graft.operators.Spill.roundTrip(
-          BpeTrainer.wordFreq(corpus, "text"))
-        val words = wf.count()
-        val (trSec, trMb) = time {
-          BpeTrainer.train(wf, numMerges = 3).merges.length.toLong.max(1L)
-        }
-        if (warmedBpe)
-          println(f"[scale] n=$n%-3d distinctWords=$words%-8d " +
-            f"wordFreq=$wfSec%6.2fs/${wfMb}%7.1fMB " +
-            f"train3merges=$trSec%6.2fs/${trMb}%7.1fMB")
-        warmedBpe = true
-      }
-    }
-
-    // ---- axis 27: distributed Lloyd's k-means. Replicating the
-    // corpus n× must grow wall LINEARLY (each iteration is one scan)
-    // while shuffle stays ~FLAT (the update moves k·dim longs per
-    // partition via map-side combine; assignment shuffles nothing) —
-    // the two properties that make exact full-corpus Lloyd's viable
-    // at 100 TB where a rank/join-based formulation would shuffle the
-    // corpus per iteration.
-    if (axes == "all" || axes == "kmeans") {
-      import graft.operators.{Clustering, Similarity}
-      val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select("vec_id", "embedding")
-      var warmedKm = false
-      for (n <- Seq(1) ++ mults) {
-        val corpus = (0 until n).map(i =>
-            emb0.withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
-          .reduce(_ unionByName _)
-        val q = graft.operators.Spill.roundTrip(
-          Similarity.quantizeInt8(corpus, "embedding")
-            .select(col("vec_id"), col("embedding_q8")))
-        val rows = q.count()
-        val (sec, mb) = time {
-          Clustering.kmeansInt8(q, "vec_id", "embedding_q8",
-            k = 8, iters = 2).assignments.count()
-        }
-        if (warmedKm)
-          println(f"[scale] n=$n%-3d vectors=$rows%-9d " +
-            f"kmeans(k=8,iters=2)=$sec%6.2fs/${mb}%8.1fMB")
-        warmedKm = true
-      }
-    }
-
-    // ---- axis 28: the forget cascade. (a) refresh cost must be FLAT
-    // in the forget-list size (the exclusion is an anti-join on the
-    // band-bounded candidate set, broadcast side = the forget list);
-    // (b) purge is one linear index rewrite, independent of how many
-    // forget versions accumulated.
-    if (axes == "all" || axes == "forget") {
-      import graft.operators.{IncrementalCuration, Spill}
-      import graft.operators.{CurationPipeline, CurationStage}
-      val docsF = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id", "text")
-      val pipeF = CurationPipeline("text", "doc_id", Seq(
-        CurationStage.Quality(50, 100000, 2),
-        CurationStage.NearDupDrop(0.8, ordered = true)))
-      var warmedFg = false
-      for (n <- Seq(1) ++ mults) {
-        val root = Spill.newPath(spark) + s"/probe_forget_$n"
-        IncrementalCuration.bootstrap(docsF, pipeF, root)
-        // forget n/16ths of the corpus — the list grows with n while
-        // the delta stays fixed
-        val ids = docsF.where(col("doc_id") % 16 < n).select("doc_id")
-        val fRows = ids.count()
-        IncrementalCuration.forget(ids, root, 1L)
-        val delta = docsF.select(
-          (col("doc_id") + 20000000L).as("doc_id"), col("text")).cache()
-        val dRows = delta.count()
-        val (rSec, rMb) = time {
-          IncrementalCuration.refresh(delta, root, 2L); dRows
-        }
-        val (pSec, pMb) = time {
-          IncrementalCuration.purgeForgotten(spark, root); fRows.max(1L)
-        }
-        if (warmedFg)
-          println(f"[scale] n=$n%-3d forgotten=$fRows%-8d delta=$dRows%-8d " +
-            f"refresh=$rSec%6.2fs/${rMb}%8.1fMB purge=$pSec%6.2fs/${pMb}%8.1fMB")
-        warmedFg = true
-        delta.unpersist()
+    // warm up at a multiplier OUTSIDE the measured set so the first
+    // timed row does not absorb codegen compilation
+    for ((n, i) <- (Seq(2) ++ mults).zipWithIndex) {
+      val (swaU, swaZ) = runPair(n, "swa", 11, swa = true)
+      val (asofU, asofZ) = runPair(n, "asof", 12, swa = false)
+      if (i > 0) {
+        println(f"[scale] n=$n%-3d SKEW swaBucketed  uniform=${fmt(swaU)}  zipf=${fmt(swaZ)}")
+        println(f"[scale] n=$n%-3d SKEW asOfJoin     uniform=${fmt(asofU)}  zipf=${fmt(asofZ)}")
       }
     }
     spark.stop()

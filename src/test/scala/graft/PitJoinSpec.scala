@@ -455,6 +455,56 @@ class PitJoinSpec extends SparkTestBase {
     for (c <- feats) assert(two.isNullAt(two.fieldIndex(c)), c)
   }
 
+  test("beside an as-of feature, a grouped COUNT rides the union-sort while its cluster's grouped MAX stays bucketed") {
+    val rnd = new scala.util.Random(23)
+    val t0 = 1704067200L // 2024-01-01 00:00 UTC
+    val hour = 3600L
+    // distinct hours per user, so the as-of value has one answer; spine
+    // times on whole and half hours hit rows at T and at T − 7d
+    val rows = for (u <- 1L to 4L; h <- rnd.shuffle((0 until 20 * 24).toList).take(40))
+      yield (u, t0 + h * hour, rnd.nextInt(21) - 10, s"c${rnd.nextInt(3)}")
+    rows.toDF("u", "ts_s", "value", "category").withColumn("ts", timestamp_seconds($"ts_s"))
+      .createOrReplaceTempView("ride_grouped_src")
+    val spine = for (u <- 1L to 5L; _ <- 0 until 8)
+      yield (u, t0 + rnd.nextInt(22 * 24) * hour + rnd.nextInt(2) * hour / 2)
+    val obs = spine.toDF("user", "ts_s").withColumn("ts", timestamp_seconds($"ts_s"))
+    val uKey = TypedKey("u", ValueType.INT64)
+    def win(name: String, agg: String) = AnchorFeature(name, FeatureType.UNSPECIFIED,
+      Transformation.windowAgg("value", agg, "7d").copy(groupBy = Some("category")), Seq(uKey))
+    val p = FeatureProject("ride_grouped")
+    p.addAnchorGroup("ride_grouped_feats", Source("src", DataLocation.Table("ride_grouped_src"),
+        timeWindow = Some(TimeWindowParameters("ts", "native"))), Seq(
+      AnchorFeature("u_last", FeatureType.UNSPECIFIED, Transformation.Expr("value"), Seq(uKey)),
+      win("u_cat_cnt_7d", "COUNT"), win("u_cat_max_7d", "MAX")))
+    val df = FeathrClient.joinFeatures(spark, p, obs, Some(("ts", "native")),
+      Seq(FeatureQuery(Seq("u_last", "u_cat_cnt_7d", "u_cat_max_7d"), Seq("user"))))
+
+    val analyzed = df.queryExecution.analyzed.toString
+    assert(analyzed.contains("sliding_sums("), analyzed)
+    val kinds = "__graft_ps_([a-z]+)_".r.findAllMatchIn(analyzed).map(_.group(1)).toSet
+    assert(kinds == Set("max"), kinds)
+
+    // reference fold: the newest row at or before T; per category, the
+    // count and max of the rows in (T − 7d, T]
+    val week = 7 * 24 * hour
+    def ref(u: Long, t: Long) = {
+      val mine = rows.filter(r => r._1 == u && r._2 <= t)
+      val inWin = mine.filter(_._2 > t - week).groupBy(_._4)
+      (mine.sortBy(_._2).lastOption.map(_._3.toLong),
+        Option(inWin.map { case (c, rs) => c -> rs.size.toLong }).filter(_.nonEmpty),
+        Option(inWin.map { case (c, rs) => c -> rs.map(_._3.toLong).max }).filter(_.nonEmpty))
+    }
+    def longs(m: Map[String, Any]) = m.map { case (c, v) => c -> v.asInstanceOf[Number].longValue }
+    val got = df.select($"user", $"ts_s", $"u_last", $"u_cat_cnt_7d", $"u_cat_max_7d").collect()
+    assert(got.length == spine.size)
+    for (r <- got) {
+      val (u, t) = (r.getLong(0), r.getLong(1))
+      assert((Option(r.get(2)).map(_.asInstanceOf[Number].longValue),
+        Option(r.getMap[String, Any](3)).map(m => longs(m.toMap)),
+        Option(r.getMap[String, Any](4)).map(m => longs(m.toMap))) == ref(u, t), (u, t))
+    }
+  }
+
   test("a window-only group whose window features all ride builds one union-sort and no bucket partials") {
     Seq((1L, "2024-01-09 12:00:00", 3, "a"), (1L, "2024-01-05 00:00:00", -2, "b"),
         (1L, "2024-01-03 00:00:00", 5, "a"), // exactly obs − 7d: outside 7d
